@@ -10,7 +10,8 @@ Sections:
   completion (collect of the final small result).
 * engine — the persisted-index path (north rule): index build over the
   synthetic code corpus (files/sec) and batched BM25 top-10 latency over
-  the 50-query reference set (p50 per query batch).
+  the 8-query reference set ``ir_direct.QUERY_SET`` (p50 per query
+  batch).
 
 Scaling-efficiency evidence (local[8] vs local[32]) is produced separately
 by scripts/bench_scaling.py → BENCH/BASELINE.md (a SparkSession's master

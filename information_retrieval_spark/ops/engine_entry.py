@@ -23,10 +23,10 @@ from information_retrieval_spark.query.engine import QuerySpec
 
 STOP_K = 20
 
-# one engine per index dir: WandEngine persists its doclen map + last
-# term shard across search() calls, so every battery entry that
-# constructs a fresh engine re-pays the dl_map fold AND strands the old
-# copy in executor storage (the accumulation tax measured in
+# one engine per index dir: WandEngine persists its bucket side frame +
+# last term shard across search() calls, so every battery entry that
+# constructs a fresh engine re-pays the side frame's build AND strands
+# the old copy in executor storage (the accumulation tax measured in
 # BENCH/BASELINE.md's corpus-size section). Entries share one.
 _ENGINES: dict = {}
 

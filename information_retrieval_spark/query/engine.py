@@ -114,6 +114,7 @@ class SearchEngine:
         self.term_df = read_term_df(spark, index_dir, version)
         stats = read_stats_pdf(index_dir, version)
         self.n_docs = int(stats["n_docs"].iloc[0])
+        self._n_live: int | None = None
         cfg_sections = read_table(spark, index_dir, "stopwords", version)
         self.stop_terms = {r.term for r in cfg_sections.collect()}
         import json
@@ -129,10 +130,18 @@ class SearchEngine:
         self._bigram_dict: dict | None = None
         self._vocab_over_cap = False
         # doc_meta (doc_id, category) for QuerySpec.filter_category
-        # (category-partitioned: catalog.read_doc_meta)
-        from information_retrieval_spark.index.catalog import read_doc_meta
+        # (category-partitioned: catalog.read_doc_meta), live rows only: an
+        # update that moves a doc to another category leaves its old row
+        # in an older segment, hidden by the update's tombstone
+        from information_retrieval_spark.index.catalog import (
+            filter_deleted,
+            read_doc_meta,
+        )
 
-        self.doc_meta = read_doc_meta(spark, index_dir, version)
+        meta = read_doc_meta(spark, index_dir, version, with_seq=True)
+        self.doc_meta = (
+            None if meta is None else filter_deleted(meta, self.deleted_df)
+        )
 
     # ------------------------------------------------------------- helpers
 
@@ -485,14 +494,26 @@ class SearchEngine:
         )
         return scored.select("query_id", "doc_id", "section", "contrib")
 
+    def _corpus_size(self) -> int:
+        """tf-idf's N (quirk Q1): the live docs. The stats ledger's
+        ``n_docs`` also counts doc versions that tombstones hide until the
+        next compact purges them, so with deletes present N is counted from
+        the live doclen (the count compact writes back to the ledger), once,
+        on the first tf-idf batch."""
+        if self._n_live is None:
+            self._n_live = (
+                self.n_docs if self.deleted_df is None
+                else self.doclen.select("doc_id").distinct().count()
+            )
+        return self._n_live
+
     def _score_tfidf(self, matched: DataFrame, doc_norm_cosine: bool) -> DataFrame:
         """ltn-lnn / ltc-lnc. ``matched`` must carry a ``q_w`` column (the
         driver-computed query weight, `common.py:26-56`)."""
+        n = float(self._corpus_size())
         base = (
             matched.withColumn("d_wtf", 1.0 + F.log("tf"))
-            .withColumn(
-                "idf", F.log(F.lit(float(self.n_docs)) / F.col("df_global"))
-            )
+            .withColumn("idf", F.log(F.lit(n) / F.col("df_global")))
         )
         if doc_norm_cosine:
             wn = Window.partitionBy("query_id", "doc_id", "section")

@@ -15,6 +15,16 @@ Deviations (documented, deterministic): the reference's top-20 cut and its
 first-strict-min edit-distance scan inherit Python dict order; we pin ties to
 ``(-score, word)`` and ``(distance, -score, word)``.
 
+Degenerate denominator: hits multiply bigram multiplicities, so for words
+with repeated bigrams they can reach or pass ``len(q)+len(w)+2`` (the two
+words' bigram count). There the reference divides by zero (``'aaaaa'`` vs
+``'aaa'``: 10 hits over 10 bigrams) or by a negative number, which ranks
+the most similar candidate last (``'aaaa'`` vs itself: 11 hits, −1). We
+floor the denominator at 1: the reference formula wherever its denominator
+is positive, the raw hit count otherwise — so a degenerate candidate ranks
+at least as high as any candidate with as many hits. Both the driver and
+the Spark path apply the same floor.
+
 This module is pure Python: it runs on the **driver** over the broadcast
 dictionary (vocabulary-sized) in the engine, and inside `tests/oracle.py` —
 shared verbatim, so the two agree by construction.
@@ -73,7 +83,8 @@ def correct_word(
     if not hits:
         return word
     scores = {
-        cand: n / (len(word) + len(cand) + 2 - n) for cand, n in hits.items()
+        cand: n / max(len(word) + len(cand) + 2 - n, 1)
+        for cand, n in hits.items()
     }
     similar = sorted(scores, key=lambda wd: (-scores[wd], wd))[:similar_words_limit]
     best = min(similar, key=lambda wd: (levenshtein(wd, word), -scores[wd], wd))
@@ -198,7 +209,9 @@ def correct_words_spark(
         .withColumn(
             "score",
             F.col("hits")
-            / (F.col("wlen") + F.length("term") + 2 - F.col("hits")),
+            / F.greatest(
+                F.col("wlen") + F.length("term") + 2 - F.col("hits"), F.lit(1)
+            ),
         )
     )
     w_top = Window.partitionBy("word").orderBy(F.desc("score"), F.asc("term"))

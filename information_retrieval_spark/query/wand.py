@@ -1,13 +1,33 @@
 """Block-max WAND top-k over the packed compressed index (north_star
 query path).
 
-Physical shape (SURVEY.md §3.1 redesign): the tiny query-term list prunes
-the packed shard scan (parquet row-group min/max on the term-sorted layout),
-a light stats pre-pass decodes doc_ids only to materialize the per-query
-candidate statistics the reference's BM25 quirks require (Q1 N = |candidate
-set|, Q2 candidate-set avgdl), and the scoring pass runs classic WAND with
-block-granular skipping inside ``applyInPandas`` per doc-hash bucket —
-per-shard top-k, then one global window for the final k (SURVEY.md §7 M5).
+Physical shape (SURVEY.md §3.1 redesign). A batch reads two frames, both
+keyed and partitioned by the doc-hash ``bucket``
+(``pmod(xxhash64(doc_id), n_buckets)``, fixed at build):
+
+* the **shard** — the packed blocks of the batch's terms (query terms,
+  their prefix expansions, filter terms), pruned by parquet row-group
+  min/max on the term-sorted layout; cached per batch;
+* the **side** — every doclen row, tombstone and category row of the
+  snapshot with its segment sequence; resolved when the engine is built
+  (like the shard's packed table), cached on first use. The statistics
+  pass reads its doclen, tombstone and filtered-on category rows; the
+  scoring pass only its tombstone and filtered-on category rows.
+
+Then two bucket-grouped ``applyInPandas`` passes over the same cached
+frames, so neither adds an exchange:
+
+1. **statistics** — each bucket decodes doc_ids only and emits partial
+   sums of the BM25 quirks' inputs (Q1 N = |candidate set|, Q2 candidate
+   avgdl per section, live df per query term). A doc lives in exactly one
+   bucket, so the partials add up across buckets; the driver sums them
+   (`_Bucket.stats` explains the prefix-mode has_exact gate);
+2. **scoring** — classic WAND with block-granular skipping per bucket, one
+   exact top-k list per (bucket, query), merged into the global top-k on
+   the driver (SURVEY.md §7 M5).
+
+A warm batch therefore runs 4 Spark jobs: the shard's exchange, its cache,
+and one per pass.
 
 Correctness stance: WAND is an EXACT top-k algorithm — results are
 rank-identical to the exhaustive scorer (`query/engine.py`), which tests
@@ -29,22 +49,30 @@ from __future__ import annotations
 import heapq
 import json
 import os
-from collections.abc import Iterator
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.codec import decode_doc_gaps, varint_decode
 from information_retrieval_spark.query.engine import K1, B, QuerySpec
 from information_retrieval_spark.tokenize import code_terms, simple_tokens
 
-_DOCS_SCHEMA = T.StructType(
+#: packed columns a bucket pass reads
+_SHARD_COLS = (
+    "bucket", "term", "section", "segment", "seg_seq", "block_id",
+    "first_doc", "last_doc", "docs_bin", "tfs_bin", "dls_bin", "max_tf",
+    "min_dl",
+)
+
+_STATS_SCHEMA = T.StructType(
     [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("section", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("seg_seq", T.LongType(), False),
+        T.StructField("query_id", T.LongType(), False),
+        T.StructField("mask", T.StringType(), False),
+        T.StructField("exact", T.StringType(), False),
+        T.StructField("n", T.LongType(), False),
+        T.StructField("dls", T.ArrayType(T.DoubleType(), False), False),
     ]
 )
 
@@ -55,6 +83,8 @@ _TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
+
+_RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
 
 def _tf_norm(tf: float, dl: float, avgdl: float) -> float:
@@ -393,6 +423,248 @@ def _wand_query(
     return [(-nd, raw) for _, nd, raw in heap]
 
 
+@dataclass(frozen=True)
+class _Plan:
+    """One query's bucket-side spec: its qterms, each with the index terms
+    it matches (itself in exact mode, its prefix expansion otherwise; bit
+    i of a candidate mask is the i-th qterm), and its filters (category,
+    must-have terms, excluded terms)."""
+
+    qterms: dict[str, list[str]]
+    want: str | None
+    must: tuple[str, ...]
+    exclude: tuple[str, ...]
+
+    @property
+    def filtered(self) -> bool:
+        return self.want is not None or bool(self.must or self.exclude)
+
+
+class _Bucket:
+    """One doc-hash bucket of a batch: the shard's blocks plus the side
+    rows (doclen, tombstones, categories) of the same bucket that the pass
+    reads. A doc's postings, doclen rows, tombstones and category all hash
+    to one bucket, so everything a statistic or a score needs about a doc
+    is here."""
+
+    def __init__(self, shard: pd.DataFrame, side: pd.DataFrame,
+                 sections: list[str]):
+        # (term, section) → {segment → block run}: each LSM segment is its
+        # own sorted, non-overlapping run
+        self.by_ts: dict[tuple[str, str], dict[int, list]] = {}
+        self.seq_of_seg: dict[int, int] = {}
+        shard = shard.sort_values(["term", "section", "segment", "block_id"])
+        for r in shard.itertuples(index=False):
+            self.seq_of_seg[int(r.segment)] = int(r.seg_seq)
+            self.by_ts.setdefault((r.term, r.section), {}).setdefault(
+                int(r.segment), []
+            ).append(
+                (r.first_doc, r.last_doc, r.docs_bin, r.tfs_bin,
+                 r.dls_bin, r.max_tf, r.min_dl)
+            )
+        # term → its (segment, block run)s over all sections
+        self._runs: dict[str, list[tuple[int, list]]] = {}
+        for (t, _), segs in self.by_ts.items():
+            self._runs.setdefault(t, []).extend(segs.items())
+        self._docs: dict[str, np.ndarray] = {}
+        kind = side["kind"].to_numpy()
+        docs = side["doc_id"].to_numpy(np.int64)
+        vals = side["v"].to_numpy(np.int64)
+        # a doc's tombstones collapse to the max upto (catalog.read_deletes)
+        is_del = kind == "del"
+        tomb = pd.Series(vals[is_del]).groupby(docs[is_del]).max()
+        self.del_docs = tomb.index.to_numpy(np.int64)
+        self.del_upto = tomb.to_numpy(np.int64)
+        live = ~is_del
+        live[live] = ~self.hidden(
+            docs[live], side["seq"].to_numpy(np.int64)[live]
+        )
+        # live (doc, section, dl) rows, looked up for candidates only
+        is_dl = live & (kind == "dl")
+        self.sections = sections
+        self.dl_rows = (docs[is_dl], side["s"].to_numpy()[is_dl], vals[is_dl])
+        is_cat = live & (kind == "cat")
+        self.cat_docs = docs[is_cat]
+        self.cat_vals = side["s"].to_numpy()[is_cat]
+
+    def hidden(self, docs: np.ndarray, seqs) -> np.ndarray:
+        """Rows of ``docs`` (from segments with sequence ``seqs``) that a
+        seq-scoped tombstone hides: some tombstone has ``upto >= seq``."""
+        if not len(self.del_docs) or not len(docs):
+            return np.zeros(len(docs), dtype=bool)
+        i = np.minimum(
+            np.searchsorted(self.del_docs, docs), len(self.del_docs) - 1
+        )
+        return (self.del_docs[i] == docs) & (self.del_upto[i] >= seqs)
+
+    def dl_of(self, docs: np.ndarray) -> np.ndarray:
+        """Per-section lengths of the sorted, unique live ``docs`` (one row
+        per doc; a missing section has dl = 0, quirk Q2)."""
+        out = np.zeros((len(docs), len(self.sections)))
+        dl_docs, secs, vals = self.dl_rows
+        if not len(docs) or not len(dl_docs):
+            return out
+        i = np.minimum(np.searchsorted(docs, dl_docs), len(docs) - 1)
+        hit = docs[i] == dl_docs
+        for j, s in enumerate(self.sections):
+            m = hit & (secs == s)
+            out[i[m], j] = vals[m]
+        return out
+
+    def docs_of(self, term: str) -> np.ndarray:
+        """Sorted live doc_ids holding ``term`` in any section (doc_ids
+        decoded only; memoized per term)."""
+        got = self._docs.get(term)
+        if got is None:
+            parts = [np.empty(0, dtype=np.int64)]
+            for seg, blocks in self._runs.get(term, ()):
+                d = np.concatenate(
+                    [decode_doc_gaps(b[2]) for b in blocks]
+                ).astype(np.int64)
+                parts.append(d[~self.hidden(d, self.seq_of_seg[seg])])
+            got = self._docs[term] = np.unique(np.concatenate(parts))
+        return got
+
+    def admits(self, plan: _Plan):
+        """doc_id → passes the query's filters (`_wand_query`'s
+        ``allowed``); pivot docs are live already."""
+        sets = [(set(self.docs_of(t).tolist()), True) for t in plan.must]
+        sets += [(set(self.docs_of(t).tolist()), False) for t in plan.exclude]
+        if plan.want is not None:
+            cat = self.cat_docs[self.cat_vals == plan.want]
+            sets.append((set(cat.tolist()), True))
+        return lambda doc: all((doc in s) == need for s, need in sets)
+
+    def keep(self, plan: _Plan, docs: np.ndarray) -> np.ndarray:
+        """Which of ``docs`` pass the query's filters."""
+        ok = np.ones(len(docs), dtype=bool)
+        if plan.want is not None:
+            ok &= np.isin(docs, self.cat_docs[self.cat_vals == plan.want])
+        for t in plan.must:
+            ok &= np.isin(docs, self.docs_of(t))
+        for t in plan.exclude:
+            ok &= ~np.isin(docs, self.docs_of(t))
+        return ok
+
+    def stats(self, plans: dict[int, _Plan]) -> pd.DataFrame:
+        """Per query, this bucket's live, filter-passing candidates grouped
+        by the set of qterms they match (``mask``, one '0'/'1' per qterm):
+        the group's size and per-section dl sums. Plus ``exact``: which
+        qterms' exact term has such a doc here.
+
+        Every figure adds up across buckets, and the masks keep the
+        prefix-mode has_exact gate exact: a qterm survives only if its
+        exact term is live and passes the filters in SOME bucket — an OR
+        no single bucket can decide. The driver ORs ``exact``, then sums
+        only the groups whose mask hits a surviving qterm (n_cand, avgdl)
+        and, per surviving qterm, the groups holding its bit (df)."""
+        out: list[tuple] = []
+        if not self.by_ts:
+            return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+        found = []  # (qid, candidates, qterm membership, exact bits)
+        for qid, plan in plans.items():
+            if not plan.qterms:
+                continue
+            per, exact = [], []
+            for t, expand in plan.qterms.items():
+                d = np.unique(
+                    np.concatenate([self.docs_of(e) for e in expand])
+                )
+                e = self.docs_of(t)
+                if plan.filtered:
+                    d = d[self.keep(plan, d)]
+                    e = e[self.keep(plan, e)]
+                per.append(d)
+                exact.append("1" if len(e) else "0")
+            cands = np.unique(np.concatenate(per))
+            if not len(cands):
+                continue
+            member = np.zeros((len(cands), len(per)), dtype=bool)
+            for i, d in enumerate(per):
+                member[np.searchsorted(cands, d), i] = True
+            found.append((qid, cands, member, "".join(exact)))
+        if not found:
+            return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+        every = np.unique(np.concatenate([f[1] for f in found]))
+        every_dl = self.dl_of(every)
+        for qid, cands, member, ex in found:
+            groups, inv = np.unique(member, axis=0, return_inverse=True)
+            inv = inv.reshape(-1)
+            n = np.bincount(inv, minlength=len(groups))
+            dls = every_dl[np.searchsorted(every, cands)]
+            sums = np.stack(
+                [np.bincount(inv, weights=dls[:, s], minlength=len(groups))
+                 for s in range(dls.shape[1])],
+                axis=1,
+            )
+            for g, bits in enumerate(groups.astype(int)):
+                mask = "".join(map(str, bits))
+                out.append((qid, mask, ex, int(n[g]), sums[g].tolist()))
+        return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+
+    def top_k(
+        self, qmeta: dict[int, dict], plans: dict[int, _Plan]
+    ) -> pd.DataFrame:
+        """Exact per-query top-k of this bucket by block-max WAND."""
+        out_q, out_d, out_s = [], [], []
+        if not self.by_ts:
+            return pd.DataFrame(
+                {"query_id": out_q, "doc_id": out_d, "score": out_s}
+            )
+        # tombstones split two ways:
+        # * upto >= every segment seq in this bucket → the doc is dead
+        #   in ALL its postings here: zero-decode skip at pivot level
+        #   (the classic delete path, `deleted` in _wand_query);
+        # * upto below the newest seq (an updated doc whose re-added
+        #   rows live in a newer segment) → per-segment dead arrays,
+        #   filtered out inside `_List._decode`. Mutually exclusive by
+        #   construction — advance() past a pivot-level-deleted doc
+        #   must still SEE its posting, or it would skip a live one.
+        max_seq = max(self.seq_of_seg.values())
+        dead_all = frozenset(self.del_docs[self.del_upto >= max_seq].tolist())
+        partial = self.del_upto < max_seq
+        dead_of_seq: dict[int, np.ndarray | None] = {}
+        for s in set(self.seq_of_seg.values()):
+            ids = self.del_docs[partial & (self.del_upto >= s)]
+            dead_of_seq[s] = ids.view(np.uint64) if len(ids) else None
+
+        def cursor(key: tuple[str, str], weight: float, avgdl: float):
+            segs = [
+                _List(blocks, weight, avgdl,
+                      dead=dead_of_seq[self.seq_of_seg[seg]])
+                for seg, blocks in sorted(self.by_ts[key].items())
+            ]
+            return segs[0] if len(segs) == 1 else _SegmentedList(
+                segs, weight, avgdl
+            )
+
+        for qid, meta in qmeta.items():
+            plan = plans[qid]
+            lists = []
+            for (qterm, s), m in meta["terms"].items():
+                runs = [
+                    cursor((t, s), m["weight"], m["avgdl"])
+                    for t in plan.qterms[qterm]
+                    if (t, s) in self.by_ts
+                ]
+                if len(runs) == 1:
+                    lists.append(runs[0])
+                elif runs:
+                    lists.append(_MergedList(runs, m["weight"], m["avgdl"]))
+            if not lists:
+                continue
+            # filtered docs are skipped like deleted ones
+            allowed = self.admits(plan) if plan.filtered else None
+            k = meta["k"] if meta["k"] > 0 else 1 << 30
+            for doc, score in _wand_query(lists, k, dead_all, allowed):
+                out_q.append(qid)
+                out_d.append(doc)
+                out_s.append(score)
+        return pd.DataFrame(
+            {"query_id": out_q, "doc_id": out_d, "score": out_s}
+        )
+
+
 class WandEngine:
     """BM25 top-k via block-max WAND over ``<index_dir>/packed``.
 
@@ -402,7 +674,7 @@ class WandEngine:
     evict each other's shard mid-batch (correct but recompute-taxed).
     For concurrent serving hold ONE ENGINE PER WORKER THREAD over the
     same index_dir and ``close()`` each when done (per-engine executor
-    storage is the doclen map + one query-term shard, both small);
+    storage is the bucket side frame + one query-term shard);
     measured throughput for that model: BENCH/BASELINE.md "Concurrent
     query throughput" (`scripts/bench_qps.py`)."""
 
@@ -433,6 +705,7 @@ class WandEngine:
         of repacking, and the per-bucket scorer merges segment cursors."""
         from information_retrieval_spark.index.catalog import (
             read_doc_meta,
+            read_live_table,
             read_packed,
             read_table,
             read_term_df,
@@ -443,11 +716,8 @@ class WandEngine:
         self.version = version
         self.distributed_spell = distributed_spell
         self.packed = read_packed(spark, index_dir, version)
-        # live-filtered: an updated doc awaiting compaction has doclen
-        # rows in both its old and new segments — _dl_map's per-doc
-        # section map would hit duplicate keys on the stale ones
-        from information_retrieval_spark.index.catalog import read_live_table
-
+        # live doc lengths as a frame (query/personalized.py reads the
+        # corpus's doc_ids from it); search() reads them through `_side`
         self.doclen = read_live_table(spark, index_dir, "doclen", version)
         self.term_df = read_term_df(spark, index_dir, version)
         stop = read_table(spark, index_dir, "stopwords", version)
@@ -456,27 +726,32 @@ class WandEngine:
             self.config = json.load(f)["config"]
         self.sections = list(self.config["sections"].keys())
         self.tokenizer = self.config["tokenizer"]
-        # delete-vector (index/maintenance.py): (doc_id, upto) seq-scoped
-        # tombstones — a row hides the doc only in segments with
-        # _SEQ <= upto, so an updated/re-added doc's new rows stay live.
-        # Never collected: the scoring pass receives each bucket's
-        # tombstones cogrouped with its shard (see search), so membership
-        # stays partition-aligned at any delete-vector size.
-        from information_retrieval_spark.index.catalog import read_deletes
-
-        self.deleted_df = read_deletes(spark, index_dir, version)
         self.doc_meta = read_doc_meta(spark, index_dir, version)
         self.n_buckets = int(self.config.get("n_buckets", 8))
+        # partition count of both cached bucket frames: equal counts let
+        # every bucket-grouped pass read them without a new exchange. At
+        # most one task per core: a pandas-UDF task pays a fixed Python
+        # hand-off, so a second wave of tasks costs more than it spreads
+        self._partitions = max(
+            1, min(self.n_buckets, spark.sparkContext.defaultParallelism)
+        )
         self.max_prefix_expand = max_prefix_expand
+        # the side frame's inputs are resolved NOW, like packed above: a
+        # write between construction and a search() must not mix snapshots
+        self._side_plan = self._read_side()
         self._dl_map_df = None
         self._last_shard = None
+        #: the last batch's corpus statistics per query_id: ``n_cand``
+        #: (quirk Q1 N), ``avgdl`` per section (Q2) and live ``df`` per
+        #: surviving qterm — what the BM25 weights were computed from
+        self.last_stats: dict[int, dict] = {}
         self._bigram_dict = None
         self._vocab_over_cap = False
 
     def close(self) -> None:
-        """Release this engine's persisted executor state (the doclen map
-        and the last batch's term shard). A WandEngine keeps both cached
-        across ``search()`` calls so a query stream amortizes them; a
+        """Release this engine's persisted executor state (the bucket side
+        frame and the last batch's term shard). A WandEngine keeps both
+        cached across ``search()`` calls so a query stream amortizes them; a
         long-lived process that cycles through many engines (one per
         index/snapshot — e.g. a size sweep, a multi-tenant server) must
         close each one or the abandoned cache blocks accumulate in
@@ -500,22 +775,67 @@ class WandEngine:
 
     # ------------------------------------------------------------- helpers
 
-    def _dl_map(self):
-        """Per-doc section→dl map, folded once and cached across queries —
-        the distributed analogue of the reference's in-RAM doclen dict. It
-        collapses the Q2 sections crossJoin + per-section shuffle into one
-        join + one aggregate (missing section still contributes dl = 0)."""
+    def _side(self) -> DataFrame:
+        """The bucket side frame, cached on first use (and again after
+        ``close()``)."""
         if self._dl_map_df is None:
-            self._dl_map_df = (
-                self.doclen.groupBy("doc_id")
-                .agg(
-                    F.map_from_arrays(
-                        F.collect_list("section"), F.collect_list("dl")
-                    ).alias("dlmap")
-                )
-                .persist()
-            )
+            self._dl_map_df = self._side_plan.persist()
         return self._dl_map_df
+
+    def _read_side(self) -> DataFrame:
+        """Every doclen row, tombstone and category row of the snapshot as
+        ``(bucket, doc_id, kind, s, v, seq)``, partitioned like the
+        per-batch shard. Rows keep their segment sequence; `_Bucket`
+        resolves seq-scoped tombstones per bucket, so no anti-join runs
+        here and nothing corpus-sized passes through the driver."""
+        from information_retrieval_spark.index.catalog import (
+            GLOBAL_UPTO,
+            read_doc_meta,
+            read_seq_table,
+            table_dirs,
+        )
+
+        spark, idx, v = self.spark, self.index_dir, self.version
+        parts = [
+            read_seq_table(spark, idx, "doclen", v).select(
+                "doc_id", F.lit("dl").alias("kind"),
+                F.col("section").alias("s"), F.col("dl").alias("v"),
+                F.col("seg_seq").alias("seq"),
+            )
+        ]
+        dirs = table_dirs(idx, "deleted_docs", v)
+        if dirs:
+            # legacy doc_id-only rows hide the doc everywhere
+            parts.append(
+                spark.read.schema("doc_id long, upto long")
+                .parquet(*dirs)
+                .select(
+                    "doc_id", F.lit("del").alias("kind"),
+                    F.lit(None).cast("string").alias("s"),
+                    F.coalesce("upto", F.lit(GLOBAL_UPTO)).alias("v"),
+                    F.lit(0).cast("long").alias("seq"),
+                )
+            )
+        if self.doc_meta is not None:
+            parts.append(
+                read_doc_meta(spark, idx, v, with_seq=True).select(
+                    "doc_id", F.lit("cat").alias("kind"),
+                    F.col("category").alias("s"),
+                    F.lit(0).cast("long").alias("v"),
+                    F.col("seg_seq").alias("seq"),
+                )
+            )
+        side = parts[0]
+        for p in parts[1:]:
+            side = side.unionByName(p)
+        doc = F.col("doc_id").cast("long")
+        return side.select(
+            F.pmod(F.xxhash64(doc), F.lit(self.n_buckets))
+            .cast("int").alias("bucket"),
+            doc.alias("doc_id"), "kind", "s",
+            F.col("v").cast("long").alias("v"),
+            F.col("seq").cast("long").alias("seq"),
+        ).repartition(self._partitions, "bucket")
 
     def _tokenize(self, text: str) -> list[str]:
         toks = code_terms(text) if self.tokenizer == "code" else simple_tokens(text)
@@ -588,7 +908,14 @@ class WandEngine:
 
     def search(self, queries: list[QuerySpec]) -> DataFrame:
         """(query_id, rank, doc_id, score) — rank-identical to the
-        exhaustive engine for both match modes (okapi25)."""
+        exhaustive engine for both match modes (okapi25).
+
+        Runs the batch before returning: one statistics pass and one
+        scoring pass, both bucket-grouped over the same cached frames, and
+        a driver-side merge of the per-bucket top-k lists into the returned
+        frame. That is at most ``n_buckets · k`` rows per query for k > 0;
+        a k < 0 query ("all results") brings every candidate to the
+        driver."""
         # The packed blocks carry BM25-shaped bounds (max_tf, min_dl);
         # tf-idf cosine would need per-block norm metadata the index
         # doesn't store. Refuse loudly rather than silently scoring a
@@ -602,6 +929,7 @@ class WandEngine:
         modes = {q.match_mode for q in queries}
         assert len(modes) == 1, "mixed match modes: split the batch"
         mode = modes.pop()
+        self.last_stats = {}
         fixes = None
         if self.distributed_spell and any(q.spell for q in queries):
             from information_retrieval_spark.query.spell import (
@@ -635,513 +963,159 @@ class WandEngine:
             expansions = self._expand_prefix(uniq_qterms)
         else:
             expansions = {t: [t] for t in uniq_qterms}
-        all_terms = sorted({t for ts in expansions.values() for t in ts})
-        if not all_terms:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
+        plans = {
+            q.query_id: _Plan(
+                qterms={
+                    t: expansions[t]
+                    for t in qtoks[q.query_id]
+                    if t in expansions
+                },
+                want=q.filter_category,
+                must=tuple(dict.fromkeys(q.filter_terms or ())),
+                exclude=tuple(dict.fromkeys(q.exclude_terms or ())),
             )
-
-        shard = self.packed.filter(F.col("term").isin(all_terms)).cache()
-
-        # --- stats pre-pass: decode doc_ids only (Q1 n_cand, Q2 avgdl) ----
-        # one output frame per Arrow BATCH (np.repeat of the block keys by
-        # block length), not one per block — per-block DataFrame
-        # construction was the pre-pass's Python floor at batch sizes of
-        # thousands of blocks
-        def decode_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                arrs = [
-                    decode_doc_gaps(b).astype(np.int64)
-                    for b in pdf["docs_bin"]
-                ]
-                lens = np.fromiter(
-                    (len(a) for a in arrs), dtype=np.int64, count=len(arrs)
-                )
-                yield pd.DataFrame(
-                    {
-                        "term": np.repeat(pdf["term"].to_numpy(), lens),
-                        "section": np.repeat(pdf["section"].to_numpy(), lens),
-                        "doc_id": (
-                            np.concatenate(arrs)
-                            if arrs
-                            else np.empty(0, dtype=np.int64)
-                        ),
-                        "seg_seq": np.repeat(
-                            pdf["seg_seq"].to_numpy(), lens
-                        ),
-                    }
-                )
-
-        matched = shard.select(
-            "term", "section", "docs_bin", "seg_seq"
-        ).mapInPandas(decode_docs, _DOCS_SCHEMA)
-        # (query_id, qterm, term) triples map expanded terms back to qterms
-        qt_rows = [
-            (qid, qterm, term)
-            for qid, m in qtoks.items()
-            for qterm in m
-            for term in expansions.get(qterm, [])
-        ]
-        if not qt_rows:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
-            )
-        qt = self.spark.createDataFrame(
-            qt_rows, "query_id long, qterm string, term string"
-        )
-        mq = matched.join(F.broadcast(qt), "term")
-        # seq-scoped tombstone filter (same anti-join shape as
-        # catalog.filter_deleted): the pre-pass stats recompute over live
-        # rows only, and an updated doc counts once (its old-segment rows
-        # are hidden, its new-segment rows live)
-        from information_retrieval_spark.index.catalog import filter_deleted
-
-        live_mq = filter_deleted(mq, self.deleted_df)
-        # category filter (QuerySpec.filter_category): restrict filtered
-        # queries' matched streams to their category's docs BEFORE the gate
-        # and candidate stats — same placement as engine._matched
-        cat_map = {
-            q.query_id: q.filter_category
             for q in queries
-            if q.filter_category is not None
         }
-        if cat_map:
-            if self.doc_meta is None:
-                raise ValueError(
-                    "filter_category requires an index built with"
-                    " IndexBuilder(category_col=...)"
-                )
-            cat_df = self.spark.createDataFrame(
-                list(cat_map.items()), "query_id long, want_cat string"
+        if not any(p.qterms for p in plans.values()):
+            return self._result()
+        if any(p.want is not None for p in plans.values()) and (
+            self.doc_meta is None
+        ):
+            raise ValueError(
+                "filter_category requires an index built with"
+                " IndexBuilder(category_col=...)"
             )
-            from information_retrieval_spark.index.catalog import (
-                prune_doc_meta,
+        # filter_terms / exclude_terms (Lucene filter context) ride in the
+        # shard: a doc's presence is read off the filter terms' own blocks
+        # in its bucket, live-filtered like every other posting
+        shard_terms = sorted(
+            {t for ts in expansions.values() for t in ts}
+            | {t for p in plans.values() for t in p.must + p.exclude}
+        )
+        shard = (
+            self.packed.filter(F.col("term").isin(shard_terms))
+            .select(*_SHARD_COLS)
+            .repartition(self._partitions, "bucket")
+            .persist()
+        )
+        if self._last_shard is not None:
+            self._last_shard.unpersist()
+        self._last_shard = shard
+        # each pass reads only the side rows it uses: tombstones, the
+        # categories a query filters on, and (statistics only) doclen. A
+        # filter keeps the cached frame's bucket partitioning, so neither
+        # cogroup adds an exchange
+        side = self._side()
+        wants = sorted({p.want for p in plans.values() if p.want is not None})
+        rows = F.col("kind") == "del"
+        if wants:
+            rows |= (F.col("kind") == "cat") & F.col("s").isin(wants)
+        score_side = side.filter(rows)
+        stats_side = side.filter(rows | (F.col("kind") == "dl"))
+        sections = self.sections
+
+        # --- statistics pass: per-bucket partial sums, added on the driver
+        def stats_bucket(
+            left: pd.DataFrame, right: pd.DataFrame
+        ) -> pd.DataFrame:
+            return _Bucket(left, right, sections).stats(plans)
+
+        stats = (
+            shard.groupby("bucket")
+            .cogroup(stats_side.groupby("bucket"))
+            .applyInPandas(stats_bucket, _STATS_SCHEMA)
+            .collect()
+        )
+        masks: dict[int, dict[str, list]] = {}
+        exact: dict[int, set[int]] = {}
+        for r in stats:
+            acc = masks.setdefault(r.query_id, {}).setdefault(
+                r.mask, [0, np.zeros(len(sections))]
+            )
+            acc[0] += r.n
+            acc[1] += np.asarray(r.dls, dtype=np.float64)
+            exact.setdefault(r.query_id, set()).update(
+                i for i, c in enumerate(r.exact) if c == "1"
             )
 
-            dm = prune_doc_meta(self.doc_meta, list(cat_map.values()))
-            live_mq = (
-                live_mq.join(F.broadcast(cat_df), "query_id", "left")
-                .join(dm, "doc_id", "left")
-                .filter(
-                    F.col("want_cat").isNull()
-                    | (F.col("category") == F.col("want_cat"))
-                )
-                .drop("want_cat", "category")
-            )
-        # boolean term constraints (QuerySpec.filter_terms/exclude_terms,
-        # Lucene filter context): presence read from postings_flat with a
-        # pushed In(filter terms) scan; the per-query allow/deny doc sets
-        # restrict the stats stream here and ride the bucket-aligned meta
-        # channel into the WAND pass below — same two placements as the
-        # category filter
-        mu_rows, ex_rows = [], []
+        # --- corpus statistics per query: sum the bucket partials, gated
+        # by the live has_exact OR (engine._matched; see `_Bucket.stats`)
         for q in queries:
-            ft = list(dict.fromkeys(q.filter_terms or ()))
-            mu_rows.extend((q.query_id, t, len(ft)) for t in ft)
-            ex_rows.extend(
-                (q.query_id, t) for t in dict.fromkeys(q.exclude_terms or ())
-            )
-        has_must = {qid for qid, _, _ in mu_rows}
-        ex_df = mu_df = None
-        if mu_rows or ex_rows:
-            from information_retrieval_spark.index.catalog import (
-                read_live_postings,
-            )
-
-            pf = read_live_postings(
-                self.spark, self.index_dir, self.version
-            )
-            if pf is None:
-                raise ValueError(
-                    "filter_terms/exclude_terms require a postings_flat"
-                    f" table in index {self.index_dir!r}"
-                )
-            fterms = sorted(
-                {t for _, t, _ in mu_rows} | {t for _, t in ex_rows}
-            )
-            fp = pf.select("term", "doc_id").filter(
-                F.col("term").isin(fterms)
-            )
-            # no fp-wide distinct: (term, doc_id) repeats only across
-            # sections, and BOTH consumers dedup inherently (the exclude
-            # branch distincts its own projection; the must branch counts
-            # DISTINCT mterm) — a pre-distinct here was one extra shuffle
-            # of the filter-term postings for nothing
-            if ex_rows:
-                ex_spec = self.spark.createDataFrame(
-                    ex_rows, "query_id long, xterm string"
-                )
-                ex_df = (
-                    fp.join(F.broadcast(ex_spec), fp.term == ex_spec.xterm)
-                    .select("query_id", "doc_id")
-                    .distinct()
-                )
-                live_mq = live_mq.join(
-                    ex_df, ["query_id", "doc_id"], "left_anti"
-                )
-            if mu_rows:
-                mu_spec = self.spark.createDataFrame(
-                    mu_rows, "query_id long, mterm string, n_must int"
-                )
-                mu_df = (
-                    fp.join(F.broadcast(mu_spec), fp.term == mu_spec.mterm)
-                    .groupBy("query_id", "doc_id", "n_must")
-                    .agg(F.countDistinct("mterm").alias("got"))
-                    .filter(F.col("got") == F.col("n_must"))
-                    .select("query_id", "doc_id")
-                )
-                hm_df = self.spark.createDataFrame(
-                    [(qid, 1) for qid in sorted(has_must)],
-                    "query_id long, __hm int",
-                )
-                live_mq = (
-                    live_mq.join(
-                        mu_df.withColumn("__mok", F.lit(1)),
-                        ["query_id", "doc_id"],
-                        "left",
-                    )
-                    .join(F.broadcast(hm_df), "query_id", "left")
-                    .filter(
-                        F.col("__hm").isNull() | F.col("__mok").isNotNull()
-                    )
-                    .drop("__mok", "__hm")
-                )
-        has_tfil = bool(mu_rows or ex_rows)
-        has_deletes = self.deleted_df is not None
-        if mode == "prefix" and (has_deletes or cat_map or has_tfil):
-            # re-check the has_exact gate against LIVE postings, exactly as
-            # engine._matched does and BEFORE candidate stats: a fully
-            # deleted exact term must suppress its whole expansion,
-            # including its docs' contribution to Q1 n_cand / Q2 avgdl.
-            # (Without deletes, _expand_prefix's term_df gate is equivalent.)
-            wge = Window.partitionBy("query_id", "qterm")
-            live_mq = (
-                live_mq.withColumn(
-                    "has_exact",
-                    F.max((F.col("term") == F.col("qterm")).cast("int")).over(
-                        wge
-                    ),
-                )
-                .filter(F.col("has_exact") == 1)
-                .drop("has_exact")
-            )
-        cand = live_mq.select("query_id", "doc_id").distinct()
-        dl_map = self._dl_map()
-        sec_avgs = [
-            F.avg(
-                F.coalesce(F.element_at("dlmap", F.lit(s)), F.lit(0))
-            ).alias(f"avgdl_{i}")
-            for i, s in enumerate(self.sections)
-        ]
-        stats_agg = (
-            cand.join(dl_map, "doc_id", "left")
-            .groupBy("query_id")
-            .agg(F.count("*").alias("n_cand"), *sec_avgs)
-        )
-        # df sub-plan: per-(query, qterm) over the LIVE (gated) expanded
-        # stream when prefix expansion or deletes make term_df stale
-        # (`engine.py` dfq semantics); otherwise the global term_df table
-        # (tiny pushed-filter scan). A qterm with no live group simply never
-        # appears → df_of returns None → the term is skipped.
-        per_query_df = (
-            mode == "prefix" or has_deletes or bool(cat_map) or has_tfil
-        )
-        if per_query_df:
-            df_agg = live_mq.groupBy("query_id", "qterm").agg(
-                F.countDistinct("doc_id").alias("df")
-            )
-        else:
-            df_agg = self.term_df.filter(F.col("term").isin(all_terms)).select(
-                F.lit(None).cast("long").alias("query_id"),
-                F.col("term").alias("qterm"),
-                F.col("df").cast("long").alias("df"),
-            )
-        # ONE driver job for the whole pre-pass: the stats and df aggregates
-        # are tagged and unioned so the batch pays a single round of job
-        # scheduling (the sequential-collects latency floor flagged in
-        # round 1), both reading the same cached shard
-        avg_cols = [f"avgdl_{i}" for i in range(len(self.sections))]
-        pre = stats_agg.select(
-            F.lit("stats").alias("kind"),
-            "query_id",
-            F.lit(None).cast("string").alias("qterm"),
-            F.lit(None).cast("long").alias("df"),
-            F.col("n_cand").cast("long").alias("n_cand"),
-            *[F.col(c).cast("double").alias(c) for c in avg_cols],
-        ).unionByName(
-            df_agg.select(
-                F.lit("df").alias("kind"),
-                "query_id",
-                "qterm",
-                "df",
-                F.lit(None).cast("long").alias("n_cand"),
-                *[F.lit(None).cast("double").alias(c) for c in avg_cols],
-            )
-        )
-        avgdl: dict = {}
-        n_cand: dict = {}
-        dfs: dict = {}
-        table: dict = {}
-        for r in pre.collect():
-            if r.kind == "stats":
-                n_cand[r.query_id] = r.n_cand
-                for i, s in enumerate(self.sections):
-                    avgdl[(r.query_id, s)] = r[f"avgdl_{i}"]
-            elif r.query_id is None:
-                table[r.qterm] = r.df
-            else:
-                dfs[(r.query_id, r.qterm)] = r.df
-
-        def df_of(qid: int, t: str):
-            return dfs.get((qid, t)) if per_query_df else table.get(t)
+            alive = exact.get(q.query_id, set())
+            hits = [
+                (n, dls, {i for i, c in enumerate(m) if c == "1"})
+                for m, (n, dls) in masks.get(q.query_id, {}).items()
+            ]
+            cand = [(n, dls) for n, dls, bits in hits if bits & alive]
+            nq = sum(n for n, _ in cand)
+            self.last_stats[q.query_id] = {
+                "n_cand": nq,
+                "avgdl": dict(zip(
+                    sections, (sum(d for _, d in cand) / nq).tolist()
+                )) if nq else {},
+                "df": {
+                    t: sum(n for n, _, bits in hits if i in bits)
+                    for i, t in enumerate(plans[q.query_id].qterms)
+                    if i in alive
+                },
+            }
 
         # --- per-query scoring-term meta (weight = mult · idf · w_s) ------
         qmeta: dict[int, dict] = {}
         for q in queries:
+            st = self.last_stats[q.query_id]
+            nq = st["n_cand"]
             terms = {}
-            nq = n_cand.get(q.query_id, 0)
-            for t, mult in qtoks[q.query_id].items():
-                if t not in expansions:
-                    continue
-                df = df_of(q.query_id, t)
-                if df is None or nq == 0:
-                    continue
+            for t, df in st["df"].items():
                 idf = float(np.log((nq - df + 0.5) / (df + 0.5) + 1.0))
                 for s, w in self._weights(q).items():
-                    a = avgdl.get((q.query_id, s))
+                    a = st["avgdl"].get(s)
                     if a is None or a == 0:
                         continue
                     terms[(t, s)] = {
-                        "weight": mult * idf * w,
+                        "weight": qtoks[q.query_id][t] * idf * w,
                         "avgdl": a,
-                        "expand": expansions[t],
                     }
-            qmeta[q.query_id] = {"terms": terms, "k": q.k}
+            if terms:
+                qmeta[q.query_id] = {"terms": terms, "k": q.k}
+        if not qmeta:
+            return self._result()
 
-        # --- WAND pass per bucket -----------------------------------------
-        # (applyInPandas dispatches on function arity — a 2-arg callable is
-        # called as (key, pdf) — so the plain path gets a 1-arg wrapper)
-        def wand_bucket_impl(
-            pdf: pd.DataFrame,
-            cat_of: dict | None,
-            deleted_upto: dict,
-            ex_docs: dict | None = None,
-            mu_docs: dict | None = None,
+        # --- WAND pass per bucket: same cached frames, no new exchange ----
+        def wand_bucket(
+            left: pd.DataFrame, right: pd.DataFrame
         ) -> pd.DataFrame:
-            # (term, section) → {segment → block run}: each LSM segment is
-            # its own sorted, non-overlapping run; multi-segment groups get
-            # a _SegmentedList cursor over the per-segment _Lists
-            by_ts: dict[tuple[str, str], dict[int, list]] = {}
-            seq_of_seg: dict[int, int] = {}
-            pdf = pdf.sort_values(["term", "section", "segment", "block_id"])
-            for r in pdf.itertuples(index=False):
-                seq_of_seg[int(r.segment)] = int(r.seg_seq)
-                by_ts.setdefault((r.term, r.section), {}).setdefault(
-                    int(r.segment), []
-                ).append(
-                    (r.first_doc, r.last_doc, r.docs_bin, r.tfs_bin,
-                     r.dls_bin, r.max_tf, r.min_dl)
-                )
+            return _Bucket(left, right, sections).top_k(qmeta, plans)
 
-            # tombstones split two ways (deleted_upto: doc → max upto):
-            # * upto >= every segment seq in this bucket → the doc is dead
-            #   in ALL its postings here: zero-decode skip at pivot level
-            #   (the classic delete path, `deleted` in _wand_query);
-            # * upto below the newest seq (an updated doc whose re-added
-            #   rows live in a newer segment) → per-segment dead arrays,
-            #   filtered out inside `_List._decode`. Mutually exclusive by
-            #   construction — advance() past a pivot-level-deleted doc
-            #   must still SEE its posting, or it would skip a live one.
-            max_seq = max(seq_of_seg.values(), default=0)
-            dead_all = frozenset(
-                d for d, u in deleted_upto.items() if u >= max_seq
+        per_query: dict[int, list[tuple[int, float]]] = {}
+        for r in (
+            shard.groupby("bucket")
+            .cogroup(score_side.groupby("bucket"))
+            .applyInPandas(wand_bucket, _TOPK_SCHEMA)
+            .collect()
+        ):
+            per_query.setdefault(r.query_id, []).append((r.doc_id, r.score))
+        # global top-k: the per-bucket lists are exact (a doc lives in one
+        # bucket), re-ranked under the scorer's own ordering
+        out = []
+        for q in queries:
+            ranked = sorted(
+                per_query.get(q.query_id, ()),
+                key=lambda ds: (-round(ds[1], 9), ds[0]),
             )
-            partial = [
-                (d, u) for d, u in deleted_upto.items() if u < max_seq
-            ]
-            dead_of_seq: dict[int, np.ndarray | None] = {}
-            for s in set(seq_of_seg.values()):
-                if partial:
-                    ids = [d for d, u in partial if u >= s]
-                    dead_of_seq[s] = (
-                        np.array(ids, dtype=np.int64).view(np.uint64)
-                        if ids
-                        else None
-                    )
-                else:
-                    dead_of_seq[s] = None
+            if q.k >= 0:
+                ranked = ranked[: q.k]
+            out.extend(
+                (q.query_id, rank, doc, score)
+                for rank, (doc, score) in enumerate(ranked, 1)
+            )
+        return self._result(out)
 
-            def cursor(key: tuple[str, str], weight: float, avgdl: float):
-                segs = [
-                    _List(blocks, weight, avgdl,
-                          dead=dead_of_seq[seq_of_seg[seg]])
-                    for seg, blocks in sorted(by_ts[key].items())
-                ]
-                return segs[0] if len(segs) == 1 else _SegmentedList(
-                    segs, weight, avgdl
-                )
-            out_q, out_d, out_s = [], [], []
-            for qid, meta in qmeta.items():
-                want = cat_map.get(qid)
-                exs = (ex_docs or {}).get(qid)
-                # None = no must constraint; an empty set rejects every doc
-                # in this bucket (the must terms match nothing here)
-                mus = (
-                    (mu_docs or {}).get(qid, frozenset())
-                    if qid in has_must
-                    else None
-                )
-                if want is None and not exs and mus is None:
-                    allowed = None
-                else:
-                    def allowed(d, w=want, e=exs, mu=mus):
-                        if w is not None and cat_of.get(d) != w:
-                            return False
-                        if e and d in e:
-                            return False
-                        if mu is not None and d not in mu:
-                            return False
-                        return True
-                lists = []
-                for (qterm, s), m in meta["terms"].items():
-                    runs = [
-                        cursor((t, s), m["weight"], m["avgdl"])
-                        for t in m["expand"]
-                        if (t, s) in by_ts
-                    ]
-                    if not runs:
-                        continue
-                    if len(runs) == 1:
-                        lists.append(runs[0])
-                    else:
-                        lists.append(
-                            _MergedList(runs, m["weight"], m["avgdl"])
-                        )
-                if not lists:
-                    continue
-                k = meta["k"] if meta["k"] > 0 else 1 << 30
-                for doc, score in _wand_query(lists, k, dead_all, allowed):
-                    out_q.append(qid)
-                    out_d.append(doc)
-                    out_s.append(score)
-            return pd.DataFrame(
-                {"query_id": out_q, "doc_id": out_d, "score": out_s}
-            )
-
-        # per-doc side information (category membership, delete vector) is
-        # shipped PARTITION-ALIGNED with the shards: one union frame
-        # (doc_id, kind, val) bucketed by the same doc-hash as the pack
-        # layout and cogrouped with the shard — nothing corpus-sized ever
-        # passes through the driver
-        metas = []
-        if cat_map:
-            from information_retrieval_spark.index.catalog import (
-                prune_doc_meta,
-            )
-
-            metas.append(
-                prune_doc_meta(self.doc_meta, list(cat_map.values())).select(
-                    "doc_id",
-                    F.lit("cat").alias("kind"),
-                    F.col("category").alias("val"),
-                )
-            )
-        if has_deletes:
-            # upto rides the val channel so the bucket scorer can scope
-            # each tombstone to the segments it actually hides
-            metas.append(
-                self.deleted_df.select(
-                    "doc_id",
-                    F.lit("del").alias("kind"),
-                    F.col("upto").cast("string").alias("val"),
-                )
-            )
-        if ex_df is not None:
-            metas.append(
-                ex_df.select(
-                    "doc_id",
-                    F.lit("exq").alias("kind"),
-                    F.col("query_id").cast("string").alias("val"),
-                )
-            )
-        if mu_df is not None:
-            metas.append(
-                mu_df.select(
-                    "doc_id",
-                    F.lit("muq").alias("kind"),
-                    F.col("query_id").cast("string").alias("val"),
-                )
-            )
-        if metas:
-            meta_b = metas[0]
-            for m in metas[1:]:
-                meta_b = meta_b.unionByName(m)
-            meta_b = meta_b.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int"),
-            )
-
-            def wand_cogroup(
-                left: pd.DataFrame, right: pd.DataFrame
-            ) -> pd.DataFrame:
-                kinds = right["kind"].to_numpy()
-                docs = right["doc_id"].to_numpy()
-                vals = right["val"].to_numpy()
-                is_del = kinds == "del"
-                deleted_upto = {
-                    int(d): int(v)
-                    for d, v in zip(
-                        docs[is_del].tolist(), vals[is_del].tolist()
-                    )
-                }
-                is_cat = kinds == "cat"
-                cat_of = dict(
-                    zip(docs[is_cat].tolist(), vals[is_cat].tolist())
-                )
-                ex_docs: dict[int, set] = {}
-                for d, v in zip(
-                    docs[kinds == "exq"].tolist(), vals[kinds == "exq"].tolist()
-                ):
-                    ex_docs.setdefault(int(v), set()).add(d)
-                mu_docs: dict[int, set] = {}
-                for d, v in zip(
-                    docs[kinds == "muq"].tolist(), vals[kinds == "muq"].tolist()
-                ):
-                    mu_docs.setdefault(int(v), set()).add(d)
-                return wand_bucket_impl(
-                    left, cat_of, deleted_upto, ex_docs, mu_docs
-                )
-
-            per_bucket = (
-                shard.groupby("bucket")
-                .cogroup(meta_b.groupby("bucket"))
-                .applyInPandas(wand_cogroup, _TOPK_SCHEMA)
-            )
-        else:
-            def wand_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-                return wand_bucket_impl(pdf, None, {})
-
-            per_bucket = shard.groupBy("bucket").applyInPandas(
-                wand_bucket, _TOPK_SCHEMA
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", 9)), F.asc("doc_id")
-        )
-        ks = self.spark.createDataFrame(
-            [(q.query_id, q.k) for q in queries], "query_id long, k int"
-        )
-        out = (
-            per_bucket.withColumn("rank", F.row_number().over(w))
-            .join(F.broadcast(ks), "query_id")
-            .filter((F.col("rank") <= F.col("k")) | (F.col("k") < 0))
-            .select("query_id", "rank", "doc_id", "score")
-        )
-        # return lazily: the caller's action consumes the still-cached shard
-        # (saves one materialization job per batch); the previous batch's
-        # shard cache is dropped on the NEXT search call
-        if self._last_shard is not None:
-            self._last_shard.unpersist()
-        self._last_shard = shard
-        return out
+    def _result(self, rows: list[tuple] = ()) -> DataFrame:
+        # from pandas: Arrow turns a local result into a LocalRelation,
+        # which the caller's action reads without a Spark job
+        pdf = pd.DataFrame(
+            list(rows), columns=["query_id", "rank", "doc_id", "score"]
+        ).astype({"query_id": "int64", "rank": "int32", "doc_id": "int64",
+                  "score": "float64"})
+        return self.spark.createDataFrame(pdf, _RESULT_SCHEMA)

@@ -133,7 +133,7 @@ def run_size(spark, n: int) -> dict:
     finally:
         # release THIS size's persisted engine state before the next size
         # runs in the same JVM — without it the sweep accumulates every
-        # prior index's doclen map + term shard in executor storage and
+        # prior index's side frame + term shard in executor storage and
         # the largest size pays eviction churn on every job (measured
         # 2.7× on the 1M selective batch; see BENCH/BASELINE.md)
         if eng is not None:

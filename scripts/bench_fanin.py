@@ -76,7 +76,7 @@ def main() -> None:
             assert n_seg == s, (n_seg, s)
 
             # context-managed: each segment count's engine releases its
-            # persisted doclen map + shard before the next iteration, so
+            # persisted side frame + shard before the next iteration, so
             # later points don't pay storage-accumulation churn for
             # earlier ones (see WandEngine.close)
             with WandEngine(spark, idx) as eng:

@@ -56,12 +56,14 @@ def codec_ab(postings_flat):
     def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        d = np.sort(pdf["doc_id"].to_numpy(np.uint64))
+        # doc-sorted like the packed layout; tf travels with its doc_id
+        order = np.argsort(pdf["doc_id"].to_numpy(np.uint64), kind="stable")
+        d = pdf["doc_id"].to_numpy(np.uint64)[order]
         gaps = np.empty_like(d)
         if d.size:
             gaps[0] = d[0]
             gaps[1:] = d[1:] - d[:-1]
-        tfs = pdf["tf"].to_numpy(np.uint64)
+        tfs = pdf["tf"].to_numpy(np.uint64)[order]
         var_b = gam_b = 0
         for lo in range(0, d.size, BLOCK):
             g = gaps[lo:lo + BLOCK]

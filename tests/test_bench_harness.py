@@ -40,6 +40,29 @@ def test_codec_ab_totals_match_direct_encode(spark):
     assert gam_b == want_gam
 
 
+def test_codec_ab_pairs_tf_with_its_doc_id(spark):
+    """Rows arrive in any order; each tf must stay with its doc_id when
+    the doc_ids are sorted into 128-posting blocks. Docs 128 and 129 (tf 2,
+    a 3-bit γ code) come first: blocked in arrival order their tfs would
+    land in the first block and change its γ byte padding."""
+    from scripts.bench_index_size import codec_ab
+
+    docs = [129, 128] + list(range(128))
+    rows = [("a", "t", d, 2 if d >= 128 else 1) for d in docs]
+    df = spark.createDataFrame(
+        rows, "term string, section string, doc_id long, tf int"
+    ).coalesce(1)
+    _, _, _, gam_b = codec_ab(df)
+    gaps = np.array([0] + [1] * 129, dtype=np.uint64)
+    tfs = np.array([1] * 128 + [2, 2], dtype=np.uint64)
+    want = sum(
+        len(gamma_encode(gaps[lo:lo + 128] + np.uint64(1)))
+        + len(gamma_encode(tfs[lo:lo + 128]))
+        for lo in (0, 128)
+    )
+    assert gam_b == want
+
+
 def test_dir_bytes_counts_nested_files(tmp_path):
     (tmp_path / "sub").mkdir()
     (tmp_path / "a.bin").write_bytes(b"x" * 100)

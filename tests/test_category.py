@@ -256,3 +256,30 @@ def test_doc_meta_category_partition_pruning(spark, cat_index):
     pf = re.findall(r"PartitionFilters: \[[^\]]*\]", plan)
     assert pf and "category" in pf[0] and "java" in pf[0]
     assert dm.count() > 0
+
+
+def test_filter_follows_a_category_changed_by_update(spark, tmp_path_factory):
+    """An update that moves a doc to another category: its old doc_meta
+    row is hidden by the update's seq-scoped tombstone, so filtering on the
+    OLD category must no longer return it and filtering on the new one
+    must — in both engines, rank-identically."""
+    from dataclasses import replace
+
+    from information_retrieval_spark.index.maintenance import IndexMaintenance
+
+    rows = corpus_rows(60)
+    target = next(r for r in rows if r.lang == CAT)
+    moved = replace(target, lang="go")
+    d = str(tmp_path_factory.mktemp("catmove"))
+    IndexBuilder(
+        spark, d, SECTIONS, tokenizer="code", stop_k=10, category_col="lang"
+    ).build(_df(spark, rows))
+    IndexMaintenance(spark, d).update_documents(_df(spark, [moved]))
+    text = " ".join(target.content.split()[:6])
+    for cat, present in ((CAT, False), ("go", True)):
+        specs = [QuerySpec(1, text, "okapi25", -1, spell=False,
+                           match_mode="exact", filter_category=cat)]
+        want = _res(SearchEngine(spark, d), specs)
+        assert _res(WandEngine(spark, d), specs) == want
+        docs = {doc for _, doc, _ in want.get(1, [])}
+        assert (target.doc_id in docs) == present, cat

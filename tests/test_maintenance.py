@@ -1396,3 +1396,104 @@ def test_expire_after_partial_compact_gcs_only_merged_dirs(
     for p in kept_dirs:
         assert _os.path.exists(p)
     assert _results(WandEngine(spark, d)) == want
+
+
+def test_tfidf_n_counts_live_docs_after_update_and_remove(
+    spark, tmp_path_factory
+):
+    """tf-idf idf uses N = the corpus size (quirk Q1), and after
+    maintenance that is the LIVE corpus: neither a re-crawled doc's hidden
+    old version nor a removed doc may count. Checked against the
+    pure-Python oracle over the live docs after each step."""
+    from dataclasses import replace as dc_replace
+
+    from tests.oracle import Oracle
+
+    class PinnedStop(Oracle):
+        """The oracle with the index's stop list: an index keeps its base
+        build's list through later writes, while Oracle re-derives it from
+        the docs it gets (the fixture's head terms are near-tied)."""
+
+        stop_tokens = property(lambda self: self._pinned,
+                               lambda self, _derived: None)
+
+        def __init__(self, docs, pinned, **kw):
+            self._pinned = frozenset(pinned)
+            super().__init__(docs, **kw)
+
+    rows = corpus_rows(60)
+    d = str(tmp_path_factory.mktemp("tfidf_live_n"))
+    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+        _df(spark, rows)
+    )
+    maint = IndexMaintenance(spark, d)
+    texts = ["tokenizer stream", "buffer matrix parser"]
+
+    def check(live_rows):
+        orc = PinnedStop(
+            {r.doc_id: {"title": r.path, "abstract": r.content}
+             for r in live_rows},
+            _stop_of(spark, d),
+            sections=("title", "abstract"), tokenizer="code", stop_k=10,
+        )
+        eng = SearchEngine(spark, d)
+        for method in ("ltn-lnn", "ltc-lnc"):
+            specs = [
+                QuerySpec(i, t, method, 10, spell=False, match_mode="exact")
+                for i, t in enumerate(texts)
+            ]
+            got: dict = {}
+            for r in sorted(eng.search(specs).collect(),
+                            key=lambda r: (r.query_id, r.rank)):
+                got.setdefault(r.query_id, []).append((r.doc_id, r.score))
+            for i, t in enumerate(texts):
+                want = orc.search(t, method, weight=0.2, k=10,
+                                  match_mode="exact", spell=False)
+                assert [doc for doc, _ in got.get(i, [])] == [
+                    doc for doc, _ in want
+                ], (method, t)
+                for (_, g), (_, w) in zip(got[i], want):
+                    assert g == pytest.approx(w, rel=1e-9), (method, t)
+
+    recrawl = dc_replace(rows[7], content=rows[50].content)
+    maint.update_documents(_df(spark, [recrawl]))
+    live = [recrawl if r.doc_id == recrawl.doc_id else r for r in rows]
+    check(live)
+
+    maint.remove_documents([rows[3].doc_id])
+    live = [r for r in live if r.doc_id != rows[3].doc_id]
+    check(live)
+
+    maint.compact()
+    check(live)
+
+
+def test_engines_keep_their_snapshot_across_later_writes(
+    spark, tmp_path_factory
+):
+    """An engine answers from the snapshot current when it was built, even
+    when its first search() runs after an update, a remove and a compact:
+    WAND's side rows (doclen, tombstones) must come from the same snapshot
+    as its packed segments, or removed docs return and updated ones
+    vanish."""
+    from dataclasses import replace as dc_replace
+
+    rows = corpus_rows(80)
+    d = str(tmp_path_factory.mktemp("pinned_open"))
+    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+        _df(spark, rows)
+    )
+    want = _results(SearchEngine(spark, d))
+    top = {q: doc for q, rank, doc, _ in want if rank == 1}
+    search = SearchEngine(spark, d)
+    with WandEngine(spark, d) as wand:
+        maint = IndexMaintenance(spark, d)
+        moved = next(r for r in rows if r.doc_id == top[1])
+        maint.update_documents(
+            _df(spark, [dc_replace(moved, content=rows[60].content)])
+        )
+        maint.remove_documents([top[2]])
+        maint.compact()
+        assert _results(search) == want
+        assert _results(wand) == want
+        assert _results(WandEngine(spark, d)) == _results(SearchEngine(spark, d))

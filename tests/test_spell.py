@@ -40,6 +40,35 @@ def test_bigram_multiplicity_counts():
     assert d["aa"]["aaa"] == 2
 
 
+def test_correct_word_zero_denominator():
+    """Repeated bigrams multiply: 'aaaaa' vs 'aaa' has hits 1 + 4·2 + 1 =
+    10 = len(q) + len(w) + 2, so the reference formula divides by zero.
+    The only candidate must still be returned."""
+    assert correct_word(build_bigram_dict(["aaa"]), "aaaaa") == "aaa"
+
+
+def test_correct_word_negative_denominator_keeps_exact_match():
+    """'aaaa' vs itself: hits 1 + 3·3 + 1 = 11 > 4 + 4 + 2, a negative
+    denominator. The exact match must not sink below the 20 weakly
+    similar words (one shared bigram each) and fall out of the top-20."""
+    weak = [f"a{chr(ord('b') + i)}" for i in range(20)]
+    d = build_bigram_dict(["aaaa"] + weak)
+    assert correct_word(d, "aaaa") == "aaaa"
+
+
+def test_distributed_correction_matches_driver_on_repeated_bigrams(spark):
+    """The Spark path applies the same degenerate-denominator rule."""
+    from information_retrieval_spark.query.spell import correct_words_spark
+
+    vocab = ["aaa", "aaaa"] + [f"a{chr(ord('b') + i)}" for i in range(20)]
+    vocab_df = spark.createDataFrame([(t,) for t in vocab], "term string")
+    d = build_bigram_dict(vocab)
+    words = ["aaaaa", "aaaa", "aaaaaa", "ab"]
+    got = correct_words_spark(vocab_df, words)
+    for w in words:
+        assert got.get(w, w) == correct_word(d, w), w
+
+
 def test_distributed_correction_matches_driver(spark, index_dir):
     """correct_words_spark (bigram-table join, vocab never collected) must
     pick the SAME correction as the driver-dict path for every token —

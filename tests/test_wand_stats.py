@@ -1,0 +1,202 @@
+"""WandEngine's per-batch corpus statistics and its Spark job budget.
+
+The statistics BM25 needs (quirk Q1 N = |candidates|, Q2 per-section
+avgdl over the candidates, live df per query term) come from one
+bucket-grouped pass whose per-bucket partial sums the driver adds up. These
+tests recompute the same figures in plain Python from the live flat tables
+and require equality, in the cases where the pass does more than count:
+the prefix-mode has_exact gate under deletes, the category filter and the
+boolean term filters. A last test pins how many Spark jobs a warm batch
+runs.
+"""
+
+import pytest
+
+from information_retrieval_spark.fixtures import CorpusRow, corpus_rows
+from information_retrieval_spark.index.build import IndexBuilder
+from information_retrieval_spark.index.maintenance import IndexMaintenance
+from information_retrieval_spark.query.engine import QuerySpec
+from information_retrieval_spark.query.wand import WandEngine
+
+SECTIONS = {"title": "path", "abstract": "content"}
+
+
+def _row(doc_id, content):
+    return CorpusRow(doc_id, "org/x", f"src/x/f{doc_id}.py", "0" * 40,
+                     "python", content)
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(
+        [(r.doc_id, r.repo, r.path, r.commit, r.lang, r.content) for r in rows],
+        "doc_id long, repo string, path string, commit string, lang string,"
+        " content string",
+    )
+
+
+@pytest.fixture(scope="module")
+def maintained(spark, tmp_path_factory):
+    """Category-tagged index after a remove and an update. 'zqfoo' occurs
+    as a whole token only in doc 900001, which is removed, while its
+    extension 'zqfooxy' stays live: in prefix mode the live gate must
+    drop the qterm 'zqfoo' together with its expansion."""
+    from dataclasses import replace
+
+    rows = corpus_rows(80) + [
+        _row(900001, "zqfoo zqlone"),
+        _row(900002, "zqfooxy zqlone"),
+        _row(900003, "zqfooxy zqother"),
+    ]
+    d = str(tmp_path_factory.mktemp("wand_stats"))
+    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10,
+                 category_col="lang").build(_df(spark, rows))
+    maint = IndexMaintenance(spark, d)
+    maint.remove_documents([900001])
+    maint.update_documents(
+        _df(spark, [replace(rows[5], content=rows[60].content)])
+    )
+    return d
+
+
+def _recompute(spark, idx, eng, spec):
+    """The statistics of ``spec`` from the live flat tables, in Python."""
+    from information_retrieval_spark.index.catalog import (
+        filter_deleted,
+        read_deletes,
+        read_doc_meta,
+        read_live_postings,
+        read_live_table,
+    )
+
+    post: dict[str, set] = {}
+    for r in read_live_postings(spark, idx).select("term", "doc_id").collect():
+        post.setdefault(r.term, set()).add(r.doc_id)
+    dl: dict[int, dict] = {}
+    for r in read_live_table(spark, idx, "doclen").collect():
+        dl.setdefault(r.doc_id, {})[r.section] = r.dl
+    cat = {}
+    if spec.filter_category is not None:
+        meta = read_doc_meta(spark, idx, with_seq=True)
+        cat = {r.doc_id: r.category
+               for r in filter_deleted(meta, read_deletes(spark, idx)).collect()}
+
+    def ok(doc):
+        return (
+            (spec.filter_category is None or cat.get(doc) == spec.filter_category)
+            and all(doc in post.get(t, ()) for t in spec.filter_terms)
+            and not any(doc in post.get(t, ()) for t in spec.exclude_terms)
+        )
+
+    cands, df = set(), {}
+    for t in dict.fromkeys(eng._tokenize(spec.text)):
+        if not any(ok(doc) for doc in post.get(t, ())):
+            continue  # has_exact gate (exact mode: no match at all)
+        expand = (
+            [u for u in post if u.startswith(t)]
+            if spec.match_mode == "prefix" else [t]
+        )
+        docs = {doc for u in expand for doc in post[u] if ok(doc)}
+        df[t] = len(docs)
+        cands |= docs
+    n = len(cands)
+    avgdl = (
+        {s: sum(dl[doc].get(s, 0) for doc in cands) / n for s in eng.sections}
+        if n else {}
+    )
+    return {"n_cand": n, "avgdl": avgdl, "df": df}
+
+
+def _assert_stats_match(spark, idx, specs):
+    eng = WandEngine(spark, idx)
+    try:
+        eng.search(specs).collect()
+        for spec in specs:
+            want = _recompute(spark, idx, eng, spec)
+            got = eng.last_stats[spec.query_id]
+            assert got["n_cand"] == want["n_cand"], spec
+            assert got["df"] == want["df"], spec
+            assert got["avgdl"] == pytest.approx(want["avgdl"], rel=1e-12), spec
+    finally:
+        eng.close()
+
+
+def test_stats_exact_mode(spark, index_dir):
+    specs = [
+        QuerySpec(1, "tokenizer stream", "okapi25", 10, spell=False,
+                  match_mode="exact"),
+        QuerySpec(2, "buffer matrix parser buffer", "okapi25", 10,
+                  spell=False, match_mode="exact"),
+        QuerySpec(3, "zzqnever tokenizer", "okapi25", 10, spell=False,
+                  match_mode="exact"),
+    ]
+    _assert_stats_match(spark, index_dir, specs)
+
+
+def test_stats_prefix_mode_gate_under_deletes(spark, maintained):
+    specs = [
+        QuerySpec(1, "zqfoo zqlone", "okapi25", 10, spell=False,
+                  match_mode="prefix"),
+        QuerySpec(2, "zqfooxy", "okapi25", 10, spell=False,
+                  match_mode="prefix"),
+        QuerySpec(3, "tokenizer stream", "okapi25", 10, spell=False,
+                  match_mode="prefix"),
+    ]
+    _assert_stats_match(spark, maintained, specs)
+    eng = WandEngine(spark, maintained)
+    try:
+        eng.search(specs[:1]).collect()
+        # the gate dropped 'zqfoo' and its live expansion 'zqfooxy'
+        assert eng.last_stats[1]["df"] == {"zqlone": 1}
+        assert eng.last_stats[1]["n_cand"] == 1
+    finally:
+        eng.close()
+
+
+def test_stats_filter_category(spark, maintained):
+    lang = corpus_rows(1)[0].lang
+    specs = [
+        QuerySpec(1, "tokenizer stream", "okapi25", 10, spell=False,
+                  match_mode="exact", filter_category=lang),
+        QuerySpec(2, "buffer parser", "okapi25", 10, spell=False,
+                  match_mode="prefix", filter_category=lang),
+    ]
+    _assert_stats_match(spark, maintained, specs[:1])
+    _assert_stats_match(spark, maintained, specs[1:])
+
+
+def test_stats_filter_and_exclude_terms(spark, maintained):
+    specs = [
+        QuerySpec(1, "buffer matrix", "okapi25", 10, spell=False,
+                  match_mode="exact", filter_terms=("parser",),
+                  exclude_terms=("stream",)),
+        QuerySpec(2, "tokenizer", "okapi25", 10, spell=False,
+                  match_mode="exact", exclude_terms=("buffer", "matrix")),
+        QuerySpec(3, "tokenizer", "okapi25", 10, spell=False,
+                  match_mode="exact", filter_terms=("zzqnever",)),
+    ]
+    _assert_stats_match(spark, maintained, specs)
+
+
+def test_warm_exact_batch_runs_in_four_jobs(spark, index_dir):
+    """A warm engine answers an exact-mode batch in at most 4 Spark jobs:
+    the shard's exchange, its cache, the statistics pass and the scoring
+    pass (the side frame and the spell dictionary are already cached)."""
+    texts = ["tokenizer stream", "buffer matrix parser", "tokeniezr buffre"]
+    warm = [QuerySpec(i, t, "okapi25", 10, match_mode="exact")
+            for i, t in enumerate(texts)]
+    batch = [QuerySpec(i, t, "okapi25", 10, match_mode="exact")
+             for i, t in enumerate(reversed(texts))]
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    with WandEngine(spark, index_dir) as eng:
+        eng.search(warm).collect()
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("wand-warm-batch", "one warm WAND batch")
+        try:
+            rows = eng.search(batch).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs = set(tracker.getJobIdsForGroup("wand-warm-batch"))
+        jobs |= set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert rows
+    assert len(jobs) <= 4, f"{len(jobs)} jobs"
