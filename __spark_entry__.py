@@ -8,13 +8,15 @@ decoder is a pure function of sha256(payload), re-derivable in SQL).
 
 The battery is EXACTLY 50 entries so the driver's 50-entry verification
 window covers every operator — one driver entry per distinct oracle.
-Physical twins that share an oracle with a battery entry (the declarative
-siblings of the index-backed plans: bm25_topk≡wand_topk, grep_topk≡
-grep_index, …) and narrow per-doc ops that are fused into a merged battery
-entry (text_stats = token_count+quality+langid+fingerprint; tfidf_topk =
-ltn ∪ ltc) live in ``twin_queries()`` / ``twin_oracle_sql()``: they are
-NOT driver-run, but scripts/verify_entry.py, the sf1.0 battery, bench.py
-and pytest (twin-equivalence asserts in tests/) still exercise all of them.
+Physical twins that share an oracle with a battery entry (bm25_topk≡
+wand_topk, bm25_filtered≡wand_filtered, grep_topk≡grep_index — each the
+declarative plan the index-backed one is measured against) and narrow
+per-doc ops that are fused into a merged battery entry (text_stats =
+token_count+quality+langid+fingerprint; tfidf_topk = ltn ∪ ltc) live in
+``twin_queries()`` / ``twin_oracle_sql()``: they are NOT driver-run, but
+scripts/verify_entry.py, the sf1.0 battery, bench.py and pytest still
+exercise all of them. phrase_index, prox_index and bool_index have no
+twin: their SQL oracle checks them directly.
 
 Column-name / rounding convention: every computed column is aliased
 identically on both sides; float score columns are rounded to 6 decimals
@@ -67,8 +69,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "facets": ir_direct.q_facets,                 # facet counts
         "suggest": ir_direct.q_suggest,               # autocomplete
         "wildcard_topk": ir_direct.q_wildcard_topk,   # wildcard multi-term
-        # index-backed physical plans (oracle = the declarative twin's SQL;
-        # twin-equivalence also pytest-asserted in tests/):
+        # index-backed physical plans (oracle = the declarative plan's SQL,
+        # also pytest-asserted in tests/):
         "wand_topk": engine_entry.q_wand_topk,        # F8/F10 + T1, packed index
         "wand_filtered": engine_entry.q_wand_filtered, # WAND + must/must_not
         "spell_correct": engine_entry.q_spell_correct, # A6 + F3-F5 + Q7
@@ -196,11 +198,7 @@ def twin_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # declarative twins of the index-backed battery entries:
         "bm25_topk": ir_direct.q_bm25_topk,           # ≡ wand_topk
         "bm25_filtered": ir_direct.q_bm25_filtered,   # ≡ wand_filtered
-        "phrase_topk": ir_direct.q_phrase_topk,       # ≡ phrase_index
-        "prox_topk": ir_direct.q_prox_topk,           # ≡ prox_index
-        "bool_topk": ir_direct.q_bool_topk,           # ≡ bool_index
         "grep_topk": grep.q_grep_topk,                # ≡ grep_index (brute)
-        "grep_inplan": grep.q_grep_index,             # ≡ grep_index (in-plan)
         # narrow ops fused into merged battery entries:
         "token_count": textstats.q_token_count,       # ⊂ text_stats
         "quality": textstats.q_quality,               # ⊂ text_stats
@@ -221,11 +219,7 @@ def twin_oracle_sql() -> dict[str, str]:
     return {
         "bm25_topk": ir_direct.SQL_BM25_TOPK,
         "bm25_filtered": ir_direct.SQL_BM25_FILTERED,
-        "phrase_topk": ir_direct.SQL_PHRASE_TOPK,
-        "prox_topk": ir_direct.SQL_PROX_TOPK,
-        "bool_topk": ir_direct.SQL_BOOL_TOPK,
         "grep_topk": grep.SQL_GREP_TOPK,
-        "grep_inplan": grep.SQL_GREP_TOPK,
         "token_count": textstats.SQL_TOKEN_COUNT,
         "quality": textstats.SQL_QUALITY,
         "langid": textstats.SQL_LANGID,

@@ -91,11 +91,8 @@ def main() -> None:
             "wand_filtered": engine_entry.q_wand_filtered,
             "bm25_filtered": ir_direct.q_bm25_filtered,
             "champion_topk": ir_direct.q_champion_topk,
-            "phrase_topk": ir_direct.q_phrase_topk,
             "phrase_index": engine_entry.q_phrase_index,
-            "prox_topk": ir_direct.q_prox_topk,
             "prox_index": engine_entry.q_prox_index,
-            "bool_topk": ir_direct.q_bool_topk,
             "bool_index": engine_entry.q_bool_index,
             "eval_metrics": metrics.q_eval_metrics,
             "event_windows": events.q_event_windows,
@@ -121,8 +118,6 @@ def main() -> None:
             # table (built on rep 1; best-of-2 measures the query-only
             # cost, which is the number that matters at 100 TB):
             "grep_index": grep_mod.q_grep_persisted,
-            # in-plan trigram derivation kept visible as the oracle twin:
-            "grep_inplan": grep_mod.q_grep_index,
             "wildcard_topk": ir_direct.q_wildcard_topk,
             "contamination": hygiene.q_contamination,
             "repetition": hygiene.q_repetition,

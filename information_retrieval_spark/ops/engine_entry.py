@@ -224,14 +224,13 @@ def ensure_documents_posindex(spark: SparkSession, sf_dir: str) -> str:
 def q_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase top-10 via the PERSISTED positional index
     (query/phrase.py) — must equal the declarative token-position plan
-    (oracle: SQL_PHRASE_TOPK). Same logical query as ops/ir_direct.
-    q_phrase_topk, different physical strategy: stored offset sets with a
-    pushed In(term) scan instead of a corpus re-tokenize."""
+    (oracle: SQL_PHRASE_TOPK): stored offset sets with a pushed In(term)
+    scan instead of a corpus re-tokenize."""
     from information_retrieval_spark.ops.ir_direct import PHRASE_SET
     from information_retrieval_spark.query.phrase import phrase_search
 
     idx = ensure_documents_posindex(spark, sf_dir)
-    out = phrase_search(spark, idx, PHRASE_SET, k=10, tokenizer="simple")
+    out = phrase_search(spark, idx, PHRASE_SET, k=10)
     return out.select(
         F.col("query_id").cast("int").alias("query_id"),
         "rank",

@@ -25,13 +25,12 @@ Scale notes (100 TB):
   the matching docs. Scan-bound — the baseline, and the fallback for
   factor-less regexes.
 * trigram path: the distinct (doc_id, trigram) relation is index-shaped —
-  at scale it is a persisted, trigram-partitioned table written once at
-  ingest (exactly like the packed term index); here it is derived in-plan
-  from the same scan. The needed-trigram set is tiny (≤ a few per query)
-  and broadcasts; candidates come from one hash-agg keyed (query_id,
-  doc_id) with an AND-count filter; the exact regex then touches ONLY
-  candidate docs — the 100 TB win is that the full corpus is never
-  regexed, only scanned once at index-build time.
+  a persisted, trigram-partitioned table written once at ingest (exactly
+  like the packed term index; `build_trigram_index`). The needed-trigram
+  set is tiny (≤ a few per query) and broadcasts; candidates come from one
+  hash-agg keyed (query_id, doc_id) with an AND-count filter; the exact
+  regex then touches ONLY candidate docs — the 100 TB win is that the full
+  corpus is never regexed, only scanned once at index-build time.
 """
 
 from __future__ import annotations
@@ -166,12 +165,11 @@ def _grep_via_trigrams(
     spark: SparkSession,
     doc_tg: DataFrame,
     d: DataFrame,
-    queries: list[tuple[int, str, str]] | None = None,
-    rank: bool = True,
-    qtris: dict[int, list[str]] | None = None,
+    queries: list[tuple[int, str, str]],
+    qtris: dict[int, list[str]],
 ) -> DataFrame:
     """Candidate AND-query over a (doc_id, trigram) relation + exact-regex
-    verify on candidates only; shared by the in-plan and persisted paths.
+    verify on candidates only (the persisted path's index branch).
 
     Plan shape (exactly two exchanges): pruned trigram scan → ONE doc-grain
     hash-agg collecting each doc's needed-trigram set → every query's
@@ -184,10 +182,6 @@ def _grep_via_trigrams(
     candidate SUPERSET (fewer AND terms = weaker filter), and the exact
     verify restores precision — so the planner reads only the posting
     lists that pay for themselves in pruning."""
-    if queries is None:
-        queries = GREP_QUERY_SET
-    if qtris is None:
-        qtris = {qid: _trigrams(lit) for qid, _, lit in queries}
     all_needed = sorted({t for tris in qtris.values() for t in tris})
     # explicit isin: on the persisted table this is the pushed
     # In(trigram, ...) filter that prunes partitions / row groups.
@@ -232,16 +226,7 @@ def _grep_via_trigrams(
     matched = verify.select(
         "query_id", "doc_id", n_col.alias("n_matches")
     ).filter(F.col("n_matches") > 0)
-    return _rank_topk(matched) if rank else matched
-
-
-def q_grep_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same result as :func:`q_grep_topk` via the trigram-index plan:
-    AND-query over distinct character trigrams prefilters candidates, the
-    exact regex verifies only candidates. Shares SQL_GREP_TOPK as oracle
-    (two physical strategies, one logical query)."""
-    d = _docs(spark, sf_dir)
-    return _grep_via_trigrams(spark, _doc_trigrams(d), d)
+    return _rank_topk(matched)
 
 
 # ------------------------------------------------ persisted trigram index
@@ -398,6 +383,6 @@ def q_grep_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter) instead of re-deriving trigrams in-plan per query — at 100 TB
     the in-plan derivation IS a full corpus scan + explode, the exact cost
     the index exists to avoid. Same rows, same SQL_GREP_TOPK oracle as
-    :func:`q_grep_topk` / :func:`q_grep_index`."""
+    :func:`q_grep_topk`."""
     d = _docs(spark, sf_dir)
     return grep_persisted(spark, ensure_trigram_index(spark, sf_dir), d)

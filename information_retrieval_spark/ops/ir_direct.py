@@ -838,8 +838,8 @@ PHRASE_SET: list[tuple[int, str]] = [
 
 
 def phrase_terms_rows() -> list[tuple[int, int, str, int]]:
-    """(query_id, idx, qterm, n_terms) — the phrase token table both the
-    direct plan and the persisted-index engine broadcast."""
+    """(query_id, idx, qterm, n_terms) — the phrase token table the
+    SQL_PHRASE_TOPK oracle inlines."""
     import re
 
     rows: list[tuple[int, int, str, int]] = []
@@ -847,48 +847,6 @@ def phrase_terms_rows() -> list[tuple[int, int, str, int]]:
         terms = [w for w in re.split(r"[^a-z0-9]+", text.lower()) if w]
         rows.extend((qid, i, w, len(terms)) for i, w in enumerate(terms))
     return rows
-
-
-def q_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-phrase top-10 per query over token positions (the operation a
-    positional index exists for — the reference stores offset sets per
-    (term, doc) for exactly this, `ui/backend/mir/search/corpus/
-    phase1.py:31-44`, though its UI never ships a phrase operator; this is
-    the fulltext-tier completion of that structure).
-
-    Plan shape: tokens (pos kept) ⨝broadcast phrase-term table → shifted
-    start = pos - idx → ONE hash-agg on (query_id, doc_id, start) counting
-    distinct idx — a full occurrence has all n indices present — → per-doc
-    occurrence count → per-query top-10 window. No stop filter (phrases
-    keep their stop words); overlapping matches each count. The only wide
-    shuffle keys on (query_id, doc_id, start) — doc-grain, skew-free at
-    100 TB; everything else is broadcast or a bounded window.
-    """
-    t = tokens_view(load_documents(spark, sf_dir))
-    qt = spark.createDataFrame(
-        phrase_terms_rows(), "query_id int, idx int, qterm string, n int"
-    )
-    m = t.join(F.broadcast(qt), t.term == qt.qterm).select(
-        "query_id",
-        "doc_id",
-        (F.col("pos") - F.col("idx")).alias("start"),
-        "idx",
-        "n",
-    )
-    occ = (
-        m.groupBy("query_id", "doc_id", "start", "n")
-        .agg(F.countDistinct("idx").alias("nidx"))
-        .filter(F.col("nidx") == F.col("n"))
-    )
-    scored = occ.groupBy("query_id", "doc_id").agg(
-        F.count("*").alias("n_occ")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("n_occ"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "doc_id", "n_occ")
-    )
 
 
 def _phrase_sql_values() -> str:
@@ -945,61 +903,6 @@ PROX_SET: list[tuple[int, str]] = [
     (4, "scan zzznotfound"),
 ]
 PROX_WINDOW = 4
-
-
-def q_prox_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Proximity top-10: docs where every query term occurs within
-    ±PROX_WINDOW positions of an occurrence of the FIRST term (the
-    anchor); score = number of such anchors (witnesses). The direct twin
-    of `query/phrase.py::proximity_search` (same semantics over raw
-    token ordinals instead of the persisted offset sets).
-
-    Plan: anchor rows equi-joined to other-term rows on (query_id,
-    doc_id) + the window filter — per-doc bounded, never a range join
-    against anything corpus-sized — then two hash-aggs and the per-query
-    top-k window."""
-    t = tokens_view(load_documents(spark, sf_dir))
-    rows = []
-    import re as _re
-
-    for qid, text in PROX_SET:
-        terms = [w for w in _re.split(r"[^a-z0-9]+", text.lower()) if w]
-        uniq = list(dict.fromkeys(terms))
-        rows.extend((qid, i, w, len(uniq)) for i, w in enumerate(uniq))
-    qt = spark.createDataFrame(
-        rows, "query_id int, idx int, qterm string, n int"
-    )
-    h = t.join(F.broadcast(qt), t.term == qt.qterm).select(
-        "query_id", "doc_id", "idx", "n", "pos"
-    )
-    anchors = h.filter(F.col("idx") == 0).select(
-        "query_id", "doc_id", F.col("pos").alias("anchor"), "n"
-    )
-    others = h.filter(F.col("idx") > 0).select(
-        "query_id", "doc_id", "idx", "pos"
-    )
-    wit = (
-        anchors.join(others, ["query_id", "doc_id"])
-        .filter(F.abs(F.col("pos") - F.col("anchor")) <= PROX_WINDOW)
-        .groupBy("query_id", "doc_id", "anchor", "n")
-        .agg(F.countDistinct("idx").alias("got"))
-        .filter(F.col("got") == F.col("n") - 1)
-        .select("query_id", "doc_id", "anchor")
-    )
-    wit1 = anchors.filter(F.col("n") == 1).select(
-        "query_id", "doc_id", "anchor"
-    )
-    scored = (
-        wit.unionByName(wit1)
-        .groupBy("query_id", "doc_id")
-        .agg(F.count("*").alias("n_win"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("n_win"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "doc_id", "n_win")
-    )
 
 
 def _prox_sql_values() -> str:
@@ -1086,44 +989,6 @@ def bool_spec_rows() -> list[tuple[int, str, str, int]]:
         for t in toks(nots):
             rows.append((qid, t, "not", len(m)))
     return rows
-
-
-def q_bool_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean must/should/must-not retrieval as ONE declarative plan.
-
-    Plan shape: tokens → distinct (doc_id, term) hash-agg → broadcast-join
-    the tiny role spec → one doc-grain hash-agg counting hits per role →
-    qualification filter in codegen → per-query top-K window. The only
-    wide shuffle keys on doc_id; postings for non-query terms are pruned
-    at the join. At 100 TB this is the same shape as q_candidates.
-    """
-    dt = (
-        tokens_view(load_documents(spark, sf_dir))
-        .select("doc_id", "term")
-        .distinct()
-    )
-    spec = spark.createDataFrame(
-        bool_spec_rows(), "query_id int, term string, role string, n_must int"
-    )
-    m = dt.join(F.broadcast(spec), "term")
-    agg = m.groupBy("query_id", "doc_id", "n_must").agg(
-        F.count(F.when(F.col("role") == "must", 1)).alias("must_hit"),
-        F.count(F.when(F.col("role") == "should", 1)).alias("n_should"),
-        F.count(F.when(F.col("role") == "not", 1)).alias("not_hit"),
-    )
-    ok = agg.filter(
-        (F.col("must_hit") == F.col("n_must"))
-        & (F.col("not_hit") == 0)
-        & ((F.col("n_must") > 0) | (F.col("n_should") > 0))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_should"), F.asc("doc_id")
-    )
-    return (
-        ok.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "rank", "doc_id", "n_should")
-    )
 
 
 def _bool_sql_values() -> str:

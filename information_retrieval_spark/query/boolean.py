@@ -4,8 +4,8 @@ The reference engine only ranks OR-unions of query terms
 (`ui/backend/mir/search/search/common.py:73-75` — no AND or NOT operator
 exists there); every production fulltext index also answers boolean
 filters, so this module adds them over the same stored postings the WAND
-engine reads. Semantics (shared with `ops/ir_direct.q_bool_topk`, which is
-the declarative twin the DuckDB oracle checks): a doc qualifies iff it
+engine reads. Semantics (shared with `ops/ir_direct.SQL_BOOL_TOPK`, the
+DuckDB oracle of the ``bool_index`` driver entry): a doc qualifies iff it
 contains EVERY must term, NO must_not term, and — when the must list is
 empty — at least one should term; score = number of DISTINCT should terms
 present; rank by (n_should desc, doc_id asc); top-k per query.
@@ -30,40 +30,9 @@ term set are unreachable and correctly excluded or ignored by construction.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from information_retrieval_spark.index.catalog import read_live_postings
-
-_SPLIT = re.compile(r"[^a-z0-9]+")
-
-
-def bool_rows(
-    queries: list[tuple[int, str, str, str]], tokenizer: str = "simple"
-) -> list[tuple[int, str, str, int]]:
-    """(query_id, term, role, n_must) rows for a boolean batch — terms
-    deduped per role, tokenized the same way the index was built."""
-    if tokenizer == "code":
-        from information_retrieval_spark.tokenize import code_terms
-
-        def toks(s: str) -> list[str]:
-            return list(dict.fromkeys(code_terms(s)))
-
-    else:
-
-        def toks(s: str) -> list[str]:
-            return list(
-                dict.fromkeys(w for w in _SPLIT.split(s.lower()) if w)
-            )
-
-    rows: list[tuple[int, str, str, int]] = []
-    for qid, must, should, nots in queries:
-        m = toks(must)
-        rows.extend((qid, t, "must", len(m)) for t in m)
-        rows.extend((qid, t, "should", len(m)) for t in toks(should))
-        rows.extend((qid, t, "not", len(m)) for t in toks(nots))
-    return rows
+from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 
 def boolean_search(
@@ -72,22 +41,30 @@ def boolean_search(
     queries: list[tuple[int, str, str, str]],
     k: int = 10,
     version: int | None = None,
-    tokenizer: str = "simple",
 ) -> DataFrame:
     """Top-k (query_id, rank, doc_id, n_should) per boolean query over the
     persisted postings (any index whose postings keep every query term —
     build boolean-serving indexes with ``stop_terms=[]``, same posture as
-    phrase serving)."""
-    rows = bool_rows(queries, tokenizer)
+    phrase serving). Query terms are tokenized the way the index was built
+    (its manifest's tokenizer), deduped per role."""
+    snap = IndexSnapshot(spark, index_dir, version)
+
+    def toks(s: str) -> list[str]:
+        return list(dict.fromkeys(snap.tokens(s)))
+
+    rows: list[tuple[int, str, str, int]] = []
+    for qid, must, should, nots in queries:
+        m = toks(must)
+        rows.extend((qid, t, "must", len(m)) for t in m)
+        rows.extend((qid, t, "should", len(m)) for t in toks(should))
+        rows.extend((qid, t, "not", len(m)) for t in toks(nots))
     spec = spark.createDataFrame(
         rows, "query_id int, qterm string, role string, n_must int"
     )
-    # live postings: seq-scoped tombstones pre-applied (catalog helper)
-    p = read_live_postings(spark, index_dir, version)
-    if p is None:
+    if snap.postings is None:
         raise ValueError(f"no postings_flat table in index {index_dir!r}")
     terms = sorted({r[1] for r in rows})
-    p = p.select("term", "doc_id").filter(F.col("term").isin(terms))
+    p = snap.postings.select("term", "doc_id").filter(F.col("term").isin(terms))
     dt = p.distinct()  # collapse sections + LSM segments
     m = dt.join(F.broadcast(spec), dt.term == spec.qterm)
     agg = m.groupBy("query_id", "doc_id", "n_must").agg(

@@ -31,13 +31,11 @@ exact ties would be nondeterministic (SURVEY.md §1.4-2).
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from information_retrieval_spark.query.spell import build_bigram_dict, correct_text
-from information_retrieval_spark.tokenize import code_terms, simple_tokens
+from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 K1 = 1.2
 B = 0.75
@@ -75,125 +73,21 @@ class SearchEngine:
         self,
         spark: SparkSession,
         index_dir: str,
-        distributed_spell: bool = False,
         version: int | None = None,
     ):
-        """``distributed_spell=True`` corrects query tokens with a Spark
-        bigram-table join instead of the driver-side vocabulary dict — the
-        scale path when the vocabulary exceeds driver RAM (same answers:
-        pinned-tie equivalence is tested).
-
-        ``version`` pins a snapshot of the index's catalog (time travel):
+        """``version`` pins a snapshot of the index's catalog (time travel):
         the engine answers every query against the index exactly as it was
-        at that commit (index/catalog.py); None = current."""
-        from information_retrieval_spark.index.catalog import (
-            read_deletes,
-            read_live_postings,
-            read_stats_pdf,
-            read_table,
-            read_term_df,
-        )
+        at that commit (index/catalog.py); None = the current one, resolved
+        once, here (query/snapshot.py).
 
+        Postings arrive live (query/snapshot.py): with deletes present the
+        seq-scoped tombstone anti-join is baked into the frame BEFORE any
+        candidate stats, and term filters still push through the join into
+        each parquet scan; without deletes the plan is the plain multi-dir
+        scan."""
         self.spark = spark
-        self.index_dir = index_dir
-        self.version = version
-        self.distributed_spell = distributed_spell
-        # delete-vector (index/maintenance.py): seq-scoped tombstones
-        # (doc_id, upto) hide a doc's rows only in segments old enough
-        # (seg _SEQ <= upto) — an updated/re-added doc's new rows stay
-        # visible. With deletes present, postings are read per segment
-        # dir (seq-tagged) and the anti-join is baked into the frame
-        # BEFORE any candidate stats; term filters still push through
-        # the join into each parquet scan. Without deletes the plan is
-        # the plain multi-dir scan, unchanged.
-        self.deleted_df = read_deletes(spark, index_dir, version)
-        self.postings = read_live_postings(spark, index_dir, version)
-        from information_retrieval_spark.index.catalog import read_live_table
-
-        self.doclen = read_live_table(spark, index_dir, "doclen", version)
-        self.term_df = read_term_df(spark, index_dir, version)
-        stats = read_stats_pdf(index_dir, version)
-        self.n_docs = int(stats["n_docs"].iloc[0])
+        self.snapshot = IndexSnapshot(spark, index_dir, version)
         self._n_live: int | None = None
-        cfg_sections = read_table(spark, index_dir, "stopwords", version)
-        self.stop_terms = {r.term for r in cfg_sections.collect()}
-        import json
-
-        with open(os.path.join(index_dir, "manifest.json")) as f:
-            self.config = json.load(f)["config"]
-        self.sections = list(self.config["sections"].keys())
-        self.tokenizer = self.config["tokenizer"]
-        # Spell dictionary: vocabulary-sized, collected to the driver and
-        # built once. Scale path (vocab >> driver RAM): correction becomes a
-        # distributed bigram-table join; the driver path is correct and is
-        # what the reference does (its whole index lives in driver RAM).
-        self._bigram_dict: dict | None = None
-        self._vocab_over_cap = False
-        # doc_meta (doc_id, category) for QuerySpec.filter_category
-        # (category-partitioned: catalog.read_doc_meta), live rows only: an
-        # update that moves a doc to another category leaves its old row
-        # in an older segment, hidden by the update's tombstone
-        from information_retrieval_spark.index.catalog import (
-            filter_deleted,
-            read_doc_meta,
-        )
-
-        meta = read_doc_meta(spark, index_dir, version, with_seq=True)
-        self.doc_meta = (
-            None if meta is None else filter_deleted(meta, self.deleted_df)
-        )
-
-    # ------------------------------------------------------------- helpers
-
-    @property
-    def bigram_dict(self) -> dict | None:
-        """Driver-side spell dict, or ``None`` when the vocabulary exceeds
-        spell.MAX_SPELL_VOCAB_COLLECT — callers fall back to the
-        distributed bigram join (never an unbounded vocab collect)."""
-        if self._bigram_dict is None and not self._vocab_over_cap:
-            from information_retrieval_spark.query.spell import (
-                bigram_dict_if_small,
-            )
-
-            self._bigram_dict = bigram_dict_if_small(
-                self.spark, self.index_dir, self.version
-            )
-            self._vocab_over_cap = self._bigram_dict is None
-        return self._bigram_dict
-
-    def _tokenize_query(self, text: str) -> list[str]:
-        toks = code_terms(text) if self.tokenizer == "code" else simple_tokens(text)
-        return [t for t in toks if t not in self.stop_terms]
-
-    def prepare_query_tokens(self, q: QuerySpec) -> list[str]:
-        text = q.text
-        if q.spell:
-            bd = self.bigram_dict
-            if bd is not None:
-                text = correct_text(bd, q.text)
-            else:  # vocab over the collect cap → distributed correction
-                from information_retrieval_spark.query.spell import (
-                    apply_corrections,
-                )
-
-                fixes = self._spell_map([q.text])
-                text = apply_corrections(q.text, lambda t: fixes.get(t, t))
-        return self._tokenize_query(text)
-
-    def _spell_map(self, texts: list[str]) -> dict[str, str]:
-        """Batch token→correction map via the distributed bigram join."""
-        from information_retrieval_spark.query.spell import spell_map_for_texts
-
-        return spell_map_for_texts(
-            self.spark, self.index_dir, texts, self.version
-        )
-
-    def _default_weights(self, q: QuerySpec) -> dict[str, float]:
-        if q.section_weights:
-            return q.section_weights
-        if set(self.sections) == {"title", "abstract"}:
-            return {"abstract": 0.2, "title": 0.8}
-        return {self.sections[0]: 1.0}
 
     # --------------------------------------------------------------- plans
 
@@ -224,7 +118,7 @@ class SearchEngine:
         # (index/build.py s_postings): scoring reads dl and derives the
         # per-query avgdl from matched rows alone — no corpus-sized doclen
         # join anywhere in the query path
-        p = self.postings.select("term", "section", "doc_id", "tf", "dls")
+        p = self.snapshot.postings.select("term", "section", "doc_id", "tf", "dls")
         if qterm_literals:
             terms = sorted(set(qterm_literals))
             if match_mode == "exact":
@@ -235,9 +129,9 @@ class SearchEngine:
                     c = (F.col("term") >= t) & (F.col("term") < t + MAX_CHAR)
                     cond = c if cond is None else (cond | c)
                 p = p.filter(cond)
-        # the seq-scoped delete anti-join is baked into self.postings
-        # (engine __init__), so candidate N/avgdl quirks already
-        # recompute over live docs only
+        # the seq-scoped delete anti-join is baked into the snapshot's
+        # postings, so candidate N/avgdl quirks already recompute over live
+        # docs only
         if match_mode == "exact":
             m = p.join(F.broadcast(qterms), p.term == qterms.qterm)
         else:
@@ -250,10 +144,10 @@ class SearchEngine:
             # pathological 1-char prefix blows up the MATCH SET itself, not
             # just this table). WandEngine additionally collects the
             # expansion to literal IN filters for parquet row-group pruning.
-            cond = (self.term_df.term >= qterms.qterm) & (
-                self.term_df.term < F.concat(qterms.qterm, F.lit(MAX_CHAR))
+            cond = (self.snapshot.term_df.term >= qterms.qterm) & (
+                self.snapshot.term_df.term < F.concat(qterms.qterm, F.lit(MAX_CHAR))
             )
-            dict_terms = self.term_df.select("term")
+            dict_terms = self.snapshot.term_df.select("term")
             if qterm_literals:
                 rcond = None
                 for t in sorted(set(qterm_literals)):
@@ -263,7 +157,7 @@ class SearchEngine:
             expanded = dict_terms.join(F.broadcast(qterms), cond)
             m = p.join(F.broadcast(expanded), "term")
         if cat_df is not None:
-            if self.doc_meta is None:
+            if self.snapshot.doc_meta is None:
                 raise ValueError(
                     "filter_category requires an index built with"
                     " IndexBuilder(category_col=...)"
@@ -275,7 +169,7 @@ class SearchEngine:
                 prune_doc_meta,
             )
 
-            dm = prune_doc_meta(self.doc_meta, wanted)
+            dm = prune_doc_meta(self.snapshot.doc_meta, wanted)
             m = (
                 m.join(F.broadcast(cat_df), "query_id", "left")
                 .join(dm, "doc_id", "left")
@@ -354,10 +248,10 @@ class SearchEngine:
         fterms = sorted(
             {t for _, t, _ in mu_rows} | {t for _, t in ex_rows}
         )
-        fp = self.postings.select("term", "doc_id").filter(
+        fp = self.snapshot.postings.select("term", "doc_id").filter(
             F.col("term").isin(fterms)
         )
-        # (self.postings is already live-filtered under deletes)
+        # (self.snapshot.postings is already live-filtered under deletes)
         # no fp-wide distinct: presence repeats only across sections, and
         # both consumers dedup inherently (the exclude branch distincts its
         # own projection; the must branch counts DISTINCT mterm) — a
@@ -410,7 +304,7 @@ class SearchEngine:
             F.sum(
                 F.coalesce(F.element_at("dls", F.lit(s)), F.lit(0))
             ).alias(f"_dlsum_{i}")
-            for i, s in enumerate(self.sections)
+            for i, s in enumerate(self.snapshot.sections)
         ]
         stats = cand.groupBy("query_id").agg(*aggs)
         pairs = F.array(
@@ -419,7 +313,7 @@ class SearchEngine:
                     F.lit(s).alias("section"),
                     (F.col(f"_dlsum_{i}") / F.col("n_cand")).alias("avgdl"),
                 )
-                for i, s in enumerate(self.sections)
+                for i, s in enumerate(self.snapshot.sections)
             ]
         )
         avgdl = stats.select("query_id", F.explode(pairs).alias("e")).select(
@@ -502,8 +396,8 @@ class SearchEngine:
         on the first tf-idf batch."""
         if self._n_live is None:
             self._n_live = (
-                self.n_docs if self.deleted_df is None
-                else self.doclen.select("doc_id").distinct().count()
+                self.snapshot.n_docs if self.snapshot.deletes is None
+                else self.snapshot.doclen.select("doc_id").distinct().count()
             )
         return self._n_live
 
@@ -552,31 +446,17 @@ class SearchEngine:
         return out
 
     def _qterm_rows(self, queries: list[QuerySpec]):
-        """Driver-side query prep: spell + tokenize + stop-filter + counts.
-        With ``distributed_spell`` the whole batch's corrections come from
-        ONE Spark job; otherwise each text uses the driver dict."""
+        """Driver-side query prep (query/snapshot.py: spell, tokenize,
+        stop-filter) → (query_id, term, multiplicity) rows, plus each
+        query's terms in batch order."""
+        per_query = self.snapshot.query_terms(queries)
         rows = []
-        per_query_tokens = {}
-        fixes = None
-        if self.distributed_spell:
-            fixes = self._spell_map([q.text for q in queries if q.spell])
-        for q in queries:
-            if q.spell and fixes is not None:
-                from information_retrieval_spark.query.spell import (
-                    apply_corrections,
-                )
-
-                text = apply_corrections(q.text, lambda t: fixes.get(t, t))
-                toks = self._tokenize_query(text)
-            else:
-                toks = self.prepare_query_tokens(q)
-            per_query_tokens[q.query_id] = toks
+        for q, toks in zip(queries, per_query):
             seen = {}
             for t in toks:
                 seen[t] = seen.get(t, 0) + 1
-            for t, m in seen.items():
-                rows.append((q.query_id, t, m))
-        return rows, per_query_tokens
+            rows.extend((q.query_id, t, m) for t, m in seen.items())
+        return rows, per_query
 
     def _search_okapi(self, queries: list[QuerySpec]) -> DataFrame:
         rows, _ = self._qterm_rows(queries)
@@ -608,15 +488,12 @@ class SearchEngine:
             )
         # presence + global df lookup (tiny pushed-filter scan, collected)
         all_terms = sorted({t for _, t, _ in rows})
-        present = {
-            r.term: r.df
-            for r in self.term_df.filter(F.col("term").isin(all_terms)).collect()
-        }
+        lookup = self.snapshot.term_df.filter(F.col("term").isin(all_terms))
+        present = {r.term: r.df for r in lookup.collect()}
         # query weights (`common.py:26-56`): tf over dup tokens, 1+ln, then
         # cosine-normalize for *-lnc; df=0 terms dropped (documented deviation)
         qrows = []
-        for q in queries:
-            toks = per_query_tokens[q.query_id]
+        for q, toks in zip(queries, per_query_tokens):
             qtf = {t: toks.count(t) for t in set(toks) if t in present}
             if not qtf:
                 continue
@@ -664,7 +541,7 @@ class SearchEngine:
     def _weights_df(self, queries: list[QuerySpec]) -> DataFrame:
         wrows = []
         for q in queries:
-            for s, w in self._default_weights(q).items():
+            for s, w in self.snapshot.weights(q).items():
                 wrows.append((q.query_id, s, float(w)))
         return self.spark.createDataFrame(
             wrows, "query_id long, section string, w double"

@@ -9,8 +9,6 @@ driver (k rows; the reference does exactly this driver-side).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MARK_OPEN = "<mark>"
@@ -24,11 +22,12 @@ def match_offsets(
     qterms: list[str],
 ) -> DataFrame:
     """(doc_id, section, term, positions) for the result docs × query terms.
-    Pushed-filter scan on the term-sorted postings table + broadcast semi
-    join against the (tiny) result set."""
-    from information_retrieval_spark.index.catalog import read_table
+    Pushed-filter scan on the term-sorted live postings (an updated doc's
+    old rows are hidden) + broadcast semi join against the (tiny) result
+    set."""
+    from information_retrieval_spark.query.snapshot import IndexSnapshot
 
-    postings = read_table(spark, index_dir, "postings_flat")
+    postings = IndexSnapshot(spark, index_dir).postings
     docs = results.select("doc_id").distinct()
     return (
         postings.filter(F.col("term").isin(list(qterms)))

@@ -50,7 +50,7 @@ def search_personalized(
     docs; ``preferences`` maps doc_id → weight (normalized internally)."""
     spark = engine.spark
     text = engine.search(queries)
-    nodes = engine.doclen.select("doc_id").distinct()
+    nodes = engine.snapshot.doclen.select("doc_id").distinct()
     ppr = personalized_pagerank(
         spark, edges, nodes, preferences, tol=tol, max_iter=max_iter
     )

@@ -37,39 +37,33 @@ positions for one section live in exactly one segment.
 
 from __future__ import annotations
 
-import re
-
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from information_retrieval_spark.index.catalog import read_live_postings
-
-_SPLIT = re.compile(r"[^a-z0-9]+")
+from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 
-def _index_tokenizer(index_dir: str) -> str:
-    with open(os.path.join(index_dir, "manifest.json")) as f:
-        return json.load(f)["config"]["tokenizer"]
-
-
-def phrase_rows(
-    phrases: list[tuple[int, str]], tokenizer: str = "simple"
+def _phrase_rows(
+    snap: IndexSnapshot, phrases: list[tuple[int, str]]
 ) -> list[tuple[int, int, str, int]]:
     """(query_id, idx, term, n_terms) rows for a phrase batch, tokenized
     the same way the index was built (positions must share a basis)."""
-    if tokenizer == "code":
-        from information_retrieval_spark.tokenize import code_terms
-
-        tok = code_terms
-    else:
-        tok = lambda s: [w for w in _SPLIT.split(s.lower()) if w]  # noqa: E731
     rows: list[tuple[int, int, str, int]] = []
     for qid, text in phrases:
-        terms = tok(text)
+        terms = snap.tokens(text)
         rows.extend((qid, i, w, len(terms)) for i, w in enumerate(terms))
     return rows
+
+
+def _live_postings(snap: IndexSnapshot, terms: list[str]) -> DataFrame:
+    """The snapshot's live positional postings of ``terms`` — a pushed
+    ``In(term, ...)`` scan."""
+    if snap.postings is None:
+        raise ValueError(
+            f"no postings_flat table in index {snap.index_dir!r}"
+        )
+    return snap.postings.select(
+        "term", "section", "doc_id", "positions"
+    ).filter(F.col("term").isin(sorted(set(terms))))
 
 
 def phrase_search(
@@ -78,7 +72,6 @@ def phrase_search(
     phrases: list[tuple[int, str]],
     k: int = 10,
     version: int | None = None,
-    tokenizer: str | None = None,
 ) -> DataFrame:
     """Top-k docs per phrase by exact-occurrence count over the persisted
     positional index. Returns (query_id, rank, doc_id, n_occ), rank by
@@ -88,25 +81,18 @@ def phrase_search(
     Only valid on indexes whose positions are token ORDINALS (the simple
     tokenizer): the code tokenizer stores char offsets, where "next token"
     is not pos+1 — use :func:`proximity_search` there."""
-    tokenizer = tokenizer or _index_tokenizer(index_dir)
-    if tokenizer != "simple":
+    snap = IndexSnapshot(spark, index_dir, version)
+    if snap.tokenizer != "simple":
         raise ValueError(
             "phrase adjacency is undefined over char-offset positions "
-            f"(index tokenizer {tokenizer!r}); use proximity_search, whose "
-            "window is measured in the index's own position units"
+            f"(index tokenizer {snap.tokenizer!r}); use proximity_search, "
+            "whose window is measured in the index's own position units"
         )
-    rows = phrase_rows(phrases, tokenizer)
+    rows = _phrase_rows(snap, phrases)
     qt = spark.createDataFrame(
         rows, "query_id int, idx int, qterm string, n int"
     )
-    # live postings: seq-scoped tombstones pre-applied (catalog helper)
-    p = read_live_postings(spark, index_dir, version)
-    if p is None:
-        raise ValueError(f"no postings_flat table in index {index_dir!r}")
-    terms = sorted({r[2] for r in rows})
-    p = p.select("term", "section", "doc_id", "positions").filter(
-        F.col("term").isin(terms)
-    )
+    p = _live_postings(snap, [r[2] for r in rows])
     m = (
         p.join(F.broadcast(qt), p.term == qt.qterm)
         .select(
@@ -144,7 +130,6 @@ def proximity_search(
     window: int,
     k: int = 10,
     version: int | None = None,
-    tokenizer: str | None = None,
 ) -> DataFrame:
     """Top-k docs where every query term co-occurs within ±``window``
     positions of an occurrence of the FIRST term (the anchor), per section;
@@ -165,8 +150,8 @@ def proximity_search(
     range join against anything corpus-sized — → witness = anchor with all
     n−1 other slots present → per-doc witness count → top-k window.
     """
-    tokenizer = tokenizer or _index_tokenizer(index_dir)
-    raw = phrase_rows(queries, tokenizer)
+    snap = IndexSnapshot(spark, index_dir, version)
+    raw = _phrase_rows(snap, queries)
     # collapse duplicate terms per query, re-densify idx so anchor == idx 0
     rows = []
     for qid in sorted({r[0] for r in raw}):
@@ -178,14 +163,7 @@ def proximity_search(
     qt = spark.createDataFrame(
         rows, "query_id int, idx int, qterm string, n int"
     )
-    # live postings: seq-scoped tombstones pre-applied (catalog helper)
-    p = read_live_postings(spark, index_dir, version)
-    if p is None:
-        raise ValueError(f"no postings_flat table in index {index_dir!r}")
-    terms = sorted({r[2] for r in rows})
-    p = p.select("term", "section", "doc_id", "positions").filter(
-        F.col("term").isin(terms)
-    )
+    p = _live_postings(snap, [r[2] for r in rows])
     h = p.join(F.broadcast(qt), p.term == qt.qterm).select(
         "query_id",
         "section",

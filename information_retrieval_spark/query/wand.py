@@ -9,10 +9,10 @@ keyed and partitioned by the doc-hash ``bucket``
   their prefix expansions, filter terms), pruned by parquet row-group
   min/max on the term-sorted layout; cached per batch;
 * the **side** — every doclen row, tombstone and category row of the
-  snapshot with its segment sequence; resolved when the engine is built
-  (like the shard's packed table), cached on first use. The statistics
-  pass reads its doclen, tombstone and filtered-on category rows; the
-  scoring pass only its tombstone and filtered-on category rows.
+  engine's pinned snapshot (query/snapshot.py) with its segment sequence;
+  built and cached on first use. The statistics pass reads its doclen,
+  tombstone and filtered-on category rows; the scoring pass only its
+  tombstone and filtered-on category rows.
 
 Then two bucket-grouped ``applyInPandas`` passes over the same cached
 frames, so neither adds an exchange:
@@ -47,8 +47,6 @@ Skipping levels:
 from __future__ import annotations
 
 import heapq
-import json
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -57,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.codec import decode_doc_gaps, varint_decode
 from information_retrieval_spark.query.engine import K1, B, QuerySpec
-from information_retrieval_spark.tokenize import code_terms, simple_tokens
+from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 #: packed columns a bucket pass reads
 _SHARD_COLS = (
@@ -470,7 +468,8 @@ class _Bucket:
         kind = side["kind"].to_numpy()
         docs = side["doc_id"].to_numpy(np.int64)
         vals = side["v"].to_numpy(np.int64)
-        # a doc's tombstones collapse to the max upto (catalog.read_deletes)
+        # a doc's tombstones collapse to the max upto, as in the delete
+        # vector (IndexSnapshot.deletes)
         is_del = kind == "del"
         tomb = pd.Series(vals[is_del]).groupby(docs[is_del]).max()
         self.del_docs = tomb.index.to_numpy(np.int64)
@@ -682,15 +681,10 @@ class WandEngine:
         self,
         spark: SparkSession,
         index_dir: str,
-        distributed_spell: bool = False,
         version: int | None = None,
         max_prefix_expand: int = 20_000,
     ):
-        """``distributed_spell=True``: query-token correction via the
-        Spark bigram-table join (`spell.correct_words_spark`) instead of
-        the driver-side vocabulary dict — vocab never leaves the cluster.
-
-        ``max_prefix_expand`` bounds how many dictionary terms a prefix
+        """``max_prefix_expand`` bounds how many dictionary terms a prefix
         batch may expand to: WAND collects the expansion to the driver
         (it becomes the packed scan's literal ``In`` pushdown and the
         per-query cursor set), which is safe for sane prefixes but would
@@ -699,35 +693,17 @@ class WandEngine:
         ``SearchEngine``'s prefix expansion stays fully distributed and
         has no such bound.
 
-        ``version`` pins a catalog snapshot (time travel; None = current).
-        The packed table arrives with its LSM ``segment`` column
-        (catalog.read_packed): incremental adds commit new segments instead
-        of repacking, and the per-bucket scorer merges segment cursors."""
-        from information_retrieval_spark.index.catalog import (
-            read_doc_meta,
-            read_live_table,
-            read_packed,
-            read_table,
-            read_term_df,
-        )
-
+        ``version`` pins a catalog snapshot (time travel; None = the
+        current one, resolved once, here: query/snapshot.py). The packed
+        table arrives with its LSM ``segment`` column (catalog.read_packed):
+        incremental adds commit new segments instead of repacking, and the
+        per-bucket scorer merges segment cursors."""
         self.spark = spark
-        self.index_dir = index_dir
-        self.version = version
-        self.distributed_spell = distributed_spell
-        self.packed = read_packed(spark, index_dir, version)
-        # live doc lengths as a frame (query/personalized.py reads the
-        # corpus's doc_ids from it); search() reads them through `_side`
-        self.doclen = read_live_table(spark, index_dir, "doclen", version)
-        self.term_df = read_term_df(spark, index_dir, version)
-        stop = read_table(spark, index_dir, "stopwords", version)
-        self.stop_terms = {r.term for r in stop.collect()}
-        with open(os.path.join(index_dir, "manifest.json")) as f:
-            self.config = json.load(f)["config"]
-        self.sections = list(self.config["sections"].keys())
-        self.tokenizer = self.config["tokenizer"]
-        self.doc_meta = read_doc_meta(spark, index_dir, version)
-        self.n_buckets = int(self.config.get("n_buckets", 8))
+        self.snapshot = IndexSnapshot(spark, index_dir, version)
+        # resolved at open: its schema read is a Spark job that would
+        # otherwise land in the first search()
+        self.packed = self.snapshot.packed
+        self.n_buckets = int(self.snapshot.config.get("n_buckets", 8))
         # partition count of both cached bucket frames: equal counts let
         # every bucket-grouped pass read them without a new exchange. At
         # most one task per core: a pandas-UDF task pays a fixed Python
@@ -736,17 +712,12 @@ class WandEngine:
             1, min(self.n_buckets, spark.sparkContext.defaultParallelism)
         )
         self.max_prefix_expand = max_prefix_expand
-        # the side frame's inputs are resolved NOW, like packed above: a
-        # write between construction and a search() must not mix snapshots
-        self._side_plan = self._read_side()
         self._dl_map_df = None
         self._last_shard = None
         #: the last batch's corpus statistics per query_id: ``n_cand``
         #: (quirk Q1 N), ``avgdl`` per section (Q2) and live ``df`` per
         #: surviving qterm — what the BM25 weights were computed from
         self.last_stats: dict[int, dict] = {}
-        self._bigram_dict = None
-        self._vocab_over_cap = False
 
     def close(self) -> None:
         """Release this engine's persisted executor state (the bucket side
@@ -776,102 +747,24 @@ class WandEngine:
     # ------------------------------------------------------------- helpers
 
     def _side(self) -> DataFrame:
-        """The bucket side frame, cached on first use (and again after
-        ``close()``)."""
-        if self._dl_map_df is None:
-            self._dl_map_df = self._side_plan.persist()
-        return self._dl_map_df
-
-    def _read_side(self) -> DataFrame:
-        """Every doclen row, tombstone and category row of the snapshot as
-        ``(bucket, doc_id, kind, s, v, seq)``, partitioned like the
+        """The bucket side frame, built and cached on first use (and again
+        after ``close()``): every doclen row, tombstone and category row of
+        the snapshot (`IndexSnapshot.doc_rows`), partitioned like the
         per-batch shard. Rows keep their segment sequence; `_Bucket`
         resolves seq-scoped tombstones per bucket, so no anti-join runs
         here and nothing corpus-sized passes through the driver."""
-        from information_retrieval_spark.index.catalog import (
-            GLOBAL_UPTO,
-            read_doc_meta,
-            read_seq_table,
-            table_dirs,
-        )
-
-        spark, idx, v = self.spark, self.index_dir, self.version
-        parts = [
-            read_seq_table(spark, idx, "doclen", v).select(
-                "doc_id", F.lit("dl").alias("kind"),
-                F.col("section").alias("s"), F.col("dl").alias("v"),
-                F.col("seg_seq").alias("seq"),
-            )
-        ]
-        dirs = table_dirs(idx, "deleted_docs", v)
-        if dirs:
-            # legacy doc_id-only rows hide the doc everywhere
-            parts.append(
-                spark.read.schema("doc_id long, upto long")
-                .parquet(*dirs)
-                .select(
-                    "doc_id", F.lit("del").alias("kind"),
-                    F.lit(None).cast("string").alias("s"),
-                    F.coalesce("upto", F.lit(GLOBAL_UPTO)).alias("v"),
-                    F.lit(0).cast("long").alias("seq"),
-                )
-            )
-        if self.doc_meta is not None:
-            parts.append(
-                read_doc_meta(spark, idx, v, with_seq=True).select(
-                    "doc_id", F.lit("cat").alias("kind"),
-                    F.col("category").alias("s"),
-                    F.lit(0).cast("long").alias("v"),
-                    F.col("seg_seq").alias("seq"),
-                )
-            )
-        side = parts[0]
-        for p in parts[1:]:
-            side = side.unionByName(p)
-        doc = F.col("doc_id").cast("long")
-        return side.select(
-            F.pmod(F.xxhash64(doc), F.lit(self.n_buckets))
-            .cast("int").alias("bucket"),
-            doc.alias("doc_id"), "kind", "s",
-            F.col("v").cast("long").alias("v"),
-            F.col("seq").cast("long").alias("seq"),
-        ).repartition(self._partitions, "bucket")
-
-    def _tokenize(self, text: str) -> list[str]:
-        toks = code_terms(text) if self.tokenizer == "code" else simple_tokens(text)
-        return [t for t in toks if t not in self.stop_terms]
-
-    def _weights(self, q: QuerySpec) -> dict[str, float]:
-        if q.section_weights:
-            return q.section_weights
-        if set(self.sections) == {"title", "abstract"}:
-            return {"abstract": 0.2, "title": 0.8}
-        return {self.sections[0]: 1.0}
+        if self._dl_map_df is None:
+            doc = F.col("doc_id").cast("long")
+            self._dl_map_df = self.snapshot.doc_rows().select(
+                F.pmod(F.xxhash64(doc), F.lit(self.n_buckets))
+                .cast("int").alias("bucket"),
+                doc.alias("doc_id"), "kind", "s",
+                F.col("v").cast("long").alias("v"),
+                F.col("seq").cast("long").alias("seq"),
+            ).repartition(self._partitions, "bucket").persist()
+        return self._dl_map_df
 
     # ---------------------------------------------------------------- main
-
-    def _correct(self, text: str) -> str:
-        """Spell-correct the query (quirk Q7): driver-side bigram dict when
-        the vocabulary fits under MAX_SPELL_VOCAB_COLLECT, else the fully
-        distributed bigram-join path — never an unbounded vocab collect."""
-        from information_retrieval_spark.query.spell import (
-            apply_corrections,
-            bigram_dict_if_small,
-            correct_text,
-            spell_map_for_texts,
-        )
-
-        if self._bigram_dict is None and not self._vocab_over_cap:
-            self._bigram_dict = bigram_dict_if_small(
-                self.spark, self.index_dir, self.version
-            )
-            self._vocab_over_cap = self._bigram_dict is None
-        if self._bigram_dict is not None:
-            return correct_text(self._bigram_dict, text)
-        fixes = spell_map_for_texts(
-            self.spark, self.index_dir, [text], self.version
-        )
-        return apply_corrections(text, lambda t: fixes.get(t, t))
 
     def _expand_prefix(self, qterms: set[str]) -> dict[str, list[str]]:
         """qterm → matching postings terms (prefix semantics,
@@ -888,10 +781,8 @@ class WandEngine:
             return {}
         cond = reduce(or_, [F.col("term").startswith(t) for t in qterms])
         cap = self.max_prefix_expand
-        terms = [
-            r.term
-            for r in self.term_df.filter(cond).limit(cap + 1).collect()
-        ]
+        hits = self.snapshot.term_df.filter(cond).limit(cap + 1).collect()
+        terms = [r.term for r in hits]
         if len(terms) > cap:
             raise ValueError(
                 f"prefix expansion exceeds max_prefix_expand={cap} "
@@ -930,30 +821,8 @@ class WandEngine:
         assert len(modes) == 1, "mixed match modes: split the batch"
         mode = modes.pop()
         self.last_stats = {}
-        fixes = None
-        if self.distributed_spell and any(q.spell for q in queries):
-            from information_retrieval_spark.query.spell import (
-                spell_map_for_texts,
-            )
-
-            fixes = spell_map_for_texts(
-                self.spark, self.index_dir,
-                [q.text for q in queries if q.spell],
-                self.version,
-            )
         qtoks: dict[int, dict[str, int]] = {}
-        for q in queries:
-            if q.spell and fixes is not None:
-                from information_retrieval_spark.query.spell import (
-                    apply_corrections,
-                )
-
-                text = apply_corrections(q.text, lambda t: fixes.get(t, t))
-            elif q.spell:
-                text = self._correct(q.text)
-            else:
-                text = q.text
-            toks = self._tokenize(text)
+        for q, toks in zip(queries, self.snapshot.query_terms(queries)):
             mult: dict[str, int] = {}
             for t in toks:
                 mult[t] = mult.get(t, 0) + 1
@@ -979,7 +848,7 @@ class WandEngine:
         if not any(p.qterms for p in plans.values()):
             return self._result()
         if any(p.want is not None for p in plans.values()) and (
-            self.doc_meta is None
+            self.snapshot.doc_meta is None
         ):
             raise ValueError(
                 "filter_category requires an index built with"
@@ -1012,7 +881,7 @@ class WandEngine:
             rows |= (F.col("kind") == "cat") & F.col("s").isin(wants)
         score_side = side.filter(rows)
         stats_side = side.filter(rows | (F.col("kind") == "dl"))
-        sections = self.sections
+        sections = self.snapshot.sections
 
         # --- statistics pass: per-bucket partial sums, added on the driver
         def stats_bucket(
@@ -1068,7 +937,7 @@ class WandEngine:
             terms = {}
             for t, df in st["df"].items():
                 idf = float(np.log((nq - df + 0.5) / (df + 0.5) + 1.0))
-                for s, w in self._weights(q).items():
+                for s, w in self.snapshot.weights(q).items():
                     a = st["avgdl"].get(s)
                     if a is None or a == 0:
                         continue

@@ -28,7 +28,7 @@ oracle = Oracle(
     sections=("title", "abstract"), tokenizer="code", stop_k=20,
 )
 eng = SearchEngine(spark, idx_dir)
-print("stop engine==oracle:", eng.stop_terms == oracle.stop_tokens, sorted(oracle.stop_tokens))
+print("stop engine==oracle:", eng.snapshot.stop_terms == oracle.stop_tokens, sorted(oracle.stop_tokens))
 
 queries = make_queries(12)
 specs = [QuerySpec(q.query_id, q.query_text, q.method, q.k) for q in queries]

@@ -1,6 +1,6 @@
-"""Boolean (must / should / must-not) retrieval: direct token plan vs
-DuckDB twin vs the persisted index, plus a pure-Python brute force,
-delete-vector and LSM-segment semantics."""
+"""Boolean (must / should / must-not) retrieval over the persisted index vs
+its DuckDB oracle (the declarative token SQL) and a pure-Python brute
+force, plus delete-vector, LSM-segment and code-tokenizer semantics."""
 
 import re
 
@@ -41,14 +41,12 @@ def docs_texts(spark):
 
 
 def test_bool_direct_matches_duckdb(spark):
-    from information_retrieval_spark.ops.ir_direct import (
-        SQL_BOOL_TOPK,
-        q_bool_topk,
-    )
+    from information_retrieval_spark.ops.engine_entry import q_bool_index
+    from information_retrieval_spark.ops.ir_direct import SQL_BOOL_TOPK
 
     got = {
         (r.query_id, r.rank, r.doc_id, r.n_should)
-        for r in q_bool_topk(spark, SF).collect()
+        for r in q_bool_index(spark, SF).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -59,13 +57,10 @@ def test_bool_direct_matches_duckdb(spark):
 
 
 def test_bool_direct_matches_bruteforce(spark, docs_texts):
-    from information_retrieval_spark.ops.ir_direct import (
-        BOOL_QUERY_SET,
-        TOP_K,
-        q_bool_topk,
-    )
+    from information_retrieval_spark.ops.engine_entry import q_bool_index
+    from information_retrieval_spark.ops.ir_direct import BOOL_QUERY_SET, TOP_K
 
-    rows = q_bool_topk(spark, SF).collect()
+    rows = q_bool_index(spark, SF).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.n_should))
@@ -77,21 +72,10 @@ def test_bool_direct_matches_bruteforce(spark, docs_texts):
 
 
 def test_bool_absent_must_term_matches_nothing(spark):
-    from information_retrieval_spark.ops.ir_direct import q_bool_topk
-
-    rows = q_bool_topk(spark, SF).filter("query_id = 5").collect()
-    assert rows == []  # q5's must term is absent from the corpus
-
-
-def test_bool_index_matches_direct(spark):
-    """Same logical query, two physical strategies: stored postings with a
-    pushed In(term) scan == corpus re-tokenize."""
     from information_retrieval_spark.ops.engine_entry import q_bool_index
-    from information_retrieval_spark.ops.ir_direct import q_bool_topk
 
-    direct = {tuple(r) for r in q_bool_topk(spark, SF).collect()}
-    packed = {tuple(r) for r in q_bool_index(spark, SF).collect()}
-    assert direct == packed
+    rows = q_bool_index(spark, SF).filter("query_id = 5").collect()
+    assert rows == []  # q5's must term is absent from the corpus
 
 
 def test_bool_index_scan_is_term_pruned(spark):
@@ -174,3 +158,51 @@ def test_bool_spans_lsm_segments_after_add(spark, docs_texts, tmp_path):
     assert any(d <= max_id // 2 for d in got) and any(
         d > max_id // 2 for d in got
     ), "boolean hits must span both segments"
+
+
+def test_bool_code_tokenizer_index_matches_bruteforce(spark, tmp_path):
+    """On a tokenizer="code" index, query terms must be split the way the
+    index was built: ``parseJSON`` is stored as ``parse`` + ``json``, so a
+    lowercase simple split (``parsejson``) would silently match nothing."""
+    from information_retrieval_spark.index.build import IndexBuilder
+    from information_retrieval_spark.query.boolean import boolean_search
+    from information_retrieval_spark.tokenize import code_terms
+
+    texts = {
+        1: "def parseJSON(raw): return json.loads(raw)",
+        2: "def read_file(path): return open(path).read()",
+        3: "class JsonParser: parseJSON = staticmethod(read_file)",
+        4: "int parse_int(const char *s) { return atoi(s); }",
+        5: "fn readFile(p: &Path) -> String { fs::read_to_string(p) }",
+        6: "void writeFile(String path) { Files.write(path) }",
+    }
+    idx = str(tmp_path / "code_bool_idx")
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    IndexBuilder(
+        spark, idx, sections={"body": "text"}, tokenizer="code",
+        stop_terms=[],
+    ).build(docs)
+
+    def toks(s):
+        return list(dict.fromkeys(code_terms(s)))
+
+    terms = {d: set(code_terms(t)) for d, t in texts.items()}
+    queries = [
+        (0, "parseJSON", "", ""),
+        (1, "", "read_file writeFile", "JsonParser"),
+        (2, "parse", "json raw", "int"),
+        (3, "readFile", "", ""),
+    ]
+    got = {}
+    for r in boolean_search(spark, idx, queries, k=len(texts)).collect():
+        got.setdefault(r.query_id, {})[r.doc_id] = r.n_should
+    for qid, must, should, nots in queries:
+        m, s, n = toks(must), toks(should), toks(nots)
+        want = {}
+        for d, ts in terms.items():
+            if all(t in ts for t in m) and not any(t in ts for t in n):
+                hit = sum(t in ts for t in s)
+                if m or hit:
+                    want[d] = hit
+        assert want, f"query {qid} should match in this fixture"
+        assert got.get(qid, {}) == want, f"query {qid}: {must!r}/{should!r}/{nots!r}"

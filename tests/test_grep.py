@@ -36,21 +36,6 @@ def test_grep_brute_matches_duckdb(spark, con):
     assert got == want
 
 
-def test_grep_index_equals_brute(spark):
-    from information_retrieval_spark.ops.grep import q_grep_index, q_grep_topk
-
-    brute = {
-        (r.query_id, r.rank, r.doc_id, r.n_matches)
-        for r in q_grep_topk(spark, SF).collect()
-    }
-    idx = {
-        (r.query_id, r.rank, r.doc_id, r.n_matches)
-        for r in q_grep_index(spark, SF).collect()
-    }
-    assert idx == brute
-    assert brute, "grep query set should match documents in the fixture"
-
-
 def test_grep_matches_bruteforce_python(spark, texts):
     from information_retrieval_spark.ops.grep import (
         GREP_QUERY_SET,

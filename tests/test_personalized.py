@@ -56,7 +56,7 @@ def _oracle_fused(text_rows, edges):
 
 def test_search_personalized_matches_python_oracle(spark, index_dir):
     engine = SearchEngine(spark, index_dir)
-    assert engine.doclen.select("doc_id").distinct().count() == N
+    assert engine.snapshot.doclen.select("doc_id").distinct().count() == N
     edges = _edges()
     e = spark.createDataFrame(edges, "src long, dst long")
 

@@ -1,6 +1,6 @@
-"""Phrase search: direct token-position plan vs DuckDB twin vs the
-persisted positional index, plus a pure-Python brute force and
-delete-vector semantics."""
+"""Phrase and proximity search over the persisted positional index vs
+their DuckDB oracles (the declarative token-position SQL) and a
+pure-Python brute force, plus delete-vector semantics."""
 
 import re
 
@@ -36,14 +36,12 @@ def docs_texts(spark):
 
 
 def test_phrase_direct_matches_duckdb(spark):
-    from information_retrieval_spark.ops.ir_direct import (
-        SQL_PHRASE_TOPK,
-        q_phrase_topk,
-    )
+    from information_retrieval_spark.ops.engine_entry import q_phrase_index
+    from information_retrieval_spark.ops.ir_direct import SQL_PHRASE_TOPK
 
     got = {
         (r.query_id, r.rank, r.doc_id, r.n_occ)
-        for r in q_phrase_topk(spark, SF).collect()
+        for r in q_phrase_index(spark, SF).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -54,13 +52,10 @@ def test_phrase_direct_matches_duckdb(spark):
 
 
 def test_phrase_direct_matches_bruteforce(spark, docs_texts):
-    from information_retrieval_spark.ops.ir_direct import (
-        PHRASE_SET,
-        TOP_K,
-        q_phrase_topk,
-    )
+    from information_retrieval_spark.ops.engine_entry import q_phrase_index
+    from information_retrieval_spark.ops.ir_direct import PHRASE_SET, TOP_K
 
-    rows = q_phrase_topk(spark, SF).collect()
+    rows = q_phrase_index(spark, SF).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.n_occ))
@@ -69,17 +64,6 @@ def test_phrase_direct_matches_bruteforce(spark, docs_texts):
         want = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_K]
         got = [(d, n) for _, d, n in sorted(by_q.get(qid, []))]
         assert got == [(d, n) for d, n in want], f"phrase {phrase!r}"
-
-
-def test_phrase_index_matches_direct(spark):
-    """Same logical query, two physical strategies: stored offset sets with
-    a pushed In(term) scan == corpus re-tokenize."""
-    from information_retrieval_spark.ops.engine_entry import q_phrase_index
-    from information_retrieval_spark.ops.ir_direct import q_phrase_topk
-
-    direct = {tuple(r) for r in q_phrase_topk(spark, SF).collect()}
-    packed = {tuple(r) for r in q_phrase_index(spark, SF).collect()}
-    assert direct == packed
 
 
 def test_phrase_index_scan_is_term_pruned(spark):
@@ -156,14 +140,12 @@ def _brute_prox_counts(
 
 
 def test_prox_direct_matches_duckdb(spark):
-    from information_retrieval_spark.ops.ir_direct import (
-        SQL_PROX_TOPK,
-        q_prox_topk,
-    )
+    from information_retrieval_spark.ops.engine_entry import q_prox_index
+    from information_retrieval_spark.ops.ir_direct import SQL_PROX_TOPK
 
     got = {
         (r.query_id, r.rank, r.doc_id, r.n_win)
-        for r in q_prox_topk(spark, SF).collect()
+        for r in q_prox_index(spark, SF).collect()
     }
     con = duckdb.connect()
     con.execute(
@@ -174,11 +156,11 @@ def test_prox_direct_matches_duckdb(spark):
 
 
 def test_prox_direct_matches_bruteforce(spark, docs_texts):
+    from information_retrieval_spark.ops.engine_entry import q_prox_index
     from information_retrieval_spark.ops.ir_direct import (
         PROX_SET,
         PROX_WINDOW,
         TOP_K,
-        q_prox_topk,
     )
 
     streams = {
@@ -189,7 +171,7 @@ def test_prox_direct_matches_bruteforce(spark, docs_texts):
         ]
         for d, t in docs_texts.items()
     }
-    rows = q_prox_topk(spark, SF).collect()
+    rows = q_prox_index(spark, SF).collect()
     by_q = {}
     for r in rows:
         by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.n_win))
@@ -201,15 +183,6 @@ def test_prox_direct_matches_bruteforce(spark, docs_texts):
         want = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_K]
         got = [(d, n) for _, d, n in sorted(by_q.get(qid, []))]
         assert got == want, f"prox query {text!r}"
-
-
-def test_prox_index_matches_direct(spark):
-    from information_retrieval_spark.ops.engine_entry import q_prox_index
-    from information_retrieval_spark.ops.ir_direct import q_prox_topk
-
-    direct = {tuple(r) for r in q_prox_topk(spark, SF).collect()}
-    packed = {tuple(r) for r in q_prox_index(spark, SF).collect()}
-    assert direct == packed
 
 
 def test_phrase_refuses_char_offset_index(spark, tmp_path):

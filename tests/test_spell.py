@@ -89,9 +89,11 @@ def test_distributed_correction_matches_driver(spark, index_dir):
         assert got.get(w, w) == correct_word(d, w), w
 
 
-def test_engine_distributed_spell_rank_identity(spark, index_dir):
-    """Both engines with distributed_spell=True answer misspelled queries
-    identically to the driver-dict default."""
+def test_spell_over_cap_falls_back_to_distributed(spark, index_dir, monkeypatch):
+    """When the vocabulary exceeds MAX_SPELL_VOCAB_COLLECT, BOTH engines
+    must answer spelled queries identically WITHOUT collecting the vocab —
+    the driver-dict path auto-routes to the distributed bigram join."""
+    from information_retrieval_spark.query import spell as spell_mod
     from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
     from information_retrieval_spark.query.wand import WandEngine
 
@@ -108,30 +110,6 @@ def test_engine_distributed_spell_rank_identity(spark, index_dir):
 
     want = res(SearchEngine(spark, index_dir))
     assert want, "misspelled queries should still match after correction"
-    assert res(SearchEngine(spark, index_dir, distributed_spell=True)) == want
-    assert res(WandEngine(spark, index_dir, distributed_spell=True)) == want
-
-
-def test_spell_over_cap_falls_back_to_distributed(spark, index_dir, monkeypatch):
-    """When the vocabulary exceeds MAX_SPELL_VOCAB_COLLECT, BOTH engines
-    must answer spelled queries identically WITHOUT collecting the vocab —
-    the driver-dict path auto-routes to the distributed bigram join."""
-    from information_retrieval_spark.query import spell as spell_mod
-    from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
-
-    specs = [
-        QuerySpec(1, "tokeniezr steram", "okapi25", 10, match_mode="exact"),
-    ]
-
-    def res(engine):
-        return sorted(
-            (r.query_id, r.rank, r.doc_id, round(r.score, 9))
-            for r in engine.search(specs).collect()
-        )
-
-    want = res(SearchEngine(spark, index_dir))
-    assert want
 
     monkeypatch.setattr(spell_mod, "MAX_SPELL_VOCAB_COLLECT", 1)
     se = SearchEngine(spark, index_dir)
@@ -139,5 +117,5 @@ def test_spell_over_cap_falls_back_to_distributed(spark, index_dir, monkeypatch)
     assert res(se) == want
     assert res(we) == want
     # the driver dict was never built: the cap forced the distributed path
-    assert se._bigram_dict is None and se._vocab_over_cap
-    assert we._bigram_dict is None and we._vocab_over_cap
+    assert se.snapshot._bigram_dict is None and se.snapshot._vocab_over_cap
+    assert we.snapshot._bigram_dict is None and we.snapshot._vocab_over_cap

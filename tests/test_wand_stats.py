@@ -88,7 +88,7 @@ def _recompute(spark, idx, eng, spec):
         )
 
     cands, df = set(), {}
-    for t in dict.fromkeys(eng._tokenize(spec.text)):
+    for t in dict.fromkeys(eng.snapshot.query_terms([spec])[0]):
         if not any(ok(doc) for doc in post.get(t, ())):
             continue  # has_exact gate (exact mode: no match at all)
         expand = (
@@ -100,7 +100,7 @@ def _recompute(spark, idx, eng, spec):
         cands |= docs
     n = len(cands)
     avgdl = (
-        {s: sum(dl[doc].get(s, 0) for doc in cands) / n for s in eng.sections}
+        {s: sum(dl[doc].get(s, 0) for doc in cands) / n for s in eng.snapshot.sections}
         if n else {}
     )
     return {"n_cand": n, "avgdl": avgdl, "df": df}
