@@ -497,11 +497,12 @@ def read_packed(
 ) -> DataFrame | None:
     """The packed block-max table with its LSM ``segment`` column: directory
     list order IS segment order (0 = the oldest/base segment). Each segment
-    keeps its own sorted, non-overlapping block runs; WAND merges segment
-    cursors per (term, section) at query time (query/wand.py). ``seg_seq``
-    carries each segment's sequence number for seq-scoped tombstones (note
-    position order ≠ seq order after a tiered compact's splice — the merged
-    segment is newer than unmerged tail segments)."""
+    keeps its own sorted, non-overlapping block runs; the block scorer
+    takes every segment's blocks into a (term, section) list at query time
+    (query/wand.py). ``seg_seq`` carries each segment's sequence number
+    for seq-scoped tombstones (note position order ≠ seq order after a
+    tiered compact's splice — the merged segment is newer than unmerged
+    tail segments)."""
     dirs = table_dirs(index_dir, "packed", version)
     if not dirs:
         return None

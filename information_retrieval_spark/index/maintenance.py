@@ -12,8 +12,8 @@ on top of the Iceberg-style snapshot catalog (index/catalog.py):
   `catalog.read_term_df`/`read_vocab`); only the one-row stats table is
   rewritten. Cost ∝ delta, NOT index or vocabulary size — the round-1
   design repacked the whole index per add, which at 10^12 files is a
-  full index rewrite per delta. WAND merges
-  segment cursors at query time (query/wand.py `_SegmentedList`).
+  full index rewrite per delta. WandEngine's block scorer reads every
+  segment's blocks at query time (query/wand.py `_Bucket`).
 * **remove_documents(doc_ids)** — logical delete: commit a delta dir to
   the ``deleted_docs`` table (delete-vector pattern; Iceberg's
   equality-delete equivalent), consulted at query time. Tombstones are
@@ -115,9 +115,9 @@ class IndexMaintenance:
         """``auto_compact_segments``: when set, an add whose commit leaves
         MORE than this many LSM segments triggers ``compact()`` — the
         Lucene-style amortization that bounds per-query segment fan-in
-        (each segment adds one cursor per (term, section) to WAND) while
-        keeping the common-case add delta-priced. None (default) leaves
-        compaction fully explicit.
+        (each segment adds one block run per (term, section) to a query)
+        while keeping the common-case add delta-priced. None (default)
+        leaves compaction fully explicit.
 
         ``auto_compact_mode``: ``"full"`` (default) merges ALL segments —
         a whole-index rewrite, fine at this scale, wrong economics at

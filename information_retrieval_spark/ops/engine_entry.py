@@ -281,9 +281,9 @@ def q_wand_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTERED ranked search via block-max WAND: BM25 over the packed
     index with per-query must/must_not constraints
     (QuerySpec.filter_terms / exclude_terms) — must equal the declarative
-    filtered plan (oracle: SQL_BM25_FILTERED). The filter doc sets ride
-    the bucket-aligned meta channel; the WAND cursor machine skips
-    disallowed docs without decoding their postings blocks."""
+    filtered plan (oracle: SQL_BM25_FILTERED). The filter terms ride the
+    per-batch shard; each bucket masks the disallowed docs out of the
+    postings it decodes."""
     from information_retrieval_spark.ops.ir_direct import BM25_FILTER_SET
     idx = ensure_documents_index(spark, sf_dir)
     eng = get_wand_engine(spark, idx)

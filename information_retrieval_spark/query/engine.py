@@ -65,6 +65,18 @@ class QuerySpec:
     exclude_terms: tuple[str, ...] = ()
 
 
+def batch_match_mode(queries: list[QuerySpec]) -> str | None:
+    """The one match mode a batch is answered in (None for an empty batch).
+    A batch mixing modes raises: split it by ``match_mode``."""
+    modes = {q.match_mode for q in queries}
+    if len(modes) > 1:
+        raise ValueError(
+            f"mixed match modes {sorted(modes)} in one batch: split the"
+            " batch by match_mode"
+        )
+    return modes.pop() if modes else None
+
+
 class SearchEngine:
     """Reads the index tables written by ``IndexBuilder`` and answers
     batches of ranked-retrieval queries."""
@@ -425,17 +437,18 @@ class SearchEngine:
 
     def search(self, queries: list[QuerySpec]) -> DataFrame:
         """Answer a batch of queries → (query_id, rank, doc_id, score)."""
+        mode = batch_match_mode(queries)
         okapi = [q for q in queries if q.method == "okapi25"]
         tfidf = [q for q in queries if q.method != "okapi25"]
         outs = []
         if okapi:
-            outs.append(self._search_okapi(okapi))
+            outs.append(self._search_okapi(okapi, mode))
         for doc_cos, grp in (
             (False, [q for q in tfidf if q.method == "ltn-lnn"]),
             (True, [q for q in tfidf if q.method == "ltc-lnc"]),
         ):
             if grp:
-                outs.append(self._search_tfidf(grp, doc_cos))
+                outs.append(self._search_tfidf(grp, doc_cos, mode))
         if not outs:
             return self.spark.createDataFrame(
                 [], "query_id long, rank int, doc_id long, score double"
@@ -458,7 +471,9 @@ class SearchEngine:
             rows.extend((q.query_id, t, m) for t, m in seen.items())
         return rows, per_query
 
-    def _search_okapi(self, queries: list[QuerySpec]) -> DataFrame:
+    def _search_okapi(
+        self, queries: list[QuerySpec], mode: str
+    ) -> DataFrame:
         rows, _ = self._qterm_rows(queries)
         if not rows:
             return self.spark.createDataFrame(
@@ -467,7 +482,6 @@ class SearchEngine:
         qterms = self.spark.createDataFrame(
             rows, "query_id long, qterm string, mult int"
         )
-        mode = queries[0].match_mode
         matched = self._matched(
             qterms, mode, self._cat_df(queries),
             qterm_literals=[t for _, t, _ in rows],
@@ -480,7 +494,9 @@ class SearchEngine:
         )
         return self._fuse_rank(contribs, weights_df, ks_df)
 
-    def _search_tfidf(self, queries: list[QuerySpec], doc_cos: bool) -> DataFrame:
+    def _search_tfidf(
+        self, queries: list[QuerySpec], doc_cos: bool, mode: str
+    ) -> DataFrame:
         rows, per_query_tokens = self._qterm_rows(queries)
         if not rows:
             return self.spark.createDataFrame(
@@ -514,7 +530,6 @@ class SearchEngine:
         qterms = self.spark.createDataFrame(
             qrows, "query_id long, qterm string, q_w double, df_global double"
         ).withColumn("mult", F.lit(1))
-        mode = queries[0].match_mode
         matched = self._matched(
             qterms, mode, self._cat_df(queries),
             qterm_literals=[t for _, t, *_ in qrows],

@@ -1,5 +1,5 @@
-"""Block-max WAND top-k over the packed compressed index (north_star
-query path).
+"""Block-max top-k (``WandEngine``) over the packed compressed index
+(north_star query path).
 
 Physical shape (SURVEY.md §3.1 redesign). A batch reads two frames, both
 keyed and partitioned by the doc-hash ``bucket``
@@ -22,31 +22,42 @@ frames, so neither adds an exchange:
    avgdl per section, live df per query term). A doc lives in exactly one
    bucket, so the partials add up across buckets; the driver sums them
    (`_Bucket.stats` explains the prefix-mode has_exact gate);
-2. **scoring** — classic WAND with block-granular skipping per bucket, one
-   exact top-k list per (bucket, query), merged into the global top-k on
-   the driver (SURVEY.md §7 M5).
+2. **scoring** — an exact block-at-a-time top-k per bucket, one list per
+   (bucket, query), merged into the global top-k on the driver (SURVEY.md
+   §7 M5).
 
 A warm batch therefore runs 4 Spark jobs: the shard's exchange, its cache,
 and one per pass.
 
-Correctness stance: WAND is an EXACT top-k algorithm — results are
-rank-identical to the exhaustive scorer (`query/engine.py`), which tests
-assert; skipping only prunes work. Because a doc's bucket is a pure
-function of doc_id, every posting of a doc lands in one bucket: bucket-local
-scoring is complete, and per-bucket top-k ∪ global re-rank is exact.
+Correctness stance: the scorer is EXACT — results are rank-identical to
+the exhaustive scorer (`query/engine.py`), which tests assert; the block
+bounds only prune work. Because a doc's bucket is a pure function of
+doc_id, every posting of a doc lands in one bucket: bucket-local scoring is
+complete, and per-bucket top-k ∪ global re-rank is exact.
 
-Skipping levels:
-* pivot selection uses per-(term,section) global upper bounds
-  (max over blocks of ub(max_tf, min_dl)) — classic WAND;
-* advancing a cursor to the pivot skips whole blocks on (last_doc < pivot)
-  WITHOUT decoding them — the block-max/delta-gap layout's payoff;
-* per-query idf and avgdl enter the bounds at query time (the blocks store
-  tf-side components only — SURVEY.md §7 hard-part b).
+Block-at-a-time scoring (`_Bucket.top_k`), per bucket and query:
+* every block of the query's (qterm, section) lists — each prefix
+  expansion term, each LSM segment — gets the bound
+  weight · tf_norm(max_tf, min_dl, avgdl); per-query idf and avgdl enter
+  at query time (the blocks store tf-side components only — SURVEY.md §7
+  hard-part b);
+* the block boundaries cut the doc-id space into intervals; an interval's
+  bound is the sum of the bounds of the blocks covering it (one cumulative
+  sum). tf_norm is concave with tf_norm(0) = 0, so this sum also bounds a
+  prefix-merged tf; the metadata is the packed original's, so it stays
+  conservative under tombstones, and filters only remove docs;
+* intervals are visited in descending bound, in rounds that double in
+  size, and only the blocks covering a round's intervals are decoded, in
+  one batched varint pass; tombstones and filters are numpy masks;
+* a doc's score is summed with ``np.unique``/``np.bincount`` (merged tf
+  per (doc, list), then the lists' contributions); the scan stops when the
+  next interval's bound is below θ − 1e-9, θ being the rounded k-th score
+  under the final ordering (-round(score, 9), doc_id); the margin covers
+  the 5e-10 rounding half-step.
 """
 
 from __future__ import annotations
 
-import heapq
 from dataclasses import dataclass
 
 import numpy as np
@@ -54,14 +65,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.codec import decode_doc_gaps, varint_decode
-from information_retrieval_spark.query.engine import K1, B, QuerySpec
+from information_retrieval_spark.query.engine import (
+    K1, B, QuerySpec, batch_match_mode,
+)
 from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 #: packed columns a bucket pass reads
 _SHARD_COLS = (
-    "bucket", "term", "section", "segment", "seg_seq", "block_id",
-    "first_doc", "last_doc", "docs_bin", "tfs_bin", "dls_bin", "max_tf",
-    "min_dl",
+    "bucket", "term", "section", "seg_seq", "n", "first_doc", "last_doc",
+    "docs_bin", "tfs_bin", "dls_bin", "max_tf", "min_dl",
 )
 
 _STATS_SCHEMA = T.StructType(
@@ -84,341 +96,20 @@ _TOPK_SCHEMA = T.StructType(
 
 _RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
-
-def _tf_norm(tf: float, dl: float, avgdl: float) -> float:
-    return tf * (K1 + 1) / (tf + K1 * (1 - B + B * dl / avgdl))
+_NO_ROWS = np.empty(0, dtype=np.intp)
 
 
-class _List:
-    """Cursor over one (term, section) posting run within a bucket.
-
-    ``dead`` (optional uint64 array) carries the doc_ids that seq-scoped
-    tombstones hide in THIS segment while the doc stays live in a newer
-    one (an updated doc awaiting compaction): those postings are filtered
-    out at decode time, invisibly to the WAND machinery above. Block
-    metadata (first/last doc, max bounds) stays the packed original —
-    conservative, so exactness is preserved — which means ``cur_doc`` on
-    an undecoded block is OPTIMISTIC (it may name a filtered doc);
-    callers that are about to trust it call ``materialize()`` first.
-    Fully-hidden docs (dead in every segment of the bucket) never reach
-    this path — they ride `_wand_query`'s zero-decode ``deleted`` set."""
-
-    __slots__ = ("blocks", "bi", "off", "docs", "tfs", "dls", "weight",
-                 "avgdl", "ub", "dead")
-
-    def __init__(self, blocks: list, weight: float, avgdl: float,
-                 dead: np.ndarray | None = None):
-        # blocks: list of (first_doc, last_doc, docs_bin, tfs_bin, dls_bin,
-        #                  max_tf, min_dl) sorted by block_id
-        self.blocks = blocks
-        self.bi = 0
-        self.off = 0
-        self.docs = None  # decoded lazily
-        self.tfs = None
-        self.dls = None
-        self.weight = weight  # mult * idf * section_weight
-        self.avgdl = avgdl
-        self.dead = dead if dead is not None and len(dead) else None
-        self.ub = weight * max(
-            _tf_norm(b[5], b[6], avgdl) for b in blocks
-        )
-
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    def cur_doc(self) -> int:
-        if self.docs is None:
-            return self.blocks[self.bi][0]  # first_doc — no decode;
-            # optimistic under dead-filtering (see class docstring)
-        return int(self.docs[self.off])
-
-    def materialize(self) -> None:
-        """Decode the current position so ``cur_doc`` is a real, live
-        posting (or the cursor is exhausted). No-op when already decoded;
-        in the common no-dead case this is the same decode that
-        contribution()/advance() would do anyway."""
-        if self.docs is None and not self.exhausted():
-            self._decode()
-
-    def _decode(self) -> None:
-        """Decode the current block, dropping dead postings; blocks that
-        filter to empty are skipped entirely (cursor may exhaust)."""
-        while self.bi < len(self.blocks):
-            b = self.blocks[self.bi]
-            docs = decode_doc_gaps(b[2])
-            tfs = varint_decode(b[3])
-            dls = varint_decode(b[4])
-            if self.dead is not None:
-                mask = ~np.isin(docs, self.dead)
-                if not mask.all():
-                    docs, tfs, dls = docs[mask], tfs[mask], dls[mask]
-            if len(docs):
-                self.docs, self.tfs, self.dls = docs, tfs, dls
-                return
-            self.bi += 1
-            self.off = 0
-        self.docs = self.tfs = self.dls = None
-
-    def contribution(self) -> float:
-        if self.docs is None:
-            self._decode()
-        tf = float(self.tfs[self.off])
-        dl = float(self.dls[self.off])
-        return self.weight * _tf_norm(tf, dl, self.avgdl)
-
-    def cur_tf_dl(self) -> tuple[float, float]:
-        if self.docs is None:
-            self._decode()
-        return float(self.tfs[self.off]), float(self.dls[self.off])
-
-    def advance(self) -> None:
-        """Next posting."""
-        if self.docs is None:
-            self._decode()
-            if self.docs is None:
-                return  # dead-filtering exhausted the remaining blocks
-        self.off += 1
-        if self.off >= len(self.docs):
-            self.bi += 1
-            self.off = 0
-            self.docs = self.tfs = self.dls = None
-
-    def seek(self, target: int) -> None:
-        """Advance to first doc ≥ target, skipping blocks undecoded."""
-        while not self.exhausted() and self.blocks[self.bi][1] < target:
-            self.bi += 1
-            self.off = 0
-            self.docs = self.tfs = self.dls = None
-        if self.exhausted():
-            return
-        if self.docs is None:
-            if self.blocks[self.bi][0] >= target:
-                return  # first_doc already ≥ target; stay undecoded
-            self._decode()
-            if self.docs is None:
-                return  # dead-filtering exhausted the remaining blocks
-        j = int(np.searchsorted(self.docs[self.off :], target)) + self.off
-        if j >= len(self.docs):
-            self.bi += 1
-            self.off = 0
-            self.docs = self.tfs = self.dls = None
-            self.seek(target)
-        else:
-            self.off = j
-
-
-class _SegmentedList:
-    """Cursor over the CONCATENATION of one (term, section)'s posting runs
-    across LSM segments (index/maintenance.py: each incremental add commits
-    a new packed segment instead of repacking). Segment doc-id sets are
-    DISJOINT at the LIVE level: fresh adds use fresh doc_ids, and an
-    updated doc's old-segment postings are dead (seq-scoped tombstones)
-    and filtered out inside each run's `_List` — so at any point exactly
-    one run holds the minimum doc — contribution/advance delegate to it,
-    and the upper bound is the max of the per-segment bounds (tight,
-    unlike a sum: no doc can combine tf across segments)."""
-
-    __slots__ = ("runs", "weight", "avgdl", "ub", "blocks")
-
-    def __init__(self, runs: list[_List], weight: float, avgdl: float):
-        self.runs = runs
-        self.weight = weight
-        self.avgdl = avgdl
-        # flattened view for _MergedList's Σ max_tf / min min_dl bound
-        self.blocks = [b for r in runs for b in r.blocks]
-        self.ub = max(r.ub for r in runs)
-
-    def exhausted(self) -> bool:
-        return all(r.exhausted() for r in self.runs)
-
-    def _min_run(self) -> _List:
-        best = None
-        for r in self.runs:
-            if not r.exhausted() and (
-                best is None or r.cur_doc() < best.cur_doc()
-            ):
-                best = r
-        return best
-
-    def cur_doc(self) -> int:
-        return self._min_run().cur_doc()
-
-    def contribution(self) -> float:
-        return self._min_run().contribution()
-
-    def cur_tf_dl(self) -> tuple[float, float]:
-        return self._min_run().cur_tf_dl()
-
-    def advance(self) -> None:
-        self._min_run().advance()
-
-    def seek(self, target: int) -> None:
-        for r in self.runs:
-            if not r.exhausted():
-                r.seek(target)
-
-    def materialize(self) -> None:
-        """Decode-verify the minimum position: dead-filtering may reveal
-        a run's optimistic first_doc was hidden, shifting the min —
-        loop until the min run(s) are decoded and stable."""
-        while True:
-            doc = None
-            for r in self.runs:
-                if not r.exhausted():
-                    c = r.cur_doc()
-                    if doc is None or c < doc:
-                        doc = c
-            if doc is None:
-                return
-            moved = False
-            for r in self.runs:
-                if not r.exhausted() and r.cur_doc() == doc:
-                    r.materialize()
-                    if r.exhausted() or r.cur_doc() != doc:
-                        moved = True
-            if not moved:
-                return
-
-
-class _MergedList:
-    """Cursor over the UNION of several posting runs — the prefix-expansion
-    semantics (`trie/phase1.py:17-36` via `engine.py::_matched`): a query
-    term in prefix mode matches every vocabulary term it prefixes, and the
-    per-doc tf is the SUM over the expansion. tf_norm is applied to the
-    merged tf (not per-run), exactly like the exhaustive engine's
-    ``groupBy(...).sum(tf)`` before scoring.
-
-    ub uses tf_norm(Σ run-max tf, min run-min dl): tf_norm is monotone ↑ in
-    tf and ↓ in dl, so this bounds any doc's merged contribution.
-    """
-
-    __slots__ = ("runs", "weight", "avgdl", "ub")
-
-    def __init__(self, runs: list[_List], weight: float, avgdl: float):
-        self.runs = runs
-        self.weight = weight
-        self.avgdl = avgdl
-        max_tf_sum = sum(max(b[5] for b in r.blocks) for r in runs)
-        min_dl = min(min(b[6] for b in r.blocks) for r in runs)
-        self.ub = weight * _tf_norm(max_tf_sum, min_dl, avgdl)
-
-    def exhausted(self) -> bool:
-        return all(r.exhausted() for r in self.runs)
-
-    def cur_doc(self) -> int:
-        return min(r.cur_doc() for r in self.runs if not r.exhausted())
-
-    def contribution(self) -> float:
-        d = self.cur_doc()
-        tf = 0.0
-        dl = 0.0
-        for r in self.runs:
-            if not r.exhausted() and r.cur_doc() == d:
-                t, l = r.cur_tf_dl()
-                tf += t
-                dl = l  # dl is per (doc, section): identical across runs
-        return self.weight * _tf_norm(tf, dl, self.avgdl)
-
-    def advance(self) -> None:
-        d = self.cur_doc()
-        for r in self.runs:
-            if not r.exhausted() and r.cur_doc() == d:
-                r.advance()
-
-    def seek(self, target: int) -> None:
-        for r in self.runs:
-            if not r.exhausted():
-                r.seek(target)
-
-    def materialize(self) -> None:
-        """Same min-stabilizing loop as `_SegmentedList.materialize` (the
-        runs here are `_List`/`_SegmentedList`, both materializable)."""
-        while True:
-            doc = None
-            for r in self.runs:
-                if not r.exhausted():
-                    c = r.cur_doc()
-                    if doc is None or c < doc:
-                        doc = c
-            if doc is None:
-                return
-            moved = False
-            for r in self.runs:
-                if not r.exhausted() and r.cur_doc() == doc:
-                    r.materialize()
-                    if r.exhausted() or r.cur_doc() != doc:
-                        moved = True
-            if not moved:
-                return
-
-
-def _wand_query(
-    lists: list, k: int, deleted: frozenset = frozenset(), allowed=None
-) -> list[tuple[int, float]]:
-    """Exact top-k (doc_id, score) under the FINAL output ordering
-    (-round(score, 9), doc_id); ``deleted`` docs are advanced past without
-    entering the heap. ``allowed`` (optional doc_id → bool) implements the
-    category filter: failing docs are treated exactly like deleted ones.
-
-    The heap is keyed by (round(score, 9), -doc_id) — the exact downstream
-    ordering — so eviction can never discard a doc that out-ranks a kept
-    one at a rounding-boundary near-tie (raw-score eviction had a
-    1e-12..5e-10 collision band). The pivot threshold θ is therefore the
-    ROUNDED k-th score; pruning keeps anything within 1e-9 of it, which
-    covers the 5e-10 rounding half-step with margin."""
-    heap: list[tuple[float, int, float]] = []  # (round9, -doc_id, raw)
-    lists = [L for L in lists if not L.exhausted()]
-    while True:
-        lists = [L for L in lists if not L.exhausted()]
-        if not lists:
-            break
-        lists.sort(key=lambda L: L.cur_doc())
-        theta = heap[0][0] if len(heap) >= k else float("-inf")
-        acc = 0.0
-        pivot_idx = None
-        for i, L in enumerate(lists):
-            acc += L.ub
-            # a doc with Σub just below θ can still round equal to the
-            # k-th score and win its doc_id tie — don't skip it
-            if acc >= theta - 1e-9:
-                pivot_idx = i
-                break
-        if pivot_idx is None:
-            break  # Σ ub ≪ θ: no remaining doc can enter the top-k
-        pivot = lists[pivot_idx].cur_doc()
-        if lists[0].cur_doc() == pivot:
-            # decode-verify every claimant: under seq-scoped tombstones an
-            # undecoded block's first_doc can be a hidden posting of an
-            # updated doc — materialize() filters it and moves the cursor
-            # forward. Cheap: claimants decode for contribution()/advance()
-            # anyway; cursors only move forward, so the loop terminates.
-            any_at_pivot = False
-            for L in lists:
-                if not L.exhausted() and L.cur_doc() == pivot:
-                    L.materialize()
-                    if not L.exhausted() and L.cur_doc() == pivot:
-                        any_at_pivot = True
-            if not any_at_pivot:
-                continue  # the pivot doc was fully dead here; re-pick
-            live = pivot not in deleted and (allowed is None or allowed(pivot))
-            score = 0.0
-            if live:
-                for L in lists:
-                    if not L.exhausted() and L.cur_doc() == pivot:
-                        score += L.contribution()
-            for L in lists:
-                if not L.exhausted() and L.cur_doc() == pivot:
-                    L.advance()
-            if live:
-                item = (round(score, 9), -pivot, score)
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item[:2] > heap[0][:2]:
-                    heapq.heapreplace(heap, item)
-        else:
-            # advance the laggard(s) to the pivot, skipping blocks
-            lists[0].seek(pivot)
-    return [(-nd, raw) for _, nd, raw in heap]
+def _round9(x: np.ndarray) -> np.ndarray:
+    """``round(v, 9)`` of each score, equal to Python's. Scaling by 1e9,
+    ``rint`` and unscaling agree with it unless the scaled value's own
+    rounding error may cross a half step (or the scaled value is past
+    2^52); those few take ``round``."""
+    y = x * 1e9
+    out = np.rint(y) / 1e9
+    near = np.abs(np.abs(y - np.floor(y)) - 0.5) <= 2 * np.spacing(np.abs(y))
+    odd = near | (np.abs(y) >= 2.0**52)
+    out[odd] = [round(v, 9) for v in x[odd].tolist()]
+    return out
 
 
 @dataclass(frozen=True)
@@ -447,23 +138,19 @@ class _Bucket:
 
     def __init__(self, shard: pd.DataFrame, side: pd.DataFrame,
                  sections: list[str]):
-        # (term, section) → {segment → block run}: each LSM segment is its
-        # own sorted, non-overlapping run
-        self.by_ts: dict[tuple[str, str], dict[int, list]] = {}
-        self.seq_of_seg: dict[int, int] = {}
-        shard = shard.sort_values(["term", "section", "segment", "block_id"])
-        for r in shard.itertuples(index=False):
-            self.seq_of_seg[int(r.segment)] = int(r.seg_seq)
-            self.by_ts.setdefault((r.term, r.section), {}).setdefault(
-                int(r.segment), []
-            ).append(
-                (r.first_doc, r.last_doc, r.docs_bin, r.tfs_bin,
-                 r.dls_bin, r.max_tf, r.min_dl)
-            )
-        # term → its (segment, block run)s over all sections
-        self._runs: dict[str, list[tuple[int, list]]] = {}
-        for (t, _), segs in self.by_ts.items():
-            self._runs.setdefault(t, []).extend(segs.items())
+        # the shard's blocks as columns, every LSM segment's runs side by
+        # side; (term, section) and term map to their block rows
+        self.rows_of = shard.groupby(["term", "section"]).indices
+        self.rows_of_term = shard.groupby("term").indices
+        self.n = shard["n"].to_numpy(np.int64)
+        self.first_doc = shard["first_doc"].to_numpy(np.int64)
+        self.last_doc = shard["last_doc"].to_numpy(np.int64)
+        self.max_tf = shard["max_tf"].to_numpy(np.float64)
+        self.min_dl = shard["min_dl"].to_numpy(np.float64)
+        self.seq = shard["seg_seq"].to_numpy(np.int64)
+        self.docs_bin = shard["docs_bin"].to_numpy()
+        self.tfs_bin = shard["tfs_bin"].to_numpy()
+        self.dls_bin = shard["dls_bin"].to_numpy()
         self._docs: dict[str, np.ndarray] = {}
         kind = side["kind"].to_numpy()
         docs = side["doc_id"].to_numpy(np.int64)
@@ -510,29 +197,28 @@ class _Bucket:
             out[i[m], j] = vals[m]
         return out
 
+    def doc_ids(self, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The doc_ids of blocks ``rows``, decoded in one batched varint
+        pass, and each one's index in ``rows``."""
+        n = self.n[rows]
+        docs = decode_doc_gaps(b"".join(self.docs_bin[rows]))
+        # the running sum crosses block boundaries, but each block's gaps
+        # restart from its first doc: subtract what the earlier blocks added
+        carry = np.zeros(len(n), dtype=np.uint64)
+        carry[1:] = docs[np.cumsum(n)[:-1] - 1]
+        docs -= np.repeat(carry, n)
+        return docs.view(np.int64), np.repeat(np.arange(len(n)), n)
+
     def docs_of(self, term: str) -> np.ndarray:
         """Sorted live doc_ids holding ``term`` in any section (doc_ids
         decoded only; memoized per term)."""
         got = self._docs.get(term)
         if got is None:
-            parts = [np.empty(0, dtype=np.int64)]
-            for seg, blocks in self._runs.get(term, ()):
-                d = np.concatenate(
-                    [decode_doc_gaps(b[2]) for b in blocks]
-                ).astype(np.int64)
-                parts.append(d[~self.hidden(d, self.seq_of_seg[seg])])
-            got = self._docs[term] = np.unique(np.concatenate(parts))
+            rows = self.rows_of_term.get(term, _NO_ROWS)
+            docs, at = self.doc_ids(rows)
+            live = ~self.hidden(docs, self.seq[rows][at])
+            got = self._docs[term] = np.unique(docs[live])
         return got
-
-    def admits(self, plan: _Plan):
-        """doc_id → passes the query's filters (`_wand_query`'s
-        ``allowed``); pivot docs are live already."""
-        sets = [(set(self.docs_of(t).tolist()), True) for t in plan.must]
-        sets += [(set(self.docs_of(t).tolist()), False) for t in plan.exclude]
-        if plan.want is not None:
-            cat = self.cat_docs[self.cat_vals == plan.want]
-            sets.append((set(cat.tolist()), True))
-        return lambda doc: all((doc in s) == need for s, need in sets)
 
     def keep(self, plan: _Plan, docs: np.ndarray) -> np.ndarray:
         """Which of ``docs`` pass the query's filters."""
@@ -558,7 +244,7 @@ class _Bucket:
         only the groups whose mask hits a surviving qterm (n_cand, avgdl)
         and, per surviving qterm, the groups holding its bit (df)."""
         out: list[tuple] = []
-        if not self.by_ts:
+        if not self.rows_of:
             return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
         found = []  # (qid, candidates, qterm membership, exact bits)
         for qid, plan in plans.items():
@@ -604,68 +290,99 @@ class _Bucket:
     def top_k(
         self, qmeta: dict[int, dict], plans: dict[int, _Plan]
     ) -> pd.DataFrame:
-        """Exact per-query top-k of this bucket by block-max WAND."""
-        out_q, out_d, out_s = [], [], []
-        if not self.by_ts:
-            return pd.DataFrame(
-                {"query_id": out_q, "doc_id": out_d, "score": out_s}
-            )
-        # tombstones split two ways:
-        # * upto >= every segment seq in this bucket → the doc is dead
-        #   in ALL its postings here: zero-decode skip at pivot level
-        #   (the classic delete path, `deleted` in _wand_query);
-        # * upto below the newest seq (an updated doc whose re-added
-        #   rows live in a newer segment) → per-segment dead arrays,
-        #   filtered out inside `_List._decode`. Mutually exclusive by
-        #   construction — advance() past a pivot-level-deleted doc
-        #   must still SEE its posting, or it would skip a live one.
-        max_seq = max(self.seq_of_seg.values())
-        dead_all = frozenset(self.del_docs[self.del_upto >= max_seq].tolist())
-        partial = self.del_upto < max_seq
-        dead_of_seq: dict[int, np.ndarray | None] = {}
-        for s in set(self.seq_of_seg.values()):
-            ids = self.del_docs[partial & (self.del_upto >= s)]
-            dead_of_seq[s] = ids.view(np.uint64) if len(ids) else None
-
-        def cursor(key: tuple[str, str], weight: float, avgdl: float):
-            segs = [
-                _List(blocks, weight, avgdl,
-                      dead=dead_of_seq[self.seq_of_seg[seg]])
-                for seg, blocks in sorted(self.by_ts[key].items())
-            ]
-            return segs[0] if len(segs) == 1 else _SegmentedList(
-                segs, weight, avgdl
-            )
-
+        """Per query, this bucket's exact top-k (every match for k < 0,
+        none for k = 0), scored a block at a time (module docstring)."""
+        out = [(_NO_ROWS, np.empty(0, np.int64), np.empty(0))]
         for qid, meta in qmeta.items():
-            plan = plans[qid]
-            lists = []
-            for (qterm, s), m in meta["terms"].items():
-                runs = [
-                    cursor((t, s), m["weight"], m["avgdl"])
-                    for t in plan.qterms[qterm]
-                    if (t, s) in self.by_ts
-                ]
-                if len(runs) == 1:
-                    lists.append(runs[0])
-                elif runs:
-                    lists.append(_MergedList(runs, m["weight"], m["avgdl"]))
-            if not lists:
-                continue
-            # filtered docs are skipped like deleted ones
-            allowed = self.admits(plan) if plan.filtered else None
-            k = meta["k"] if meta["k"] > 0 else 1 << 30
-            for doc, score in _wand_query(lists, k, dead_all, allowed):
-                out_q.append(qid)
-                out_d.append(doc)
-                out_s.append(score)
-        return pd.DataFrame(
-            {"query_id": out_q, "doc_id": out_d, "score": out_s}
-        )
+            docs, scores = self._top(meta, plans[qid])
+            out.append((np.full(len(docs), qid), docs, scores))
+        q, d, s = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
+
+    def _top(self, meta: dict, plan: _Plan) -> tuple[np.ndarray, np.ndarray]:
+        k = meta["k"]
+        # the query's blocks, each tagged with its list: one per (qterm,
+        # section), over every expansion term and segment
+        rows, lid, weight, avgdl = [_NO_ROWS], [_NO_ROWS], [], []
+        for (qterm, s), m in meta["terms"].items():
+            for t in plan.qterms[qterm]:
+                got = self.rows_of.get((t, s), _NO_ROWS)
+                rows.append(got)
+                lid.append(np.full(len(got), len(weight)))
+            weight.append(m["weight"])
+            avgdl.append(m["avgdl"])
+        rows, lid = np.concatenate(rows), np.concatenate(lid)
+        top_d, top_s = np.empty(0, np.int64), np.empty(0)
+        if k == 0 or not len(rows):
+            return top_d, top_s
+        weight, avgdl = np.array(weight), np.array(avgdl)
+
+        def bm25(j, tf, dl):
+            """List j's contribution at term frequency tf, length dl."""
+            norm = K1 * (1 - B + B * dl / avgdl[j])
+            return weight[j] * tf * (K1 + 1) / (tf + norm)
+
+        # doc-id intervals between consecutive block edges: an interval's
+        # bound is the sum of the bounds of the blocks covering it
+        ub = bm25(lid, self.max_tf[rows], self.min_dl[rows])
+        lo_doc, hi_doc = self.first_doc[rows], self.last_doc[rows] + 1
+        edges = np.unique(np.concatenate([lo_doc, hi_doc]))
+        lo, hi = np.searchsorted(edges, lo_doc), np.searchsorted(edges, hi_doc)
+        ne = len(edges)
+        bound = np.cumsum(np.bincount(lo, ub, ne) - np.bincount(hi, ub, ne))
+        order = np.argsort(-bound[:-1], kind="stable")
+        fresh = np.ones(len(rows), dtype=bool)  # blocks not decoded yet
+        # decoded postings of intervals not visited yet: (interval,
+        # doc_id, list, tf, dl)
+        pool = (_NO_ROWS,) * 5
+        theta, done, size = -np.inf, 0, len(order) if k < 0 else 1
+        while done < len(order) and bound[order[done]] >= theta - 1e-9:
+            visit = np.zeros(ne, dtype=bool)
+            visit[order[done:done + size]] = True
+            done, size = done + size, 2 * size
+            # decode the blocks covering a visited interval
+            seen = np.concatenate([[0], np.cumsum(visit)])
+            pick = fresh & (seen[hi] > seen[lo])
+            fresh &= ~pick
+            new = self._postings(rows[pick], lid[pick], plan)
+            new = (np.searchsorted(edges, new[0], "right") - 1, *new)
+            pool = tuple(np.concatenate(c) for c in zip(pool, new))
+            now = visit[pool[0]]
+            _, d, j, tf, dl = (c[now] for c in pool)
+            pool = tuple(c[~now] for c in pool)
+            # merged tf per (doc, list), then the lists' sum per doc
+            docs, di = np.unique(d, return_inverse=True)
+            key, first, inv = np.unique(
+                di * len(weight) + j, return_index=True, return_inverse=True
+            )
+            part = bm25(key % len(weight), np.bincount(inv, tf), dl[first])
+            top_d = np.concatenate([top_d, docs])
+            top_s = np.concatenate(
+                [top_s, np.bincount(key // len(weight), part, len(docs))]
+            )
+            if 0 < k <= len(top_s):
+                best = np.lexsort((top_d, -_round9(top_s)))[:k]
+                top_d, top_s = top_d[best], top_s[best]
+                theta = _round9(top_s[-1:])[0]
+        return top_d, top_s
+
+    def _postings(self, rows: np.ndarray, lid: np.ndarray, plan: _Plan):
+        """The live, filter-passing postings of blocks ``rows`` (of lists
+        ``lid``) as (doc_id, list, tf, dl) arrays."""
+        docs, at = self.doc_ids(rows)
+        ok = ~self.hidden(docs, self.seq[rows][at])
+        if plan.filtered:
+            ok &= self.keep(plan, docs)
+        tf = varint_decode(b"".join(self.tfs_bin[rows]))
+        dl = varint_decode(b"".join(self.dls_bin[rows]))
+        return (docs[ok], lid[at][ok], tf[ok].astype(np.float64),
+                dl[ok].astype(np.float64))
 
 
 class WandEngine:
-    """BM25 top-k via block-max WAND over ``<index_dir>/packed``.
+    """Exact BM25 (okapi25) top-k over ``<index_dir>/packed``, scored a
+    block at a time per doc-hash bucket and pruned by the blocks' bounds
+    (module docstring). Rank-identical to ``SearchEngine``.
 
     Concurrency: a ``SparkSession`` is thread-safe, an engine's CACHE
     handoff is not — ``search()`` swaps the previous batch's persisted
@@ -685,9 +402,9 @@ class WandEngine:
         max_prefix_expand: int = 20_000,
     ):
         """``max_prefix_expand`` bounds how many dictionary terms a prefix
-        batch may expand to: WAND collects the expansion to the driver
-        (it becomes the packed scan's literal ``In`` pushdown and the
-        per-query cursor set), which is safe for sane prefixes but would
+        batch may expand to: the engine collects the expansion to the
+        driver (it becomes the packed scan's literal ``In`` pushdown and
+        each query's block lists), which is safe for sane prefixes but would
         be a driver OOM for a 1-char prefix over a billion-term
         dictionary. Over-budget batches raise with guidance instead —
         ``SearchEngine``'s prefix expansion stays fully distributed and
@@ -695,9 +412,10 @@ class WandEngine:
 
         ``version`` pins a catalog snapshot (time travel; None = the
         current one, resolved once, here: query/snapshot.py). The packed
-        table arrives with its LSM ``segment`` column (catalog.read_packed):
+        table arrives with its LSM segment sequence (catalog.read_packed):
         incremental adds commit new segments instead of repacking, and the
-        per-bucket scorer merges segment cursors."""
+        per-bucket scorer takes every segment's blocks into its lists,
+        masking the postings that seq-scoped tombstones hide."""
         self.spark = spark
         self.snapshot = IndexSnapshot(spark, index_dir, version)
         # resolved at open: its schema read is a Spark job that would
@@ -806,7 +524,8 @@ class WandEngine:
         a driver-side merge of the per-bucket top-k lists into the returned
         frame. That is at most ``n_buckets · k`` rows per query for k > 0;
         a k < 0 query ("all results") brings every candidate to the
-        driver."""
+        driver.
+        A batch mixing match modes raises ``ValueError``."""
         # The packed blocks carry BM25-shaped bounds (max_tf, min_dl);
         # tf-idf cosine would need per-block norm metadata the index
         # doesn't store. Refuse loudly rather than silently scoring a
@@ -817,10 +536,10 @@ class WandEngine:
                 f"WandEngine scores okapi25 only (got {bad}); "
                 "use SearchEngine for ltn-lnn / ltc-lnc"
             )
-        modes = {q.match_mode for q in queries}
-        assert len(modes) == 1, "mixed match modes: split the batch"
-        mode = modes.pop()
+        mode = batch_match_mode(queries)
         self.last_stats = {}
+        if not queries:
+            return self._result()
         qtoks: dict[int, dict[str, int]] = {}
         for q, toks in zip(queries, self.snapshot.query_terms(queries)):
             mult: dict[str, int] = {}
@@ -950,8 +669,8 @@ class WandEngine:
         if not qmeta:
             return self._result()
 
-        # --- WAND pass per bucket: same cached frames, no new exchange ----
-        def wand_bucket(
+        # --- scoring pass per bucket: same cached frames, no new exchange -
+        def score_bucket(
             left: pd.DataFrame, right: pd.DataFrame
         ) -> pd.DataFrame:
             return _Bucket(left, right, sections).top_k(qmeta, plans)
@@ -960,7 +679,7 @@ class WandEngine:
         for r in (
             shard.groupby("bucket")
             .cogroup(score_side.groupby("bucket"))
-            .applyInPandas(wand_bucket, _TOPK_SCHEMA)
+            .applyInPandas(score_bucket, _TOPK_SCHEMA)
             .collect()
         ):
             per_query.setdefault(r.query_id, []).append((r.doc_id, r.score))

@@ -12,8 +12,9 @@ varies CORE count at fixed corpus): fixed local[32], corpus grown
     query's posting lists, not the index;
   * BROAD queries (df ∝ corpus — the fixture's content vocabulary is
     drawn uniformly, so every content term's posting list grows with
-    N) pay ∝ their posting volume, sublinearly damped by block-max
-    skipping; this is inherent — at 100 TB one caps broad-query cost
+    N) pay ∝ their posting volume, damped only where the per-block
+    bounds let the scorer stop before decoding a block; this is
+    inherent — at 100 TB one caps broad-query cost
     with the champion-list / impact-ordered variants (ops/ir_direct.py).
 
 Corpora are deterministic (`fixtures.make_row`) and cached as parquet

@@ -2,8 +2,8 @@
 
 Round 5 moved deletes to seq-scoped tombstones applied at READ time
 (`query/wand.py` cogroups the `(doc_id, upto)` vector into each doc-hash
-bucket; dead docs are skipped at pivot level, partially-dead docs are
-filtered per segment run). That makes every remove/update O(delta) on the
+bucket; the block scorer masks the postings each tombstone hides, per
+segment sequence). That makes every remove/update O(delta) on the
 write side — this bench prices the read side: the SAME corpus and query
 batch, with 0 → 1k → 10k → 50k tombstoned docs accumulated (no purge),
 then one `compact()` to purge and re-measure. Appends a table to

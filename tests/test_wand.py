@@ -62,6 +62,25 @@ def test_wand_absent_term_only(wand):
     assert wand.search(spec).count() == 0
 
 
+def test_mixed_match_modes_raise(wand, exhaustive):
+    """A batch is answered in one match mode: a prefix query behind an
+    exact one must not silently get exact answers."""
+    batch = [
+        QuerySpec(904, "tokenizer", "okapi25", 10, spell=False,
+                  match_mode="exact"),
+        QuerySpec(905, "tok", "okapi25", 10, spell=False,
+                  match_mode="prefix"),
+    ]
+    for engine in (wand, exhaustive):
+        with pytest.raises(ValueError, match="mixed match modes"):
+            engine.search(batch)
+
+
+def test_empty_batch(wand, exhaustive):
+    assert wand.search([]).collect() == []
+    assert exhaustive.search([]).collect() == []
+
+
 def test_packed_df_matches_term_df(spark, index_dir):
     """Σ block n per (term, ANY section) distinct-doc count == term_df —
     the no-decode df shortcut WAND's idf relies on (single-section terms)."""
@@ -108,7 +127,7 @@ def test_head_term_postings_split_across_buckets(spark, index_dir):
 
 def test_wand_prefix_mode_matches_exhaustive(wand, exhaustive):
     """Prefix matching (the reference's DEFAULT trie semantics) through the
-    merged-run WAND cursors must equal the exhaustive engine's prefix path,
+    prefix-merged block lists must equal the exhaustive engine's prefix path,
     including spell correction (quirk Q7)."""
     from information_retrieval_spark.fixtures import make_queries
 
