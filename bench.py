@@ -147,21 +147,10 @@ def main() -> None:
             QuerySpec(i, text, "okapi25", 10, spell=False, match_mode="exact")
             for i, text in ir_direct.QUERY_SET
         ]
-        lat = []
-        for rep in range(5):
-            t0 = time.time()
-            eng.search(qspecs).collect()
-            lat.append(time.time() - t0)
-        lat.sort()
-        timings["bm25_engine_batch"] = round(lat[len(lat) // 2], 3)
-
-        from information_retrieval_spark.query.wand import WandEngine
-
-        wand = WandEngine(spark, idx_dir)
         wlat = []
         for rep in range(5):
             t0 = time.time()
-            wand.search(qspecs).collect()
+            eng.search(qspecs).collect()
             wlat.append(time.time() - t0)
         wlat.sort()
         timings["wand_engine_batch"] = round(wlat[len(wlat) // 2], 3)
@@ -177,10 +166,6 @@ def main() -> None:
         "sf": sf,
         "extras": {
             "index_build_files_per_sec": round(n_files / build_s, 1),
-            "bm25_batch_p50_sec": timings["bm25_engine_batch"],
-            "bm25_per_query_p50_sec": round(
-                timings["bm25_engine_batch"] / len(qspecs), 4
-            ),
             "wand_batch_p50_sec": timings["wand_engine_batch"],
             "wand_per_query_p50_sec": round(
                 timings["wand_engine_batch"] / len(qspecs), 4

@@ -550,13 +550,11 @@ class IndexBuilder:
         # from this materialized table, where the sampling pass is one
         # cheap parquet scan) — packed is the production query path;
         # postings_flat serves derivation jobs (full scans) and the
-        # exhaustive cross-check engine (row-group pruning suffices).
+        # boolean/phrase paths (row-group pruning suffices).
         # Every row additionally carries its doc's full {section: dl} map
-        # (``dls``) — the Lucene-norms-style denormalization: query-time
-        # BM25 reads dl AND the per-query avgdl straight off the matched
-        # rows, so scoring needs NO join against the corpus-sized doclen
-        # table (at 10^12 docs that join is the exhaustive path's scale
-        # killer). Map entries are sorted → deterministic file bytes.
+        # (``dls``), which pack_postings reads for the blocks' dls (no
+        # query path reads it). Map entries are sorted → deterministic
+        # file bytes.
         def s_postings():
             # stop removal is a broadcast LEFT ANTI join (the top-K frame
             # is K rows) — no driver collect / isin literal list, so the

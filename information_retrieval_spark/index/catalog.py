@@ -487,8 +487,8 @@ def read_live_postings(
     spark: SparkSession, index_dir: str, version: int | None = None
 ) -> DataFrame | None:
     """postings_flat restricted to LIVE rows — the shared read for every
-    query path that consumes flat postings (exhaustive engine, boolean,
-    phrase/proximity, WAND's filter-term presence scan)."""
+    query path that consumes flat postings (boolean, phrase/proximity,
+    highlighting)."""
     return read_live_table(spark, index_dir, "postings_flat", version)
 
 

@@ -4,8 +4,8 @@ with personalized PageRank derived from user preferences.
 
 Pipeline (phase3 re-expressed Spark-first):
 
-1. **text** — any engine (exhaustive ``SearchEngine`` or block-max
-   ``WandEngine``) answers the batch: (query_id, rank, doc_id, score);
+1. **text** — the ranked engine (``SearchEngine``) answers the batch:
+   (query_id, rank, doc_id, score);
 2. **preferences → PPR** — the reference's additive-teleport personalized
    PageRank (`phase3.py:23-82`, preferences normalized to sum 1) over the
    supplied link graph (`ops/graph.py::personalized_pagerank`);
@@ -45,8 +45,8 @@ def search_personalized(
     max_iter: int = 100,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score): text ranking fused with
-    preference-personalized PageRank. ``engine`` is a ``SearchEngine`` or
-    ``WandEngine``; ``edges`` is the (src, dst) link graph over the indexed
+    preference-personalized PageRank. ``engine`` is a ``SearchEngine``;
+    ``edges`` is the (src, dst) link graph over the indexed
     docs; ``preferences`` maps doc_id → weight (normalized internally)."""
     spark = engine.spark
     text = engine.search(queries)

@@ -12,9 +12,9 @@ list. Every table is built on first use from the pinned version; a
 ``spark.read.parquet`` without a schema runs a Spark job to infer one, so
 the engines decide which tables they resolve at open.
 
-It also owns the query preparation both ranked engines share: the index's
-tokenizer, stop filtering, one batched spell correction per batch (quirk
-Q7) and the default section weights (quirk Q5).
+It also owns the ranked engine's query preparation: the index's tokenizer,
+stop filtering, one batched spell correction per batch (quirk Q7) and the
+default section weights (quirk Q5).
 """
 
 from __future__ import annotations
@@ -122,6 +122,16 @@ class IndexSnapshot:
         tombstones hide until the next compact)."""
         stats = read_stats_pdf(self.index_dir, self.version)
         return int(stats["n_docs"].iloc[0])
+
+    @cached_property
+    def n_live(self) -> int:
+        """The live doc count, tf-idf's N (quirk Q1). ``n_docs`` also counts
+        doc versions that tombstones hide until the next compact purges
+        them, so with deletes present N is counted from the live doclen
+        (the count compact writes back to the ledger): one Spark job, once."""
+        if self.deletes is None:
+            return self.n_docs
+        return self.doclen.select("doc_id").distinct().count()
 
     def doc_rows(self) -> DataFrame:
         """Every doclen row, tombstone and category row as ``(doc_id, kind,

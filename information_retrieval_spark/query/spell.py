@@ -143,7 +143,7 @@ def spell_map_for_texts(
     spark, index_dir: str, texts: list[str], version: int | None = None
 ) -> dict[str, str]:
     """Batch token→correction map for a query batch via the distributed
-    bigram join over the index's vocab table (shared by both engines)."""
+    bigram join over the index's vocab table."""
     from information_retrieval_spark.index.catalog import read_vocab
 
     tokens = [t for text in texts for t in text.split()]

@@ -1,5 +1,6 @@
-"""Block-max top-k (``WandEngine``) over the packed compressed index
-(north_star query path).
+"""The ranked engine (``WandEngine``, also exported as
+``query.engine.SearchEngine``): exact block-max top-k over the packed
+compressed index for okapi25, ltn-lnn and ltc-lnc.
 
 Physical shape (SURVEY.md §3.1 redesign). A batch reads two frames, both
 keyed and partitioned by the doc-hash ``bucket``
@@ -18,39 +19,52 @@ Then two bucket-grouped ``applyInPandas`` passes over the same cached
 frames, so neither adds an exchange:
 
 1. **statistics** — each bucket decodes doc_ids only and emits partial
-   sums of the BM25 quirks' inputs (Q1 N = |candidate set|, Q2 candidate
-   avgdl per section, live df per query term). A doc lives in exactly one
-   bucket, so the partials add up across buckets; the driver sums them
-   (`_Bucket.stats` explains the prefix-mode has_exact gate);
+   sums of the quirks' inputs (Q1 N = |candidate set| for BM25, Q2
+   candidate avgdl per section, live df per query term, which is also
+   tf-idf's df). A doc lives in exactly one bucket, so the partials add up
+   across buckets; the driver sums them (`_Bucket.stats` explains the
+   prefix-mode has_exact gate);
 2. **scoring** — an exact block-at-a-time top-k per bucket, one list per
    (bucket, query), merged into the global top-k on the driver (SURVEY.md
    §7 M5).
 
 A warm batch therefore runs 4 Spark jobs: the shard's exchange, its cache,
-and one per pass.
+and one per pass. An exact-mode batch holding a tf-idf query adds one
+pushed-filter lookup of the term dictionary (its query weights count only
+the indexed query terms); with deletes present, the first tf-idf batch
+also counts the live corpus once (`IndexSnapshot.n_live`).
 
-Correctness stance: the scorer is EXACT — results are rank-identical to
-the exhaustive scorer (`query/engine.py`), which tests assert; the block
-bounds only prune work. Because a doc's bucket is a pure function of
-doc_id, every posting of a doc lands in one bucket: bucket-local scoring is
-complete, and per-bucket top-k ∪ global re-rank is exact.
+Correctness stance: the scorer is EXACT — tests check it against the
+pure-Python oracle (`tests/oracle.py`) and a brute force over unpacked
+postings (`tests/test_wand_scorer.py`); the block bounds only prune work.
+Because a doc's bucket is a pure function of doc_id, every posting of a doc
+lands in one bucket: bucket-local scoring is complete, and per-bucket
+top-k ∪ global re-rank is exact.
 
 Block-at-a-time scoring (`_Bucket.top_k`), per bucket and query:
 * every block of the query's (qterm, section) lists — each prefix
-  expansion term, each LSM segment — gets the bound
-  weight · tf_norm(max_tf, min_dl, avgdl); per-query idf and avgdl enter
-  at query time (the blocks store tf-side components only — SURVEY.md §7
-  hard-part b);
+  expansion term, each LSM segment — gets a bound on its list's
+  contribution, clamped at 0 (a list with a negative section weight can
+  only lower a score):
+  - okapi25: weight · tf_norm(max_tf, min_dl, avgdl); per-query idf and
+    avgdl enter at query time (the blocks store tf-side components only —
+    SURVEY.md §7 hard-part b);
+  - ltn-lnn: weight · (1 + ln max_tf);
+  - ltc-lnc: weight, because a list's (1 + ln tf) / norm ≤ 1;
 * the block boundaries cut the doc-id space into intervals; an interval's
   bound is the sum of the bounds of the blocks covering it (one cumulative
-  sum). tf_norm is concave with tf_norm(0) = 0, so this sum also bounds a
-  prefix-merged tf; the metadata is the packed original's, so it stays
-  conservative under tombstones, and filters only remove docs;
+  sum). tf_norm is concave with tf_norm(0) = 0 and 1 + ln tf is
+  subadditive for tf ≥ 1, so this sum also bounds a prefix-merged tf; the
+  metadata is the packed original's, so it stays conservative under
+  tombstones, and filters only remove docs;
 * intervals are visited in descending bound, in rounds that double in
   size, and only the blocks covering a round's intervals are decoded, in
-  one batched varint pass; tombstones and filters are numpy masks;
+  one batched varint pass; tombstones and filters are numpy masks. A doc
+  lies in one interval, so all its lists are decoded in the round that
+  visits it;
 * a doc's score is summed with ``np.unique``/``np.bincount`` (merged tf
-  per (doc, list), then the lists' contributions); the scan stops when the
+  per (doc, list), ltc-lnc's norm per (doc, section) over the query's
+  matched lists, then the lists' contributions); the scan stops when the
   next interval's bound is below θ − 1e-9, θ being the rounded k-th score
   under the final ordering (-round(score, 9), doc_id); the margin covers
   the 5e-10 rounding half-step.
@@ -68,6 +82,9 @@ from information_retrieval_spark.index.codec import decode_doc_gaps, varint_deco
 from information_retrieval_spark.query.engine import (
     K1, B, QuerySpec, batch_match_mode,
 )
+
+#: the ranking methods a query may name
+METHODS = ("okapi25", "ltn-lnn", "ltc-lnc")
 from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 #: packed columns a bucket pass reads
@@ -300,31 +317,45 @@ class _Bucket:
         return pd.DataFrame({"query_id": q, "doc_id": d, "score": s})
 
     def _top(self, meta: dict, plan: _Plan) -> tuple[np.ndarray, np.ndarray]:
-        k = meta["k"]
+        k, method = meta["k"], meta["method"]
         # the query's blocks, each tagged with its list: one per (qterm,
         # section), over every expansion term and segment
-        rows, lid, weight, avgdl = [_NO_ROWS], [_NO_ROWS], [], []
+        rows, lid, weight, avgdl, sec = [_NO_ROWS], [_NO_ROWS], [], [], []
         for (qterm, s), m in meta["terms"].items():
             for t in plan.qterms[qterm]:
                 got = self.rows_of.get((t, s), _NO_ROWS)
                 rows.append(got)
                 lid.append(np.full(len(got), len(weight)))
             weight.append(m["weight"])
-            avgdl.append(m["avgdl"])
+            avgdl.append(m.get("avgdl", 0.0))
+            sec.append(s)
         rows, lid = np.concatenate(rows), np.concatenate(lid)
         top_d, top_s = np.empty(0, np.int64), np.empty(0)
         if k == 0 or not len(rows):
             return top_d, top_s
         weight, avgdl = np.array(weight), np.array(avgdl)
+        names, sec = np.unique(sec, return_inverse=True)
+        n_sec = len(names)
 
-        def bm25(j, tf, dl):
-            """List j's contribution at term frequency tf, length dl."""
-            norm = K1 * (1 - B + B * dl / avgdl[j])
-            return weight[j] * tf * (K1 + 1) / (tf + norm)
+        def contrib(j, tf, dl, doc):
+            """Lists j's contributions at merged tf and doc length dl; doc
+            numbers the docs (ltc-lnc's norm is per doc and section)."""
+            if method == "okapi25":
+                norm = K1 * (1 - B + B * dl / avgdl[j])
+                return weight[j] * tf * (K1 + 1) / (tf + norm)
+            wtf = 1.0 + np.log(tf)
+            if method == "ltn-lnn":
+                return weight[j] * wtf
+            cell = doc * n_sec + sec[j]
+            return weight[j] * wtf / np.sqrt(np.bincount(cell, wtf * wtf))[cell]
 
         # doc-id intervals between consecutive block edges: an interval's
         # bound is the sum of the bounds of the blocks covering it
-        ub = bm25(lid, self.max_tf[rows], self.min_dl[rows])
+        ub = (
+            weight[lid] if method == "ltc-lnc"
+            else contrib(lid, self.max_tf[rows], self.min_dl[rows], None)
+        )
+        ub = np.maximum(ub, 0.0)
         lo_doc, hi_doc = self.first_doc[rows], self.last_doc[rows] + 1
         edges = np.unique(np.concatenate([lo_doc, hi_doc]))
         lo, hi = np.searchsorted(edges, lo_doc), np.searchsorted(edges, hi_doc)
@@ -355,11 +386,11 @@ class _Bucket:
             key, first, inv = np.unique(
                 di * len(weight) + j, return_index=True, return_inverse=True
             )
-            part = bm25(key % len(weight), np.bincount(inv, tf), dl[first])
+            doc = key // len(weight)
+            part = contrib(key % len(weight), np.bincount(inv, tf),
+                           dl[first], doc)
             top_d = np.concatenate([top_d, docs])
-            top_s = np.concatenate(
-                [top_s, np.bincount(key // len(weight), part, len(docs))]
-            )
+            top_s = np.concatenate([top_s, np.bincount(doc, part, len(docs))])
             if 0 < k <= len(top_s):
                 best = np.lexsort((top_d, -_round9(top_s)))[:k]
                 top_d, top_s = top_d[best], top_s[best]
@@ -379,10 +410,46 @@ class _Bucket:
                 dl[ok].astype(np.float64))
 
 
+def _list_meta(q: QuerySpec, mult: dict[str, int], st: dict,
+               indexed: set[str], n_live: int,
+               weights: dict[str, float]) -> dict[tuple, dict]:
+    """(qterm, section) → the list's scoring inputs for query ``q``, from
+    its qterm multiplicities ``mult`` and corpus statistics ``st``.
+
+    okapi25: weight = mult · idf · w_s with idf over the candidate set
+    (quirks Q1, Q3), plus the section's candidate avgdl (Q2; a section no
+    candidate has scores nothing). ltn-lnn / ltc-lnc: weight = w_s · q_w ·
+    idf with idf = ln(N / df) over the live corpus (Q1) and q_w = (1 +
+    ln qtf) / qnorm (`common.py:26-56`), qnorm being 1 for ltn-lnn and the
+    cosine norm over the query's ``indexed`` terms for ltc-lnc."""
+    out = {}
+    if q.method == "okapi25":
+        nq = st["n_cand"]
+        for t, df in st["df"].items():
+            idf = float(np.log((nq - df + 0.5) / (df + 0.5) + 1.0))
+            for s, w in weights.items():
+                a = st["avgdl"].get(s)
+                if a:
+                    out[(t, s)] = {"weight": mult[t] * idf * w, "avgdl": a}
+        return out
+    wtf = {t: 1.0 + np.log(m) for t, m in mult.items() if t in indexed}
+    qnorm = (
+        np.sqrt(sum(v * v for v in wtf.values()))
+        if q.method == "ltc-lnc" else 1.0
+    )
+    for t, df in st["df"].items():
+        if t not in wtf:
+            continue
+        idf = float(np.log(n_live / df))
+        for s, w in weights.items():
+            out[(t, s)] = {"weight": w * wtf[t] / qnorm * idf}
+    return out
+
+
 class WandEngine:
-    """Exact BM25 (okapi25) top-k over ``<index_dir>/packed``, scored a
-    block at a time per doc-hash bucket and pruned by the blocks' bounds
-    (module docstring). Rank-identical to ``SearchEngine``.
+    """Exact okapi25, ltn-lnn and ltc-lnc top-k over ``<index_dir>/packed``,
+    scored a block at a time per doc-hash bucket and pruned by the blocks'
+    bounds (module docstring).
 
     Concurrency: a ``SparkSession`` is thread-safe, an engine's CACHE
     handoff is not — ``search()`` swaps the previous batch's persisted
@@ -406,9 +473,7 @@ class WandEngine:
         driver (it becomes the packed scan's literal ``In`` pushdown and
         each query's block lists), which is safe for sane prefixes but would
         be a driver OOM for a 1-char prefix over a billion-term
-        dictionary. Over-budget batches raise with guidance instead —
-        ``SearchEngine``'s prefix expansion stays fully distributed and
-        has no such bound.
+        dictionary. Over-budget batches raise with guidance instead.
 
         ``version`` pins a catalog snapshot (time travel; None = the
         current one, resolved once, here: query/snapshot.py). The packed
@@ -434,7 +499,7 @@ class WandEngine:
         self._last_shard = None
         #: the last batch's corpus statistics per query_id: ``n_cand``
         #: (quirk Q1 N), ``avgdl`` per section (Q2) and live ``df`` per
-        #: surviving qterm — what the BM25 weights were computed from
+        #: surviving qterm — what the list weights were computed from
         self.last_stats: dict[int, dict] = {}
 
     def close(self) -> None:
@@ -487,7 +552,7 @@ class WandEngine:
     def _expand_prefix(self, qterms: set[str]) -> dict[str, list[str]]:
         """qterm → matching postings terms (prefix semantics,
         `trie/phase1.py:17-36`): every indexed term the qterm prefixes,
-        GATED on the exact term existing (`has_exact` in engine._matched).
+        GATED on the exact term existing in the term dictionary.
         One pushed-filter scan of the term dictionary. Under logical
         deletes the gate is re-checked against the LIVE matched stream in
         ``search`` (term_df is only refreshed at compact, so a fully
@@ -505,8 +570,7 @@ class WandEngine:
             raise ValueError(
                 f"prefix expansion exceeds max_prefix_expand={cap} "
                 f"dictionary terms for qterms {sorted(qterms)[:5]}...; "
-                "narrow the prefixes, raise max_prefix_expand, or use "
-                "SearchEngine (its prefix expansion is fully distributed)"
+                "narrow the prefixes or raise max_prefix_expand"
             )
         out: dict[str, list[str]] = {}
         have = set(terms)
@@ -515,9 +579,17 @@ class WandEngine:
                 out[q] = [t for t in terms if t.startswith(q)]
         return out
 
+    def _indexed(self, qterms: set[str]) -> set[str]:
+        """Which of ``qterms`` are in the term dictionary: one pushed-filter
+        scan, skipped when there are none."""
+        if not qterms:
+            return set()
+        hits = self.snapshot.term_df.filter(F.col("term").isin(sorted(qterms)))
+        return {r.term for r in hits.select("term").collect()}
+
     def search(self, queries: list[QuerySpec]) -> DataFrame:
-        """(query_id, rank, doc_id, score) — rank-identical to the
-        exhaustive engine for both match modes (okapi25).
+        """(query_id, rank, doc_id, score) for a batch that may mix
+        okapi25, ltn-lnn and ltc-lnc queries.
 
         Runs the batch before returning: one statistics pass and one
         scoring pass, both bucket-grouped over the same cached frames, and
@@ -525,16 +597,12 @@ class WandEngine:
         frame. That is at most ``n_buckets · k`` rows per query for k > 0;
         a k < 0 query ("all results") brings every candidate to the
         driver.
-        A batch mixing match modes raises ``ValueError``."""
-        # The packed blocks carry BM25-shaped bounds (max_tf, min_dl);
-        # tf-idf cosine would need per-block norm metadata the index
-        # doesn't store. Refuse loudly rather than silently scoring a
-        # ltn/ltc spec with BM25 (SearchEngine serves those methods).
-        bad = sorted({q.method for q in queries} - {"okapi25"})
+        A batch mixing match modes, or naming an unknown method, raises
+        ``ValueError``."""
+        bad = sorted({q.method for q in queries} - set(METHODS))
         if bad:
             raise ValueError(
-                f"WandEngine scores okapi25 only (got {bad}); "
-                "use SearchEngine for ltn-lnn / ltc-lnc"
+                f"unknown ranking method {bad}: use one of {list(METHODS)}"
             )
         mode = batch_match_mode(queries)
         self.last_stats = {}
@@ -547,10 +615,14 @@ class WandEngine:
                 mult[t] = mult.get(t, 0) + 1
             qtoks[q.query_id] = mult
         uniq_qterms = {t for m in qtoks.values() for t in m}
+        tfidf = {t for q in queries if q.method != "okapi25"
+                 for t in qtoks[q.query_id]}
         if mode == "prefix":
             expansions = self._expand_prefix(uniq_qterms)
+            indexed = set(expansions)
         else:
             expansions = {t: [t] for t in uniq_qterms}
+            indexed = self._indexed(tfidf)
         plans = {
             q.query_id: _Plan(
                 qterms={
@@ -627,7 +699,7 @@ class WandEngine:
             )
 
         # --- corpus statistics per query: sum the bucket partials, gated
-        # by the live has_exact OR (engine._matched; see `_Bucket.stats`)
+        # by the live has_exact OR (see `_Bucket.stats`)
         for q in queries:
             alive = exact.get(q.query_id, set())
             hits = [
@@ -648,24 +720,16 @@ class WandEngine:
                 },
             }
 
-        # --- per-query scoring-term meta (weight = mult · idf · w_s) ------
+        # --- per-query scoring-term meta ---------------------------------
+        n_live = self.snapshot.n_live if tfidf else 0
         qmeta: dict[int, dict] = {}
         for q in queries:
             st = self.last_stats[q.query_id]
-            nq = st["n_cand"]
-            terms = {}
-            for t, df in st["df"].items():
-                idf = float(np.log((nq - df + 0.5) / (df + 0.5) + 1.0))
-                for s, w in self.snapshot.weights(q).items():
-                    a = st["avgdl"].get(s)
-                    if a is None or a == 0:
-                        continue
-                    terms[(t, s)] = {
-                        "weight": qtoks[q.query_id][t] * idf * w,
-                        "avgdl": a,
-                    }
+            terms = _list_meta(q, qtoks[q.query_id], st, indexed, n_live,
+                               self.snapshot.weights(q))
             if terms:
-                qmeta[q.query_id] = {"terms": terms, "k": q.k}
+                qmeta[q.query_id] = {"terms": terms, "k": q.k,
+                                     "method": q.method}
         if not qmeta:
             return self._result()
 

@@ -55,7 +55,11 @@ class Oracle:
         sections: tuple[str, ...] = ("title", "abstract"),
         tokenizer: str = "code",
         stop_k: int = 20,
+        stop_terms=None,
     ):
+        """``stop_terms`` pins the stop list (an index's, say, when the
+        oracle covers a sub-corpus or a maintained index's live docs);
+        otherwise it is the top ``stop_k`` terms of ``docs`` (quirk Q6)."""
         self.sections = sections
         # cleaned: doc -> section -> [(term, pos)]
         self.cleaned = {
@@ -66,7 +70,10 @@ class Oracle:
             t for doc in self.cleaned.values() for toks in doc.values() for t, _ in toks
         )
         ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        self.stop_tokens = {t for t, _ in ranked[:stop_k]}
+        self.stop_tokens = (
+            {t for t, _ in ranked[:stop_k]} if stop_terms is None
+            else set(stop_terms)
+        )
         self.non_stop = {
             d: {
                 s: [(t, p) for t, p in toks if t not in self.stop_tokens]
@@ -224,3 +231,33 @@ class Oracle:
         # engine: raw-double ordering of exact ties is FP-sum-order noise
         ranked = sorted(fused.items(), key=lambda kv: (-round(kv[1], 9), kv[0]))
         return ranked[: k if k >= 0 else len(ranked)]
+
+    def answer(self, spec, tokenizer: str = "code") -> list[tuple]:
+        """A ``QuerySpec`` answered as the engine answers it, as [(rank,
+        doc_id, score)]; no section weights means the engine's defaults
+        (0.8 title / 0.2 abstract, else all on the first section)."""
+        ranked = self.search(
+            spec.text, spec.method, weight=0.2, k=spec.k, tokenizer=tokenizer,
+            match_mode=spec.match_mode, spell=spec.spell,
+            section_weights=spec.section_weights or None,
+        )
+        return [(rank, d, s) for rank, (d, s) in enumerate(ranked, 1)]
+
+
+def ranked_rows(df) -> dict[int, list[tuple]]:
+    """An engine result frame as {query_id: [(rank, doc_id, score)]}."""
+    out: dict[int, list[tuple]] = {}
+    for r in df.collect():
+        out.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
+    return {q: sorted(v) for q, v in out.items()}
+
+
+def assert_ranked_equal(got: list[tuple], want: list[tuple], what="") -> None:
+    """Same (rank, doc_id) sequence, scores equal to rel 1e-9."""
+    import pytest
+
+    assert [r[:2] for r in got] == [r[:2] for r in want], (
+        f"{what}: doc order mismatch\n got {got}\n exp {want}"
+    )
+    for g, w in zip(got, want):
+        assert g[2] == pytest.approx(w[2], rel=1e-9, abs=1e-12), what

@@ -6,8 +6,8 @@ Semantics contract: a category-filtered query over the full index answers
 EXACTLY like an unfiltered query over an index built from only that
 category's docs (stop list pinned) — the per-query candidate stats (Q1 N,
 Q2 avgdl, df) all recompute over the sub-corpus, like the delete-vector
-path. WAND must be rank-identical to the exhaustive engine under the
-filter, including mixed filtered/unfiltered batches.
+path. The engine must be rank-identical to the pure-Python oracle over
+each query's category, including mixed filtered/unfiltered batches.
 """
 
 import pytest
@@ -15,7 +15,7 @@ import pytest
 from information_retrieval_spark.fixtures import corpus_rows
 from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-from information_retrieval_spark.query.wand import WandEngine
+from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
 
 SECTIONS = {"title": "path", "abstract": "content"}
 CAT = "java"
@@ -54,6 +54,24 @@ def _stop_of(spark, idx):
     return [r.term for r in rows]
 
 
+def _oracle_check(spark, idx, rows, specs):
+    """The engine's answer to ``specs`` over ``idx`` equals the oracle's
+    over each query's category of ``rows`` (index stop list pinned).
+    Returns the engine's rows per query."""
+    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    stop = _stop_of(spark, idx)
+    for q in specs:
+        orc = Oracle(
+            {r.doc_id: {"title": r.path, "abstract": r.content}
+             for r in rows
+             if q.filter_category in (None, r.lang)},
+            stop_terms=stop,
+        )
+        assert_ranked_equal(got.get(q.query_id, []), orc.answer(q),
+                            f"query {q.query_id}")
+    return got
+
+
 def test_filter_equals_subcorpus_index(spark, cat_index, tmp_path_factory):
     rows = corpus_rows(150)
     sub = [r for r in rows if r.lang == CAT]
@@ -78,7 +96,6 @@ def test_filter_equals_subcorpus_index(spark, cat_index, tmp_path_factory):
     want = _res(SearchEngine(spark, fresh), plain)
     assert want, "sub-corpus queries should match something"
     assert _res(SearchEngine(spark, cat_index), filtered) == want
-    assert _res(WandEngine(spark, cat_index), filtered) == want
 
 
 def test_mixed_batch_filtered_and_unfiltered(spark, cat_index):
@@ -90,11 +107,9 @@ def test_mixed_batch_filtered_and_unfiltered(spark, cat_index):
         QuerySpec(3, "buffer parser", "okapi25", 10, spell=False,
                   match_mode="exact", filter_category="go"),
     ]
-    want = _res(SearchEngine(spark, cat_index), specs)
-    got = _res(WandEngine(spark, cat_index), specs)
-    assert got == want
-    # the unfiltered query must see docs outside CAT; filtered must not
     rows = corpus_rows(150)
+    want = _oracle_check(spark, cat_index, rows, specs)
+    # the unfiltered query must see docs outside CAT; filtered must not
     lang_of = {r.doc_id: r.lang for r in rows}
     assert any(lang_of[d] != CAT for _, d, _ in want[2])
     assert all(lang_of[d] == CAT for _, d, _ in want.get(1, []))
@@ -110,10 +125,8 @@ def test_filter_prefix_mode_rank_identity(spark, cat_index):
         QuerySpec(2, "buffer parser", "okapi25", 10, spell=False,
                   match_mode="prefix", filter_category="go"),
     ]
-    want = _res(SearchEngine(spark, cat_index), specs)
-    got = _res(WandEngine(spark, cat_index), specs)
+    want = _oracle_check(spark, cat_index, corpus_rows(150), specs)
     assert want, "prefix queries should match"
-    assert got == want
 
 
 def test_filter_without_doc_meta_raises(spark, tmp_path_factory):
@@ -125,8 +138,6 @@ def test_filter_without_doc_meta_raises(spark, tmp_path_factory):
                       match_mode="exact", filter_category=CAT)]
     with pytest.raises(ValueError):
         SearchEngine(spark, d).search(spec).collect()
-    with pytest.raises(ValueError):
-        WandEngine(spark, d).search(spec).collect()
 
 
 def test_filter_survives_incremental_add(spark, tmp_path_factory):
@@ -150,7 +161,6 @@ def test_filter_survives_incremental_add(spark, tmp_path_factory):
     ]
     want = _res(SearchEngine(spark, fresh), specs)
     assert _res(SearchEngine(spark, d), specs) == want
-    assert _res(WandEngine(spark, d), specs) == want
 
 
 def test_filter_tfidf_method(spark, cat_index, tmp_path_factory):
@@ -206,10 +216,8 @@ def test_filter_survives_remove_and_compact(spark, tmp_path_factory):
                        match_mode="exact", filter_category=CAT)]
     want = _res(SearchEngine(spark, fresh), specs)
     assert _res(SearchEngine(spark, d), specs) == want
-    assert _res(WandEngine(spark, d), specs) == want
     maint.compact()
     assert _res(SearchEngine(spark, d), specs) == want
-    assert _res(WandEngine(spark, d), specs) == want
 
 
 def test_filter_category_with_int_doc_ids(spark, tmp_path_factory):
@@ -231,9 +239,8 @@ def test_filter_category_with_int_doc_ids(spark, tmp_path_factory):
     ).build(d)
     specs = [QuerySpec(1, "tokenizer stream", "okapi25", 10, spell=False,
                        match_mode="exact", filter_category=CAT)]
-    want = _res(SearchEngine(spark, idx), specs)
+    want = _oracle_check(spark, idx, rows, specs)
     assert want.get(1), "filtered query must match docs in the category"
-    assert _res(WandEngine(spark, idx), specs) == want
     lang_of = {r.doc_id: r.lang for r in rows}
     assert all(lang_of[doc] == CAT for _, doc, _ in want[1])
 
@@ -262,7 +269,7 @@ def test_filter_follows_a_category_changed_by_update(spark, tmp_path_factory):
     """An update that moves a doc to another category: its old doc_meta
     row is hidden by the update's seq-scoped tombstone, so filtering on the
     OLD category must no longer return it and filtering on the new one
-    must — in both engines, rank-identically."""
+    must, rank-identically to the oracle over the live docs."""
     from dataclasses import replace
 
     from information_retrieval_spark.index.maintenance import IndexMaintenance
@@ -276,10 +283,10 @@ def test_filter_follows_a_category_changed_by_update(spark, tmp_path_factory):
     ).build(_df(spark, rows))
     IndexMaintenance(spark, d).update_documents(_df(spark, [moved]))
     text = " ".join(target.content.split()[:6])
+    live = [moved if r.doc_id == moved.doc_id else r for r in rows]
     for cat, present in ((CAT, False), ("go", True)):
         specs = [QuerySpec(1, text, "okapi25", -1, spell=False,
                            match_mode="exact", filter_category=cat)]
-        want = _res(SearchEngine(spark, d), specs)
-        assert _res(WandEngine(spark, d), specs) == want
+        want = _oracle_check(spark, d, live, specs)
         docs = {doc for _, doc, _ in want.get(1, [])}
         assert (target.doc_id in docs) == present, cat

@@ -1,7 +1,8 @@
 """Filtered ranked search (QuerySpec.filter_terms / exclude_terms —
-Lucene filter-context semantics): rank-identity across all three physical
-strategies (declarative plan, exhaustive engine, block-max WAND), in
-exact and prefix mode, and under deletes."""
+Lucene filter-context semantics): the engine is rank-identical to the
+declarative plan (exact mode), to the pure-Python oracle over each query's
+filter-passing sub-corpus (prefix mode), and to a fresh build under
+deletes."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,7 +49,6 @@ def idx(spark):
 def test_filtered_engines_match_declarative(spark, idx):
     from information_retrieval_spark.ops.ir_direct import q_bm25_filtered
     from information_retrieval_spark.query.engine import SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
 
     want = {
         (r.query_id, r.rank, r.doc_id, r.score_r)
@@ -56,16 +56,35 @@ def test_filtered_engines_match_declarative(spark, idx):
     }
     assert want, "filter set should produce results"
     assert _rows(SearchEngine(spark, idx).search(_specs())) == want
-    assert _rows(WandEngine(spark, idx).search(_specs())) == want
 
 
 def test_filtered_prefix_mode_wand_matches_exhaustive(spark, idx):
+    """Prefix mode against the oracle over each query's filter-passing
+    sub-corpus: docs holding every must term and no excluded term, in the
+    index's token basis (stop terms never match)."""
     from information_retrieval_spark.query.engine import SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
+    from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
 
-    a = _rows(SearchEngine(spark, idx).search(_specs("prefix")))
-    b = _rows(WandEngine(spark, idx).search(_specs("prefix")))
-    assert a and a == b
+    specs = _specs("prefix")
+    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    assert got
+    texts = {
+        r.doc_id: r.text
+        for r in spark.read.parquet(f"{SF}/documents.parquet").collect()
+    }
+    stop = [r.term for r in spark.read.parquet(f"{idx}/stopwords").collect()]
+    full = Oracle({d: {"body": t} for d, t in texts.items()},
+                  sections=("body",), tokenizer="simple", stop_terms=stop)
+    for q in specs:
+        keep = [
+            d for d, secs in full.non_stop.items()
+            if set(q.filter_terms) <= {t for t, _ in secs["body"]}
+            and not set(q.exclude_terms) & {t for t, _ in secs["body"]}
+        ]
+        orc = Oracle({d: {"body": texts[d]} for d in keep},
+                     sections=("body",), tokenizer="simple", stop_terms=stop)
+        assert_ranked_equal(got.get(q.query_id, []), orc.answer(q, "simple"),
+                            f"query {q.query_id}")
 
 
 def test_filtered_constraints_actually_bite(spark, idx):
@@ -113,24 +132,21 @@ def test_filtered_constraints_actually_bite(spark, idx):
 
 def test_filtered_absent_must_term_empties_query(spark, idx):
     from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
 
     spec = [
         QuerySpec(0, "hash join", "okapi25", 10, spell=False,
                   match_mode="exact", filter_terms=("zzznotfound",))
     ]
     assert SearchEngine(spark, idx).search(spec).collect() == []
-    assert WandEngine(spark, idx).search(spec).collect() == []
 
 
 def test_filtered_after_delete_rank_identity(spark, tmp_path):
-    """Deleting a doc that satisfied a must constraint: both engines drop
-    it, agree with each other, and candidate stats recompute (scores match
-    a fresh index built without the doc)."""
+    """Deleting a doc that satisfied a must constraint: the engine drops
+    it, and candidate stats recompute (scores match a fresh index built
+    without the doc)."""
     from information_retrieval_spark.index.build import IndexBuilder
     from information_retrieval_spark.index.maintenance import IndexMaintenance
     from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     # the stop set differs per scale factor — pick NON-stop terms (ranks
@@ -162,8 +178,6 @@ def test_filtered_after_delete_rank_identity(spark, tmp_path):
     IndexMaintenance(spark, idx).remove_documents([victim])
 
     got_e = _rows(SearchEngine(spark, idx).search(spec))
-    got_w = _rows(WandEngine(spark, idx).search(spec))
-    assert got_e == got_w
     assert victim not in {d for _, _, d, _ in got_e}
 
     idx2 = str(tmp_path / "f_idx2")

@@ -13,9 +13,16 @@ from information_retrieval_spark.fixtures import corpus_rows
 from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.index.maintenance import IndexMaintenance
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-from information_retrieval_spark.query.wand import WandEngine
+from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
 
 SECTIONS = {"title": "path", "abstract": "content"}
+# (query_id, must, should, not): the updates' and resurrections' own words
+# make the model-check's boolean queries see content changes
+BOOL_QUERIES = [
+    (0, "", "tokenizer stream buffer", ""),
+    (1, "rewritten", "matrix parser", ""),
+    (2, "", "resurrected tokenizer", "stream"),
+]
 QUERIES = [
     QuerySpec(1, "tokenizer stream", "okapi25", 10, spell=False, match_mode="exact"),
     QuerySpec(2, "buffer matrix parser", "okapi25", 10, spell=False, match_mode="exact"),
@@ -54,6 +61,25 @@ def _stop_of(spark, idx):
     return [r.term for r in rows]
 
 
+def _oracle(spark, idx, live_rows):
+    """The pure-Python oracle over ``live_rows`` with ``idx``'s stop list
+    (an index keeps its base build's list through later writes)."""
+    return Oracle(
+        {r.doc_id: {"title": r.path, "abstract": r.content}
+         for r in live_rows},
+        stop_terms=_stop_of(spark, idx),
+    )
+
+
+def _matches_oracle(spark, engine, idx, live_rows, specs=QUERIES):
+    """``engine`` answers ``specs`` as the oracle over ``live_rows``."""
+    orc = _oracle(spark, idx, live_rows)
+    got = ranked_rows(engine.search(specs))
+    for q in specs:
+        assert_ranked_equal(got.get(q.query_id, []), orc.answer(q),
+                            f"query {q.query_id}")
+
+
 @pytest.fixture(scope="module")
 def fresh150(spark, tmp_path_factory, maintained):
     # pin the maintained index's stop list: incremental adds keep the
@@ -73,10 +99,21 @@ def test_add_matches_fresh_build(spark, maintained, fresh150):
     )
 
 
-def test_wand_on_maintained_index(spark, maintained):
-    assert _results(WandEngine(spark, maintained)) == _results(
-        SearchEngine(spark, maintained)
-    )
+def test_wand_on_maintained_index(spark, maintained, fresh150):
+    """The two-segment index answers tf-idf batches, in both match modes,
+    as the fresh build does."""
+    for mode in ("exact", "prefix"):
+        specs = [
+            QuerySpec(10 * m + q.query_id, q.text, method, 10, spell=False,
+                      match_mode=mode)
+            for m, method in enumerate(("ltn-lnn", "ltc-lnc"))
+            for q in QUERIES
+        ]
+        got = ranked_rows(SearchEngine(spark, maintained).search(specs))
+        want = ranked_rows(SearchEngine(spark, fresh150).search(specs))
+        assert got.keys() == want.keys(), mode
+        for qid in want:
+            assert_ranked_equal(got[qid], want[qid], f"{mode} query {qid}")
 
 
 def test_remove_then_compact(spark, tmp_path_factory):
@@ -98,9 +135,8 @@ def test_remove_then_compact(spark, tmp_path_factory):
     ).build(_df(spark, kept))
     want = _results(SearchEngine(spark, fresh))
 
-    # logical delete: both engines must already exclude removed docs
+    # logical delete: the engine must already exclude removed docs
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     # physical compaction: same answers, delete vector gone from the
     # current snapshot
@@ -109,14 +145,14 @@ def test_remove_then_compact(spark, tmp_path_factory):
 
     assert table_dirs(d, "deleted_docs") == []
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_prefix_gate_respects_deletes(spark, tmp_path_factory):
     """Prefix expansion is gated on the exact term having a LIVE posting:
-    if every doc containing the exact term is deleted, both engines must
+    if every doc containing the exact term is deleted, the engine must
     suppress the expansion (and its docs' contribution to candidate
-    stats), not fall back to the stale term_df gate."""
+    stats), not fall back to the stale term_df gate. The oracle over the
+    live docs is the reference."""
     rows = [
         (1, "r", "file1.py", "c", "py", "alpha alphabet beta"),
         (2, "r", "file2.py", "c", "py", "alphabet gamma beta"),
@@ -140,20 +176,18 @@ def test_prefix_gate_respects_deletes(spark, tmp_path_factory):
                   match_mode="prefix"),
     ]
 
-    def res(engine):
-        out = {}
-        for r in engine.search(specs).collect():
-            out.setdefault(r.query_id, []).append(
-                (r.rank, r.doc_id, round(r.score, 9))
-            )
-        for v in out.values():
-            v.sort()
-        return out
-
-    want = res(SearchEngine(spark, idx))
-    got = res(WandEngine(spark, idx))
-    assert 1 not in want, "exhaustive engine must gate the dead exact term"
-    assert got == want
+    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    orc = Oracle(
+        {doc: {"title": path, "abstract": text}
+         for doc, _, path, _, _, text in rows if doc not in (1, 3)},
+        stop_terms=_stop_of(spark, idx),
+    )
+    want = {q.query_id: orc.answer(q) for q in specs}
+    assert not want[1], "the oracle must gate the dead exact term"
+    assert 1 not in got
+    for q in specs[1:]:
+        assert_ranked_equal(got[q.query_id], want[q.query_id],
+                            f"query {q.query_id}")
 
 
 def test_compact_crash_leaves_old_snapshot_queryable(
@@ -192,16 +226,14 @@ def test_compact_crash_leaves_old_snapshot_queryable(
         maint.compact()
     monkeypatch.setattr(pack_mod, "pack_postings", real)
 
-    # old snapshot untouched: both engines still answer correctly
+    # old snapshot untouched: the engine still answers correctly
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     maint.compact()  # recovery re-run converges
     from information_retrieval_spark.index.catalog import table_dirs
 
     assert table_dirs(d, "deleted_docs") == []
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_add_documents_retry_same_delta_applies_once(spark, tmp_path_factory):
@@ -285,9 +317,9 @@ def test_compact_rerun_after_crash_keeps_stats_exact(
 
 def test_add_commits_segment_and_compact_merges(spark, tmp_path_factory):
     """Incremental adds commit NEW packed segments (pack cost ∝ delta, the
-    LSM economics) instead of repacking; WAND over the multi-segment index
-    is rank-identical to the exhaustive engine; compact() with no deletes
-    still merges the segments back to one."""
+    LSM economics) instead of repacking; the multi-segment index answers as
+    the oracle over the same docs; compact() with no deletes still merges
+    the segments back to one."""
     from information_retrieval_spark.index.catalog import table_dirs
 
     rows = corpus_rows(180)
@@ -301,12 +333,11 @@ def test_add_commits_segment_and_compact_merges(spark, tmp_path_factory):
     assert len(table_dirs(d, "packed")) == 3  # base + two segments
 
     want = _results(SearchEngine(spark, d))
-    assert _results(WandEngine(spark, d)) == want
+    _matches_oracle(spark, SearchEngine(spark, d), d, rows)
 
     maint.compact()  # no deletes: pure segment merge
     assert len(table_dirs(d, "packed")) == 1
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_time_travel_pins_pre_mutation_snapshot(spark, tmp_path_factory):
@@ -330,7 +361,6 @@ def test_time_travel_pins_pre_mutation_snapshot(spark, tmp_path_factory):
     want_old = _results(SearchEngine(spark, fresh120))
 
     assert _results(SearchEngine(spark, d, version=v_build)) == want_old
-    assert _results(WandEngine(spark, d, version=v_build)) == want_old
     # and the CURRENT snapshot reflects both mutations
     assert _results(SearchEngine(spark, d)) != want_old
 
@@ -358,7 +388,6 @@ def test_expire_snapshots_gc(spark, tmp_path_factory):
     for rel in dead:
         assert not _os.path.exists(f"{d}/{rel}")
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
     with _pytest.raises(FileNotFoundError):
         SearchEngine(spark, d, version=1)
 
@@ -382,23 +411,21 @@ def test_live_reader_on_expired_snapshot_fails_loudly(
         _df(spark, rows[:120])
     )
     # live readers pinned to the original snapshot's dirs
-    old_se = SearchEngine(spark, d)
-    old_we = WandEngine(spark, d)
-    assert _results(old_se)  # both answer before the GC
+    stale = SearchEngine(spark, d)
+    assert _results(stale)  # answers before the GC
 
     maint = IndexMaintenance(spark, d)
     maint.add_documents(_df(spark, rows[120:150]))
     maint.compact()  # rewrites postings/packed: v1's dirs now unreferenced
     assert maint.expire_snapshots(keep_last=1)
 
-    for stale in (old_se, old_we):
-        with _pytest.raises(Exception) as exc:
-            stale.search(QUERIES).collect()
-        # loud I/O/planning failure, not an empty result
-        assert exc.type is not AssertionError
-    old_we.close()
+    with _pytest.raises(Exception) as exc:
+        stale.search(QUERIES).collect()
+    # loud I/O/planning failure, not an empty result
+    assert exc.type is not AssertionError
+    stale.close()
     fresh = SearchEngine(spark, d)
-    assert _results(fresh) == _results(WandEngine(spark, d))
+    _matches_oracle(spark, fresh, d, rows)
     assert len(_results(fresh)) > 0
 
 
@@ -430,7 +457,6 @@ def test_rebuild_in_place_over_maintained_index(spark, tmp_path_factory):
     )
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_sweep_spares_frozen_stage_and_commit_refuses_partial(
@@ -505,7 +531,6 @@ def test_auto_compact_bounds_segments(spark, tmp_path_factory):
     ).build(_df(spark, rows))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_failed_auto_compact_keeps_add_exactly_once(
@@ -728,12 +753,11 @@ def test_partial_compact_merges_subset_only(spark, tmp_path_factory):
     assert dirs[1] not in (base_dir, last_dir)  # the new merged segment
     assert index_content_hash(spark, d) == pre_hash
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     # merging the rest converges to one segment, same answers
     maint.compact(segments=[0, 1, 2])
     assert len(table_dirs(d, "packed")) == 1
-    assert _results(WandEngine(spark, d)) == want
+    assert _results(SearchEngine(spark, d)) == want
 
 
 def test_partial_compact_applies_deletes_to_merged_segments_only(
@@ -783,14 +807,12 @@ def test_partial_compact_applies_deletes_to_merged_segments_only(
     assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == n0 - len(delta_removed)
     assert len(table_dirs(d, "packed")) == 2
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     # full compact applies the rest exactly once
     maint.compact()
     assert table_dirs(d, "deleted_docs") == []
     assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == len(kept)
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_partial_compact_validates_input(spark, tmp_path_factory):
@@ -805,12 +827,12 @@ def test_partial_compact_validates_input(spark, tmp_path_factory):
         maint.compact(segments=[0, 5])
     with pytest.raises(ValueError, match="at least one"):
         maint.compact(segments=[])
-    want = _results(WandEngine(spark, d))
+    want = _results(SearchEngine(spark, d))
     maint.compact(segments=[1])  # single segment, no deletes: no-op
     from information_retrieval_spark.index.catalog import table_dirs
 
     assert len(table_dirs(d, "packed")) == 2
-    assert _results(WandEngine(spark, d)) == want
+    assert _results(SearchEngine(spark, d)) == want
 
 
 def test_auto_compact_tiered_never_rewrites_base(spark, tmp_path_factory):
@@ -841,9 +863,6 @@ def test_auto_compact_tiered_never_rewrites_base(spark, tmp_path_factory):
     assert _results(SearchEngine(spark, d)) == _results(
         SearchEngine(spark, fresh)
     )
-    assert _results(WandEngine(spark, d)) == _results(
-        SearchEngine(spark, fresh)
-    )
 
 
 def test_auto_compact_mode_validated(spark, tmp_path_factory):
@@ -859,7 +878,7 @@ def test_auto_compact_mode_validated(spark, tmp_path_factory):
 def test_partial_compact_with_categories_and_deletes(spark, tmp_path_factory):
     """The doc_meta splice path: a categorized index partial-compacts with
     tombstones in AND out of the merged range; filtered and unfiltered
-    answers match a fresh build over the kept docs on both engines."""
+    answers match a fresh build over the kept docs."""
     rows = corpus_rows(180)
     removed = {rows[125].doc_id, rows[30].doc_id}  # one delta doc, one base
     kept = [r for r in rows if r.doc_id not in removed]
@@ -897,7 +916,6 @@ def test_partial_compact_with_categories_and_deletes(spark, tmp_path_factory):
 
     want = res(SearchEngine(spark, fresh))
     assert res(SearchEngine(spark, d)) == want
-    assert res(WandEngine(spark, d)) == want
 
 
 def test_plan_compaction_picks_smallest_segments(spark, tmp_path_factory):
@@ -927,11 +945,11 @@ def test_plan_compaction_picks_smallest_segments(spark, tmp_path_factory):
         maint.plan_compaction(0)
 
     base_dir = table_dirs(d, "packed")[0]
-    want = _results(WandEngine(spark, d))
+    want = _results(SearchEngine(spark, d))
     maint.compact(segments=plan)
     assert len(table_dirs(d, "packed")) == 2
     assert table_dirs(d, "packed")[0] == base_dir
-    assert _results(WandEngine(spark, d)) == want
+    assert _results(SearchEngine(spark, d)) == want
 
 
 def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
@@ -941,12 +959,14 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
     (stop list pinned). Pins the mutation algebra under seq-scoped
     tombstones: an updated doc counts once with its new content even
     while the hidden old rows await purge, a re-added removed id is live
-    again, tombstones survive partial compacts they don't cover, and
-    both engines agree with the model throughout."""
+    again, tombstones survive partial compacts they don't cover, and the
+    ranked engine (packed blocks) and boolean search (postings_flat's live
+    view) agree with the model throughout."""
     import random
     from dataclasses import replace as dc_replace
 
     from information_retrieval_spark.index.catalog import table_dirs
+    from information_retrieval_spark.query.boolean import boolean_search
 
     rng = random.Random(20260819)
     rows = corpus_rows(200)
@@ -962,6 +982,12 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
     removed: set = set()
     unadded = [rows[i:i + 20] for i in range(100, 200, 20)]
 
+    def _boolean(idx):
+        return sorted(
+            tuple(r)
+            for r in boolean_search(spark, idx, BOOL_QUERIES, k=1000).collect()
+        )
+
     def check(step):
         fresh = str(tmp_path_factory.mktemp(f"algebra_m{step}"))
         IndexBuilder(
@@ -970,7 +996,7 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
         ).build(_df(spark, [by_id[i] for i in sorted(live)]))
         want = _results(SearchEngine(spark, fresh))
         assert _results(SearchEngine(spark, d)) == want, f"step {step}"
-        assert _results(WandEngine(spark, d)) == want, f"step {step}"
+        assert _boolean(d) == _boolean(fresh), f"step {step}"
         # fsck is an invariant of the whole algebra: every reachable
         # catalog state is internally consistent and debris-free
         from information_retrieval_spark.index.fsck import fsck
@@ -1062,14 +1088,12 @@ def test_add_resurrects_tombstoned_ids(spark, tmp_path_factory):
     ).build(_df(spark, model))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
     # compact purges the hidden old rows and clears the vector; answers hold
     maint.compact()
     from information_retrieval_spark.index.catalog import table_dirs
 
     assert table_dirs(d, "deleted_docs") == []
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_update_documents_replaces_content(spark, tmp_path_factory):
@@ -1120,7 +1144,6 @@ def test_update_documents_replaces_content(spark, tmp_path_factory):
     ).build(_df(spark, updated_rows))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     dirs = table_dirs(d, "packed")
     assert dirs[:3] == pre_dirs      # EVERY old segment byte-untouched
@@ -1139,7 +1162,6 @@ def test_update_documents_replaces_content(spark, tmp_path_factory):
     assert table_dirs(d, "deleted_docs") == []
     assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == 160
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_update_of_base_resident_docs_never_rewrites_base(
@@ -1205,7 +1227,6 @@ def test_update_of_base_resident_docs_never_rewrites_base(
     ).build(_df(spark, model))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     # the purge is DEFERRED work: the next compact drops the hidden rows,
     # clears the vector, restores the exact count — answers unchanged
@@ -1213,7 +1234,6 @@ def test_update_of_base_resident_docs_never_rewrites_base(
     assert table_dirs(d, "deleted_docs") == []
     assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == 140
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
 
 def test_update_documents_of_absent_ids_degrades_to_add(
@@ -1254,7 +1274,6 @@ def test_update_documents_of_absent_ids_degrades_to_add(
     ).build(_df(spark, rows))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     maint.compact()
     assert table_dirs(d, "deleted_docs") == []  # no-op tombstones dropped
@@ -1266,7 +1285,7 @@ def test_size_capped_compact_splits_output(spark, tmp_path_factory):
     """compact(target_bytes=...) hash-splits the merged output by doc_id
     into K = ceil(input/cap) sibling segments: every segmented table gets
     exactly K aligned dirs, the postings content hash is identical to the
-    single-output compact of a byte-identical copy, both engines answer
+    single-output compact of a byte-identical copy, the engine answers
     identically, deletes are purged, and a LATER tiered compact still
     works on the split layout (the one-dir-per-segment invariant held)."""
     import shutil as sh
@@ -1307,7 +1326,6 @@ def test_size_capped_compact_splits_output(spark, tmp_path_factory):
     assert index_content_hash(spark, d) == index_content_hash(spark, single)
     want = _results(SearchEngine(spark, single))
     assert _results(SearchEngine(spark, d)) == want
-    assert _results(WandEngine(spark, d)) == want
 
     # the split layout is an ordinary LSM state: add + tiered-merge on it
     maint2 = IndexMaintenance(spark, d)
@@ -1316,8 +1334,9 @@ def test_size_capped_compact_splits_output(spark, tmp_path_factory):
     assert plan is not None and len(plan) >= 2
     maint2.compact(segments=plan)
     assert len(table_dirs(d, "packed")) <= max(2, n_out)
-    merged = _results(WandEngine(spark, d))
-    assert merged == _results(SearchEngine(spark, d))
+    gone = {rows[0].doc_id, rows[160].doc_id}
+    _matches_oracle(spark, SearchEngine(spark, d), d,
+                    [r for r in corpus_rows(240) if r.doc_id not in gone])
 
 
 def test_size_capped_compact_splits_oversized_base(spark, tmp_path_factory):
@@ -1339,14 +1358,13 @@ def test_size_capped_compact_splits_oversized_base(spark, tmp_path_factory):
     maint = IndexMaintenance(spark, d)
     maint.compact()  # normalize through the classic path
     assert len(table_dirs(d, "packed")) == 1
-    want = _results(WandEngine(spark, d))
+    want = _results(SearchEngine(spark, d))
 
     base_bytes = maint.segment_sizes()[0]
     v = maint.compact(target_bytes=base_bytes // 2 + 1)
     assert v is not None
     assert len(table_dirs(d, "packed")) == 2
     assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == 180
-    assert _results(WandEngine(spark, d)) == want
     assert _results(SearchEngine(spark, d)) == want
 
     # cap-aware planning: two cap-sized halves re-merge to ceil(2·half /
@@ -1383,7 +1401,7 @@ def test_expire_after_partial_compact_gcs_only_merged_dirs(
     merged_away = {pre_dirs[1], pre_dirs[2]}
 
     maint.compact(segments=[1, 2])
-    want = _results(WandEngine(spark, d))
+    want = _results(SearchEngine(spark, d))
     kept_dirs = set(table_dirs(d, "packed"))
     assert merged_away.isdisjoint(kept_dirs)
 
@@ -1395,7 +1413,7 @@ def test_expire_after_partial_compact_gcs_only_merged_dirs(
         assert not _os.path.exists(p)
     for p in kept_dirs:
         assert _os.path.exists(p)
-    assert _results(WandEngine(spark, d)) == want
+    assert _results(SearchEngine(spark, d)) == want
 
 
 def test_tfidf_n_counts_live_docs_after_update_and_remove(
@@ -1407,20 +1425,6 @@ def test_tfidf_n_counts_live_docs_after_update_and_remove(
     pure-Python oracle over the live docs after each step."""
     from dataclasses import replace as dc_replace
 
-    from tests.oracle import Oracle
-
-    class PinnedStop(Oracle):
-        """The oracle with the index's stop list: an index keeps its base
-        build's list through later writes, while Oracle re-derives it from
-        the docs it gets (the fixture's head terms are near-tied)."""
-
-        stop_tokens = property(lambda self: self._pinned,
-                               lambda self, _derived: None)
-
-        def __init__(self, docs, pinned, **kw):
-            self._pinned = frozenset(pinned)
-            super().__init__(docs, **kw)
-
     rows = corpus_rows(60)
     d = str(tmp_path_factory.mktemp("tfidf_live_n"))
     IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
@@ -1430,12 +1434,9 @@ def test_tfidf_n_counts_live_docs_after_update_and_remove(
     texts = ["tokenizer stream", "buffer matrix parser"]
 
     def check(live_rows):
-        orc = PinnedStop(
-            {r.doc_id: {"title": r.path, "abstract": r.content}
-             for r in live_rows},
-            _stop_of(spark, d),
-            sections=("title", "abstract"), tokenizer="code", stop_k=10,
-        )
+        # the index's stop list: an index keeps its base build's list
+        # through later writes (the fixture's head terms are near-tied)
+        orc = _oracle(spark, d, live_rows)
         eng = SearchEngine(spark, d)
         for method in ("ltn-lnn", "ltc-lnc"):
             specs = [
@@ -1485,15 +1486,14 @@ def test_engines_keep_their_snapshot_across_later_writes(
     )
     want = _results(SearchEngine(spark, d))
     top = {q: doc for q, rank, doc, _ in want if rank == 1}
-    search = SearchEngine(spark, d)
-    with WandEngine(spark, d) as wand:
+    with SearchEngine(spark, d) as search:
         maint = IndexMaintenance(spark, d)
         moved = next(r for r in rows if r.doc_id == top[1])
-        maint.update_documents(
-            _df(spark, [dc_replace(moved, content=rows[60].content)])
-        )
+        updated = dc_replace(moved, content=rows[60].content)
+        maint.update_documents(_df(spark, [updated]))
         maint.remove_documents([top[2]])
         maint.compact()
         assert _results(search) == want
-        assert _results(wand) == want
-        assert _results(WandEngine(spark, d)) == _results(SearchEngine(spark, d))
+        live = [updated if r.doc_id == moved.doc_id else r
+                for r in rows if r.doc_id != top[2]]
+        _matches_oracle(spark, SearchEngine(spark, d), d, live)

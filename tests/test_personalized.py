@@ -77,19 +77,6 @@ def test_search_personalized_matches_python_oracle(spark, index_dir):
             assert gs == pytest.approx(ws, abs=1e-9)
 
 
-def test_search_personalized_wand_agrees(spark, index_dir):
-    from information_retrieval_spark.query.wand import WandEngine
-
-    e = spark.createDataFrame(_edges(), "src long, dst long")
-    out = {}
-    for eng in (SearchEngine(spark, index_dir), WandEngine(spark, index_dir)):
-        rows = search_personalized(eng, e, dict(PREFS), SPECS).collect()
-        out[type(eng).__name__] = sorted(
-            (r.query_id, r.rank, r.doc_id, round(r.score, 9)) for r in rows
-        )
-    assert out["SearchEngine"] == out["WandEngine"]
-
-
 def test_preferences_shift_ranking(spark, index_dir):
     """A strong preference on a doc inside the text top-k must not rank it
     lower than the unpersonalized fusion does (additive teleport only adds

@@ -9,6 +9,7 @@ import pytest
 
 from information_retrieval_spark.fixtures import make_queries
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
+from tests.oracle import assert_ranked_equal, ranked_rows
 
 WEIGHTS = {"abstract": 0.2, "title": 0.8}
 
@@ -19,20 +20,15 @@ def engine(spark, index_dir):
 
 
 def run_batch(engine, specs):
-    res = engine.search(specs).collect()
-    by_q = {}
-    for r in res:
-        by_q.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
-    return {q: sorted(v) for q, v in by_q.items()}
+    return ranked_rows(engine.search(specs))
 
 
 def assert_identical(got_rows, exp, qid, query_text):
-    got = [(d, s) for _, d, s in got_rows]
-    assert [d for d, _ in got] == [d for d, _ in exp], (
-        f"q{qid} '{query_text}': doc order mismatch\n got {got}\n exp {exp}"
+    """Engine rows equal the oracle's ranked (doc_id, score) list."""
+    assert_ranked_equal(
+        got_rows, [(rank, d, s) for rank, (d, s) in enumerate(exp, 1)],
+        f"q{qid} '{query_text}'",
     )
-    for (_, gs), (_, es) in zip(got, exp):
-        assert gs == pytest.approx(es, rel=1e-9, abs=1e-12)
 
 
 def test_reference_query_set_rank_identity(engine, oracle):
@@ -85,15 +81,13 @@ def test_zipf_corpus_rank_identity(spark, tmp_path_factory):
     the ranking analogue of the round-5 Zipf grep re-measurement: the
     uniform fixture puts every content term at similar df, so this is
     the profile where idf spreads, head terms hit the stop list, and
-    prefix expansion fans out for real. Exact + prefix modes, okapi25
-    on both engines and ltn-lnn on SearchEngine, vs the pure-Python
-    oracle."""
+    prefix expansion fans out for real. Exact + prefix modes, okapi25,
+    ltn-lnn and ltc-lnc, vs the pure-Python oracle."""
     from information_retrieval_spark.fixtures import (
         zipf_document_text,
         zipf_vocab,
     )
     from information_retrieval_spark.index.build import IndexBuilder
-    from information_retrieval_spark.query.wand import WandEngine
     from tests.oracle import Oracle
 
     vocab = zipf_vocab(5000)
@@ -125,34 +119,19 @@ def test_zipf_corpus_rank_identity(spark, tmp_path_factory):
         f"{vocab[50]} {vocab[50]} {vocab[700]}",  # repeated-term quirk Q3
         "zzznotfound",                     # absent
     ]
-    eng = SearchEngine(spark, idx)
-    wand = WandEngine(spark, idx)
-    try:
+    methods = ("okapi25", "ltn-lnn", "ltc-lnc")
+    with SearchEngine(spark, idx) as eng:
         for mode in ("exact", "prefix"):
+            # one batch per mode, every method in it
             specs = [
-                QuerySpec(i, q, "okapi25", 10, section_weights=sw,
-                          spell=False, match_mode=mode)
+                QuerySpec(len(queries) * m + i, q, method, 10,
+                          section_weights=sw, spell=False, match_mode=mode)
+                for m, method in enumerate(methods)
                 for i, q in enumerate(queries)
             ]
-            for engine_obj in (eng, wand):
-                by_q = run_batch(engine_obj, specs)
-                for i, q in enumerate(queries):
-                    exp = orc.search(q, "okapi25", k=10, spell=False,
-                                     match_mode=mode, section_weights=sw)
-                    assert_identical(
-                        by_q.get(i, []), exp, i,
-                        f"{q} [{mode}/{type(engine_obj).__name__}]",
-                    )
-        # tf-idf path on the exhaustive engine
-        specs = [
-            QuerySpec(i, q, "ltn-lnn", 10, section_weights=sw,
-                      spell=False, match_mode="exact")
-            for i, q in enumerate(queries)
-        ]
-        by_q = run_batch(eng, specs)
-        for i, q in enumerate(queries):
-            exp = orc.search(q, "ltn-lnn", k=10, spell=False,
-                             match_mode="exact", section_weights=sw)
-            assert_identical(by_q.get(i, []), exp, i, f"{q} [ltn-lnn]")
-    finally:
-        wand.close()
+            by_q = run_batch(eng, specs)
+            for s in specs:
+                exp = orc.search(s.text, s.method, k=10, spell=False,
+                                 match_mode=mode, section_weights=sw)
+                assert_identical(by_q.get(s.query_id, []), exp, s.query_id,
+                                 f"{s.text} [{mode}/{s.method}]")

@@ -90,12 +90,11 @@ def test_distributed_correction_matches_driver(spark, index_dir):
 
 
 def test_spell_over_cap_falls_back_to_distributed(spark, index_dir, monkeypatch):
-    """When the vocabulary exceeds MAX_SPELL_VOCAB_COLLECT, BOTH engines
+    """When the vocabulary exceeds MAX_SPELL_VOCAB_COLLECT, the engine
     must answer spelled queries identically WITHOUT collecting the vocab —
     the driver-dict path auto-routes to the distributed bigram join."""
     from information_retrieval_spark.query import spell as spell_mod
     from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-    from information_retrieval_spark.query.wand import WandEngine
 
     specs = [
         QuerySpec(1, "tokeniezr steram", "okapi25", 10, match_mode="exact"),
@@ -113,9 +112,6 @@ def test_spell_over_cap_falls_back_to_distributed(spark, index_dir, monkeypatch)
 
     monkeypatch.setattr(spell_mod, "MAX_SPELL_VOCAB_COLLECT", 1)
     se = SearchEngine(spark, index_dir)
-    we = WandEngine(spark, index_dir)
     assert res(se) == want
-    assert res(we) == want
     # the driver dict was never built: the cap forced the distributed path
     assert se.snapshot._bigram_dict is None and se.snapshot._vocab_over_cap
-    assert we.snapshot._bigram_dict is None and we.snapshot._vocab_over_cap

@@ -10,7 +10,6 @@ import pyarrow.parquet as pq
 from information_retrieval_spark.fixtures import corpus_rows
 from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
-from information_retrieval_spark.query.wand import WandEngine
 from information_retrieval_spark.streaming.ingest import run_incremental_indexing
 
 SECTIONS = {"title": "path", "abstract": "content"}
@@ -183,9 +182,6 @@ def test_streaming_ingest_auto_compacts_tiered(spark, tmp_path):
     assert _results(SearchEngine(spark, idx)) == _results(
         SearchEngine(spark, fresh)
     )
-    assert _results(WandEngine(spark, idx)) == _results(
-        SearchEngine(spark, fresh)
-    )
 
 
 def test_streaming_readd_of_removed_id_resurrects(spark, tmp_path):
@@ -196,7 +192,7 @@ def test_streaming_readd_of_removed_id_resurrects(spark, tmp_path):
     tombstones close it structurally: the streamed segment's _SEQ exceeds
     the tombstone's upto, so no add-time guard is needed on any path.
     Pinned end-to-end here: remove → stream a batch re-adding the id with
-    NEW content → both engines answer exactly like a fresh build over
+    NEW content → the engine answers exactly like a fresh build over
     (survivors + new content)."""
     from information_retrieval_spark.index.maintenance import IndexMaintenance
 
@@ -230,4 +226,3 @@ def test_streaming_readd_of_removed_id_resurrects(spark, tmp_path):
                 + [readded] + list(rows[100:120])))
     want = _results(SearchEngine(spark, fresh))
     assert _results(SearchEngine(spark, idx)) == want
-    assert _results(WandEngine(spark, idx)) == want

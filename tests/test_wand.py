@@ -1,14 +1,13 @@
-"""Block-max WAND == exhaustive BM25 (rank-identical), SURVEY.md §7 M5.
-
-The WAND path must agree with the exhaustive scorer (`query/engine.py`,
-itself oracle-checked in test_rank_identity.py) on the full reference query
-set — scores to 1e-9 after rounding, ranks exactly.
+"""Block-max WAND over the packed index == the pure-Python oracle
+(`tests/oracle.py`, an exhaustive scorer of the reference semantics),
+SURVEY.md §7 M5: ranks exactly, scores to rel 1e-9.
 """
 
 import pytest
 
 from information_retrieval_spark.fixtures import make_queries
-from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
+from information_retrieval_spark.query.engine import QuerySpec
+from tests.oracle import assert_ranked_equal, ranked_rows
 
 
 @pytest.fixture(scope="module")
@@ -18,42 +17,29 @@ def wand(spark, index_dir):
     return WandEngine(spark, index_dir)
 
 
-@pytest.fixture(scope="module")
-def exhaustive(spark, index_dir):
-    return SearchEngine(spark, index_dir)
+def _matches_oracle(wand, oracle, specs):
+    got = ranked_rows(wand.search(specs))
+    want = {s.query_id: oracle.answer(s) for s in specs}
+    want = {q: v for q, v in want.items() if v}
+    assert set(got) == set(want), (set(got) ^ set(want))
+    for qid in want:
+        assert_ranked_equal(got[qid], want[qid], f"query {qid}")
 
 
-def _rows(df):
-    out = {}
-    for r in df.collect():
-        out.setdefault(r.query_id, []).append(
-            (r.rank, r.doc_id, round(r.score, 6))
-        )
-    for v in out.values():
-        v.sort()
-    return out
-
-
-def test_wand_matches_exhaustive_on_query_set(wand, exhaustive):
+def test_wand_matches_exhaustive_on_query_set(wand, oracle):
     specs = [
         QuerySpec(q.query_id, q.query_text, "okapi25", 10,
                   spell=False, match_mode="exact")
         for q in make_queries(30)
         if q.method == "okapi25"
     ]
-    got = _rows(wand.search(specs))
-    want = _rows(exhaustive.search(specs))
-    assert set(got) == set(want), (set(got) ^ set(want))
-    for qid in want:
-        assert got[qid] == want[qid], f"query {qid}: {got[qid]} != {want[qid]}"
+    _matches_oracle(wand, oracle, specs)
 
 
-def test_wand_k_all(wand, exhaustive):
+def test_wand_k_all(wand, oracle):
     spec = [QuerySpec(900, "tokenizer stream buffer", "okapi25", -1,
                       spell=False, match_mode="exact")]
-    got = _rows(wand.search(spec))
-    want = _rows(exhaustive.search(spec))
-    assert got == want
+    _matches_oracle(wand, oracle, spec)
 
 
 def test_wand_absent_term_only(wand):
@@ -62,7 +48,7 @@ def test_wand_absent_term_only(wand):
     assert wand.search(spec).count() == 0
 
 
-def test_mixed_match_modes_raise(wand, exhaustive):
+def test_mixed_match_modes_raise(wand):
     """A batch is answered in one match mode: a prefix query behind an
     exact one must not silently get exact answers."""
     batch = [
@@ -71,14 +57,21 @@ def test_mixed_match_modes_raise(wand, exhaustive):
         QuerySpec(905, "tok", "okapi25", 10, spell=False,
                   match_mode="prefix"),
     ]
-    for engine in (wand, exhaustive):
-        with pytest.raises(ValueError, match="mixed match modes"):
-            engine.search(batch)
+    with pytest.raises(ValueError, match="mixed match modes"):
+        wand.search(batch)
 
 
-def test_empty_batch(wand, exhaustive):
+def test_empty_batch(wand):
     assert wand.search([]).collect() == []
-    assert exhaustive.search([]).collect() == []
+
+
+def test_search_engine_is_the_one_engine():
+    from information_retrieval_spark.query import engine
+    from information_retrieval_spark.query.wand import WandEngine
+
+    assert engine.SearchEngine is WandEngine
+    with pytest.raises(AttributeError):
+        engine.NoSuchEngine
 
 
 def test_packed_df_matches_term_df(spark, index_dir):
@@ -125,26 +118,20 @@ def test_head_term_postings_split_across_buckets(spark, index_dir):
     assert n_buckets >= 6, f"head term '{top}' concentrated in {n_buckets} buckets"
 
 
-def test_wand_prefix_mode_matches_exhaustive(wand, exhaustive):
+def test_wand_prefix_mode_matches_exhaustive(wand, oracle):
     """Prefix matching (the reference's DEFAULT trie semantics) through the
-    prefix-merged block lists must equal the exhaustive engine's prefix path,
+    prefix-merged block lists must equal the oracle's prefix semantics,
     including spell correction (quirk Q7)."""
-    from information_retrieval_spark.fixtures import make_queries
-
     specs = [
         QuerySpec(q.query_id, q.query_text, "okapi25", 10,
                   spell=True, match_mode="prefix")
         for q in make_queries(30)
         if q.method == "okapi25"
     ]
-    got = _rows(wand.search(specs))
-    want = _rows(exhaustive.search(specs))
-    assert set(got) == set(want), (set(got) ^ set(want))
-    for qid in want:
-        assert got[qid] == want[qid], f"query {qid}: {got[qid]} != {want[qid]}"
+    _matches_oracle(wand, oracle, specs)
 
 
-def test_wand_empty_query_prefix_mode(wand, exhaustive):
+def test_wand_empty_query_prefix_mode(wand, oracle):
     """A batch whose queries tokenize to zero terms (empty / stop-word-only
     text) must return an empty frame in prefix mode, not crash in
     _expand_prefix (prefix is the QuerySpec default)."""
@@ -153,20 +140,20 @@ def test_wand_empty_query_prefix_mode(wand, exhaustive):
         QuerySpec(903, "the", "okapi25", 10, spell=False, match_mode="prefix"),
     ]
     assert wand.search(specs).count() == 0
-    assert exhaustive.search(specs).count() == 0
+    assert all(not oracle.answer(s) for s in specs)
 
 
-def test_wand_rejects_tfidf_methods(wand):
-    """The packed blocks carry BM25 bounds only — a ltn/ltc spec must be
-    refused loudly, never silently scored as BM25 (SearchEngine is the
-    tf-idf path)."""
-    import pytest as _pytest
+def test_unknown_method_raises(spark, index_dir):
+    """A method outside okapi25 / ltn-lnn / ltc-lnc is refused by name,
+    never answered with nothing."""
+    from information_retrieval_spark.query.engine import SearchEngine
 
-    for method in ("ltn-lnn", "ltc-lnc"):
-        spec = [QuerySpec(903, "tokenizer stream", method, 5, spell=False,
-                          match_mode="exact")]
-        with _pytest.raises(ValueError, match="okapi25"):
-            wand.search(spec)
+    spec = [QuerySpec(903, "tokenizer stream", "okapi25", 5, spell=False,
+                      match_mode="exact"),
+            QuerySpec(904, "tokenizer stream", "bm25", 5, spell=False,
+                      match_mode="exact")]
+    with pytest.raises(ValueError, match="unknown ranking method.*'bm25'"):
+        SearchEngine(spark, index_dir).search(spec)
 
 
 def test_wand_prefix_expansion_cap(spark, index_dir, wand):

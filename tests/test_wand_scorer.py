@@ -1,4 +1,4 @@
-"""WandEngine's per-bucket scorer against a brute-force BM25, no Spark.
+"""The ranked engine's per-bucket scorer against a brute force, no Spark.
 
 `_Bucket.top_k` scores one doc-hash bucket: the packed blocks of the
 batch's terms (`index/pack.py::_pack_frame`, one run per LSM segment) plus
@@ -6,12 +6,15 @@ the bucket's side rows (doclen, seq-scoped tombstones, categories). These
 tests build such buckets in pandas and compare the scorer's answer, merged
 the way `WandEngine.search` merges bucket lists, with a scorer written here
 over the unpacked postings: live postings only, prefix expansions summed
-per (doc, section) before BM25 saturation, filters applied, top-k under
-(-round(score, 9), doc_id).
+per (doc, section) before BM25 saturation or tf-idf's 1 + ln tf (ltc-lnc
+then divides by the norm over the query's matched lists in that doc and
+section), filters applied, top-k under (-round(score, 9), doc_id).
 
-A pruning test counts the bytes handed to the varint decoder on a skewed
+Pruning tests count the bytes handed to the varint decoder on a skewed
 bucket: the per-block bounds must let a k=3 query skip nearly every block.
 """
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -68,7 +71,8 @@ def _live(postings: pd.DataFrame, dels) -> pd.DataFrame:
 
 
 def _brute(postings, dels, cats, meta, plan) -> list[tuple[int, float]]:
-    """Top-k (doc_id, score) by scoring every live posting."""
+    """Top-k (doc_id, score) by scoring every live posting with the
+    query's method."""
     live = _live(postings, dels)
     ok = set(live.doc_id)
     if plan.want is not None:
@@ -80,13 +84,22 @@ def _brute(postings, dels, cats, meta, plan) -> list[tuple[int, float]]:
     for t in plan.exclude:
         ok -= set(live.doc_id[live.term == t])
     score: dict[int, float] = {}
+    cells: dict[tuple, list] = {}  # (doc, section) → [(weight, 1 + ln tf)]
     for (qterm, s), m in meta["terms"].items():
         hit = live[live.term.isin(plan.qterms[qterm])
                    & (live.section == s) & live.doc_id.isin(ok)]
         for doc, g in hit.groupby("doc_id"):
             tf, dl = float(g.tf.sum()), float(g.dl.iloc[0])
-            score[doc] = score.get(doc, 0.0) + m["weight"] * tf * (K1 + 1) / (
-                tf + K1 * (1 - B + B * dl / m["avgdl"]))
+            if meta["method"] == "okapi25":
+                score[doc] = score.get(doc, 0.0) + m["weight"] * tf * (
+                    K1 + 1) / (tf + K1 * (1 - B + B * dl / m["avgdl"]))
+            else:
+                cells.setdefault((doc, s), []).append(
+                    (m["weight"], 1.0 + math.log(tf)))
+    for (doc, _), lists in cells.items():
+        norm = (math.sqrt(sum(x * x for _, x in lists))
+                if meta["method"] == "ltc-lnc" else 1.0)
+        score[doc] = score.get(doc, 0.0) + sum(w * x / norm for w, x in lists)
     ranked = sorted(score.items(), key=lambda ds: (-round(ds[1], 9), ds[0]))
     return ranked if meta["k"] < 0 else ranked[: meta["k"]]
 
@@ -143,11 +156,14 @@ def corpus():
     return postings, dels, cats, _bucket(postings, dels, cats)
 
 
-def _meta(k, terms):
-    return {"k": k, "terms": {
+def _meta(k, terms, method="okapi25"):
+    return {"k": k, "method": method, "terms": {
         (q, s): {"weight": w * (0.8 if s == "title" else 0.2),
                  "avgdl": 30.0 + (s == "title")}
         for q, w in terms.items() for s in SECTIONS}}
+
+
+METHODS = ["okapi25", "ltn-lnn", "ltc-lnc"]
 
 
 QUERIES = {
@@ -164,12 +180,16 @@ QUERIES = {
 }
 
 
-@pytest.mark.parametrize("k", [1, 10, -1, 0])
-@pytest.mark.parametrize("name", sorted(QUERIES))
-def test_top_k_matches_brute_force(corpus, name, k):
+@pytest.mark.parametrize("name, k, method", [
+    # okapi25 cases keep their method-less ids
+    pytest.param(name, k, method, id="-".join(
+        map(str, (name, k) if method == "okapi25" else (method, name, k))))
+    for method in METHODS for name in sorted(QUERIES) for k in (1, 10, -1, 0)
+])
+def test_top_k_matches_brute_force(corpus, name, k, method):
     postings, dels, cats, bucket = corpus
     plan, terms = QUERIES[name]
-    meta = _meta(k, terms)
+    meta = _meta(k, terms, method)
     want = _brute(postings, dels, cats, meta, plan)
     assert k <= 0 or len(want) == k
     _same(_scored(bucket, meta, plan), want)
@@ -179,11 +199,12 @@ def test_updated_doc_scores_its_live_version(corpus):
     """Doc 10 was re-added twice: only its newest postings may score."""
     postings, dels, cats, bucket = corpus
     plan, terms = QUERIES["prefix"]
-    meta = _meta(-1, terms)
-    got = dict(_scored(bucket, meta, plan))
-    want = dict(_brute(postings, dels, cats, meta, plan))
-    assert 10 in want and 5 not in got and 950 not in got
-    assert got[10] == pytest.approx(want[10], abs=1e-9)
+    for method in METHODS:
+        meta = _meta(-1, terms, method)
+        got = dict(_scored(bucket, meta, plan))
+        want = dict(_brute(postings, dels, cats, meta, plan))
+        assert 10 in want and 5 not in got and 950 not in got
+        assert got[10] == pytest.approx(want[10], abs=1e-9), method
 
 
 @pytest.mark.parametrize("name", ["exact", "prefix"])
@@ -216,7 +237,7 @@ def test_near_ties_follow_the_rounded_order():
     bucket = _bucket(postings)
     plan = _Plan({"x": ["x"], "y": ["y"]}, None, (), ())
     for k in (1, 5, 35):
-        meta = {"k": k, "terms": {
+        meta = {"k": k, "method": "okapi25", "terms": {
             ("x", "title"): {"weight": 1.0, "avgdl": 20.0},
             ("y", "title"): {"weight": 1.0 + 1e-12, "avgdl": 20.0}}}
         want = _brute(postings, (), (), meta, plan)
@@ -230,7 +251,7 @@ def test_near_ties_follow_the_rounded_order():
 def test_block_bounds_skip_cold_blocks(monkeypatch):
     """Two dense terms over 12,032 docs (94 blocks each) and one hot block
     where both have large tf: a k=3 query must decode at most 5% of the
-    shard's block bytes."""
+    shard's block bytes, under okapi25 and under ltn-lnn."""
     n_docs, hot = 94 * 128, range(40 * 128, 41 * 128)
     tf = np.ones(n_docs, dtype=np.int64) + np.arange(n_docs) % 2
     tf[hot.start:hot.stop] = 20 + np.arange(128) % 13
@@ -241,9 +262,6 @@ def test_block_bounds_skip_cold_blocks(monkeypatch):
     })
     bucket = _bucket(rows)
     plan = _Plan({"a": ["a"], "b": ["b"]}, None, (), ())
-    meta = {"k": 3, "terms": {
-        ("a", "title"): {"weight": 1.5, "avgdl": 50.0},
-        ("b", "title"): {"weight": 0.5, "avgdl": 50.0}}}
     decoded = []
 
     def counting(fn):
@@ -254,13 +272,50 @@ def test_block_bounds_skip_cold_blocks(monkeypatch):
 
     for name in ("varint_decode", "decode_doc_gaps"):
         monkeypatch.setattr(wand, name, counting(getattr(wand, name)))
-    got = _scored(bucket, meta, plan)
-    _same(got, _brute(rows, (), (), meta, plan))
     shard = _pack_frame(rows.assign(bucket=0))
     total = sum(shard[c].map(len).sum()
                 for c in ("docs_bin", "tfs_bin", "dls_bin"))
     assert len(shard) == 188
-    assert sum(decoded) <= 0.05 * total, (sum(decoded), total)
+    for method in ("okapi25", "ltn-lnn"):
+        meta = {"k": 3, "method": method, "terms": {
+            ("a", "title"): {"weight": 1.5, "avgdl": 50.0},
+            ("b", "title"): {"weight": 0.5, "avgdl": 50.0}}}
+        decoded.clear()
+        got = _scored(bucket, meta, plan)
+        assert sum(decoded) <= 0.05 * total, (method, sum(decoded), total)
+        _same(got, _brute(rows, (), (), meta, plan))
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_negative_section_weight_keeps_top_k_exact(method):
+    """A list with a negative section weight can only lower a score, so its
+    blocks must not lower an interval's bound. stream and token/title weigh
+    +1.0 and +0.5; buf/abstract weighs -2.0 and covers only the lower half
+    of the doc-id space, where the best docs lack it. The pruned top-k
+    must equal the brute force."""
+    rng = np.random.default_rng(3)
+    rows = []
+    for doc in range(3000):
+        dl = int(rng.integers(3, 60))
+        rows.append(("stream", "title", 1, doc, int(rng.integers(1, 10)), dl))
+        if rng.random() < 0.3:
+            rows.append(("token", "title", 1, doc, int(rng.integers(1, 10)),
+                         dl))
+        if doc < 1500 and rng.random() < 0.6:
+            rows.append(("buf", "abstract", 1, doc, int(rng.integers(1, 10)),
+                         int(rng.integers(3, 60))))
+    postings = pd.DataFrame(
+        rows, columns=["term", "section", "seq", "doc_id", "tf", "dl"])
+    bucket = _bucket(postings)
+    plan = _Plan({"stream": ["stream"], "token": ["token"], "buf": ["buf"]},
+                 None, (), ())
+    for k in (1, 3, 10):
+        meta = {"k": k, "method": method, "terms": {
+            ("stream", "title"): {"weight": 1.0, "avgdl": 30.0},
+            ("token", "title"): {"weight": 0.5, "avgdl": 30.0},
+            ("buf", "abstract"): {"weight": -2.0, "avgdl": 30.0}}}
+        _same(_scored(bucket, meta, plan),
+              _brute(postings, (), (), meta, plan))
 
 
 def test_round9_matches_python_round():

@@ -177,26 +177,47 @@ def test_stats_filter_and_exclude_terms(spark, maintained):
     _assert_stats_match(spark, maintained, specs)
 
 
-def test_warm_exact_batch_runs_in_four_jobs(spark, index_dir):
-    """A warm engine answers an exact-mode batch in at most 4 Spark jobs:
-    the shard's exchange, its cache, the statistics pass and the scoring
-    pass (the side frame and the spell dictionary are already cached)."""
+def _warm_batch_jobs(spark, index_dir, method_of):
+    """(rows, Spark jobs) of one exact-mode batch on a warm engine, query i
+    ranked with ``method_of(i)``."""
     texts = ["tokenizer stream", "buffer matrix parser", "tokeniezr buffre"]
-    warm = [QuerySpec(i, t, "okapi25", 10, match_mode="exact")
+    warm = [QuerySpec(i, t, method_of(i), 10, match_mode="exact")
             for i, t in enumerate(texts)]
-    batch = [QuerySpec(i, t, "okapi25", 10, match_mode="exact")
+    batch = [QuerySpec(i, t, method_of(i), 10, match_mode="exact")
              for i, t in enumerate(reversed(texts))]
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     with WandEngine(spark, index_dir) as eng:
         eng.search(warm).collect()
-        ungrouped = set(tracker.getJobIdsForGroup(None))
+        # the group's and the ungrouped jobs so far (earlier calls)
+        seen = set(tracker.getJobIdsForGroup("wand-warm-batch"))
+        seen |= set(tracker.getJobIdsForGroup(None))
         sc.setJobGroup("wand-warm-batch", "one warm WAND batch")
         try:
             rows = eng.search(batch).collect()
         finally:
             sc._jsc.clearJobGroup()
         jobs = set(tracker.getJobIdsForGroup("wand-warm-batch"))
-        jobs |= set(tracker.getJobIdsForGroup(None)) - ungrouped
+        jobs |= set(tracker.getJobIdsForGroup(None))
+    return rows, len(jobs - seen)
+
+
+def test_warm_exact_batch_runs_in_four_jobs(spark, index_dir):
+    """A warm engine answers an exact-mode batch in at most 4 Spark jobs:
+    the shard's exchange, its cache, the statistics pass and the scoring
+    pass (the side frame and the spell dictionary are already cached)."""
+    rows, jobs = _warm_batch_jobs(spark, index_dir, lambda i: "okapi25")
     assert rows
-    assert len(jobs) <= 4, f"{len(jobs)} jobs"
+    assert jobs <= 4, f"{jobs} jobs"
+
+
+def test_warm_tfidf_batch_runs_in_five_jobs(spark, index_dir):
+    """A warm exact-mode batch mixing ltn-lnn and ltc-lnc on an index
+    without deletes runs at most 5 Spark jobs: an okapi25 batch's 4 plus
+    the term dictionary lookup its query weights need (N is the stats
+    ledger's doc count, read without a job)."""
+    rows, jobs = _warm_batch_jobs(
+        spark, index_dir, lambda i: ("ltn-lnn", "ltc-lnc")[i % 2]
+    )
+    assert {r.query_id for r in rows} == {0, 1, 2}
+    assert jobs <= 5, f"{jobs} jobs"
