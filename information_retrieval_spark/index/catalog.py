@@ -38,9 +38,10 @@ Guarantees (single concurrent writer, any number of readers):
   a live snapshot references (GC is explicit, `expire`).
 * **Time travel** — every resolver takes ``version=``; old snapshots stay
   queryable until expired.
-* **Writer fencing** — the snapshot file is created with O_EXCL; two racing
-  writers cannot both commit the same version (the loser gets EEXIST and
-  must retry on the new current).
+* **Single writer** — the snapshot file is created with O_EXCL, but its
+  crashed-commit reclaim can delete a racing live writer's file, so two
+  concurrent writers can both report the same version; one writer at a
+  time is required (ROADMAP item 3).
 
 Legacy interop: an index built before this layer (plain ``<index_dir>/<t>``
 directories, no ``catalog/``) resolves through the legacy fallback in
@@ -190,11 +191,12 @@ class Catalog:
             "tables": tables,
         }
         os.makedirs(self.cat_dir, exist_ok=True)
-        # O_EXCL fences concurrent writers: the second committer of the same
-        # parent fails here instead of silently clobbering. An existing file
-        # at new_v with CURRENT still below it is NOT a concurrent winner —
-        # it is the orphan of a commit that crashed before the pointer swap
-        # (versions() never exposes it); reclaim it and continue.
+        # O_EXCL catches a second committer only once the first has swapped
+        # CURRENT. An existing file at new_v with CURRENT still below it is
+        # taken for the orphan of a commit that crashed before the pointer
+        # swap (versions() never exposes it) and reclaimed — which is wrong
+        # if a live writer is between its create and its swap, so a single
+        # writer is required (ROADMAP item 3).
         path = os.path.join(self.cat_dir, f"v{new_v}.json")
         try:
             fd = os.open(path, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
@@ -391,23 +393,41 @@ def read_table(
     return spark.read.parquet(*dirs)
 
 
+def _scan(spark: SparkSession, table: str, d: str) -> DataFrame:
+    """One data dir of ``table``. doc_meta is read with an explicit schema:
+    partition-column TYPE INFERENCE would otherwise read a numeric-looking
+    category ("007", "2024") back as int — losing the leading zero and
+    breaking both the per-dir union and the engines' string comparisons."""
+    if table == "doc_meta":
+        return (
+            spark.read.schema("doc_id long, category string")
+            .parquet(d)
+            .select("doc_id", "category")
+        )
+    return spark.read.parquet(d)
+
+
 def read_seq_table(
     spark: SparkSession,
     index_dir: str,
     table: str,
     version: int | None = None,
+    dirs: list[str] | None = None,
 ) -> DataFrame | None:
     """Like `read_table`, plus a ``seg_seq`` column carrying each row's
     segment sequence (the `_SEQ` sidecar of the data dir it came from;
     0 for legacy dirs). Dirs are scanned separately and unioned — filters
     still push into every per-dir scan — so seq-scoped tombstones
     (`filter_deleted`) can hide a doc's OLD rows while its re-added rows
-    in newer segments stay visible."""
-    dirs = table_dirs(index_dir, table, version)
+    in newer segments stay visible. ``dirs`` names the data dirs to read
+    (some of one snapshot's segments) instead of the snapshot's whole
+    list."""
+    if dirs is None:
+        dirs = table_dirs(index_dir, table, version)
     if not dirs:
         return None
     parts = [
-        spark.read.parquet(d).withColumn(
+        _scan(spark, table, d).withColumn(
             "seg_seq", F.lit(segment_seq(d)).cast("long")
         )
         for d in dirs
@@ -440,28 +460,55 @@ def read_deletes(
     )
 
 
-def filter_deleted(df: DataFrame, deletes: DataFrame | None) -> DataFrame:
-    """Drop rows hidden by seq-scoped tombstones: a row is dead iff some
+def filter_deleted(
+    df: DataFrame, deletes: DataFrame | None, hidden: bool = False
+) -> DataFrame:
+    """Split rows by seq-scoped tombstones: a row is dead iff some
     tombstone for its doc_id has ``upto >= seg_seq``. ``df`` must carry
-    the ``seg_seq`` column (`read_seq_table`); it is dropped on return.
+    the ``seg_seq`` column (`read_seq_table`). By default the live rows
+    are returned, ``seg_seq`` dropped; ``hidden=True`` returns the dead
+    rows instead, ``seg_seq`` kept (a hidden doc VERSION is its
+    ``(doc_id, seg_seq)``).
 
-    Plan shape: ONE broadcast hash anti-join — doc_id is the equi key,
-    ``upto >= seg_seq`` rides as the join's extra condition, so this stays
-    a BroadcastHashJoin (no nested loop) at any corpus size; the delete
-    vector side is mutation-sized, never corpus-sized."""
+    Plan shape: ONE broadcast hash join (anti for live, semi for hidden)
+    — doc_id is the equi key, ``upto >= seg_seq`` rides as the join's
+    extra condition, so this stays a BroadcastHashJoin (no nested loop)
+    at any corpus size; the delete vector side is mutation-sized, never
+    corpus-sized."""
     if deletes is None:
-        return df.drop("seg_seq")
+        return df.limit(0) if hidden else df.drop("seg_seq")
     d = deletes.select(
         F.col("doc_id").alias("__dd_doc"), F.col("upto").alias("__dd_upto")
     )
-    return (
-        df.join(
-            F.broadcast(d),
-            (df["doc_id"] == d["__dd_doc"])
-            & (d["__dd_upto"] >= df["seg_seq"]),
-            "left_anti",
-        )
-        .drop("seg_seq")
+    out = df.join(
+        F.broadcast(d),
+        (df["doc_id"] == d["__dd_doc"]) & (d["__dd_upto"] >= df["seg_seq"]),
+        "semi" if hidden else "left_anti",
+    )
+    return out if hidden else out.drop("seg_seq")
+
+
+def count_live_docs(
+    n_docs: int, doclen: DataFrame, deletes: DataFrame | None
+) -> int:
+    """The one live-doc rule: the stats ledger's ``n_docs`` minus the
+    distinct doc VERSIONS ``(doc_id, seg_seq)`` of ``doclen`` (a
+    `read_seq_table` frame) that tombstones hide. The ledger counts every
+    added doc, so a live doc with no indexed tokens (no doclen rows)
+    stays counted, as a fresh build counts it; a hidden version that
+    never had doclen rows stays counted too, until a rebuild.
+
+    Over all of a snapshot's doclen this is tf-idf's N. Over the doclen of
+    the segments a compaction merges it is the ledger that compaction
+    writes: those versions are purged and their tombstones applied, and
+    versions in unmerged segments stay counted until their own merge."""
+    if deletes is None:
+        return n_docs
+    return n_docs - (
+        filter_deleted(doclen, deletes, hidden=True)
+        .select("doc_id", "seg_seq")
+        .distinct()
+        .count()
     )
 
 
@@ -565,33 +612,14 @@ def read_doc_meta(
     """doc_meta (doc_id, category), category-HIVE-PARTITIONED on disk so
     a category-restricted search prunes whole partition directories
     (PartitionFilters, no data files of other categories touched). Dirs
-    are scanned separately and unioned — Spark's multi-root partition
-    discovery needs a shared basePath that committed data dirs don't
-    have — which preserves per-scan pruning. Tolerates legacy
-    unpartitioned dirs (same columns either way)."""
-    dirs = table_dirs(index_dir, "doc_meta", version)
-    if not dirs:
-        return None
-    # explicit schema: partition-column TYPE INFERENCE would otherwise
-    # read a numeric-looking category ("007", "2024") back as int —
-    # losing the leading zero and breaking both the per-dir union and the
-    # engines' string comparisons; a user schema pins it to string
-    parts = []
-    for d in dirs:
-        p = (
-            spark.read.schema("doc_id long, category string")
-            .parquet(d)
-            .select("doc_id", "category")
-        )
-        if with_seq:
-            p = p.withColumn(
-                "seg_seq", F.lit(segment_seq(d)).cast("long")
-            )
-        parts.append(p)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    are scanned separately and unioned (`read_seq_table`) — Spark's
+    multi-root partition discovery needs a shared basePath that committed
+    data dirs don't have — which preserves per-scan pruning. Tolerates
+    legacy unpartitioned dirs (same columns either way)."""
+    meta = read_seq_table(spark, index_dir, "doc_meta", version)
+    if meta is None or with_seq:
+        return meta
+    return meta.drop("seg_seq")
 
 
 def prune_doc_meta(doc_meta: DataFrame, wanted: list[str]) -> DataFrame:

@@ -26,10 +26,13 @@ on top of the Iceberg-style snapshot catalog (index/catalog.py):
   cost ∝ delta even for docs whose old rows live in the base segment of
   a 10^12-file index; the physical purge rides the next normal
   compaction instead of a synchronous base rewrite.
-* **compact()** — the ONE physical rewrite: drops tombstone-hidden rows
-  (seq-scoped, per segment), merges all LSM segments back into a single
-  packed segment, refreshes aggregates, clears the delete vector — all
-  visible atomically via one snapshot.
+* **compact(segments=None)** — the ONE physical rewrite, one merge path:
+  merges the named LSM segments (default: every segment) into one new
+  segment (or K size-capped ones), drops the tombstone-hidden rows in
+  them (seq-scoped, per segment), re-derives their aggregates and drops
+  the tombstones no unmerged segment still needs — all visible
+  atomically via one snapshot. A full compact is the merge of every
+  segment, so it clears the delete vector.
 
 Crash safety comes from the catalog, not from journals: every step of a
 mutation only creates new files; visibility is a single atomic CURRENT
@@ -39,8 +42,10 @@ queryable; orphaned data dirs are garbage, collected by
 commit applies exactly once (``Catalog.committed_token``). Old snapshots
 remain queryable (engines take ``version=``) until expired.
 
-Single-writer assumption (as before); the catalog's O_EXCL snapshot file
-fences a second concurrent writer into an explicit failure.
+A single writer is required. The catalog's O_EXCL snapshot file does NOT
+fence a second concurrent writer: its crashed-commit reclaim branch can
+delete a live writer's snapshot file, and both writers then report the
+same version (ROADMAP item 3).
 """
 
 from __future__ import annotations
@@ -609,8 +614,18 @@ class IndexMaintenance:
     ) -> int | None:
         """Physically drop deleted docs AND merge LSM segments. Returns
         the committed snapshot version, or None when there was nothing to
-        do (no deletes, nothing to merge — callers like the CLI report
-        the no-op honestly instead of claiming a compaction happened).
+        do (no deletes, nothing to merge or split — callers like the CLI
+        report the no-op honestly instead of claiming a compaction
+        happened).
+
+        ``segments=[i, j, ...]`` names the segments to merge (indices into
+        the packed dir list, 0 = base); every other segment's files stay
+        untouched, so the cost is ∝ the merged segments' bytes, never the
+        index — the 10^12-file economics, where a full rewrite per
+        compaction is unpayable. ``segments=None`` (default) is the same
+        merge over EVERY segment: it applies every tombstone (no unmerged
+        segment survives to keep one alive), so the delete vector clears.
+        One merge path serves both; see ``_compact_segments``.
 
         ``target_bytes`` (default: the instance's
         ``target_segment_bytes``) caps each OUTPUT segment at ~that many
@@ -620,35 +635,15 @@ class IndexMaintenance:
         ``compact(target_bytes=...)`` SPLITS an oversized base instead
         of growing it. Splits share one snapshot commit and one _SEQ.
 
-        ``segments=None`` (default): merge ALL segments into
-        one: rewrite postings/doclen/doc_meta/packed, re-derive
-        term_df/stats/lineage, clear the delete vector — all new dirs,
-        published by a single snapshot commit. A crash anywhere leaves the
-        previous snapshot intact; the re-run recomputes from it and
-        converges (orphaned dirs are GC'd by ``expire``).
-
-        ``segments=[i, j, ...]``: TIERED (partial) compaction — merge only
-        the named segments (indices into the packed dir list, 0 = base)
-        into one new segment, leaving every other segment's files
-        untouched. Cost ∝ the merged segments' bytes, never the index:
-        the 10^12-file economics, where a full rewrite per compaction is
-        unpayable. Deletes hitting merged segments are applied physically
-        and removed from the delete vector; deletes against unmerged
-        segments stay logical. See ``_compact_segments``.
-
-        Deleted docs that never produced a doclen row (all-stop-word
-        content) are a documented blind spot of the live-doc count.
-
         Refuses to run while a frozen UNCOMMITTED stage exists: the
         stage's merged stats were computed against the pre-crash snapshot,
         and its later recovery commit would publish them over this
-        compact's state (n_docs decrement silently lost — the delete
-        vector is cleared here, so no future compact repairs it). Call
+        compact's state (n_docs decrement silently lost — the applied
+        tombstones are gone, so no future compact repairs it). Call
         `recover_stages()` (or retry the crashed add) first. A frozen
         stage whose token is already committed is fine — its stats are
         live and this compact supersedes them (that is exactly the
         auto-compact window inside `add_documents`)."""
-        spark = self.spark
         pending = self._unrecovered_stages()
         if pending:
             raise RuntimeError(
@@ -658,117 +653,12 @@ class IndexMaintenance:
             )
         if target_bytes is None:
             target_bytes = self.target_segment_bytes
-        if segments is not None:
-            return self._compact_segments(segments, target_bytes=target_bytes)
-        if target_bytes is not None:
-            # size-capped FULL compact: route through the splitting merge
-            # over every segment — it applies all tombstones (no unmerged
-            # segment survives to keep one alive), so the vector clears
-            # exactly as the single-output path does
+        if segments is None:
             n = len(self.cat.table_dirs("packed"))
             if n == 0:
                 return None
-            return self._compact_segments(
-                list(range(n)), target_bytes=target_bytes
-            )
-        from information_retrieval_spark.index.catalog import (
-            filter_deleted,
-            read_doc_meta,
-            read_seq_table,
-            write_segment_seq,
-        )
-
-        d = self.deleted()
-        n_segments = len(self.cat.table_dirs("packed"))
-        if d is None and n_segments <= 1:
-            return None  # nothing to drop, nothing to merge
-        token = uuid.uuid4().hex[:12]
-        # the merged output is a NEW segment: its seq is the version this
-        # compact will commit as, so every pre-existing tombstone (upto <
-        # seq) is already applied and never re-hides the survivors
-        new_seq = (self.cat.current_version() or 0) + 1
-
-        changes: dict = {}
-
-        def fresh(table: str) -> str:
-            rel = self.cat.new_data_dir(table, token)
-            changes[table] = ("set", [rel])
-            return self.cat.abspath(rel)
-
-        for table in ("postings_flat", "doclen"):
-            t = read_seq_table(spark, self.index_dir, table)
-            filter_deleted(t, d).write.mode("overwrite").parquet(
-                fresh(table)
-            )
-            write_segment_seq(self.cat.abspath(changes[table][1][0]), new_seq)
-        if self.cat.table_dirs("doc_meta"):
-            filter_deleted(
-                read_doc_meta(spark, self.index_dir, with_seq=True), d
-            ).sortWithinPartitions("doc_id").write.mode(
-                "overwrite"
-            ).partitionBy("category").parquet(fresh("doc_meta"))
-            write_segment_seq(
-                self.cat.abspath(changes["doc_meta"][1][0]), new_seq
-            )
-        new_postings = spark.read.parquet(
-            self.cat.abspath(changes["postings_flat"][1][0])
-        )
-        new_doclen = spark.read.parquet(
-            self.cat.abspath(changes["doclen"][1][0])
-        )
-        # n_docs is RECOMPUTED from the compacted doclen (distinct live
-        # docs) rather than decremented: under seq-scoped tombstones the
-        # ledger may transiently over-count re-added/updated docs between
-        # compactions (update = tombstone + add increments by the delta
-        # while the hidden old version still awaits purge); the full
-        # compact is the point where the exact count is one cheap
-        # aggregate over data it rewrites anyway. Same all-stop-word-doc
-        # blind spot as the ledger (such docs have no doclen rows).
-        st = read_stats_pdf(self.index_dir).copy()
-        n_del = int(st["n_docs"].iloc[0]) - int(
-            new_doclen.select("doc_id").distinct().count()
-        )
-        st["n_docs"] = int(st["n_docs"].iloc[0]) - n_del
-
-        new_postings.groupBy("term").agg(
-            F.countDistinct("doc_id").alias("df")
-        ).write.mode("overwrite").parquet(fresh("term_df"))
-
-        # vocab content is unchanged by deletes (spell dictionary keeps all
-        # terms ever indexed, as the reference's bigram index does), but
-        # accumulated delta dirs collapse back to one pre-distincted dir
-        from information_retrieval_spark.index.catalog import read_vocab
-
-        if len(self.cat.table_dirs("vocab")) > 1:
-            read_vocab(spark, self.index_dir).write.mode(
-                "overwrite"
-            ).parquet(fresh("vocab"))
-
-        stats_dir = fresh("stats")
-        os.makedirs(stats_dir, exist_ok=True)
-        st.to_parquet(os.path.join(stats_dir, "stats.parquet"))
-
-        from information_retrieval_spark.index.pack import pack_postings
-
-        packed_dir = fresh("packed")
-        pack_postings(new_postings, new_doclen, packed_dir)
-        write_segment_seq(packed_dir, new_seq)
-
-        lineage_frame(
-            {
-                "postings_flat": new_postings,
-                "doclen": new_doclen,
-                "packed": spark.read.parquet(packed_dir),
-            }
-        ).write.mode("overwrite").parquet(fresh("lineage"))
-
-        changes["deleted_docs"] = ("drop", None)
-        return self.cat.commit(
-            changes,
-            "compact",
-            {"stage_token": token, "n_removed": n_del,
-             "segments_merged": n_segments},
-        )
+            segments = list(range(n))
+        return self._compact_segments(segments, target_bytes=target_bytes)
 
     # ---------------------------------------------------- tiered compaction
 
@@ -876,15 +766,16 @@ class IndexMaintenance:
         hides (checked seq-aware against the unmerged doclen dirs); the
         rest stay logical and keep filtering at query time. The merged
         output's _SEQ is this commit's version — newer than every
-        pre-existing tombstone, so survivors can't be re-hidden. n_docs
-        drops by the count of distinct hidden (doc, segment) versions
-        purged, keeping the ledger invariant (live docs + hidden
-        versions awaiting purge). Same all-stop-word blind spot as full
-        compact. Crash safety: identical — fresh dirs only, one atomic
-        snapshot commit at the end."""
+        pre-existing tombstone, so survivors can't be re-hidden. The
+        ledger's n_docs becomes `catalog.count_live_docs` over the merged
+        doclen: the hidden (doc, segment) versions purged here leave it,
+        so it stays live docs + hidden versions awaiting purge, and after
+        a merge of every segment it is the live count queries use. Crash
+        safety: fresh dirs only, one atomic snapshot commit at the end."""
         from information_retrieval_spark.index.catalog import (
+            count_live_docs,
             filter_deleted,
-            segment_seq,
+            read_seq_table,
             write_segment_seq,
         )
 
@@ -900,10 +791,10 @@ class IndexMaintenance:
         bad_len = {t: len(d) for t, d in dirs.items() if len(d) != n_seg}
         if bad_len:
             raise RuntimeError(
-                "partial compaction needs per-segment dir alignment, but"
-                f" {bad_len} differ from packed's {n_seg} — this index's"
-                " history broke the one-dir-per-segment invariant; run a"
-                " full compact() instead"
+                "compaction needs one data dir per segment in every"
+                f" segmented table, but {bad_len} differ from packed's"
+                f" {n_seg} — this snapshot's dir lists are corrupt and no"
+                " merge can splice them; rebuild the index"
             )
         if segs[0] < 0 or segs[-1] >= n_seg:
             raise ValueError(
@@ -918,29 +809,14 @@ class IndexMaintenance:
         if len(segs) == 1 and d is None and n_out <= 1:
             return None  # nothing to merge, drop, or split
         token = uuid.uuid4().hex[:12]
-        # one seq per segment INDEX, read off the packed sidecars (every
-        # table's dir at index i belongs to the same segment/commit)
-        seq_of = [segment_seq(p) for p in dirs["packed"]]
         new_seq = (self.cat.current_version() or 0) + 1
 
-        def union_dirs(
-            table: str, which: list[int] | None = None, with_seq: bool = False
-        ) -> DataFrame | None:
+        def union_dirs(table: str, which: list[int] | None = None):
             idxs = segs if which is None else which
-            if not idxs:
-                return None
-            parts = []
-            for i in idxs:
-                pt = spark.read.parquet(dirs[table][i])
-                if with_seq:
-                    pt = pt.withColumn(
-                        "seg_seq", F.lit(seq_of[i]).cast("long")
-                    )
-                parts.append(pt)
-            out = parts[0]
-            for pt in parts[1:]:
-                out = out.unionByName(pt)
-            return out
+            return read_seq_table(
+                spark, self.index_dir, table,
+                dirs=[dirs[table][i] for i in idxs],
+            )
 
         changes: dict = {}
         new_rel: dict[str, list[str]] = {}
@@ -995,38 +871,19 @@ class IndexMaintenance:
                     ).write.mode("overwrite").parquet(dst)
             shutil.rmtree(scratch, ignore_errors=True)
 
-        # hidden (doc, segment) versions being purged — the ledger delta
-        merged_dl = union_dirs("doclen", with_seq=True)
-        if d is not None:
-            dd_r = d.select(
-                F.col("doc_id").alias("__dd_doc"),
-                F.col("upto").alias("__dd_upto"),
-            )
-            n_del_sub = (
-                merged_dl.join(
-                    F.broadcast(dd_r),
-                    (merged_dl["doc_id"] == dd_r["__dd_doc"])
-                    & (dd_r["__dd_upto"] >= merged_dl["seg_seq"]),
-                    "semi",
-                )
-                .select("doc_id", "seg_seq")
-                .distinct()
-                .count()
-            )
-        else:
-            n_del_sub = 0
+        st = read_stats_pdf(self.index_dir).copy()
+        n_before = int(st["n_docs"].iloc[0])
+        st["n_docs"] = count_live_docs(n_before, union_dirs("doclen"), d)
 
         for table in ("postings_flat", "doclen"):
-            split_write(filter_deleted(union_dirs(table, with_seq=True), d),
-                        table)
+            split_write(filter_deleted(union_dirs(table), d), table)
             for rel in new_rel[table]:
                 write_segment_seq(self.cat.abspath(rel), new_seq)
 
         if has_meta:
             split_write(
-                filter_deleted(
-                    union_dirs("doc_meta", with_seq=True), d
-                ).sortWithinPartitions("doc_id"),
+                filter_deleted(union_dirs("doc_meta"), d)
+                .sortWithinPartitions("doc_id"),
                 "doc_meta",
                 partition_cols=("category",),
             )
@@ -1038,7 +895,9 @@ class IndexMaintenance:
         # a split's postings is exact for that split's (disjoint) docs and
         # the cross-dir sum stays exact; vocab is term-keyed, so it splits
         # by TERM hash — the cross-dir distinct-union stays exact
-        split_write(union_dirs("vocab").distinct(), "vocab", key="term")
+        split_write(
+            union_dirs("vocab").select("term").distinct(), "vocab", key="term"
+        )
 
         from information_retrieval_spark.index.pack import pack_postings
 
@@ -1067,11 +926,6 @@ class IndexMaintenance:
                 fresh("lineage", j if n_out > 1 else None)
             )
 
-        # ledger decrement = hidden doc VERSIONS purged (n_del_sub above),
-        # keeping n_docs = live docs + hidden versions awaiting purge —
-        # exact through update/re-add sequences (full compact recomputes)
-        st = read_stats_pdf(self.index_dir).copy()
-        st["n_docs"] = int(st["n_docs"].iloc[0]) - n_del_sub
         stats_dir = fresh("stats")
         os.makedirs(stats_dir, exist_ok=True)
         st.to_parquet(os.path.join(stats_dir, "stats.parquet"))
@@ -1101,25 +955,13 @@ class IndexMaintenance:
             # tombstone holding the doc's re-added rows does NOT keep it
             # alive). The scan is the unmerged doclen's doc_id column with
             # the mutation-sized vector broadcast — no shuffle.
-            unmerged = [i for i in range(n_seg) if i not in set(segs)]
-            un_dl = union_dirs("doclen", which=unmerged, with_seq=True)
-            if un_dl is None:
+            unmerged = [i for i in range(n_seg) if i not in keep]
+            if not unmerged:
                 changes["deleted_docs"] = ("drop", None)
             else:
-                dd_r2 = d.select(
-                    F.col("doc_id").alias("__dd_doc"),
-                    F.col("upto").alias("__dd_upto"),
-                )
-                kept_ids = (
-                    un_dl.join(
-                        F.broadcast(dd_r2),
-                        (un_dl["doc_id"] == dd_r2["__dd_doc"])
-                        & (dd_r2["__dd_upto"] >= un_dl["seg_seq"]),
-                        "semi",
-                    )
-                    .select("doc_id")
-                    .distinct()
-                )
+                kept_ids = filter_deleted(
+                    union_dirs("doclen", unmerged), d, hidden=True
+                ).select("doc_id").distinct()
                 remaining = d.join(kept_ids, "doc_id", "semi")
                 if remaining.limit(1).count():
                     remaining.write.mode("overwrite").parquet(
@@ -1136,9 +978,8 @@ class IndexMaintenance:
             "compact",
             {
                 "stage_token": token,
-                "n_removed": n_del_sub,
+                "n_removed": n_before - int(st["n_docs"].iloc[0]),
                 "segments_merged": segs,
-                "partial": True,
                 "n_outputs": n_out,
                 "n_segments_before": n_seg,
                 "n_segments_after": n_seg - len(segs) + n_out,

@@ -42,7 +42,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.codec import varint_encode_offsets
@@ -71,93 +70,6 @@ PACKED_SCHEMA = T.StructType(
     ]
 )
 
-
-
-def _key_change(pdf: pd.DataFrame) -> np.ndarray:
-    """Boolean mask: row i starts a new (term, section, bucket) group.
-    Strings are factorized to int codes first (one C-level hash pass) —
-    elementwise object-array comparisons were the profile's hot spot."""
-    n = len(pdf)
-    change = np.empty(n, dtype=bool)
-    if n == 0:
-        return change
-    t_codes = pd.factorize(pdf["term"], use_na_sentinel=False)[0]
-    s_codes = pd.factorize(pdf["section"], use_na_sentinel=False)[0]
-    bucks = pdf["bucket"].to_numpy()
-    change[0] = True
-    change[1:] = (
-        (t_codes[1:] != t_codes[:-1])
-        | (s_codes[1:] != s_codes[:-1])
-        | (bucks[1:] != bucks[:-1])
-    )
-    return change
-
-
-def _pack_frame(
-    pdf: pd.DataFrame, change: np.ndarray | None = None
-) -> pd.DataFrame:
-    """Sorted (term, section, bucket, doc_id) rows → block rows, fully
-    vectorized: block boundaries and per-block (n, first/last doc, max_tf,
-    min_dl) come from one ``reduceat`` pass, and each binary column is
-    varint-encoded ONCE for the whole frame with per-block byte ranges
-    sliced out (LEB128 values are independent, so the slices are
-    byte-identical to per-block encodes). No per-group Python remains —
-    the former per-block codec calls dominated the pack stage's profile."""
-    n = len(pdf)
-    cols = [f.name for f in PACKED_SCHEMA.fields]
-    if n == 0:
-        return pd.DataFrame({c: [] for c in cols})
-    if change is None:
-        change = _key_change(pdf)
-    docs = pdf["doc_id"].to_numpy(np.uint64)
-    tfs = pdf["tf"].to_numpy(np.uint64)
-    dls = pdf["dl"].to_numpy(np.uint64)
-    gstarts = np.flatnonzero(change)
-    glens = np.diff(np.append(gstarts, n))
-    # ordinal of each row within its group → block starts every BLOCK rows
-    gidx = np.arange(n) - np.repeat(gstarts, glens)
-    bstarts = np.flatnonzero(change | (gidx % BLOCK == 0))
-    bends = np.append(bstarts[1:], n)
-    # delta-gap doc ids, reset at every block start (first value raw)
-    gaps = np.empty_like(docs)
-    gaps[0] = docs[0]
-    gaps[1:] = docs[1:] - docs[:-1]
-    gaps[bstarts] = docs[bstarts]
-    docs_buf, d_off = varint_encode_offsets(gaps)
-    tfs_buf, t_off = varint_encode_offsets(tfs)
-    dls_buf, l_off = varint_encode_offsets(dls)
-    return pd.DataFrame(
-        {
-            "term": pdf["term"].to_numpy()[bstarts],
-            "section": pdf["section"].to_numpy()[bstarts],
-            "bucket": pdf["bucket"].to_numpy()[bstarts].astype(np.int32),
-            "block_id": (gidx[bstarts] // BLOCK).astype(np.int32),
-            "n": (bends - bstarts).astype(np.int32),
-            "first_doc": docs[bstarts].astype(np.int64),
-            "last_doc": docs[bends - 1].astype(np.int64),
-            "docs_bin": [
-                docs_buf[d_off[s] : d_off[e]] for s, e in zip(bstarts, bends)
-            ],
-            "tfs_bin": [
-                tfs_buf[t_off[s] : t_off[e]] for s, e in zip(bstarts, bends)
-            ],
-            "dls_bin": [
-                dls_buf[l_off[s] : l_off[e]] for s, e in zip(bstarts, bends)
-            ],
-            "max_tf": np.maximum.reduceat(tfs, bstarts).astype(np.int32),
-            "min_dl": np.minimum.reduceat(dls, bstarts).astype(np.int32),
-        },
-        columns=cols,
-    )
-
-
-def _pack_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One (term, section, bucket) posting run → block rows (applyInPandas
-    entry point, kept for callers packing a single group)."""
-    return _pack_frame(pdf.sort_values("doc_id"))
-
-
-# ---------------------------------------------------------- arrow-native
 
 def _key_change_arrow(tb) -> np.ndarray:
     """Boolean mask over an Arrow table: row i starts a new (term, section,
@@ -222,9 +134,12 @@ def _pack_batch_arrow(tb, change: np.ndarray | None = None):
     """Sorted (term, section, bucket, doc_id) Arrow rows → LIST of packed
     block RecordBatches (one in the common case; several when the varint
     payload would overflow pa.binary()'s int32 offsets — chunked at block
-    boundaries, byte-identical when re-concatenated). Same block layout
-    and bytes as ``_pack_frame``, but no pandas conversion: numeric
-    columns come out as zero-copy numpy views, key columns stay Arrow."""
+    boundaries, byte-identical when re-concatenated). Block boundaries
+    and per-block (n, first/last doc, max_tf, min_dl) come from one
+    ``reduceat`` pass, and each binary column is varint-encoded once for
+    the whole batch with per-block byte ranges sliced out. No pandas
+    conversion: numeric columns come out as zero-copy numpy views, key
+    columns stay Arrow."""
     import pyarrow as pa
 
     n = tb.num_rows

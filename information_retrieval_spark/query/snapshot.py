@@ -29,12 +29,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from information_retrieval_spark.index.catalog import (
     GLOBAL_UPTO,
     Catalog,
+    count_live_docs,
     filter_deleted,
     read_deletes,
     read_doc_meta,
     read_live_postings,
     read_live_table,
     read_packed,
+    read_seq_table,
     read_stats_pdf,
     read_term_df,
     segment_seq,
@@ -125,13 +127,17 @@ class IndexSnapshot:
 
     @cached_property
     def n_live(self) -> int:
-        """The live doc count, tf-idf's N (quirk Q1). ``n_docs`` also counts
-        doc versions that tombstones hide until the next compact purges
-        them, so with deletes present N is counted from the live doclen
-        (the count compact writes back to the ledger): one Spark job, once."""
+        """The live doc count, tf-idf's N (quirk Q1): ``n_docs`` minus the
+        doc versions tombstones hide until the next compact purges them
+        (`catalog.count_live_docs`, the rule compaction writes the ledger
+        by). With deletes present that is one Spark job, once."""
         if self.deletes is None:
             return self.n_docs
-        return self.doclen.select("doc_id").distinct().count()
+        return count_live_docs(
+            self.n_docs,
+            read_seq_table(self.spark, self.index_dir, "doclen", self.version),
+            self.deletes,
+        )
 
     def doc_rows(self) -> DataFrame:
         """Every doclen row, tombstone and category row as ``(doc_id, kind,

@@ -14,11 +14,13 @@ Commands:
                                  seq-scoped tombstone + re-add (cost is
                                  delta-sized even for base-resident docs;
                                  the purge rides the next compact)
-  compact [--segments 1,2 | --to N]  drop deletes + merge segments; with
-                                 --segments, a TIERED merge of only those
-                                 segment indices (0 = base) — cost ∝
-                                 their bytes, base never rewritten
-                                 (refuses over a frozen uncommitted stage)
+  compact [--segments 1,2 | --to N]  drop deletes + merge segments: one
+                                 merge path; with --segments, a TIERED
+                                 merge of only those segment indices
+                                 (0 = base) — cost ∝ their bytes, base
+                                 never rewritten; without, the same merge
+                                 over every segment (refuses over a
+                                 frozen uncommitted stage)
   recover                        finish the commit of crashed (frozen) stages
   expire [--keep-last N]         drop old snapshots + GC data dirs
   history                        print the snapshot chain as JSON lines
@@ -66,7 +68,8 @@ def main() -> None:
     p_cp = sub.add_parser("compact")
     p_cp.add_argument("--segments", default=None,
                       help="comma list of segment indices for a tiered"
-                           " (partial) merge; omit to merge everything")
+                           " (partial) merge; omit to merge every segment"
+                           " (the same merge, clearing the delete vector)")
     p_cp.add_argument("--to", type=int, default=None, dest="to_segments",
                       help="size-tiered plan: merge the cheapest subset"
                            " that brings the segment count down to N"

@@ -290,3 +290,29 @@ def test_filter_follows_a_category_changed_by_update(spark, tmp_path_factory):
         want = _oracle_check(spark, d, live, specs)
         docs = {doc for _, doc, _ in want.get(1, [])}
         assert (target.doc_id in docs) == present, cat
+
+
+def test_numeric_looking_category_survives_tiered_compact(
+    spark, tmp_path_factory
+):
+    """A category like "007" is a string: a tiered compact must read the
+    merged segments' doc_meta with its schema, or partition-type inference
+    turns "007" into 7 and the merged docs drop out of the filter."""
+    from dataclasses import replace as dc_replace
+
+    from information_retrieval_spark.index.maintenance import IndexMaintenance
+
+    rows = [dc_replace(r, lang="007" if r.lang == CAT else "2024")
+            for r in corpus_rows(150)]
+    d = str(tmp_path_factory.mktemp("catnum"))
+    IndexBuilder(
+        spark, d, SECTIONS, tokenizer="code", stop_k=10, category_col="lang"
+    ).build(_df(spark, rows[:120]))
+    maint = IndexMaintenance(spark, d)
+    maint.add_documents(_df(spark, rows[120:135]))
+    maint.add_documents(_df(spark, rows[135:]))
+    maint.compact(segments=[1, 2])
+    specs = [QuerySpec(1, "tokenizer stream", "okapi25", -1, spell=False,
+                       match_mode="exact", filter_category="007")]
+    got = _oracle_check(spark, d, rows, specs)
+    assert any(doc >= 120 for _, doc, _ in got[1])

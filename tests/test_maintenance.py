@@ -1497,3 +1497,63 @@ def test_engines_keep_their_snapshot_across_later_writes(
         live = [updated if r.doc_id == moved.doc_id else r
                 for r in rows if r.doc_id != top[2]]
         _matches_oracle(spark, SearchEngine(spark, d), d, live)
+
+
+def test_live_doc_count_counts_docs_without_tokens(spark, tmp_path_factory):
+    """tf-idf's N has one rule (catalog.count_live_docs): the ledger minus
+    the doc versions tombstones hide. A live doc whose every section
+    tokenizes to nothing has no doclen rows but still counts, as a fresh
+    build and the oracle count it: before the compact that purges a
+    removed doc, after it, and in the compacted ledger."""
+    from dataclasses import replace as dc_replace
+
+    from information_retrieval_spark.index.catalog import read_stats_pdf
+
+    rows = corpus_rows(120)
+    empty = dc_replace(rows[0], doc_id=1000, path="", content="")
+    d = str(tmp_path_factory.mktemp("live_count"))
+    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+        _df(spark, rows + [empty])
+    )
+    maint = IndexMaintenance(spark, d)
+    maint.remove_documents([rows[5].doc_id])
+    live = [r for r in rows if r.doc_id != rows[5].doc_id] + [empty]
+    specs = [
+        QuerySpec(10 * m + q.query_id, q.text, method, 10, spell=False,
+                  match_mode="exact")
+        for m, method in enumerate(("ltn-lnn", "ltc-lnc"), 1)
+        for q in QUERIES
+    ]
+    _matches_oracle(spark, SearchEngine(spark, d), d, live, specs)
+    assert maint.compact() is not None
+    _matches_oracle(spark, SearchEngine(spark, d), d, live, specs)
+
+    fresh = str(tmp_path_factory.mktemp("live_count_fresh"))
+    IndexBuilder(
+        spark, fresh, SECTIONS, tokenizer="code", stop_k=10,
+        stop_terms=_stop_of(spark, d),
+    ).build(_df(spark, live))
+    assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == int(
+        read_stats_pdf(fresh)["n_docs"].iloc[0]
+    ) == len(live)
+
+
+def test_compact_refuses_misaligned_segment_dirs(spark, tmp_path_factory):
+    """Compaction splices every segmented table's dir list in lockstep, so
+    a snapshot whose lists disagree in length is refused, by a full
+    compact and a partial one alike, before anything is committed."""
+    rows = corpus_rows(140)
+    d = str(tmp_path_factory.mktemp("misaligned"))
+    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+        _df(spark, rows[:120])
+    )
+    maint = IndexMaintenance(spark, d)
+    maint.add_documents(_df(spark, rows[120:130]))
+    maint.add_documents(_df(spark, rows[130:140]))
+    lineage = maint.cat.load()["tables"]["lineage"]
+    assert len(lineage) == 3
+    cur = maint.cat.commit({"lineage": ("set", lineage[:-1])}, "add")
+    for segs in (None, [1, 2]):
+        with pytest.raises(RuntimeError, match="one data dir per segment"):
+            maint.compact(segments=segs)
+        assert maint.cat.current_version() == cur

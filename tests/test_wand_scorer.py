@@ -1,7 +1,7 @@
 """The ranked engine's per-bucket scorer against a brute force, no Spark.
 
 `_Bucket.top_k` scores one doc-hash bucket: the packed blocks of the
-batch's terms (`index/pack.py::_pack_frame`, one run per LSM segment) plus
+batch's terms (`index/pack.py::_pack_batch_arrow`, one run per LSM segment) plus
 the bucket's side rows (doclen, seq-scoped tombstones, categories). These
 tests build such buckets in pandas and compare the scorer's answer, merged
 the way `WandEngine.search` merges bucket lists, with a scorer written here
@@ -18,15 +18,23 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from information_retrieval_spark.index.catalog import GLOBAL_UPTO
-from information_retrieval_spark.index.pack import _pack_frame
+from information_retrieval_spark.index.pack import _pack_batch_arrow
 from information_retrieval_spark.query import wand
 from information_retrieval_spark.query.engine import K1, B
 from information_retrieval_spark.query.wand import _Bucket, _Plan
 
 SECTIONS = ["title", "abstract"]
+
+
+def _pack(rows: pd.DataFrame) -> pd.DataFrame:
+    """Sorted (term, section, bucket, doc_id) rows → packed block rows, by
+    the build's Arrow packer."""
+    batches = _pack_batch_arrow(pa.Table.from_pandas(rows, preserve_index=False))
+    return pa.Table.from_batches(batches).to_pandas()
 
 
 def _bucket(postings: pd.DataFrame, dels=(), cats=()) -> _Bucket:
@@ -38,7 +46,7 @@ def _bucket(postings: pd.DataFrame, dels=(), cats=()) -> _Bucket:
         rows = seg.assign(bucket=0).sort_values(
             ["term", "section", "doc_id"]
         )
-        parts.append(_pack_frame(rows.reset_index(drop=True)).assign(
+        parts.append(_pack(rows).assign(
             segment=seq, seg_seq=seq
         ))
     shard = pd.concat(parts, ignore_index=True)
@@ -272,7 +280,7 @@ def test_block_bounds_skip_cold_blocks(monkeypatch):
 
     for name in ("varint_decode", "decode_doc_gaps"):
         monkeypatch.setattr(wand, name, counting(getattr(wand, name)))
-    shard = _pack_frame(rows.assign(bucket=0))
+    shard = _pack(rows.assign(bucket=0))
     total = sum(shard[c].map(len).sum()
                 for c in ("docs_bin", "tfs_bin", "dls_bin"))
     assert len(shard) == 188
