@@ -89,7 +89,9 @@ def tokenize_corpus(
             toks = F.split(F.lower(F.col(col)), SIMPLE_SPLIT_PATTERN)
             part = (
                 corpus.select(
-                    F.col(doc_id_col).alias("doc_id"),
+                    # long, as the code branch: pack views doc_id as
+                    # uint64 and the engines bucket by xxhash64(long)
+                    F.col(doc_id_col).cast("long").alias("doc_id"),
                     F.posexplode(toks).alias("pos", "term"),
                 )
                 .filter(F.col("term") != "")
@@ -551,64 +553,18 @@ class IndexBuilder:
         # cheap parquet scan) — packed is the production query path;
         # postings_flat serves derivation jobs (full scans) and the
         # boolean/phrase paths (row-group pruning suffices).
-        # Every row additionally carries its doc's full {section: dl} map
-        # (``dls``), which pack_postings reads for the blocks' dls (no
-        # query path reads it). Map entries are sorted → deterministic
-        # file bytes.
         def s_postings():
             # stop removal is a broadcast LEFT ANTI join (the top-K frame
             # is K rows) — no driver collect / isin literal list, so the
             # stop list never makes a driver round-trip
-            non_stop = postings_all.join(
+            out = postings_all.join(
                 F.broadcast(stop_df.select("term")), "term", "left_anti"
             )
-            # doclen is written HERE, as the first job of this stage: the
-            # (doc_id, section) dl aggregate is the join input this stage
-            # needs anyway. A plain groupBy (no explicit pre-exchange)
-            # partial-aggregates map-side — the exchange carries ~one row
-            # per (doc, section), not per posting. An earlier shape forced
-            # repartition(doc_id) first so both jobs could share the
-            # exchange; shuffle reuse doesn't cross actions, so it paid a
-            # full-width posting shuffle in EACH job and suppressed the
-            # map-side combine here.
-            dl = non_stop.groupBy("doc_id", "section").agg(
-                F.sum("tf").cast("long").alias("dl")
-            )
-            _write(dl, self.path("doclen"), ["doc_id"])
-            dlmap = (
-                self.spark.read.parquet(self.path("doclen"))
-                .groupBy("doc_id")
-                .agg(
-                    F.map_from_entries(
-                        F.array_sort(F.collect_list(F.struct("section", "dl")))
-                    ).alias("dls")
-                )
-            )
-            # dls attach join: the builder KNOWS the exact doc count (the
-            # stats stage committed it), so the broadcast decision is made
-            # HERE rather than left to AQE — AQE only converts after the
-            # probe side's shuffle is already written (local-read, but
-            # still a full posting-sized spill; measured 1.7× slower at 8
-            # cores). Corpora up to ~1M docs broadcast the dlmap (≤ ~64 MB
-            # serialized — trivial for cluster executors, zero exchange of
-            # the posting-sized probe); beyond that the plan degrades to
-            # the doc_id-keyed shuffle join, the correct 10^12-doc
-            # strategy (uniform doc hash, no head-term skew). On the
-            # broadcast path the write inherits the postings_all scan's
-            # partitioning, which Spark already splits to ~one partition
-            # per core (maxSplitBytes scales with totalBytes/parallelism).
-            n_docs = int(
-                self.manifest["stages"].get("stats", {}).get("n_docs", 0)
-            )
-            if 0 < n_docs <= 1_000_000:
-                dlmap = F.broadcast(dlmap)
-            out = non_stop.join(dlmap, "doc_id")
             # row count rides the write as an Observation instead of a
             # full re-read of the written table
             obs_rows = Observation()
             out = out.observe(obs_rows, F.count(F.lit(1)).alias("rows"))
             _write(out, self.path("postings_flat"), ["term", "section", "doc_id"])
-            self._commit_stage("doclen", {"wall_s": 0.0, "with": "postings"})
             return {"rows": int(obs_rows.get["rows"])}
 
         stage("postings", s_postings)
@@ -617,10 +573,9 @@ class IndexBuilder:
 
         # stage 5: doclen — dl = Σ tf of non-stop terms per (doc, section)
         # (tokens are unique (term, pos) pairs, so Σ distinct-offset tf ==
-        # non-stop token count, quirk Q2's dl). Normally committed INSIDE
-        # s_postings (computed once as that stage's join input); this
-        # fallback derivation from postings_flat only runs when resuming a
-        # manifest where postings committed without doclen (legacy layout).
+        # non-stop token count, quirk Q2's dl). A plain groupBy partial-
+        # aggregates map-side, so the exchange carries ~one row per (doc,
+        # section), not per posting.
         def s_doclen():
             dl = postings.groupBy("doc_id", "section").agg(
                 F.sum("tf").cast("long").alias("dl")
@@ -662,32 +617,33 @@ class IndexBuilder:
             return {}
 
         # stage 8: packed block-max shards (delta-gap + varint, per-block
-        # max_tf/min_dl — the north_star layout; index/pack.py). Packed
-        # from the EXPLICIT legacy paths this build just wrote — resolving
-        # through a pre-existing catalog here would union stale delta dirs
-        # from before an in-place rebuild into the new pack. dl comes off
-        # the dls map embedded on every postings_flat row (pack.py), so
-        # pack needs NO doclen input and no posting-sized join.
+        # max_tf/min_dl — the north_star layout; index/pack.py), from
+        # postings_flat and its doclen. Packed from the EXPLICIT legacy
+        # paths this build just wrote — resolving through a pre-existing
+        # catalog here would union stale delta dirs from before an
+        # in-place rebuild into the new pack.
         def s_packed():
             from information_retrieval_spark.index.pack import pack_postings
 
             pack_postings(
                 self.spark.read.parquet(self.path("postings_flat")),
-                None,
+                self.spark.read.parquet(self.path("doclen")),
                 self.path("packed"),
             )
             return {}
 
         # doclen / term_df / vocab / packed all depend ONLY on the
-        # committed postings tables — so they are SUBMITTED CONCURRENTLY:
-        # doclen/term_df/vocab are small fixed-latency jobs (driver
-        # scheduling + one tiny shuffle + a write) that now hide entirely
-        # under the packed job, and sequential execution would make them
-        # the Amdahl floor of the whole build once tokenization is fast.
-        # Overlapping them is exactly what a DAG scheduler on a real
-        # cluster does; the Spark scheduler interleaves jobs from threads.
-        # Each stage still commits its own manifest entry (lock-guarded),
-        # so resume semantics are unchanged.
+        # committed postings tables, so two chains run CONCURRENTLY:
+        # doclen → packed (pack joins the committed doclen) and term_df →
+        # vocab (vocab derives from the committed term_df, see s_vocab).
+        # The term_df/vocab jobs are small fixed-latency jobs (driver
+        # scheduling + one tiny shuffle + a write) that hide under the
+        # packed job; sequential execution would make them the Amdahl
+        # floor of the whole build once tokenization is fast. Overlapping
+        # them is exactly what a DAG scheduler on a real cluster does; the
+        # Spark scheduler interleaves jobs from threads. Each stage still
+        # commits its own manifest entry (lock-guarded), so resume
+        # semantics are unchanged.
         # stage 9 (computation): lineage/metrics — per-partition accounting
         # of every core table (north_rule: per-partition lineage + metrics).
         # Each row: (table, part_id, rows, content_hash); stage wall-times
@@ -708,33 +664,34 @@ class IndexBuilder:
                 {table: self.spark.read.parquet(self.path(table))}
             ).toPandas()
 
+        lin_futs: dict = {}
         with ThreadPoolExecutor(max_workers=5) as ex:
-            # doclen normally committed inside s_postings; run the legacy
-            # fallback (no-op when committed) before its lineage scan
-            stage("doclen", s_doclen)
-            lin_futs = []
+
+            def chain(*steps):
+                for name, fn, lin_table in steps:
+                    stage(name, fn)
+                    if lin_table is not None and need_lineage:
+                        lin_futs[lin_table] = ex.submit(lin_for, lin_table)
+
             if need_lineage:
-                lin_futs.append(ex.submit(lin_for, "postings_flat"))
-                lin_futs.append(ex.submit(lin_for, "doclen"))
-
-            def chain(name, fn, lin_table=None):
-                stage(name, fn)
-                if lin_table is not None and need_lineage:
-                    return lin_for(lin_table)
-                return None
-
-            def term_df_then_vocab():
-                # vocab derives from the committed term_df (see s_vocab)
-                stage("term_df", s_term_df)
-                stage("vocab", s_vocab)
-
+                lin_futs["postings_flat"] = ex.submit(lin_for, "postings_flat")
             futs = [
-                ex.submit(chain, "packed", s_packed, "packed"),
-                ex.submit(term_df_then_vocab),
+                ex.submit(
+                    chain,
+                    ("doclen", s_doclen, "doclen"),
+                    ("packed", s_packed, "packed"),
+                ),
+                ex.submit(
+                    chain,
+                    ("term_df", s_term_df, None),
+                    ("vocab", s_vocab, None),
+                ),
             ]
-            results = [f.result() for f in futs]
-            lin_pdfs = [f.result() for f in lin_futs] + [
-                r for r in results if r is not None
+            for f in futs:
+                f.result()
+            # fixed table order → deterministic lineage file bytes
+            lin_pdfs = [
+                lin_futs[t].result() for t in LINEAGE_SPECS if t in lin_futs
             ]
 
         # stage 9 (commit): one atomic write of the gathered lineage rows

@@ -62,7 +62,9 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from information_retrieval_spark.index.pack import PACKED_SCHEMA
 
 CATALOG_SUBDIR = "catalog"
 DATA_SUBDIR = "data"
@@ -378,6 +380,44 @@ def table_dirs(
     return [legacy] if os.path.isdir(legacy) else []
 
 
+def _schema(*cols: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(n, t) for n, t in cols])
+
+
+_STR, _INT, _LONG = T.StringType(), T.IntegerType(), T.LongType()
+
+#: the declared schema of each table whose data dirs are read one by one
+#: or often. A scan given its schema plans with no Spark job (inference
+#: runs one job per scan to read a parquet footer) and keeps the declared
+#: types: inference would read a numeric-looking doc_meta category
+#: ("007") back as int.
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "postings_flat": _schema(
+        ("term", _STR), ("section", _STR), ("doc_id", _LONG),
+        ("positions", T.ArrayType(_INT)), ("tf", _INT), ("bucket", _INT),
+    ),
+    "doclen": _schema(("doc_id", _LONG), ("section", _STR), ("dl", _LONG)),
+    "vocab": _schema(("term", _STR)),
+    "term_df": _schema(("term", _STR), ("df", _LONG)),
+    "doc_meta": _schema(("doc_id", _LONG), ("category", _STR)),
+    # legacy dirs lack upto: the parquet reader fills it with null
+    "deleted_docs": _schema(("doc_id", _LONG), ("upto", _LONG)),
+    "packed": PACKED_SCHEMA,
+}
+
+
+def scan_dirs(spark: SparkSession, table: str, *dirs: str) -> DataFrame:
+    """One scan of some data dirs of ``table``, with its declared schema
+    (`TABLE_SCHEMAS`) when it has one: exactly the declared columns, in
+    order, so columns an older layout wrote and no reader uses drop out."""
+    schema = TABLE_SCHEMAS.get(table)
+    if schema is None:
+        return spark.read.parquet(*dirs)
+    return (
+        spark.read.schema(schema).parquet(*dirs).select(*schema.fieldNames())
+    )
+
+
 def read_table(
     spark: SparkSession,
     index_dir: str,
@@ -390,21 +430,7 @@ def read_table(
     dirs = table_dirs(index_dir, table, version)
     if not dirs:
         return None
-    return spark.read.parquet(*dirs)
-
-
-def _scan(spark: SparkSession, table: str, d: str) -> DataFrame:
-    """One data dir of ``table``. doc_meta is read with an explicit schema:
-    partition-column TYPE INFERENCE would otherwise read a numeric-looking
-    category ("007", "2024") back as int — losing the leading zero and
-    breaking both the per-dir union and the engines' string comparisons."""
-    if table == "doc_meta":
-        return (
-            spark.read.schema("doc_id long, category string")
-            .parquet(d)
-            .select("doc_id", "category")
-        )
-    return spark.read.parquet(d)
+    return scan_dirs(spark, table, *dirs)
 
 
 def read_seq_table(
@@ -427,7 +453,7 @@ def read_seq_table(
     if not dirs:
         return None
     parts = [
-        _scan(spark, table, d).withColumn(
+        scan_dirs(spark, table, d).withColumn(
             "seg_seq", F.lit(segment_seq(d)).cast("long")
         )
         for d in dirs
@@ -452,9 +478,8 @@ def read_deletes(
     dirs = table_dirs(index_dir, "deleted_docs", version)
     if not dirs:
         return None
-    # explicit schema: legacy dirs lack the upto column; the parquet
-    # reader fills it with null, which coalesces to the global sentinel
-    dd = spark.read.schema("doc_id long, upto long").parquet(*dirs)
+    # a legacy dir's null upto coalesces to the global sentinel
+    dd = scan_dirs(spark, "deleted_docs", *dirs)
     return dd.groupBy("doc_id").agg(
         F.max(F.coalesce("upto", F.lit(GLOBAL_UPTO))).alias("upto")
     )
@@ -554,7 +579,7 @@ def read_packed(
     if not dirs:
         return None
     parts = [
-        spark.read.parquet(d)
+        scan_dirs(spark, "packed", d)
         .withColumn("segment", F.lit(i).cast("int"))
         .withColumn("seg_seq", F.lit(segment_seq(d)).cast("long"))
         for i, d in enumerate(dirs)
@@ -582,7 +607,7 @@ def read_term_df(
     dirs = table_dirs(index_dir, "term_df", version)
     if not dirs:
         return None
-    df = spark.read.parquet(*dirs)
+    df = scan_dirs(spark, "term_df", *dirs)
     if len(dirs) > 1:
         df = df.groupBy("term").agg(F.sum("df").alias("df"))
     return df
@@ -599,7 +624,7 @@ def read_vocab(
     dirs = table_dirs(index_dir, "vocab", version)
     if not dirs:
         return None
-    v = spark.read.parquet(*dirs)
+    v = scan_dirs(spark, "vocab", *dirs)
     return v.distinct() if len(dirs) > 1 else v
 
 

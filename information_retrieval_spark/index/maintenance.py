@@ -68,6 +68,7 @@ from information_retrieval_spark.index.catalog import (
     CORE_TABLES,
     read_stats_pdf,
     read_table,
+    scan_dirs,
 )
 
 def unrecovered_stage_names(index_dir: str) -> list[str]:
@@ -279,35 +280,16 @@ class IndexMaintenance:
         # shape re-ran the (most expensive) tokenizer for doclen and vocab
         tf_all = tokenize_postings(delta, sections, tokenizer, n_buckets=n_buckets)
         tf_all.write.mode("overwrite").parquet(p("__tf_all"))
-        tf_all = spark.read.parquet(p("__tf_all"))
+        # postings_all's grain: postings_flat's columns, stop terms kept
+        tf_all = scan_dirs(spark, "postings_flat", p("__tf_all"))
         tm["tokenize_tf_all"] = time.time() - t0
         t0 = time.time()
 
         stop = read_table(spark, self.index_dir, "stopwords").select("term")
-        # NOT materialized: tf_all is already a parquet read-back, so the
-        # two consumers below (the dlmap aggregate and the join's left
-        # side) each re-run only a parquet scan + broadcast anti-join —
-        # cheaper than the extra write+read job round a __nonstop dir
-        # cost, which was ~15% of the 500-doc streaming batch latency
-        nonstop = tf_all.join(F.broadcast(stop), "term", "left_anti")
-        # embed the per-doc {section: dl} map on every posting row — same
-        # denormalization as the build's postings_flat (build.py
-        # s_postings): delta docs are new, so the delta-local map is the
-        # doc's complete section-length vector
-        dlmap = (
-            nonstop.groupBy("doc_id", "section")
-            .agg(F.sum("tf").cast("long").alias("dl"))
-            .groupBy("doc_id")
-            .agg(
-                F.map_from_entries(
-                    F.array_sort(F.collect_list(F.struct("section", "dl")))
-                ).alias("dls")
-            )
-        )
-        nonstop.join(dlmap, "doc_id").write.mode("overwrite").parquet(
-            p("postings_delta")
-        )
-        tf = spark.read.parquet(p("postings_delta"))
+        tf_all.join(F.broadcast(stop), "term", "left_anti").write.mode(
+            "overwrite"
+        ).parquet(p("postings_delta"))
+        tf = scan_dirs(spark, "postings_flat", p("postings_delta"))
         tm["stop_filter_postings"] = time.time() - t0
         t0 = time.time()
 
@@ -318,13 +300,21 @@ class IndexMaintenance:
 
         from information_retrieval_spark.index.pack import pack_postings
 
-        def s_doclen():
+        def s_doclen_pack():
             # dl = Σ tf of non-stop terms (tokens are unique (term, pos)
             # pairs, so Σ distinct-offset tf == non-stop token count —
             # identical to the build's doclen derivation)
             tf.groupBy("doc_id", "section").agg(
                 F.sum("tf").cast("long").alias("dl")
             ).write.mode("overwrite").parquet(p("doclen_delta"))
+            # the delta's OWN packed segment — pack cost ∝ delta size; the
+            # live packed segments are untouched (LSM append, merged at
+            # compact). Pack joins the doclen just written, so the two run
+            # as one chain beside the other jobs of the group.
+            pack_postings(
+                tf, scan_dirs(spark, "doclen", p("doclen_delta")),
+                p("packed_delta"),
+            )
 
         def s_vocab():
             # pre-stop-removal distinct terms, from tf_all (not tokens:
@@ -361,13 +351,6 @@ class IndexMaintenance:
             # latency (BENCH/BASELINE.md latency decomposition)
             return self._delta_fp(delta)
 
-        def s_pack():
-            # the delta's OWN packed segment — pack cost ∝ delta size; the
-            # live packed segments are untouched (LSM append, merged at
-            # compact). dl comes off the embedded dls map (pack.py), so
-            # pack is independent of s_doclen and overlaps it fully.
-            pack_postings(tf, None, p("packed_delta"))
-
         def timed(fn):
             def run():
                 ts = time.time()
@@ -379,7 +362,7 @@ class IndexMaintenance:
         with ThreadPoolExecutor(max_workers=6) as ex:
             futs = [
                 ex.submit(timed(fn))
-                for fn in (s_pack, s_doclen, s_vocab, s_term_df, s_doc_meta)
+                for fn in (s_doclen_pack, s_vocab, s_term_df, s_doc_meta)
             ]
             f_fp = ex.submit(timed(s_fp))
             for f in futs:
@@ -394,14 +377,14 @@ class IndexMaintenance:
         st.to_parquet(os.path.join(p("stats"), "stats.parquet"))
         tm["parallel_group"] = time.time() - t0
         t0 = time.time()
-        dl = spark.read.parquet(p("doclen_delta"))
+        dl = scan_dirs(spark, "doclen", p("doclen_delta"))
 
         # per-partition lineage of the delta's tables (append-only log)
         lineage_frame(
             {
                 "postings_flat": tf,
                 "doclen": dl,
-                "packed": spark.read.parquet(p("packed_delta")),
+                "packed": scan_dirs(spark, "packed", p("packed_delta")),
             }
         ).write.mode("overwrite").parquet(p("lineage_delta"))
         tm["lineage"] = time.time() - t0
@@ -902,11 +885,12 @@ class IndexMaintenance:
         from information_retrieval_spark.index.pack import pack_postings
 
         for j in range(n_out):
-            pf_j = spark.read.parquet(
-                self.cat.abspath(new_rel["postings_flat"][j])
+            pf_j = scan_dirs(
+                spark, "postings_flat",
+                self.cat.abspath(new_rel["postings_flat"][j]),
             )
-            dl_j = spark.read.parquet(
-                self.cat.abspath(new_rel["doclen"][j])
+            dl_j = scan_dirs(
+                spark, "doclen", self.cat.abspath(new_rel["doclen"][j])
             )
             pf_j.groupBy("term").agg(
                 F.countDistinct("doc_id").alias("df")
@@ -920,7 +904,7 @@ class IndexMaintenance:
                 {
                     "postings_flat": pf_j,
                     "doclen": dl_j,
-                    "packed": spark.read.parquet(packed_dir),
+                    "packed": scan_dirs(spark, "packed", packed_dir),
                 }
             ).write.mode("overwrite").parquet(
                 fresh("lineage", j if n_out > 1 else None)

@@ -231,56 +231,35 @@ def _pack_batch_arrow(tb, change: np.ndarray | None = None):
     return out
 
 
-def pack_postings(
-    postings: DataFrame, doclen: DataFrame | None, out: str
-) -> str:
+def pack_postings(postings: DataFrame, doclen: DataFrame, out: str) -> str:
     """Pack ONE coherent posting set (a full index, or one LSM segment's
     delta — index/maintenance.py) into a sorted block-max shard dir.
     Callers pass EXPLICIT inputs — there is deliberately no
     resolve-from-index-dir convenience, because packing through the
     catalog during an in-place rebuild would union stale delta dirs.
 
-    Plan: when the postings rows carry the denormalized ``dls`` map
-    (build.py s_postings embeds the doc's full {section: dl} vector on
-    every row), dl is read straight off the row — NO join, so the only
-    posting-sized shuffle in the whole pack is the group-key exchange
-    below. ``doclen`` is the fallback for dls-less posting frames (one
-    extra shuffle join). Then ONE range exchange on (term, section,
-    bucket) — rows equal on all range keys land in one partition, so
-    groups stay atomic — + sortWithinPartitions(key, doc_id) →
-    ``mapInPandas`` packs whole partitions (cross-batch carry keeps a
-    group's run contiguous) → direct write. The output inherits the
-    exchange's global range order and the within-partition sort, so files
-    AND row groups carry tight term min/max stats for query pruning.
-    (The former plan exchanged twice — hash before the packer, range
-    after — and the post-packer RangePartitioner's sampling pass re-ran
-    the whole Python encode; callers pass materialized scans, so sampling
-    the input side is one cheap parquet read.)
+    Plan: each posting takes its dl from ``doclen`` by a join on
+    ``(doc_id, section)``. Callers pass a parquet scan of the posting
+    set's own doclen, so Spark's size estimate broadcasts it whenever it
+    is small, and the only posting-sized shuffle is the group-key exchange
+    below. Then ONE range exchange on (term, section, bucket) — rows equal
+    on all range keys land in one partition, so groups stay atomic — +
+    sortWithinPartitions(key, doc_id) → ``mapInArrow`` packs whole
+    partitions (cross-batch carry keeps a group's run contiguous) → direct
+    write. The output inherits the exchange's global range order and the
+    within-partition sort, so files AND row groups carry tight term
+    min/max stats for query pruning.
     """
     spark = postings.sparkSession
-    if "dls" in postings.columns:
-        # dls always contains the row's own section (the row is itself a
-        # non-stop posting of that (doc, section)), so element_at is total
-        # tf/dl cross the Python boundary as int32 — both are bounded by a
-        # single document's section length; 8 fewer bytes per posting row
-        # matters because the boundary is the stage's bandwidth ceiling
-        joined = postings.select(
-            "term", "section", "bucket", "doc_id",
-            F.col("tf").cast("int").alias("tf"),
-            F.expr("dls[section]").cast("int").alias("dl"),
-        )
-    else:
-        if doclen is None:
-            raise ValueError(
-                "pack_postings: postings lack a 'dls' column and no doclen"
-                " frame was provided"
-            )
-        joined = (
-            postings.select("term", "section", "bucket", "doc_id", "tf")
-            .join(doclen, ["doc_id", "section"])
-            .withColumn("tf", F.col("tf").cast("int"))
-            .withColumn("dl", F.col("dl").cast("int"))
-        )
+    # tf/dl cross the Python boundary as int32 — both are bounded by a
+    # single document's section length
+    joined = postings.join(
+        doclen.select("doc_id", "section", "dl"), ["doc_id", "section"]
+    ).select(
+        "term", "section", "bucket", "doc_id",
+        F.col("tf").cast("int").alias("tf"),
+        F.col("dl").cast("int").alias("dl"),
+    )
     n_part = max(spark.sparkContext.defaultParallelism, 8)
 
     # Coalesce the incoming Arrow batches INSIDE the UDF (the session

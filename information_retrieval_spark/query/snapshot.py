@@ -8,9 +8,9 @@ v1's packed blocks with v2's tombstones, which would hide an updated doc
 in both). Legacy indexes without a catalog read their plain table dirs.
 
 At open it reads only driver-side files: the manifest config and the stop
-list. Every table is built on first use from the pinned version; a
-``spark.read.parquet`` without a schema runs a Spark job to infer one, so
-the engines decide which tables they resolve at open.
+list. Every table is built on first use from the pinned version, and
+reads with its declared schema (`catalog.TABLE_SCHEMAS`), so building a
+table's frame runs no Spark job.
 
 It also owns the ranked engine's query preparation: the index's tokenizer,
 stop filtering, one batched spell correction per batch (quirk Q7) and the
@@ -39,6 +39,7 @@ from information_retrieval_spark.index.catalog import (
     read_seq_table,
     read_stats_pdf,
     read_term_df,
+    scan_dirs,
     segment_seq,
     table_dirs,
 )
@@ -147,8 +148,7 @@ class IndexSnapshot:
         readers that resolve seq-scoped tombstones themselves. Every read
         carries its schema, so building this frame runs no Spark job."""
         parts = [
-            self.spark.read.schema("doc_id long, section string, dl long")
-            .parquet(d)
+            scan_dirs(self.spark, "doclen", d)
             .select(
                 "doc_id", F.lit("dl").alias("kind"),
                 F.col("section").alias("s"), F.col("dl").alias("v"),
@@ -159,8 +159,7 @@ class IndexSnapshot:
         dirs = self._dirs("deleted_docs")
         if dirs:
             parts.append(
-                self.spark.read.schema("doc_id long, upto long")
-                .parquet(*dirs)
+                scan_dirs(self.spark, "deleted_docs", *dirs)
                 .select(
                     "doc_id", F.lit("del").alias("kind"),
                     F.lit(None).cast("string").alias("s"),

@@ -99,7 +99,7 @@ _STATS_SCHEMA = T.StructType(
         T.StructField("mask", T.StringType(), False),
         T.StructField("exact", T.StringType(), False),
         T.StructField("n", T.LongType(), False),
-        T.StructField("dls", T.ArrayType(T.DoubleType(), False), False),
+        T.StructField("dl_sums", T.ArrayType(T.DoubleType(), False), False),
     ]
 )
 
@@ -293,10 +293,10 @@ class _Bucket:
             groups, inv = np.unique(member, axis=0, return_inverse=True)
             inv = inv.reshape(-1)
             n = np.bincount(inv, minlength=len(groups))
-            dls = every_dl[np.searchsorted(every, cands)]
+            cand_dl = every_dl[np.searchsorted(every, cands)]
             sums = np.stack(
-                [np.bincount(inv, weights=dls[:, s], minlength=len(groups))
-                 for s in range(dls.shape[1])],
+                [np.bincount(inv, weights=cand_dl[:, s], minlength=len(groups))
+                 for s in range(cand_dl.shape[1])],
                 axis=1,
             )
             for g, bits in enumerate(groups.astype(int)):
@@ -693,7 +693,7 @@ class WandEngine:
                 r.mask, [0, np.zeros(len(sections))]
             )
             acc[0] += r.n
-            acc[1] += np.asarray(r.dls, dtype=np.float64)
+            acc[1] += np.asarray(r.dl_sums, dtype=np.float64)
             exact.setdefault(r.query_id, set()).update(
                 i for i, c in enumerate(r.exact) if c == "1"
             )
@@ -703,10 +703,10 @@ class WandEngine:
         for q in queries:
             alive = exact.get(q.query_id, set())
             hits = [
-                (n, dls, {i for i, c in enumerate(m) if c == "1"})
-                for m, (n, dls) in masks.get(q.query_id, {}).items()
+                (n, dl_sums, {i for i, c in enumerate(m) if c == "1"})
+                for m, (n, dl_sums) in masks.get(q.query_id, {}).items()
             ]
-            cand = [(n, dls) for n, dls, bits in hits if bits & alive]
+            cand = [(n, dl_sums) for n, dl_sums, bits in hits if bits & alive]
             nq = sum(n for n, _ in cand)
             self.last_stats[q.query_id] = {
                 "n_cand": nq,

@@ -54,7 +54,7 @@ def _stop_of(spark, idx):
     return [r.term for r in rows]
 
 
-def _oracle_check(spark, idx, rows, specs):
+def _oracle_check(spark, idx, rows, specs, tokenizer="code"):
     """The engine's answer to ``specs`` over ``idx`` equals the oracle's
     over each query's category of ``rows`` (index stop list pinned).
     Returns the engine's rows per query."""
@@ -65,9 +65,11 @@ def _oracle_check(spark, idx, rows, specs):
             {r.doc_id: {"title": r.path, "abstract": r.content}
              for r in rows
              if q.filter_category in (None, r.lang)},
+            tokenizer=tokenizer,
             stop_terms=stop,
         )
-        assert_ranked_equal(got.get(q.query_id, []), orc.answer(q),
+        assert_ranked_equal(got.get(q.query_id, []),
+                            orc.answer(q, tokenizer),
                             f"query {q.query_id}")
     return got
 
@@ -220,11 +222,9 @@ def test_filter_survives_remove_and_compact(spark, tmp_path_factory):
     assert _res(SearchEngine(spark, d), specs) == want
 
 
-def test_filter_category_with_int_doc_ids(spark, tmp_path_factory):
-    """An IntegerType doc_id corpus must still category-filter correctly:
-    WAND buckets category rows with xxhash64(doc_id), which hashes 4-byte
-    ints and 8-byte longs differently, so doc_meta is long-cast at build —
-    without the cast the cogrouped lookup silently misses every doc."""
+def _int_doc_id_check(spark, tmp_path_factory, tokenizer):
+    """Build an IntegerType doc_id corpus with ``tokenizer`` and check a
+    category-filtered query against the oracle."""
     from pyspark.sql import functions as F
 
     rows = corpus_rows(100)
@@ -235,14 +235,32 @@ def test_filter_category_with_int_doc_ids(spark, tmp_path_factory):
     ).withColumn("doc_id", F.col("doc_id").cast("int"))
     idx = str(tmp_path_factory.mktemp("intids"))
     IndexBuilder(
-        spark, idx, SECTIONS, tokenizer="code", stop_k=10, category_col="lang"
+        spark, idx, SECTIONS, tokenizer=tokenizer, stop_k=10,
+        category_col="lang",
     ).build(d)
     specs = [QuerySpec(1, "tokenizer stream", "okapi25", 10, spell=False,
                        match_mode="exact", filter_category=CAT)]
-    want = _oracle_check(spark, idx, rows, specs)
+    want = _oracle_check(spark, idx, rows, specs, tokenizer)
     assert want.get(1), "filtered query must match docs in the category"
     lang_of = {r.doc_id: r.lang for r in rows}
     assert all(lang_of[doc] == CAT for _, doc, _ in want[1])
+
+
+def test_filter_category_with_int_doc_ids(spark, tmp_path_factory):
+    """An IntegerType doc_id corpus must still category-filter correctly:
+    WAND buckets category rows with xxhash64(doc_id), which hashes 4-byte
+    ints and 8-byte longs differently, so doc_meta is long-cast at build —
+    without the cast the cogrouped lookup silently misses every doc."""
+    _int_doc_id_check(spark, tmp_path_factory, "code")
+
+
+def test_filter_category_with_int_doc_ids_simple_tokenizer(
+    spark, tmp_path_factory
+):
+    """The simple tokenizer long-casts doc_id like the code tokenizer: the
+    packer views doc_ids as uint64 and the engines bucket postings by
+    xxhash64 of the long, so an int doc_id would crash the pack."""
+    _int_doc_id_check(spark, tmp_path_factory, "simple")
 
 
 def test_doc_meta_category_partition_pruning(spark, cat_index):

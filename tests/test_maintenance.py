@@ -1557,3 +1557,85 @@ def test_compact_refuses_misaligned_segment_dirs(spark, tmp_path_factory):
         with pytest.raises(RuntimeError, match="one data dir per segment"):
             maint.compact(segments=segs)
         assert maint.cat.current_version() == cur
+
+
+@pytest.fixture(scope="module")
+def three_segments(spark, tmp_path_factory):
+    """A base build plus two adds (3 segments) with categories and one
+    tombstone, so every segmented table has three data dirs."""
+    rows = corpus_rows(140)
+    d = str(tmp_path_factory.mktemp("threeseg"))
+    IndexBuilder(
+        spark, d, SECTIONS, tokenizer="code", stop_k=10, category_col="lang"
+    ).build(_df(spark, rows[:100]))
+    maint = IndexMaintenance(spark, d)
+    maint.add_documents(_df(spark, rows[100:120]))
+    maint.add_documents(_df(spark, rows[120:140]))
+    maint.remove_documents([rows[5].doc_id])
+    return d
+
+
+def test_per_dir_reads_run_no_spark_jobs(spark, three_segments):
+    """Every per-dir scan of a segmented table carries its declared
+    schema, so resolving the doc-row tables, vocab, the packed segments
+    and the delete vector plans without a single Spark job (a schema-less
+    parquet read runs one job per dir to infer its schema)."""
+    from information_retrieval_spark.index.catalog import (
+        read_deletes,
+        read_packed,
+        read_seq_table,
+        table_dirs,
+    )
+
+    d = three_segments
+    assert len(table_dirs(d, "packed")) == 3
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen = set(tracker.getJobIdsForGroup("per-dir-reads"))
+    sc.setJobGroup("per-dir-reads", "resolve per-dir scans")
+    try:
+        frames = [
+            read_seq_table(spark, d, t)
+            for t in ("postings_flat", "doclen", "doc_meta", "vocab")
+        ] + [read_packed(spark, d), read_deletes(spark, d)]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert all(f is not None for f in frames)
+    jobs = set(tracker.getJobIdsForGroup("per-dir-reads")) - seen
+    assert not jobs, f"{len(jobs)} Spark jobs"
+
+
+def test_postings_flat_has_declared_columns(
+    spark, three_segments, tmp_path_factory
+):
+    """postings_flat holds exactly its declared columns (no per-row dl
+    map) in the build's dir, in each add's dir and in a tiered compact's
+    merged dir."""
+    import shutil
+
+    from information_retrieval_spark.index.catalog import (
+        TABLE_SCHEMAS,
+        table_dirs,
+    )
+
+    want = [
+        (f.name, f.dataType.simpleString())
+        for f in TABLE_SCHEMAS["postings_flat"].fields
+    ]
+
+    def cols(path):
+        return [
+            (f.name, f.dataType.simpleString())
+            for f in spark.read.parquet(path).schema.fields
+        ]
+
+    built = table_dirs(three_segments, "postings_flat")
+    assert len(built) == 3  # the build's dir and two adds'
+    for path in built:
+        assert cols(path) == want, path
+    d = str(tmp_path_factory.mktemp("declared")) + "/idx"
+    shutil.copytree(three_segments, d)
+    IndexMaintenance(spark, d).compact(segments=[1, 2])
+    dirs = table_dirs(d, "postings_flat")
+    assert len(dirs) == 2
+    assert cols(dirs[1]) == want
