@@ -37,6 +37,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
+from information_retrieval_spark.index.catalog import scan_dirs
 from information_retrieval_spark.tokenize import (
     SIMPLE_SPLIT_PATTERN,
     code_tokens_bulk,
@@ -381,6 +382,11 @@ class IndexBuilder:
     def path(self, table: str) -> str:
         return os.path.join(self.index_dir, table)
 
+    def read(self, table: str) -> DataFrame:
+        """This build's own ``table``, read with its declared schema
+        (`catalog.TABLE_SCHEMAS`): no schema-inference Spark job."""
+        return scan_dirs(self.spark, table, self.path(table))
+
     # --------------------------------------------------------------- build
 
     def build(self, corpus: DataFrame, resume: bool = False) -> dict:
@@ -481,7 +487,7 @@ class IndexBuilder:
 
         fresh_postings_all = not self._done("postings_all")
         stage("postings_all", s_postings_all)
-        postings_all = self.spark.read.parquet(self.path("postings_all"))
+        postings_all = self.read("postings_all")
 
         # stage 1: corpus stats (n_docs = FULL corpus size, quirk Q1 tf-idf
         # N) — free when postings_all just ran (Observation above); a
@@ -536,7 +542,7 @@ class IndexBuilder:
 
         stage("stop", s_stop)
 
-        stop_df = self.spark.read.parquet(self.path("stopwords"))
+        stop_df = self.read("stopwords")
 
         # stage 4: flat postings = non-stop subset, sorted by (term,
         # section, doc_id) within each partition → parquet ROW-GROUP
@@ -569,7 +575,7 @@ class IndexBuilder:
 
         stage("postings", s_postings)
 
-        postings = self.spark.read.parquet(self.path("postings_flat"))
+        postings = self.read("postings_flat")
 
         # stage 5: doclen — dl = Σ tf of non-stop terms per (doc, section)
         # (tokens are unique (term, pos) pairs, so Σ distinct-offset tf ==
@@ -606,7 +612,7 @@ class IndexBuilder:
         def s_vocab():
             if self.stop_terms is None:
                 vocab = (
-                    self.spark.read.parquet(self.path("term_df"))
+                    self.read("term_df")
                     .select("term")
                     .unionByName(stop_df.select("term"))
                     .distinct()
@@ -626,8 +632,8 @@ class IndexBuilder:
             from information_retrieval_spark.index.pack import pack_postings
 
             pack_postings(
-                self.spark.read.parquet(self.path("postings_flat")),
-                self.spark.read.parquet(self.path("doclen")),
+                self.read("postings_flat"),
+                self.read("doclen"),
                 self.path("packed"),
             )
             return {}
@@ -661,7 +667,7 @@ class IndexBuilder:
 
         def lin_for(table: str) -> pd.DataFrame:
             return lineage_frame(
-                {table: self.spark.read.parquet(self.path(table))}
+                {table: self.read(table)}
             ).toPandas()
 
         lin_futs: dict = {}

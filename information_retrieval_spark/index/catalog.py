@@ -392,10 +392,15 @@ _STR, _INT, _LONG = T.StringType(), T.IntegerType(), T.LongType()
 #: types: inference would read a numeric-looking doc_meta category
 #: ("007") back as int.
 TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "postings_all": _schema(
+        ("term", _STR), ("section", _STR), ("doc_id", _LONG),
+        ("positions", T.ArrayType(_INT)), ("tf", _INT), ("bucket", _INT),
+    ),
     "postings_flat": _schema(
         ("term", _STR), ("section", _STR), ("doc_id", _LONG),
         ("positions", T.ArrayType(_INT)), ("tf", _INT), ("bucket", _INT),
     ),
+    "stopwords": _schema(("term", _STR), ("cnt", _LONG), ("rank", _INT)),
     "doclen": _schema(("doc_id", _LONG), ("section", _STR), ("dl", _LONG)),
     "vocab": _schema(("term", _STR)),
     "term_df": _schema(("term", _STR), ("df", _LONG)),
@@ -403,6 +408,10 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
     # legacy dirs lack upto: the parquet reader fills it with null
     "deleted_docs": _schema(("doc_id", _LONG), ("upto", _LONG)),
     "packed": PACKED_SCHEMA,
+    "lineage": _schema(
+        ("table", _STR), ("part_id", _INT), ("rows", _LONG),
+        ("content_hash", _LONG),
+    ),
 }
 
 
@@ -415,6 +424,54 @@ def scan_dirs(spark: SparkSession, table: str, *dirs: str) -> DataFrame:
         return spark.read.parquet(*dirs)
     return (
         spark.read.schema(schema).parquet(*dirs).select(*schema.fieldNames())
+    )
+
+
+def arrow_scan(table: str, data_dir: str):
+    """One data dir of ``table`` as a ``pyarrow.dataset`` with its
+    declared schema: the driver-side twin of `scan_dirs`, for readers that
+    run no Spark job. Files miss a declared column read it as null (a
+    legacy delete vector's ``upto``); a hive-partitioned dir (doc_meta's
+    ``category=…`` subdirs) reads the partition value as the declared
+    string, so "007" stays "007" and ``__HIVE_DEFAULT_PARTITION__`` is
+    null. Spark's ``_SUCCESS`` / ``_SEQ`` sidecars and ``.crc`` files are
+    skipped (pyarrow ignores ``_`` and ``.`` prefixes)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    schema = pa.schema(
+        [(f.name, _arrow_type(f.dataType)) for f in TABLE_SCHEMAS[table]]
+    )
+    names = os.listdir(data_dir)
+    hive = [
+        f for f in schema if any(n.startswith(f.name + "=") for n in names)
+    ]
+    return ds.dataset(
+        data_dir, schema=schema, format="parquet",
+        partitioning=(
+            ds.partitioning(pa.schema(hive), flavor="hive") if hive else None
+        ),
+    )
+
+
+def _arrow_type(t: T.DataType):
+    import pyarrow as pa
+
+    if isinstance(t, T.ArrayType):
+        return pa.list_(_arrow_type(t.elementType))
+    return {
+        "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+        "binary": pa.binary(),
+    }[t.simpleString()]
+
+
+def footer_rows(table: str, dirs: list[str]) -> int:
+    """Rows in ``dirs`` of ``table``, summed from the parquet footers (no
+    data page read, no Spark job)."""
+    return sum(
+        frag.metadata.num_rows
+        for d in dirs
+        for frag in arrow_scan(table, d).get_fragments()
     )
 
 

@@ -48,6 +48,7 @@ from information_retrieval_spark.index.catalog import (
     DATA_SUBDIR,
     GLOBAL_UPTO,
     _SNAPSHOT_RE,
+    scan_dirs,
     segment_seq,
 )
 
@@ -138,7 +139,7 @@ def fsck_deep(spark, index_dir: str, version: int | None = None) -> dict:
         return report
     lin = {
         r["table"]: (int(r["rows"]), r["xor"])
-        for r in spark.read.parquet(*lin_dirs)
+        for r in scan_dirs(spark, "lineage", *lin_dirs)
         .groupBy("table")
         .agg(
             F.sum("rows").alias("rows"),
@@ -158,7 +159,7 @@ def fsck_deep(spark, index_dir: str, version: int | None = None) -> dict:
             deep[table] = {"skipped": "missing data dir(s)"}
             continue
         row = (
-            spark.read.parquet(*dirs)
+            scan_dirs(spark, table, *dirs)
             .agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.expr(f"bit_xor({hexpr})").alias("xor"),

@@ -10,7 +10,9 @@ in both). Legacy indexes without a catalog read their plain table dirs.
 At open it reads only driver-side files: the manifest config and the stop
 list. Every table is built on first use from the pinned version, and
 reads with its declared schema (`catalog.TABLE_SCHEMAS`), so building a
-table's frame runs no Spark job.
+table's frame runs no Spark job. The ranked engine's local placement
+reads the side rows and the term dictionary of the same version on the
+driver with pyarrow (`local_doc_rows`, `local_terms`).
 
 It also owns the ranked engine's query preparation: the index's tokenizer,
 stop filtering, one batched spell correction per batch (quirk Q7) and the
@@ -21,22 +23,24 @@ from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
 from functools import cached_property
 
+import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from information_retrieval_spark.index.catalog import (
     GLOBAL_UPTO,
     Catalog,
-    count_live_docs,
+    arrow_scan,
     filter_deleted,
     read_deletes,
     read_doc_meta,
     read_live_postings,
     read_live_table,
     read_packed,
-    read_seq_table,
     read_stats_pdf,
     read_term_df,
     scan_dirs,
@@ -50,6 +54,22 @@ from information_retrieval_spark.query.spell import (
     spell_map_for_texts,
 )
 from information_retrieval_spark.tokenize import code_terms, simple_tokens
+
+
+@dataclass(frozen=True)
+class SidePart:
+    """One data dir of the side rows: its rows of ``table`` become kind
+    ``kind`` rows with segment sequence ``seq``, ``s`` read from column
+    ``s_col`` and ``v`` from ``v_col`` (None: no such column; a null or
+    absent ``v`` reads as ``v_null``)."""
+
+    table: str
+    dir: str
+    kind: str
+    seq: int
+    s_col: str | None
+    v_col: str | None
+    v_null: int = 0
 
 
 class IndexSnapshot:
@@ -71,7 +91,7 @@ class IndexSnapshot:
         # the stop list is a few rows: pandas reads it without a Spark job
         self.stop_terms = {
             t
-            for d in self._dirs("stopwords")
+            for d in self.table_dirs("stopwords")
             for t in pd.read_parquet(d, columns=["term"])["term"]
         }
         # spell dictionary: built on the first spelled batch, or left None
@@ -79,7 +99,7 @@ class IndexSnapshot:
         self._bigram_dict: dict | None = None
         self._vocab_over_cap = False
 
-    def _dirs(self, table: str) -> list[str]:
+    def table_dirs(self, table: str) -> list[str]:
         return table_dirs(self.index_dir, table, self.version)
 
     # -------------------------------------------------------------- tables
@@ -127,17 +147,18 @@ class IndexSnapshot:
         return int(stats["n_docs"].iloc[0])
 
     @cached_property
-    def n_live(self) -> int:
-        """The live doc count, tf-idf's N (quirk Q1): ``n_docs`` minus the
-        doc versions tombstones hide until the next compact purges them
-        (`catalog.count_live_docs`, the rule compaction writes the ledger
-        by). With deletes present that is one Spark job, once."""
-        if self.deletes is None:
-            return self.n_docs
-        return count_live_docs(
-            self.n_docs,
-            read_seq_table(self.spark, self.index_dir, "doclen", self.version),
-            self.deletes,
+    def side_parts(self) -> list[SidePart]:
+        """The data dirs of the side rows (`doc_rows`), each named once:
+        every doclen dir (its segment's seq), every delete-vector dir and
+        every doc_meta dir. Both readers build their rows from this list
+        alone, so the Spark and the driver-side side rows cannot drift."""
+        return (
+            [SidePart("doclen", d, "dl", segment_seq(d), "section", "dl")
+             for d in self.table_dirs("doclen")]
+            + [SidePart("deleted_docs", d, "del", 0, None, "upto", GLOBAL_UPTO)
+               for d in self.table_dirs("deleted_docs")]
+            + [SidePart("doc_meta", d, "cat", segment_seq(d), "category", None)
+               for d in self.table_dirs("doc_meta")]
         )
 
     def doc_rows(self) -> DataFrame:
@@ -148,41 +169,52 @@ class IndexSnapshot:
         readers that resolve seq-scoped tombstones themselves. Every read
         carries its schema, so building this frame runs no Spark job."""
         parts = [
-            scan_dirs(self.spark, "doclen", d)
-            .select(
-                "doc_id", F.lit("dl").alias("kind"),
-                F.col("section").alias("s"), F.col("dl").alias("v"),
-                F.lit(segment_seq(d)).cast("long").alias("seq"),
+            scan_dirs(self.spark, p.table, p.dir).select(
+                "doc_id",
+                F.lit(p.kind).alias("kind"),
+                (F.col(p.s_col) if p.s_col else F.lit(None).cast("string"))
+                .alias("s"),
+                (F.coalesce(p.v_col, F.lit(p.v_null)) if p.v_col
+                 else F.lit(p.v_null)).cast("long").alias("v"),
+                F.lit(p.seq).cast("long").alias("seq"),
             )
-            for d in self._dirs("doclen")
+            for p in self.side_parts
         ]
-        dirs = self._dirs("deleted_docs")
-        if dirs:
-            parts.append(
-                scan_dirs(self.spark, "deleted_docs", *dirs)
-                .select(
-                    "doc_id", F.lit("del").alias("kind"),
-                    F.lit(None).cast("string").alias("s"),
-                    F.coalesce("upto", F.lit(GLOBAL_UPTO)).alias("v"),
-                    F.lit(0).cast("long").alias("seq"),
-                )
-            )
-        meta = read_doc_meta(
-            self.spark, self.index_dir, self.version, with_seq=True
-        )
-        if meta is not None:
-            parts.append(
-                meta.select(
-                    "doc_id", F.lit("cat").alias("kind"),
-                    F.col("category").alias("s"),
-                    F.lit(0).cast("long").alias("v"),
-                    F.col("seg_seq").alias("seq"),
-                )
-            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def local_doc_rows(self) -> pd.DataFrame:
+        """`doc_rows` as a pandas frame, read on the driver with pyarrow
+        from the same `side_parts`: no Spark job."""
+        frames = []
+        for p in self.side_parts:
+            cols = ["doc_id", *(c for c in (p.s_col, p.v_col) if c)]
+            tb = arrow_scan(p.table, p.dir).to_table(columns=cols)
+            n = tb.num_rows
+            frames.append(pd.DataFrame({
+                "doc_id": tb.column("doc_id").to_numpy(),
+                "kind": p.kind,
+                "s": tb.column(p.s_col).to_pandas() if p.s_col
+                else np.full(n, None, dtype=object),
+                "v": pc.fill_null(tb.column(p.v_col), p.v_null).to_numpy()
+                if p.v_col else np.full(n, p.v_null, dtype=np.int64),
+                "seq": np.full(n, p.seq, dtype=np.int64),
+            }))
+        return pd.concat(frames, ignore_index=True)
+
+    def local_terms(self, where) -> list[str]:
+        """The sorted distinct term_df terms matching the pyarrow
+        expression ``where``, read on the driver (no Spark job); the
+        driver-side twin of a filtered `term_df` scan."""
+        return sorted({
+            t
+            for d in self.table_dirs("term_df")
+            for t in arrow_scan("term_df", d)
+            .to_table(columns=["term"], filter=where)
+            .column("term").to_pylist()
+        })
 
     # --------------------------------------------------------- query prep
 

@@ -87,8 +87,7 @@ def correct_word(
         for cand, n in hits.items()
     }
     similar = sorted(scores, key=lambda wd: (-scores[wd], wd))[:similar_words_limit]
-    best = min(similar, key=lambda wd: (levenshtein(wd, word), -scores[wd], wd))
-    return best if levenshtein(best, word) < float("inf") else word
+    return min(similar, key=lambda wd: (levenshtein(wd, word), -scores[wd], wd))
 
 
 def correct_text(bigram_dict: dict[str, dict[str, int]], text: str) -> str:
@@ -126,12 +125,28 @@ def bigram_dict_if_small(
     """Build the driver-side bigram dict ONLY when the vocabulary fits
     under ``cap`` terms; returns ``None`` otherwise, and the caller routes
     through :func:`correct_words_spark` / :func:`spell_map_for_texts`
-    (the fully distributed path). The size probe is ``limit(cap+1)``
-    — bounded — never an unconditional vocabulary collect."""
-    from information_retrieval_spark.index.catalog import read_vocab
+    (the fully distributed path). The vocab dirs' parquet footers bound
+    the distinct term count: at or under the cap the terms are read on
+    the driver with pyarrow, no Spark job (`build_bigram_dict` drops a
+    term repeated across delta dirs). Over it, a bounded ``limit(cap+1)``
+    probe of the distinct vocabulary decides — never an unconditional
+    vocabulary collect."""
+    from information_retrieval_spark.index.catalog import (
+        arrow_scan,
+        footer_rows,
+        read_vocab,
+        table_dirs,
+    )
 
     if cap is None:  # read at call time so tests can shrink the cap
         cap = MAX_SPELL_VOCAB_COLLECT
+    dirs = table_dirs(index_dir, "vocab", version)
+    if footer_rows("vocab", dirs) <= cap:
+        return build_bigram_dict(
+            t
+            for d in dirs
+            for t in arrow_scan("vocab", d).to_table()["term"].to_pylist()
+        )
     vocab_df = read_vocab(spark, index_dir, version)
     probe = vocab_df.select("term").limit(cap + 1).collect()
     if len(probe) > cap:

@@ -2,44 +2,61 @@
 ``query.engine.SearchEngine``): exact block-max top-k over the packed
 compressed index for okapi25, ltn-lnn and ltc-lnc.
 
-Physical shape (SURVEY.md §3.1 redesign). A batch reads two frames, both
-keyed and partitioned by the doc-hash ``bucket``
-(``pmod(xxhash64(doc_id), n_buckets)``, fixed at build):
+A batch reads two inputs of the engine's pinned snapshot
+(query/snapshot.py):
 
 * the **shard** — the packed blocks of the batch's terms (query terms,
   their prefix expansions, filter terms), pruned by parquet row-group
-  min/max on the term-sorted layout; cached per batch;
-* the **side** — every doclen row, tombstone and category row of the
-  engine's pinned snapshot (query/snapshot.py) with its segment sequence;
-  built and cached on first use. The statistics pass reads its doclen,
-  tombstone and filtered-on category rows; the scoring pass only its
-  tombstone and filtered-on category rows.
+  min/max on the term-sorted layout;
+* the **side** — every doclen row, tombstone and category row with its
+  segment sequence (`IndexSnapshot.side_parts` names each dir once). The
+  statistics pass reads its doclen, tombstone and filtered-on category
+  rows; the scoring pass only its tombstone and category rows.
 
-Then two bucket-grouped ``applyInPandas`` passes over the same cached
-frames, so neither adds an exchange:
+and runs two passes of `_Bucket`, the same code in either placement:
 
-1. **statistics** — each bucket decodes doc_ids only and emits partial
+1. **statistics** — `_Bucket.stats` decodes doc_ids only and emits partial
    sums of the quirks' inputs (Q1 N = |candidate set| for BM25, Q2
    candidate avgdl per section, live df per query term, which is also
-   tf-idf's df). A doc lives in exactly one bucket, so the partials add up
-   across buckets; the driver sums them (`_Bucket.stats` explains the
-   prefix-mode has_exact gate);
-2. **scoring** — an exact block-at-a-time top-k per bucket, one list per
+   tf-idf's df, and the doc versions tombstones hide, which tf-idf's N
+   subtracts from the ledger's n_docs). A doc lives in exactly one
+   doc-hash bucket (``pmod(xxhash64(doc_id), n_buckets)``, fixed at
+   build), so the partials add up across buckets; the driver sums them
+   (`_Bucket.stats` explains the prefix-mode has_exact gate);
+2. **scoring** — `_Bucket.top_k`, an exact block-at-a-time top-k per
    (bucket, query), merged into the global top-k on the driver (SURVEY.md
    §7 M5).
 
-A warm batch therefore runs 4 Spark jobs: the shard's exchange, its cache,
-and one per pass. An exact-mode batch holding a tf-idf query adds one
-pushed-filter lookup of the term dictionary (its query weights count only
-the indexed query terms); with deletes present, the first tf-idf batch
-also counts the live corpus once (`IndexSnapshot.n_live`).
+**Placement.** Per batch, a gate that reads metadata only (no Spark job)
+picks where the passes run:
+
+* **local** — when the stats ledger's n_docs is at most `LOCAL_MAX_DOCS`
+  and the packed row groups whose term min/max may hold a shard term sum
+  to at most `LOCAL_MAX_SHARD_BYTES` (their parquet footers, read once
+  per engine). The driver reads the shard's row groups with pyarrow (term
+  filter pushed down) and the side rows once per engine, and runs both
+  passes over ONE `_Bucket` holding every doc: no Spark job at all. The
+  term-dictionary lookups read term_df the same way whenever n_docs is
+  under its bound (they run before the shard's terms are known);
+* **distributed** — otherwise: the shard and the side become two frames
+  partitioned by ``bucket`` (min(n_buckets, cores) partitions, the shard
+  cached per batch, the side per engine), and each pass is one
+  bucket-grouped ``cogroup.applyInPandas`` over them, so neither adds an
+  exchange. A warm batch placed here runs 4 Spark jobs (a local one runs
+  none): the shard's exchange, its cache, and one per pass; an
+  exact-mode batch holding a tf-idf query adds one pushed-filter lookup
+  of the term dictionary (its query weights count only the indexed query
+  terms).
 
 Correctness stance: the scorer is EXACT — tests check it against the
 pure-Python oracle (`tests/oracle.py`) and a brute force over unpacked
 postings (`tests/test_wand_scorer.py`); the block bounds only prune work.
 Because a doc's bucket is a pure function of doc_id, every posting of a doc
 lands in one bucket: bucket-local scoring is complete, and per-bucket
-top-k ∪ global re-rank is exact.
+top-k ∪ global re-rank is exact. The local placement's one bucket is the
+union of them all; there one list's blocks from different buckets overlap
+in doc-id range, which only loosens the interval bounds below, as LSM
+segments already do.
 
 Block-at-a-time scoring (`_Bucket.top_k`), per bucket and query:
 * every block of the query's (qterm, section) lists — each prefix
@@ -72,20 +89,48 @@ Block-at-a-time scoring (`_Bucket.top_k`), per bucket and query:
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from dataclasses import dataclass
+from functools import reduce
+from operator import or_
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from information_retrieval_spark.index.catalog import (
+    arrow_scan, scan_dirs, segment_seq,
+)
 from information_retrieval_spark.index.codec import decode_doc_gaps, varint_decode
 from information_retrieval_spark.query.engine import (
     K1, B, QuerySpec, batch_match_mode,
 )
 
+from information_retrieval_spark.query.snapshot import IndexSnapshot
+
 #: the ranking methods a query may name
 METHODS = ("okapi25", "ltn-lnn", "ltc-lnc")
-from information_retrieval_spark.query.snapshot import IndexSnapshot
+
+#: The placement gate (module docstring): a batch runs on the driver when
+#: the stats ledger's n_docs is at most LOCAL_MAX_DOCS and the packed row
+#: groups its terms may touch hold at most LOCAL_MAX_SHARD_BYTES
+#: (uncompressed, from the footers). Both come from each placement forced
+#: at 2k-80k docs (`scripts/bench_placement.py`, 4-vCPU host, local[4];
+#: BENCH/BASELINE.md "Placement crossover").
+#:
+#: LOCAL_MAX_DOCS bounds the driver memory of the side rows, measured at
+#: 0.29 KB/doc (23.4 MB at 80k docs): 200k docs ≈ 60 MB. A selective
+#: batch (tiny shard) costs 1 µs/doc more locally per batch (0.025 s at
+#: 2k docs, 0.083 s at 80k) against ~0.75-0.95 s distributed, a time
+#: crossover near 0.9M docs, so memory binds first.
+LOCAL_MAX_DOCS = 200_000
+#: LOCAL_MAX_SHARD_BYTES: the broad batch's warm time, local vs
+#: distributed, was 0.11 vs 1.02 s at a 1.2 MB shard, 0.34 vs 0.98 s at
+#: 5.9 MB, 1.18 vs 1.39 s at 23.9 MB and 2.69 vs 2.45 s at 48.6 MB: local
+#: grows ~47 ms/MB on one core, distributed ~23 ms/MB over four, and
+#: they cross near 35 MB.
+LOCAL_MAX_SHARD_BYTES = 32 << 20
 
 #: packed columns a bucket pass reads
 _SHARD_COLS = (
@@ -95,7 +140,7 @@ _SHARD_COLS = (
 
 _STATS_SCHEMA = T.StructType(
     [
-        T.StructField("query_id", T.LongType(), False),
+        T.StructField("query_id", T.LongType(), True),
         T.StructField("mask", T.StringType(), False),
         T.StructField("exact", T.StringType(), False),
         T.StructField("n", T.LongType(), False),
@@ -178,10 +223,16 @@ class _Bucket:
         tomb = pd.Series(vals[is_del]).groupby(docs[is_del]).max()
         self.del_docs = tomb.index.to_numpy(np.int64)
         self.del_upto = tomb.to_numpy(np.int64)
+        seq = side["seq"].to_numpy(np.int64)
         live = ~is_del
-        live[live] = ~self.hidden(
-            docs[live], side["seq"].to_numpy(np.int64)[live]
-        )
+        live[live] = ~self.hidden(docs[live], seq[live])
+        # the doc versions (doc_id, seq) whose doclen rows a tombstone
+        # hides: tf-idf's N is the ledger's n_docs minus their sum over
+        # buckets (`catalog.count_live_docs`, the same rule)
+        gone = (kind == "dl") & ~live
+        self.n_hidden = np.unique(
+            np.stack([docs[gone], seq[gone]]), axis=1
+        ).shape[1]
         # live (doc, section, dl) rows, looked up for candidates only
         is_dl = live & (kind == "dl")
         self.sections = sections
@@ -252,7 +303,9 @@ class _Bucket:
         """Per query, this bucket's live, filter-passing candidates grouped
         by the set of qterms they match (``mask``, one '0'/'1' per qterm):
         the group's size and per-section dl sums. Plus ``exact``: which
-        qterms' exact term has such a doc here.
+        qterms' exact term has such a doc here. And one row with a null
+        query_id and an empty mask whose ``n`` is `n_hidden` (none when it
+        is 0), also from a bucket no query term reaches.
 
         Every figure adds up across buckets, and the masks keep the
         prefix-mode has_exact gate exact: a qterm survives only if its
@@ -260,9 +313,11 @@ class _Bucket:
         no single bucket can decide. The driver ORs ``exact``, then sums
         only the groups whose mask hits a surviving qterm (n_cand, avgdl)
         and, per surviving qterm, the groups holding its bit (df)."""
-        out: list[tuple] = []
+        out: list[tuple] = (
+            [(None, "", "", self.n_hidden, [])] if self.n_hidden else []
+        )
         if not self.rows_of:
-            return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+            return _stats_frame(out)
         found = []  # (qid, candidates, qterm membership, exact bits)
         for qid, plan in plans.items():
             if not plan.qterms:
@@ -286,7 +341,7 @@ class _Bucket:
                 member[np.searchsorted(cands, d), i] = True
             found.append((qid, cands, member, "".join(exact)))
         if not found:
-            return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+            return _stats_frame(out)
         every = np.unique(np.concatenate([f[1] for f in found]))
         every_dl = self.dl_of(every)
         for qid, cands, member, ex in found:
@@ -302,7 +357,7 @@ class _Bucket:
             for g, bits in enumerate(groups.astype(int)):
                 mask = "".join(map(str, bits))
                 out.append((qid, mask, ex, int(n[g]), sums[g].tolist()))
-        return pd.DataFrame(out, columns=_STATS_SCHEMA.fieldNames())
+        return _stats_frame(out)
 
     def top_k(
         self, qmeta: dict[int, dict], plans: dict[int, _Plan]
@@ -410,6 +465,15 @@ class _Bucket:
                 dl[ok].astype(np.float64))
 
 
+def _stats_frame(rows: list[tuple]) -> pd.DataFrame:
+    """`_Bucket.stats` rows as a frame; query_id is nullable ``Int64``, so
+    a null next to a long id keeps every id exact."""
+    out = pd.DataFrame([r[1:] for r in rows],
+                       columns=_STATS_SCHEMA.fieldNames()[1:])
+    out.insert(0, "query_id", pd.array([r[0] for r in rows], dtype="Int64"))
+    return out
+
+
 def _list_meta(q: QuerySpec, mult: dict[str, int], st: dict,
                indexed: set[str], n_live: int,
                weights: dict[str, float]) -> dict[tuple, dict]:
@@ -446,20 +510,45 @@ def _list_meta(q: QuerySpec, mult: dict[str, int], st: dict,
     return out
 
 
+@dataclass(frozen=True)
+class _RowGroup:
+    """One row group of a packed file, from its parquet footer: its term
+    range (None when the footer has no statistics: it may hold any
+    term), its rows and uncompressed bytes, and where to read it."""
+
+    lo: str | None
+    hi: str | None
+    rows: int
+    nbytes: int
+    frag: object  # the file's pyarrow ParquetFileFragment
+    index: int
+    seq: int  # the segment's sequence (`catalog.segment_seq`)
+
+    def holds_any(self, terms: list[str]) -> bool:
+        """Whether the sorted ``terms`` may have rows here."""
+        if self.lo is None:
+            return True
+        i = bisect_left(terms, self.lo)
+        return i < len(terms) and terms[i] <= self.hi
+
+
 class WandEngine:
     """Exact okapi25, ltn-lnn and ltc-lnc top-k over ``<index_dir>/packed``,
-    scored a block at a time per doc-hash bucket and pruned by the blocks'
-    bounds (module docstring).
+    scored a block at a time and pruned by the blocks' bounds, on the
+    driver or per doc-hash bucket on the executors as the placement gate
+    decides per batch (module docstring).
 
     Concurrency: a ``SparkSession`` is thread-safe, an engine's CACHE
     handoff is not — ``search()`` swaps the previous batch's persisted
     shard out without a lock, so two threads sharing one engine would
     evict each other's shard mid-batch (correct but recompute-taxed).
     For concurrent serving hold ONE ENGINE PER WORKER THREAD over the
-    same index_dir and ``close()`` each when done (per-engine executor
-    storage is the bucket side frame + one query-term shard);
-    measured throughput for that model: BENCH/BASELINE.md "Concurrent
-    query throughput" (`scripts/bench_qps.py`)."""
+    same index_dir and ``close()`` each when done (per-engine state: the
+    driver-side side rows and footers of the local placement, and the
+    executor-side bucket side frame + one query-term shard of the
+    distributed one); measured throughput for that model:
+    BENCH/BASELINE.md "Concurrent query throughput"
+    (`scripts/bench_qps.py`)."""
 
     def __init__(
         self,
@@ -479,12 +568,11 @@ class WandEngine:
         current one, resolved once, here: query/snapshot.py). The packed
         table arrives with its LSM segment sequence (catalog.read_packed):
         incremental adds commit new segments instead of repacking, and the
-        per-bucket scorer takes every segment's blocks into its lists,
-        masking the postings that seq-scoped tombstones hide."""
+        block scorer takes every segment's blocks into its lists, masking
+        the postings that seq-scoped tombstones hide."""
         self.spark = spark
         self.snapshot = IndexSnapshot(spark, index_dir, version)
-        # resolved at open: its schema read is a Spark job that would
-        # otherwise land in the first search()
+        # resolved at open, with its declared schema: no Spark job
         self.packed = self.snapshot.packed
         self.n_buckets = int(self.snapshot.config.get("n_buckets", 8))
         # partition count of both cached bucket frames: equal counts let
@@ -497,23 +585,37 @@ class WandEngine:
         self.max_prefix_expand = max_prefix_expand
         self._dl_map_df = None
         self._last_shard = None
+        # the local placement's per-engine reads (the snapshot is
+        # immutable): every side row as one pandas frame, and the packed
+        # files' row-group footers
+        self._local_side: pd.DataFrame | None = None
+        self._row_groups: list[_RowGroup] | None = None
         #: the last batch's corpus statistics per query_id: ``n_cand``
-        #: (quirk Q1 N), ``avgdl`` per section (Q2) and live ``df`` per
-        #: surviving qterm — what the list weights were computed from
+        #: (quirk Q1 N), ``avgdl`` per section (Q2), live ``df`` per
+        #: surviving qterm and ``n_live`` (tf-idf's N) — what the list
+        #: weights were computed from
         self.last_stats: dict[int, dict] = {}
+        #: the last batch's placement ("local" / "distributed") and the
+        #: gate's inputs: ``n_docs``, ``shard_rows``, ``shard_bytes``
+        #: (None when ``n_docs`` alone decided)
+        self.last_placement: dict = {}
 
     def close(self) -> None:
-        """Release this engine's persisted executor state (the bucket side
-        frame and the last batch's term shard). A WandEngine keeps both
-        cached across ``search()`` calls so a query stream amortizes them; a
-        long-lived process that cycles through many engines (one per
-        index/snapshot — e.g. a size sweep, a multi-tenant server) must
-        close each one or the abandoned cache blocks accumulate in
-        executor storage memory until eviction churn taxes every later
-        job (measured: a 3-size sweep that skipped close() showed 2.7×
-        on the LAST index's warm query batch vs the same batch isolated;
-        BENCH/BASELINE.md corpus-size section). Idempotent; the engine
-        remains usable after close() — the next search() re-caches."""
+        """Release this engine's cached state: the local placement's side
+        rows and footers on the driver, and the distributed placement's
+        persisted executor state (the bucket side frame and the last
+        batch's term shard). A WandEngine keeps them across ``search()``
+        calls so a query stream amortizes them; a long-lived process that
+        cycles through many engines (one per index/snapshot — e.g. a size
+        sweep, a multi-tenant server) must close each one or the abandoned
+        cache blocks accumulate in executor storage memory until eviction
+        churn taxes every later job (measured: a 3-size sweep that skipped
+        close() showed 2.7× on the LAST index's warm query batch vs the
+        same batch isolated; BENCH/BASELINE.md corpus-size section).
+        Idempotent; the engine remains usable after close() — the next
+        search() reads or caches again."""
+        self._local_side = None
+        self._row_groups = None
         if self._dl_map_df is not None:
             self._dl_map_df.unpersist()
             self._dl_map_df = None
@@ -527,7 +629,94 @@ class WandEngine:
     def __exit__(self, *exc) -> None:
         self.close()
 
-    # ------------------------------------------------------------- helpers
+    # ------------------------------------------------------------ the gate
+
+    def _small(self) -> bool:
+        """The corpus half of the gate: the stats ledger's ``n_docs`` is
+        at most `LOCAL_MAX_DOCS`. It bounds the driver memory of the side
+        rows, and alone places the term-dictionary lookups, which run
+        before the shard's terms are known."""
+        return self.snapshot.n_docs <= LOCAL_MAX_DOCS
+
+    def _gate(self, terms: list[str]) -> list[_RowGroup] | None:
+        """The batch's placement from metadata only (no Spark job), set in
+        `last_placement`: local iff `_small` and the packed row groups
+        whose term range may hold one of the sorted ``terms`` sum to at
+        most `LOCAL_MAX_SHARD_BYTES`. Returns those row groups when local."""
+        small = self._small()
+        groups = (
+            [g for g in self._footers() if g.holds_any(terms)] if small
+            else []
+        )
+        nbytes = sum(g.nbytes for g in groups)
+        local = small and nbytes <= LOCAL_MAX_SHARD_BYTES
+        self.last_placement = {
+            "placement": "local" if local else "distributed",
+            "n_docs": self.snapshot.n_docs,
+            "shard_rows": sum(g.rows for g in groups) if small else None,
+            "shard_bytes": nbytes if small else None,
+        }
+        return groups if local else None
+
+    def _footers(self) -> list[_RowGroup]:
+        """Every packed row group of the snapshot, read once per engine
+        from the files' footers."""
+        if self._row_groups is None:
+            self._row_groups = []
+            for d in self.snapshot.table_dirs("packed"):
+                seq = segment_seq(d)
+                for frag in arrow_scan("packed", d).get_fragments():
+                    md = frag.metadata
+                    col = md.schema.names.index("term")
+                    for i in range(md.num_row_groups):
+                        rg = md.row_group(i)
+                        st = rg.column(col).statistics
+                        has = st is not None and st.has_min_max
+                        self._row_groups.append(_RowGroup(
+                            st.min if has else None, st.max if has else None,
+                            rg.num_rows, rg.total_byte_size, frag, i, seq,
+                        ))
+        return self._row_groups
+
+    # ---------------------------------------------------------- placements
+
+    def _local(self, terms: list[str], groups: list[_RowGroup],
+               plans: dict[int, _Plan]):
+        """The local placement: one `_Bucket` holding every doc, on the
+        driver. The shard is the ``terms``' rows of row groups ``groups``
+        (pyarrow, term filter pushed down); the side rows are read once
+        per engine (`IndexSnapshot.local_doc_rows`). A doc lives in one
+        bucket, so the union of the buckets is complete; its block ranges
+        overlap across buckets, which only loosens the interval bounds,
+        as LSM segments already do. Returns the statistics rows and the
+        scoring pass, as `_distributed` does."""
+        files: dict[int, tuple] = {}
+        for g in groups:
+            files.setdefault(id(g.frag), (g.frag, g.seq, []))[2].append(
+                g.index
+            )
+        where = pc.field("term").isin(terms)
+        cols = [c for c in _SHARD_COLS if c not in ("bucket", "seg_seq")]
+        parts = [
+            frag.subset(row_group_ids=ids)
+            .to_table(columns=cols, filter=where)
+            .to_pandas()
+            .assign(seg_seq=seq)
+            for frag, seq, ids in files.values()
+        ]
+        shard = (
+            pd.concat(parts, ignore_index=True) if parts
+            else pd.DataFrame(columns=list(_SHARD_COLS))
+        )
+        if self._local_side is None:
+            self._local_side = self.snapshot.local_doc_rows()
+        bucket = _Bucket(shard, self._local_side, self.snapshot.sections)
+
+        def score(qmeta):
+            top = bucket.top_k(qmeta, plans)
+            return top.itertuples(index=False, name=None)
+
+        return bucket.stats(plans).itertuples(index=False, name=None), score
 
     def _side(self) -> DataFrame:
         """The bucket side frame, built and cached on first use (and again
@@ -547,25 +736,85 @@ class WandEngine:
             ).repartition(self._partitions, "bucket").persist()
         return self._dl_map_df
 
+    def _distributed(self, terms: list[str], plans: dict[int, _Plan]):
+        """The distributed placement: the ``terms``' packed blocks as a
+        bucket-partitioned shard, cached for the batch, and two
+        bucket-grouped passes over it and the cached side frame (module
+        docstring). Runs the statistics pass; returns its rows and the
+        scoring pass."""
+        shard = (
+            self.packed.filter(F.col("term").isin(terms))
+            .select(*_SHARD_COLS)
+            .repartition(self._partitions, "bucket")
+            .persist()
+        )
+        if self._last_shard is not None:
+            self._last_shard.unpersist()
+        self._last_shard = shard
+        # each pass reads only the side rows it uses: tombstones, the
+        # categories a query filters on, and (statistics only) doclen. A
+        # filter keeps the cached frame's bucket partitioning, so neither
+        # cogroup adds an exchange
+        side = self._side()
+        wants = sorted({p.want for p in plans.values() if p.want is not None})
+        rows = F.col("kind") == "del"
+        if wants:
+            rows |= (F.col("kind") == "cat") & F.col("s").isin(wants)
+        score_side = side.filter(rows)
+        stats_side = side.filter(rows | (F.col("kind") == "dl"))
+        sections = self.snapshot.sections
+
+        def stats_bucket(
+            left: pd.DataFrame, right: pd.DataFrame
+        ) -> pd.DataFrame:
+            return _Bucket(left, right, sections).stats(plans)
+
+        stats = (
+            shard.groupby("bucket")
+            .cogroup(stats_side.groupby("bucket"))
+            .applyInPandas(stats_bucket, _STATS_SCHEMA)
+            .collect()
+        )
+
+        def score(qmeta):
+            def score_bucket(
+                left: pd.DataFrame, right: pd.DataFrame
+            ) -> pd.DataFrame:
+                return _Bucket(left, right, sections).top_k(qmeta, plans)
+
+            return (
+                shard.groupby("bucket")
+                .cogroup(score_side.groupby("bucket"))
+                .applyInPandas(score_bucket, _TOPK_SCHEMA)
+                .collect()
+            )
+
+        return stats, score
+
     # ---------------------------------------------------------------- main
 
-    def _expand_prefix(self, qterms: set[str]) -> dict[str, list[str]]:
+    def _expand_prefix(
+        self, qterms: set[str], local: bool
+    ) -> dict[str, list[str]]:
         """qterm → matching postings terms (prefix semantics,
         `trie/phase1.py:17-36`): every indexed term the qterm prefixes,
         GATED on the exact term existing in the term dictionary.
-        One pushed-filter scan of the term dictionary. Under logical
-        deletes the gate is re-checked against the LIVE matched stream in
-        ``search`` (term_df is only refreshed at compact, so a fully
-        deleted exact term must still suppress its expansion)."""
-        from functools import reduce
-        from operator import or_
-
+        One pushed-filter scan of the term dictionary, on the driver when
+        ``local``. Under logical deletes the gate is re-checked against
+        the LIVE matched stream in ``search`` (term_df is only refreshed at
+        compact, so a fully deleted exact term must still suppress its
+        expansion)."""
         if not qterms:
             return {}
-        cond = reduce(or_, [F.col("term").startswith(t) for t in qterms])
         cap = self.max_prefix_expand
-        hits = self.snapshot.term_df.filter(cond).limit(cap + 1).collect()
-        terms = [r.term for r in hits]
+        if local:
+            terms = self.snapshot.local_terms(reduce(
+                or_, [pc.starts_with(pc.field("term"), t) for t in qterms]
+            ))
+        else:
+            cond = reduce(or_, [F.col("term").startswith(t) for t in qterms])
+            hits = self.snapshot.term_df.filter(cond).limit(cap + 1).collect()
+            terms = [r.term for r in hits]
         if len(terms) > cap:
             raise ValueError(
                 f"prefix expansion exceeds max_prefix_expand={cap} "
@@ -579,12 +828,20 @@ class WandEngine:
                 out[q] = [t for t in terms if t.startswith(q)]
         return out
 
-    def _indexed(self, qterms: set[str]) -> set[str]:
+    def _indexed(self, qterms: set[str], local: bool) -> set[str]:
         """Which of ``qterms`` are in the term dictionary: one pushed-filter
-        scan, skipped when there are none."""
+        scan (on the driver when ``local``), skipped when there are none.
+        Membership needs no df, so a multi-dir term_df is read without its
+        merge-on-read aggregate (a shuffle): one Spark job."""
         if not qterms:
             return set()
-        hits = self.snapshot.term_df.filter(F.col("term").isin(sorted(qterms)))
+        where = sorted(qterms)
+        if local:
+            return set(self.snapshot.local_terms(pc.field("term").isin(where)))
+        dirs = self.snapshot.table_dirs("term_df")
+        hits = scan_dirs(self.spark, "term_df", *dirs).filter(
+            F.col("term").isin(where)
+        )
         return {r.term for r in hits.select("term").collect()}
 
     def search(self, queries: list[QuerySpec]) -> DataFrame:
@@ -592,11 +849,11 @@ class WandEngine:
         okapi25, ltn-lnn and ltc-lnc queries.
 
         Runs the batch before returning: one statistics pass and one
-        scoring pass, both bucket-grouped over the same cached frames, and
-        a driver-side merge of the per-bucket top-k lists into the returned
-        frame. That is at most ``n_buckets · k`` rows per query for k > 0;
-        a k < 0 query ("all results") brings every candidate to the
-        driver.
+        scoring pass, on the driver or bucket-grouped over the same cached
+        frames as the gate places it (`last_placement`), and a driver-side
+        merge of the per-bucket top-k lists into the returned frame. That
+        is at most ``n_buckets · k`` rows per query for k > 0; a k < 0
+        query ("all results") brings every candidate to the driver.
         A batch mixing match modes, or naming an unknown method, raises
         ``ValueError``."""
         bad = sorted({q.method for q in queries} - set(METHODS))
@@ -606,6 +863,7 @@ class WandEngine:
             )
         mode = batch_match_mode(queries)
         self.last_stats = {}
+        self.last_placement = {}
         if not queries:
             return self._result()
         qtoks: dict[int, dict[str, int]] = {}
@@ -618,11 +876,11 @@ class WandEngine:
         tfidf = {t for q in queries if q.method != "okapi25"
                  for t in qtoks[q.query_id]}
         if mode == "prefix":
-            expansions = self._expand_prefix(uniq_qterms)
+            expansions = self._expand_prefix(uniq_qterms, self._small())
             indexed = set(expansions)
         else:
             expansions = {t: [t] for t in uniq_qterms}
-            indexed = self._indexed(tfidf)
+            indexed = self._indexed(tfidf, self._small())
         plans = {
             q.query_id: _Plan(
                 qterms={
@@ -652,54 +910,34 @@ class WandEngine:
             {t for ts in expansions.values() for t in ts}
             | {t for p in plans.values() for t in p.must + p.exclude}
         )
-        shard = (
-            self.packed.filter(F.col("term").isin(shard_terms))
-            .select(*_SHARD_COLS)
-            .repartition(self._partitions, "bucket")
-            .persist()
+        groups = self._gate(shard_terms)
+        stats, score = (
+            self._distributed(shard_terms, plans) if groups is None
+            else self._local(shard_terms, groups, plans)
         )
-        if self._last_shard is not None:
-            self._last_shard.unpersist()
-        self._last_shard = shard
-        # each pass reads only the side rows it uses: tombstones, the
-        # categories a query filters on, and (statistics only) doclen. A
-        # filter keeps the cached frame's bucket partitioning, so neither
-        # cogroup adds an exchange
-        side = self._side()
-        wants = sorted({p.want for p in plans.values() if p.want is not None})
-        rows = F.col("kind") == "del"
-        if wants:
-            rows |= (F.col("kind") == "cat") & F.col("s").isin(wants)
-        score_side = side.filter(rows)
-        stats_side = side.filter(rows | (F.col("kind") == "dl"))
+
+        # --- statistics: sum the per-bucket partials
         sections = self.snapshot.sections
-
-        # --- statistics pass: per-bucket partial sums, added on the driver
-        def stats_bucket(
-            left: pd.DataFrame, right: pd.DataFrame
-        ) -> pd.DataFrame:
-            return _Bucket(left, right, sections).stats(plans)
-
-        stats = (
-            shard.groupby("bucket")
-            .cogroup(stats_side.groupby("bucket"))
-            .applyInPandas(stats_bucket, _STATS_SCHEMA)
-            .collect()
-        )
         masks: dict[int, dict[str, list]] = {}
         exact: dict[int, set[int]] = {}
-        for r in stats:
-            acc = masks.setdefault(r.query_id, {}).setdefault(
-                r.mask, [0, np.zeros(len(sections))]
+        hidden = 0
+        for qid, mask, ex, n, dl_sums in stats:
+            if not mask:  # a bucket's hidden doc versions (`_Bucket.stats`)
+                hidden += n
+                continue
+            acc = masks.setdefault(qid, {}).setdefault(
+                mask, [0, np.zeros(len(sections))]
             )
-            acc[0] += r.n
-            acc[1] += np.asarray(r.dl_sums, dtype=np.float64)
-            exact.setdefault(r.query_id, set()).update(
-                i for i, c in enumerate(r.exact) if c == "1"
+            acc[0] += n
+            acc[1] += np.asarray(dl_sums, dtype=np.float64)
+            exact.setdefault(qid, set()).update(
+                i for i, c in enumerate(ex) if c == "1"
             )
 
         # --- corpus statistics per query: sum the bucket partials, gated
-        # by the live has_exact OR (see `_Bucket.stats`)
+        # by the live has_exact OR (see `_Bucket.stats`). tf-idf's N is the
+        # live doc count: the ledger minus the hidden doc versions
+        n_live = self.snapshot.n_docs - hidden
         for q in queries:
             alive = exact.get(q.query_id, set())
             hits = [
@@ -718,10 +956,10 @@ class WandEngine:
                     for i, t in enumerate(plans[q.query_id].qterms)
                     if i in alive
                 },
+                "n_live": n_live,
             }
 
         # --- per-query scoring-term meta ---------------------------------
-        n_live = self.snapshot.n_live if tfidf else 0
         qmeta: dict[int, dict] = {}
         for q in queries:
             st = self.last_stats[q.query_id]
@@ -733,22 +971,12 @@ class WandEngine:
         if not qmeta:
             return self._result()
 
-        # --- scoring pass per bucket: same cached frames, no new exchange -
-        def score_bucket(
-            left: pd.DataFrame, right: pd.DataFrame
-        ) -> pd.DataFrame:
-            return _Bucket(left, right, sections).top_k(qmeta, plans)
-
+        # --- scoring, then the global top-k: the per-bucket lists are
+        # exact (a doc lives in one bucket), re-ranked under the scorer's
+        # own ordering
         per_query: dict[int, list[tuple[int, float]]] = {}
-        for r in (
-            shard.groupby("bucket")
-            .cogroup(score_side.groupby("bucket"))
-            .applyInPandas(score_bucket, _TOPK_SCHEMA)
-            .collect()
-        ):
-            per_query.setdefault(r.query_id, []).append((r.doc_id, r.score))
-        # global top-k: the per-bucket lists are exact (a doc lives in one
-        # bucket), re-ranked under the scorer's own ordering
+        for qid, doc, sc in score(qmeta):
+            per_query.setdefault(qid, []).append((doc, sc))
         out = []
         for q in queries:
             ranked = sorted(

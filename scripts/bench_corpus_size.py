@@ -75,10 +75,34 @@ from information_retrieval_spark.index.fsck import (  # noqa: E402
 )
 
 
-def run_size(spark, n: int) -> dict:
+def broad_specs() -> list:
+    """The standard fixture query set: content terms, df ∝ corpus."""
     from information_retrieval_spark.fixtures import make_queries
-    from information_retrieval_spark.index.build import IndexBuilder
     from information_retrieval_spark.query.engine import QuerySpec
+
+    return [
+        QuerySpec(q.query_id, q.query_text, "okapi25", 10,
+                  spell=False, match_mode="exact")
+        for q in make_queries(30)
+        if q.method == "okapi25"
+    ]
+
+
+def selective_specs() -> list:
+    """A constant-absolute-df batch: the fixture's path tokens file{i}
+    are unique per doc, so df stays 1 however large the corpus is (all ids
+    < the smallest swept corpus so the doc exists at every size)."""
+    from information_retrieval_spark.query.engine import QuerySpec
+
+    return [
+        QuerySpec(1000 + j, f"file{37 + 997 * j}", "okapi25",
+                  10, spell=False, match_mode="exact")
+        for j in range(18)
+    ]
+
+
+def run_size(spark, n: int) -> dict:
+    from information_retrieval_spark.index.build import IndexBuilder
     from information_retrieval_spark.query.wand import WandEngine
 
     corpus_dir = ensure_corpus(n)
@@ -94,21 +118,7 @@ def run_size(spark, n: int) -> dict:
     eng = None
     try:
         eng = WandEngine(spark, idx)
-        broad = [
-            QuerySpec(q.query_id, q.query_text, "okapi25", 10,
-                      spell=False, match_mode="exact")
-            for q in make_queries(30)
-            if q.method == "okapi25"
-        ]
-        # constant-absolute-df batch: the fixture's path tokens file{i}
-        # are unique per doc, so df stays 1 however large the corpus is
-        # (all ids < the smallest swept corpus so the doc exists at
-        # every size)
-        selective = [
-            QuerySpec(1000 + j, f"file{37 + 997 * j}", "okapi25",
-                      10, spell=False, match_mode="exact")
-            for j in range(18)
-        ]
+        broad, selective = broad_specs(), selective_specs()
 
         def p50(specs):
             lat = []

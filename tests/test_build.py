@@ -141,3 +141,24 @@ def test_tokenize_postings_chunking_boundary(spark, corpus_df):
         )
     )
     assert chunked == full and full
+
+
+def test_build_tables_have_their_declared_schemas(spark, index_dir):
+    """Each table a fresh build writes holds exactly its declared column
+    names and types (`catalog.TABLE_SCHEMAS`), so the build's and fsck's
+    declared reads of them drop and recast nothing."""
+    from information_retrieval_spark.index.catalog import TABLE_SCHEMAS
+
+    def cols(schema):
+        return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+    checked = set()
+    for table, schema in TABLE_SCHEMAS.items():
+        path = os.path.join(index_dir, table)
+        if os.path.isdir(path):
+            assert cols(spark.read.parquet(path).schema) == cols(schema), table
+            checked.add(table)
+    assert checked == {
+        "postings_all", "postings_flat", "stopwords", "doclen", "term_df",
+        "vocab", "packed", "lineage",
+    }

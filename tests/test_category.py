@@ -7,7 +7,8 @@ EXACTLY like an unfiltered query over an index built from only that
 category's docs (stop list pinned) — the per-query candidate stats (Q1 N,
 Q2 avgdl, df) all recompute over the sub-corpus, like the delete-vector
 path. The engine must be rank-identical to the pure-Python oracle over
-each query's category, including mixed filtered/unfiltered batches.
+each query's category, including mixed filtered/unfiltered batches, and
+equal under each placement.
 """
 
 import pytest
@@ -16,6 +17,7 @@ from information_retrieval_spark.fixtures import corpus_rows
 from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
 from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
+from tests.placement import each_placement
 
 SECTIONS = {"title": "path", "abstract": "content"}
 CAT = "java"
@@ -31,7 +33,7 @@ def _df(spark, rows):
 
 def _res(engine, specs):
     out = {}
-    for r in engine.search(specs).collect():
+    for r in each_placement(lambda: engine.search(specs).collect()):
         out.setdefault(r.query_id, []).append(
             (r.rank, r.doc_id, round(r.score, 9))
         )
@@ -58,7 +60,8 @@ def _oracle_check(spark, idx, rows, specs, tokenizer="code"):
     """The engine's answer to ``specs`` over ``idx`` equals the oracle's
     over each query's category of ``rows`` (index stop list pinned).
     Returns the engine's rows per query."""
-    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    eng = SearchEngine(spark, idx)
+    got = each_placement(lambda: ranked_rows(eng.search(specs)))
     stop = _stop_of(spark, idx)
     for q in specs:
         orc = Oracle(

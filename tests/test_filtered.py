@@ -2,10 +2,12 @@
 Lucene filter-context semantics): the engine is rank-identical to the
 declarative plan (exact mode), to the pure-Python oracle over each query's
 filter-passing sub-corpus (prefix mode), and to a fresh build under
-deletes."""
+deletes, under each placement."""
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.placement import each_placement
 
 SF = "/root/testdata/sf0.001"
 
@@ -55,7 +57,8 @@ def test_filtered_engines_match_declarative(spark, idx):
         for r in q_bm25_filtered(spark, SF).collect()
     }
     assert want, "filter set should produce results"
-    assert _rows(SearchEngine(spark, idx).search(_specs())) == want
+    eng = SearchEngine(spark, idx)
+    assert each_placement(lambda: _rows(eng.search(_specs()))) == want
 
 
 def test_filtered_prefix_mode_wand_matches_exhaustive(spark, idx):
@@ -66,7 +69,8 @@ def test_filtered_prefix_mode_wand_matches_exhaustive(spark, idx):
     from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
 
     specs = _specs("prefix")
-    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    eng = SearchEngine(spark, idx)
+    got = each_placement(lambda: ranked_rows(eng.search(specs)))
     assert got
     texts = {
         r.doc_id: r.text
@@ -100,7 +104,7 @@ def test_filtered_constraints_actually_bite(spark, idx):
         for q in _specs()
     ]
     un = {}
-    for r in eng.search(plain).collect():
+    for r in each_placement(lambda: eng.search(plain).collect()):
         un.setdefault(r.query_id, set()).add(r.doc_id)
     fi = {}
     full = [
@@ -109,7 +113,7 @@ def test_filtered_constraints_actually_bite(spark, idx):
                   exclude_terms=q.exclude_terms)
         for q in _specs()
     ]
-    for r in eng.search(full).collect():
+    for r in each_placement(lambda: eng.search(full).collect()):
         fi.setdefault(r.query_id, set()).add(r.doc_id)
     # docs with an excluded term must vanish; presence = indexed terms
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -137,7 +141,8 @@ def test_filtered_absent_must_term_empties_query(spark, idx):
         QuerySpec(0, "hash join", "okapi25", 10, spell=False,
                   match_mode="exact", filter_terms=("zzznotfound",))
     ]
-    assert SearchEngine(spark, idx).search(spec).collect() == []
+    eng = SearchEngine(spark, idx)
+    assert each_placement(lambda: eng.search(spec).collect()) == []
 
 
 def test_filtered_after_delete_rank_identity(spark, tmp_path):
@@ -177,7 +182,8 @@ def test_filtered_after_delete_rank_identity(spark, tmp_path):
     victim = base[0].doc_id
     IndexMaintenance(spark, idx).remove_documents([victim])
 
-    got_e = _rows(SearchEngine(spark, idx).search(spec))
+    eng = SearchEngine(spark, idx)
+    got_e = each_placement(lambda: _rows(eng.search(spec)))
     assert victim not in {d for _, _, d, _ in got_e}
 
     idx2 = str(tmp_path / "f_idx2")

@@ -14,6 +14,7 @@ from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.index.maintenance import IndexMaintenance
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
 from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
+from tests.placement import each_placement
 
 SECTIONS = {"title": "path", "abstract": "content"}
 # (query_id, must, should, not): the updates' and resurrections' own words
@@ -39,10 +40,11 @@ def _df(spark, rows):
 
 
 def _results(engine):
-    return sorted(
+    """``engine``'s answer to QUERIES, equal under each placement."""
+    return each_placement(lambda: sorted(
         (r.query_id, r.rank, r.doc_id, round(r.score, 9))
         for r in engine.search(QUERIES).collect()
-    )
+    ))
 
 
 @pytest.fixture(scope="module")
@@ -74,7 +76,7 @@ def _oracle(spark, idx, live_rows):
 def _matches_oracle(spark, engine, idx, live_rows, specs=QUERIES):
     """``engine`` answers ``specs`` as the oracle over ``live_rows``."""
     orc = _oracle(spark, idx, live_rows)
-    got = ranked_rows(engine.search(specs))
+    got = each_placement(lambda: ranked_rows(engine.search(specs)))
     for q in specs:
         assert_ranked_equal(got.get(q.query_id, []), orc.answer(q),
                             f"query {q.query_id}")
@@ -109,7 +111,8 @@ def test_wand_on_maintained_index(spark, maintained, fresh150):
             for m, method in enumerate(("ltn-lnn", "ltc-lnc"))
             for q in QUERIES
         ]
-        got = ranked_rows(SearchEngine(spark, maintained).search(specs))
+        eng = SearchEngine(spark, maintained)
+        got = each_placement(lambda: ranked_rows(eng.search(specs)))
         want = ranked_rows(SearchEngine(spark, fresh150).search(specs))
         assert got.keys() == want.keys(), mode
         for qid in want:
@@ -176,7 +179,8 @@ def test_prefix_gate_respects_deletes(spark, tmp_path_factory):
                   match_mode="prefix"),
     ]
 
-    got = ranked_rows(SearchEngine(spark, idx).search(specs))
+    eng = SearchEngine(spark, idx)
+    got = each_placement(lambda: ranked_rows(eng.search(specs)))
     orc = Oracle(
         {doc: {"title": path, "abstract": text}
          for doc, _, path, _, _, text in rows if doc not in (1, 3)},
@@ -1444,8 +1448,8 @@ def test_tfidf_n_counts_live_docs_after_update_and_remove(
                 for i, t in enumerate(texts)
             ]
             got: dict = {}
-            for r in sorted(eng.search(specs).collect(),
-                            key=lambda r: (r.query_id, r.rank)):
+            rows = each_placement(lambda: eng.search(specs).collect())
+            for r in sorted(rows, key=lambda r: (r.query_id, r.rank)):
                 got.setdefault(r.query_id, []).append((r.doc_id, r.score))
             for i, t in enumerate(texts):
                 want = orc.search(t, method, weight=0.2, k=10,

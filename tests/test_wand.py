@@ -8,6 +8,7 @@ import pytest
 from information_retrieval_spark.fixtures import make_queries
 from information_retrieval_spark.query.engine import QuerySpec
 from tests.oracle import assert_ranked_equal, ranked_rows
+from tests.placement import each_placement, forced
 
 
 @pytest.fixture(scope="module")
@@ -18,7 +19,7 @@ def wand(spark, index_dir):
 
 
 def _matches_oracle(wand, oracle, specs):
-    got = ranked_rows(wand.search(specs))
+    got = each_placement(lambda: ranked_rows(wand.search(specs)))
     want = {s.query_id: oracle.answer(s) for s in specs}
     want = {q: v for q, v in want.items() if v}
     assert set(got) == set(want), (set(got) ^ set(want))
@@ -45,7 +46,7 @@ def test_wand_k_all(wand, oracle):
 def test_wand_absent_term_only(wand):
     spec = [QuerySpec(901, "zzzneverseen", "okapi25", 10,
                       spell=False, match_mode="exact")]
-    assert wand.search(spec).count() == 0
+    assert each_placement(lambda: wand.search(spec).count()) == 0
 
 
 def test_mixed_match_modes_raise(wand):
@@ -139,7 +140,7 @@ def test_wand_empty_query_prefix_mode(wand, oracle):
         QuerySpec(902, "", "okapi25", 10, spell=False, match_mode="prefix"),
         QuerySpec(903, "the", "okapi25", 10, spell=False, match_mode="prefix"),
     ]
-    assert wand.search(specs).count() == 0
+    assert each_placement(lambda: wand.search(specs).count()) == 0
     assert all(not oracle.answer(s) for s in specs)
 
 
@@ -167,12 +168,16 @@ def test_wand_prefix_expansion_cap(spark, index_dir, wand):
     spec = [QuerySpec(1, "t", "okapi25", 5,
                       spell=False, match_mode="prefix")]
     tiny = WandEngine(spark, index_dir, max_prefix_expand=1)
-    with _pytest.raises(ValueError, match="max_prefix_expand"):
-        tiny.search(spec).collect()
     roomy = WandEngine(spark, index_dir, max_prefix_expand=100_000)
-    assert [tuple(r) for r in roomy.search(spec).collect()] == [
-        tuple(r) for r in wand.search(spec).collect()
-    ]
+
+    def run():
+        with _pytest.raises(ValueError, match="max_prefix_expand"):
+            tiny.search(spec).collect()
+        got = [tuple(r) for r in roomy.search(spec).collect()]
+        assert got == [tuple(r) for r in wand.search(spec).collect()]
+        return got
+
+    each_placement(run)
 
 
 def test_wand_close_releases_cache_and_engine_survives(spark, index_dir):
@@ -180,7 +185,8 @@ def test_wand_close_releases_cache_and_engine_survives(spark, index_dir):
     from executor storage — a long-lived process cycling engines leaks
     storage memory otherwise (measured 2.7× query-tax in the corpus-size
     sweep, BENCH/BASELINE.md) — and the engine must stay usable: the next
-    search() re-caches and answers identically."""
+    search() re-caches and answers identically. (The distributed
+    placement's cache; `test_placement.py` covers the local one.)"""
     from pyspark import StorageLevel
 
     from information_retrieval_spark.query.wand import WandEngine
@@ -188,7 +194,7 @@ def test_wand_close_releases_cache_and_engine_survives(spark, index_dir):
     none = StorageLevel(False, False, False, False, 1)
     spec = [QuerySpec(950, "tokenizer stream", "okapi25", 5,
                       spell=False, match_mode="exact")]
-    with WandEngine(spark, index_dir) as eng:
+    with forced("distributed"), WandEngine(spark, index_dir) as eng:
         first = [tuple(r) for r in eng.search(spec).collect()]
         dl, shard = eng._dl_map_df, eng._last_shard
         assert dl is not None and dl.storageLevel != none

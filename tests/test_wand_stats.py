@@ -6,8 +6,8 @@ bucket-grouped pass whose per-bucket partial sums the driver adds up. These
 tests recompute the same figures in plain Python from the live flat tables
 and require equality, in the cases where the pass does more than count:
 the prefix-mode has_exact gate under deletes, the category filter and the
-boolean term filters. A last test pins how many Spark jobs a warm batch
-runs.
+boolean term filters, under each placement. The last tests pin how many
+Spark jobs a warm batch runs: none on the driver, a few distributed.
 """
 
 import pytest
@@ -17,6 +17,7 @@ from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.index.maintenance import IndexMaintenance
 from information_retrieval_spark.query.engine import QuerySpec
 from information_retrieval_spark.query.wand import WandEngine
+from tests.placement import PLACEMENTS, forced
 
 SECTIONS = {"title": "path", "abstract": "content"}
 
@@ -107,17 +108,17 @@ def _recompute(spark, idx, eng, spec):
 
 
 def _assert_stats_match(spark, idx, specs):
-    eng = WandEngine(spark, idx)
-    try:
-        eng.search(specs).collect()
-        for spec in specs:
-            want = _recompute(spark, idx, eng, spec)
-            got = eng.last_stats[spec.query_id]
-            assert got["n_cand"] == want["n_cand"], spec
-            assert got["df"] == want["df"], spec
-            assert got["avgdl"] == pytest.approx(want["avgdl"], rel=1e-12), spec
-    finally:
-        eng.close()
+    for placement in PLACEMENTS:
+        with forced(placement), WandEngine(spark, idx) as eng:
+            eng.search(specs).collect()
+            assert eng.last_placement["placement"] == placement
+            for spec in specs:
+                want = _recompute(spark, idx, eng, spec)
+                got = eng.last_stats[spec.query_id]
+                assert got["n_cand"] == want["n_cand"], spec
+                assert got["df"] == want["df"], spec
+                assert got["avgdl"] == pytest.approx(
+                    want["avgdl"], rel=1e-12), spec
 
 
 def test_stats_exact_mode(spark, index_dir):
@@ -142,14 +143,12 @@ def test_stats_prefix_mode_gate_under_deletes(spark, maintained):
                   match_mode="prefix"),
     ]
     _assert_stats_match(spark, maintained, specs)
-    eng = WandEngine(spark, maintained)
-    try:
-        eng.search(specs[:1]).collect()
-        # the gate dropped 'zqfoo' and its live expansion 'zqfooxy'
-        assert eng.last_stats[1]["df"] == {"zqlone": 1}
-        assert eng.last_stats[1]["n_cand"] == 1
-    finally:
-        eng.close()
+    for placement in PLACEMENTS:
+        with forced(placement), WandEngine(spark, maintained) as eng:
+            eng.search(specs[:1]).collect()
+            # the gate dropped 'zqfoo' and its live expansion 'zqfooxy'
+            assert eng.last_stats[1]["df"] == {"zqlone": 1}
+            assert eng.last_stats[1]["n_cand"] == 1
 
 
 def test_stats_filter_category(spark, maintained):
@@ -177,47 +176,95 @@ def test_stats_filter_and_exclude_terms(spark, maintained):
     _assert_stats_match(spark, maintained, specs)
 
 
-def _warm_batch_jobs(spark, index_dir, method_of):
-    """(rows, Spark jobs) of one exact-mode batch on a warm engine, query i
-    ranked with ``method_of(i)``."""
-    texts = ["tokenizer stream", "buffer matrix parser", "tokeniezr buffre"]
-    warm = [QuerySpec(i, t, method_of(i), 10, match_mode="exact")
-            for i, t in enumerate(texts)]
-    batch = [QuerySpec(i, t, method_of(i), 10, match_mode="exact")
-             for i, t in enumerate(reversed(texts))]
+def _jobs_of(spark, run):
+    """(what ``run()`` returns, the Spark jobs it ran)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
+    # the group's and the ungrouped jobs so far (earlier calls)
+    seen = set(tracker.getJobIdsForGroup("wand-jobs"))
+    seen |= set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("wand-jobs", "the Spark jobs of one call")
+    try:
+        out = run()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = set(tracker.getJobIdsForGroup("wand-jobs"))
+    jobs |= set(tracker.getJobIdsForGroup(None))
+    return out, len(jobs - seen)
+
+
+def _warm_batch_jobs(spark, index_dir, method_of, mode="exact"):
+    """(rows, Spark jobs) of one batch on a warm engine, query i ranked
+    with ``method_of(i)``."""
+    texts = ["tokenizer stream", "buffer matrix parser", "tokeniezr buffre"]
+    warm = [QuerySpec(i, t, method_of(i), 10, match_mode=mode)
+            for i, t in enumerate(texts)]
+    batch = [QuerySpec(i, t, method_of(i), 10, match_mode=mode)
+             for i, t in enumerate(reversed(texts))]
     with WandEngine(spark, index_dir) as eng:
         eng.search(warm).collect()
-        # the group's and the ungrouped jobs so far (earlier calls)
-        seen = set(tracker.getJobIdsForGroup("wand-warm-batch"))
-        seen |= set(tracker.getJobIdsForGroup(None))
-        sc.setJobGroup("wand-warm-batch", "one warm WAND batch")
-        try:
-            rows = eng.search(batch).collect()
-        finally:
-            sc._jsc.clearJobGroup()
-        jobs = set(tracker.getJobIdsForGroup("wand-warm-batch"))
-        jobs |= set(tracker.getJobIdsForGroup(None))
-    return rows, len(jobs - seen)
+        return _jobs_of(spark, lambda: eng.search(batch).collect())
 
 
 def test_warm_exact_batch_runs_in_four_jobs(spark, index_dir):
-    """A warm engine answers an exact-mode batch in at most 4 Spark jobs:
-    the shard's exchange, its cache, the statistics pass and the scoring
-    pass (the side frame and the spell dictionary are already cached)."""
-    rows, jobs = _warm_batch_jobs(spark, index_dir, lambda i: "okapi25")
+    """A warm engine answers an exact-mode batch placed on the executors
+    in at most 4 Spark jobs: the shard's exchange, its cache, the
+    statistics pass and the scoring pass (the side frame and the spell
+    dictionary are already cached)."""
+    with forced("distributed"):
+        rows, jobs = _warm_batch_jobs(spark, index_dir, lambda i: "okapi25")
     assert rows
     assert jobs <= 4, f"{jobs} jobs"
 
 
 def test_warm_tfidf_batch_runs_in_five_jobs(spark, index_dir):
-    """A warm exact-mode batch mixing ltn-lnn and ltc-lnc on an index
-    without deletes runs at most 5 Spark jobs: an okapi25 batch's 4 plus
-    the term dictionary lookup its query weights need (N is the stats
-    ledger's doc count, read without a job)."""
-    rows, jobs = _warm_batch_jobs(
-        spark, index_dir, lambda i: ("ltn-lnn", "ltc-lnc")[i % 2]
-    )
+    """A warm exact-mode batch mixing ltn-lnn and ltc-lnc placed on the
+    executors, on an index without deletes, runs at most 5 Spark jobs: an
+    okapi25 batch's 4 plus the term dictionary lookup its query weights
+    need (N is the stats ledger's doc count, read without a job)."""
+    with forced("distributed"):
+        rows, jobs = _warm_batch_jobs(
+            spark, index_dir, lambda i: ("ltn-lnn", "ltc-lnc")[i % 2]
+        )
     assert {r.query_id for r in rows} == {0, 1, 2}
     assert jobs <= 5, f"{jobs} jobs"
+
+
+def test_warm_tfidf_batch_with_deletes_jobs(spark, maintained):
+    """tf-idf's N comes from the statistics pass (the ledger minus the
+    hidden doc versions it counts), so on an index with deletes a warm
+    tf-idf batch still runs at most 5 Spark jobs distributed, and none on
+    the driver."""
+    tfidf = lambda i: ("ltn-lnn", "ltc-lnc")[i % 2]  # noqa: E731
+    with forced("distributed"):
+        rows, jobs = _warm_batch_jobs(spark, maintained, tfidf)
+    assert rows and jobs <= 5, f"{jobs} jobs"
+    with forced("local"):
+        local, jobs = _warm_batch_jobs(spark, maintained, tfidf)
+    assert local == rows and jobs == 0, f"{jobs} jobs"
+
+
+def test_small_warm_batches_run_no_spark_job(spark, index_dir):
+    """Under the default gate the small fixture's batches run on the
+    driver: a warm exact okapi25 batch and a warm prefix-mode tf-idf batch
+    each run 0 Spark jobs."""
+    rows, jobs = _warm_batch_jobs(spark, index_dir, lambda i: "okapi25")
+    assert rows and jobs == 0, f"{jobs} jobs"
+    rows, jobs = _warm_batch_jobs(
+        spark, index_dir, lambda i: ("ltn-lnn", "ltc-lnc")[i % 2], "prefix"
+    )
+    assert rows and jobs == 0, f"{jobs} jobs"
+
+
+def test_gate_runs_no_spark_job(spark, index_dir):
+    """The placement gate reads metadata only (the stats ledger and the
+    packed footers): deciding a batch on a fresh engine runs 0 Spark
+    jobs."""
+    with WandEngine(spark, index_dir) as eng:
+        groups, jobs = _jobs_of(
+            spark, lambda: eng._gate(["buffer", "stream", "tokenizer"])
+        )
+        assert jobs == 0, f"{jobs} jobs"
+        assert groups and eng.last_placement["placement"] == "local"
+        assert 0 < eng.last_placement["shard_rows"]
+        assert 0 < eng.last_placement["shard_bytes"]
