@@ -106,7 +106,6 @@ from information_retrieval_spark.index.codec import decode_doc_gaps, varint_deco
 from information_retrieval_spark.query.engine import (
     K1, B, QuerySpec, batch_match_mode,
 )
-
 from information_retrieval_spark.query.snapshot import IndexSnapshot
 
 #: the ranking methods a query may name
