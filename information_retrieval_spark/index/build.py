@@ -37,7 +37,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 
-from information_retrieval_spark.index.catalog import scan_dirs
+from information_retrieval_spark.index.catalog import TABLE_SCHEMAS, scan_dirs
 from information_retrieval_spark.tokenize import (
     SIMPLE_SPLIT_PATTERN,
     code_tokens_bulk,
@@ -284,16 +284,26 @@ def _write(df: DataFrame, path: str, sort_cols: list[str] | None = None) -> None
     df.write.mode("overwrite").parquet(path)
 
 
-#: per-partition content-hash expressions for the lineage table. packed is
+#: the columns each lineage-covered table hashes per row, in Spark's
+#: ``xxhash64`` order: one spec serves the Spark SQL aggregate
+#: (`lineage_hash`, `lineage_frame`, fsck) and the driver-side writers'
+#: numpy twin (`lineage_arrow`), so the two cannot drift. packed is
 #: metadata-only: the block payloads are a pure function of postings_flat
-#: (hashed here), so hashing the binary columns would re-read megabytes per
-#: partition for no added lineage coverage.
+#: (hashed here), so hashing the binary columns would re-read megabytes
+#: per partition for no added lineage coverage.
 LINEAGE_SPECS = {
-    "postings_flat": "xxhash64(term, section, doc_id, tf)",
-    "doclen": "xxhash64(doc_id, section, dl)",
-    "packed": "xxhash64(term, section, bucket, block_id, n,"
-    " first_doc, last_doc)",
+    "postings_flat": ("term", "section", "doc_id", "tf"),
+    "doclen": ("doc_id", "section", "dl"),
+    "packed": (
+        "term", "section", "bucket", "block_id", "n", "first_doc",
+        "last_doc",
+    ),
 }
+
+
+def lineage_hash(table: str) -> str:
+    """The Spark SQL per-row content hash of ``table``'s lineage."""
+    return f"xxhash64({', '.join(LINEAGE_SPECS[table])})"
 
 
 def lineage_frame(tables: dict[str, DataFrame]) -> DataFrame:
@@ -301,13 +311,14 @@ def lineage_frame(tables: dict[str, DataFrame]) -> DataFrame:
     shared by the full build and incremental-add commits."""
     parts = []
     for table, t in tables.items():
-        h = LINEAGE_SPECS[table]
         parts.append(
             t.withColumn("part_id", F.spark_partition_id())
             .groupBy("part_id")
             .agg(
                 F.count("*").alias("rows"),
-                F.expr(f"bit_xor({h})").alias("content_hash"),
+                F.expr(f"bit_xor({lineage_hash(table)})").alias(
+                    "content_hash"
+                ),
             )
             .select(F.lit(table).alias("table"), "part_id", "rows",
                     "content_hash")
@@ -316,6 +327,34 @@ def lineage_frame(tables: dict[str, DataFrame]) -> DataFrame:
     for x in parts[1:]:
         lin = lin.unionByName(x)
     return lin
+
+
+def lineage_arrow(tables: dict):
+    """`lineage_frame` for pyarrow tables, with no Spark job: one row per
+    non-empty table (``part_id`` 0), its hash the XOR of the numpy
+    ``xxhash64`` over `LINEAGE_SPECS`. fsck compares only the totals
+    (row count, XOR), which do not depend on how rows are partitioned."""
+    import numpy as np
+    import pyarrow as pa
+
+    from information_retrieval_spark.index.xxhash64 import xxhash64
+
+    rows = []
+    for table, tb in tables.items():
+        if not tb.num_rows:
+            continue
+        types = {
+            f.name: f.dataType.simpleString() for f in TABLE_SCHEMAS[table]
+        }
+        h = xxhash64(tb, LINEAGE_SPECS[table], types)
+        rows.append((table, 0, tb.num_rows, int(np.bitwise_xor.reduce(h))))
+    cols = list(zip(*rows)) if rows else [(), (), (), ()]
+    return pa.Table.from_arrays(
+        [pa.array(c, t) for c, t in zip(
+            cols, (pa.string(), pa.int32(), pa.int64(), pa.int64())
+        )],
+        names=["table", "part_id", "rows", "content_hash"],
+    )
 
 
 class IndexBuilder:

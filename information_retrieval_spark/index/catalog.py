@@ -62,6 +62,8 @@ import re
 import shutil
 import uuid
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.pack import PACKED_SCHEMA
@@ -427,6 +429,15 @@ def scan_dirs(spark: SparkSession, table: str, *dirs: str) -> DataFrame:
     )
 
 
+def arrow_schema(table: str):
+    """``table``'s declared schema (`TABLE_SCHEMAS`) as a pyarrow schema."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [(f.name, _arrow_type(f.dataType)) for f in TABLE_SCHEMAS[table]]
+    )
+
+
 def arrow_scan(table: str, data_dir: str):
     """One data dir of ``table`` as a ``pyarrow.dataset`` with its
     declared schema: the driver-side twin of `scan_dirs`, for readers that
@@ -439,9 +450,7 @@ def arrow_scan(table: str, data_dir: str):
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    schema = pa.schema(
-        [(f.name, _arrow_type(f.dataType)) for f in TABLE_SCHEMAS[table]]
-    )
+    schema = arrow_schema(table)
     names = os.listdir(data_dir)
     hive = [
         f for f in schema if any(n.startswith(f.name + "=") for n in names)
@@ -463,6 +472,117 @@ def _arrow_type(t: T.DataType):
         "string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
         "binary": pa.binary(),
     }[t.simpleString()]
+
+
+def arrow_seq_table(table: str, dirs: list[str], columns=None):
+    """The driver-side twin of `read_seq_table`: ``dirs`` of ``table``
+    concatenated as one pyarrow table with each row's ``seg_seq``."""
+    import pyarrow as pa
+
+    parts = []
+    for d in dirs:
+        tb = arrow_scan(table, d).to_table(columns=columns)
+        parts.append(tb.append_column(
+            "seg_seq", pa.array(np.full(tb.num_rows, segment_seq(d)))
+        ))
+    return pa.concat_tables(parts)
+
+
+def arrow_deletes(dirs: list[str]) -> tuple[np.ndarray, np.ndarray]:
+    """The driver-side twin of `read_deletes` over ``dirs``: sorted unique
+    doc_ids and each one's max ``upto`` (legacy null → `GLOBAL_UPTO`)."""
+    docs, upto = [], []
+    for d in dirs:
+        tb = arrow_scan("deleted_docs", d).to_table()
+        docs.append(tb.column("doc_id").to_numpy(zero_copy_only=False))
+        upto.append(
+            tb.column("upto").fill_null(GLOBAL_UPTO).to_numpy()
+        )
+    if not docs:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    s = pd.Series(np.concatenate(upto)).groupby(np.concatenate(docs)).max()
+    return s.index.to_numpy(np.int64), s.to_numpy(np.int64)
+
+
+def hidden_rows(
+    docs: np.ndarray, seqs, del_docs: np.ndarray, del_upto: np.ndarray
+) -> np.ndarray:
+    """`filter_deleted`'s rule in numpy: which rows (``docs`` from
+    segments with sequence ``seqs``) a tombstone hides, i.e. some
+    tombstone for the doc has ``upto >= seq``. ``del_docs`` is sorted and
+    unique (one max ``upto`` each, `arrow_deletes`)."""
+    if not len(del_docs) or not len(docs):
+        return np.zeros(len(docs), dtype=bool)
+    i = np.minimum(np.searchsorted(del_docs, docs), len(del_docs) - 1)
+    return (del_docs[i] == docs) & (del_upto[i] >= seqs)
+
+
+def n_versions(docs: np.ndarray, seqs: np.ndarray) -> int:
+    """Distinct doc versions ``(doc_id, seq)`` among the rows: over the
+    hidden doclen rows, what `count_live_docs` subtracts."""
+    if not len(docs):
+        return 0
+    return np.unique(np.stack([docs, seqs]), axis=1).shape[1]
+
+
+#: the characters Spark escapes as ``%XX`` in a partition dir's value
+#: (``ExternalCatalogUtils.escapePathName``); a null or empty value is
+#: written as `HIVE_NULL`
+_HIVE_ESCAPE = frozenset(map(chr, range(1, 32))) | frozenset(
+    '"#%\'*/:=?\\\x7f{[]^'
+)
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _hive_dir_value(v: str | None) -> str:
+    if v is None or v == "":
+        return HIVE_NULL
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPE else c for c in v)
+
+
+def write_arrow(
+    table: str,
+    tb,
+    out_dir: str,
+    row_group_size: int | None = None,
+    partition_by: str | None = None,
+) -> None:
+    """Write the pyarrow table ``tb`` as a data dir of ``table`` laid out
+    as a Spark write lays it out, so every reader takes it as it takes a
+    Spark-written dir: the declared columns (`TABLE_SCHEMAS`),
+    snappy-compressed with dictionary encoding (Spark's parquet defaults),
+    a ``_SUCCESS`` marker, and with ``partition_by`` one
+    ``<col>=<value>`` subdir per value (escaped as Spark escapes it, a
+    null or empty value under `HIVE_NULL`) holding the other columns in
+    ``tb``'s order. An unpartitioned empty table still writes one
+    schema'd file, as Spark does."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    os.makedirs(out_dir, exist_ok=True)
+    schema = arrow_schema(table)
+    tb = tb.select(schema.names).cast(schema)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+
+    def put(t, d: str) -> None:
+        pq.write_table(
+            t, os.path.join(d, name), compression="snappy",
+            use_dictionary=True, row_group_size=row_group_size or None,
+        )
+
+    if partition_by is None:
+        put(tb, out_dir)
+    else:
+        col = tb.column(partition_by)
+        col = pc.if_else(pc.equal(col, ""), None, col)
+        rest = tb.drop_columns([partition_by])
+        for v in pc.unique(col).to_pylist():
+            d = os.path.join(out_dir, f"{partition_by}={_hive_dir_value(v)}")
+            os.makedirs(d)
+            put(rest.filter(
+                pc.is_null(col) if v is None else pc.equal(col, v)
+            ), d)
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
 
 
 def footer_rows(table: str, dirs: list[str]) -> int:

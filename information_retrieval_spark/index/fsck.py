@@ -110,7 +110,10 @@ def fsck_deep(spark, index_dir: str, version: int | None = None) -> dict:
     query."""
     from pyspark.sql import functions as F
 
-    from information_retrieval_spark.index.build import LINEAGE_SPECS
+    from information_retrieval_spark.index.build import (
+        LINEAGE_SPECS,
+        lineage_hash,
+    )
 
     report = fsck(index_dir)
     if not Catalog.exists(index_dir):
@@ -147,7 +150,7 @@ def fsck_deep(spark, index_dir: str, version: int | None = None) -> dict:
         )
         .collect()
     }
-    for table, hexpr in LINEAGE_SPECS.items():
+    for table in LINEAGE_SPECS:
         dirs = cat.table_dirs(table, version)
         if not dirs:
             continue
@@ -162,7 +165,7 @@ def fsck_deep(spark, index_dir: str, version: int | None = None) -> dict:
             scan_dirs(spark, table, *dirs)
             .agg(
                 F.count(F.lit(1)).alias("rows"),
-                F.expr(f"bit_xor({hexpr})").alias("xor"),
+                F.expr(f"bit_xor({lineage_hash(table)})").alias("xor"),
             )
             .collect()[0]
         )

@@ -32,7 +32,13 @@ on top of the Iceberg-style snapshot catalog (index/catalog.py):
   them (seq-scoped, per segment), re-derives their aggregates and drops
   the tombstones no unmerged segment still needs — all visible
   atomically via one snapshot. A full compact is the merge of every
-  segment, so it clears the delete vector.
+  segment, so it clears the delete vector. A merge has two placements
+  for its data step, picked per merge by a gate that reads metadata
+  only: a single-output merge whose reads hold at most
+  `LOCAL_MAX_MERGE_BYTES` on disk runs on the driver (pyarrow reads, the
+  shared kernels, no Spark job); any larger or hash-split merge runs as
+  Spark jobs. Both write the same tables into the same fresh dirs and
+  commit through the same splice and snapshot.
 
 Crash safety comes from the catalog, not from journals: every step of a
 mutation only creates new files; visibility is a single atomic CURRENT
@@ -55,21 +61,47 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from information_retrieval_spark.index.build import (
     LINEAGE_SPECS,
+    lineage_arrow,
     lineage_frame,
     tokenize_postings,
 )
 from information_retrieval_spark.index.catalog import (
     Catalog,
     CORE_TABLES,
+    arrow_deletes,
+    arrow_scan,
+    arrow_seq_table,
+    count_live_docs,
+    filter_deleted,
+    footer_rows,
+    hidden_rows,
+    n_versions,
+    read_seq_table,
     read_stats_pdf,
     read_table,
     scan_dirs,
+    write_arrow,
+    write_segment_seq,
 )
+from information_retrieval_spark.index.fsck import dir_bytes
+
+#: The merge placement gate (`IndexMaintenance._merge_gate`): a
+#: single-output merge whose reads hold at most this many on-disk bytes
+#: runs on the driver. Measured by `scripts/bench_tiered.py --merge`
+#: (two n-doc deltas over a 1,000-doc base, each placement forced;
+#: BENCH/BASELINE.md "Merge placement crossover", 4 vCPUs, local[4]):
+#: local vs distributed was 0.2 vs 3.6 s at 0.28 MB read, 1.4 vs 4.7 s
+#: at 2.5 MB and 19.4 vs 18.1 s at 25.7 MB. Local grows ~0.78 s/MB,
+#: distributed ~0.58 s/MB over a ~3.5 s floor of job overhead, so the
+#: curves cross near 19 MB; the gate sits below that.
+LOCAL_MAX_MERGE_BYTES = 16 << 20
 
 def unrecovered_stage_names(index_dir: str) -> list[str]:
     """Frozen stages under ``index_dir`` whose commit never landed.
@@ -107,6 +139,40 @@ _STAGE_TABLES = [
     ("vocab", "vocab", "append"),
     ("stats", "stats", "set"),
 ]
+
+
+@dataclass
+class _Merge:
+    """One compaction's plan, shared by both placements' data steps: the
+    merged segment indices, every segmented table's dirs, the output
+    count, the delete vector's dirs, and the token and seq its fresh
+    dirs take. ``fresh`` reserves an output dir and records it in
+    ``new_rel`` for the splice."""
+
+    cat: Catalog
+    segs: list[int]
+    dirs: dict[str, list[str]]
+    has_meta: bool
+    n_out: int
+    del_dirs: list[str]
+    token: str
+    new_seq: int
+    n_before: int
+    new_rel: dict[str, list[str]] = field(default_factory=dict)
+
+    @property
+    def unmerged(self) -> list[int]:
+        return [i for i in range(len(self.dirs["packed"]))
+                if i not in self.segs]
+
+    def merged_dirs(self, table: str) -> list[str]:
+        return [self.dirs[table][i] for i in self.segs]
+
+    def fresh(self, table: str, j: int | None = None) -> str:
+        tok = self.token if j is None else f"{self.token}s{j}"
+        rel = self.cat.new_data_dir(table, tok)
+        self.new_rel.setdefault(table, []).append(rel)
+        return self.cat.abspath(rel)
 
 
 class IndexMaintenance:
@@ -395,10 +461,6 @@ class IndexMaintenance:
         # seqs stay monotone with commit order even across crash-retries).
         # Tombstones compare against this: rows in this segment are hidden
         # only by tombstones committed AFTER it.
-        from information_retrieval_spark.index.catalog import (
-            write_segment_seq,
-        )
-
         seq = (self.cat.current_version() or 0) + 1
         for sub in ("postings_delta", "doclen_delta", "doc_meta_delta",
                     "packed_delta"):
@@ -475,10 +537,6 @@ class IndexMaintenance:
         # add) — seqs must equal commit versions so tombstone `upto`
         # comparisons order segments exactly as the snapshot chain does.
         # Safe pre-swap: no snapshot references these dirs yet.
-        from information_retrieval_spark.index.catalog import (
-            write_segment_seq,
-        )
-
         commit_seq = (self.cat.current_version() or 0) + 1
         changes: dict = {}
         for sub, table, op in _STAGE_TABLES:
@@ -608,7 +666,10 @@ class IndexMaintenance:
         compaction is unpayable. ``segments=None`` (default) is the same
         merge over EVERY segment: it applies every tombstone (no unmerged
         segment survives to keep one alive), so the delete vector clears.
-        One merge path serves both; see ``_compact_segments``.
+        One merge path serves both; see ``_compact_segments``. Its data
+        step runs on the driver with no Spark job when the merge writes
+        one segment and reads at most `LOCAL_MAX_MERGE_BYTES`, else as
+        Spark jobs (``last_merge_placement`` says which).
 
         ``target_bytes`` (default: the instance's
         ``target_segment_bytes``) caps each OUTPUT segment at ~that many
@@ -655,14 +716,7 @@ class IndexMaintenance:
     def segment_sizes(self) -> list[int]:
         """On-disk bytes of each packed segment, in segment order —
         the input to size-tiered merge planning."""
-        sizes = []
-        for d in self.cat.table_dirs("packed"):
-            total = 0
-            for root, _dirs, files in os.walk(d):
-                for f in files:
-                    total += os.path.getsize(os.path.join(root, f))
-            sizes.append(total)
-        return sizes
+        return [dir_bytes(d) for d in self.cat.table_dirs("packed")]
 
     def plan_compaction(
         self,
@@ -754,15 +808,15 @@ class IndexMaintenance:
         doclen: the hidden (doc, segment) versions purged here leave it,
         so it stays live docs + hidden versions awaiting purge, and after
         a merge of every segment it is the live count queries use. Crash
-        safety: fresh dirs only, one atomic snapshot commit at the end."""
-        from information_retrieval_spark.index.catalog import (
-            count_live_docs,
-            filter_deleted,
-            read_seq_table,
-            write_segment_seq,
-        )
+        safety: fresh dirs only, one atomic snapshot commit at the end.
 
-        spark = self.spark
+        Placement: the plan (segments, dirs, K, token, new seq), the dir
+        splice and the one commit are shared; only the data step forks,
+        by a gate that reads metadata only (`_merge_gate`): a
+        single-output merge reading at most `LOCAL_MAX_MERGE_BYTES` runs
+        on the driver (`_merge_local`, no Spark job), anything else as
+        Spark jobs (`_merge_distributed`). ``last_merge_placement`` and
+        the commit summary's ``placement`` record which."""
         segs = sorted(set(int(s) for s in segments))
         if not segs:
             raise ValueError("segments must name at least one segment")
@@ -783,32 +837,194 @@ class IndexMaintenance:
             raise ValueError(
                 f"segment indices {segs} out of range for {n_seg} segments"
             )
-        d = self.deleted()
+        del_dirs = self.cat.table_dirs("deleted_docs")
         sizes = self.segment_sizes()
         merged_bytes = sum(sizes[i] for i in segs)
         n_out = 1
         if target_bytes is not None and target_bytes > 0:
             n_out = max(1, -(-merged_bytes // target_bytes))  # ceil
-        if len(segs) == 1 and d is None and n_out <= 1:
+        if len(segs) == 1 and not del_dirs and n_out <= 1:
             return None  # nothing to merge, drop, or split
-        token = uuid.uuid4().hex[:12]
-        new_seq = (self.cat.current_version() or 0) + 1
-
-        def union_dirs(table: str, which: list[int] | None = None):
-            idxs = segs if which is None else which
-            return read_seq_table(
-                spark, self.index_dir, table,
-                dirs=[dirs[table][i] for i in idxs],
-            )
+        st = read_stats_pdf(self.index_dir).copy()
+        m = _Merge(
+            cat=self.cat, segs=segs, dirs=dirs, has_meta=has_meta,
+            n_out=n_out, del_dirs=del_dirs, token=uuid.uuid4().hex[:12],
+            new_seq=(self.cat.current_version() or 0) + 1,
+            n_before=int(st["n_docs"].iloc[0]),
+        )
+        gate = self._merge_gate(m)
+        #: the last merge's placement and the gate inputs that chose it
+        self.last_merge_placement = gate
+        if gate["placement"] == "local":
+            n_docs, survivors = self._merge_local(m)
+        else:
+            n_docs, survivors = self._merge_distributed(m)
 
         changes: dict = {}
-        new_rel: dict[str, list[str]] = {}
+        st["n_docs"] = n_docs
+        stats_dir = m.fresh("stats")
+        os.makedirs(stats_dir, exist_ok=True)
+        st.to_parquet(os.path.join(stats_dir, "stats.parquet"))
+        changes["stats"] = ("set", m.new_rel["stats"])
 
-        def fresh(table: str, j: int | None = None) -> str:
-            tok = token if j is None else f"{token}s{j}"
-            rel = self.cat.new_data_dir(table, tok)
-            new_rel.setdefault(table, []).append(rel)
-            return self.cat.abspath(rel)
+        # splice: keep unmerged dirs in order, the n_out new dirs at the
+        # merged run's first position (RELATIVE paths — the snapshot
+        # stores relatives)
+        keep = set(segs)
+        for table in list(self._SEGMENTED_TABLES) + (
+            ["doc_meta"] if has_meta else []
+        ):
+            snap_dirs = list(
+                self.cat.load(self.cat.current_version())["tables"][table]
+            )
+            spliced = []
+            for i, rel in enumerate(snap_dirs):
+                if i == segs[0]:
+                    spliced.extend(m.new_rel[table])
+                if i not in keep:
+                    spliced.append(rel)
+            changes[table] = ("set", spliced)
+        if del_dirs:
+            changes["deleted_docs"] = (
+                ("set", m.new_rel["deleted_docs"]) if survivors
+                else ("drop", None)
+            )
+
+        return self.cat.commit(
+            changes,
+            "compact",
+            {
+                "stage_token": m.token,
+                "n_removed": m.n_before - n_docs,
+                "segments_merged": segs,
+                "n_outputs": n_out,
+                "n_segments_before": n_seg,
+                "n_segments_after": n_seg - len(segs) + n_out,
+                "placement": gate["placement"],
+            },
+        )
+
+    def _merge_gate(self, m: "_Merge") -> dict:
+        """Where a merge's data step runs, from metadata only: on the
+        driver iff it writes one segment and the on-disk bytes it reads
+        are at most `LOCAL_MAX_MERGE_BYTES`. Those are the merged
+        segments' postings_flat, doclen, doc_meta and vocab dirs, plus,
+        with tombstones, the delete vector and the unmerged segments'
+        doclen (the survival check's reads)."""
+        tables = ["postings_flat", "doclen", "vocab"] + (
+            ["doc_meta"] if m.has_meta else []
+        )
+        read = [d for t in tables for d in m.merged_dirs(t)]
+        if m.del_dirs:
+            read += m.del_dirs + [m.dirs["doclen"][i] for i in m.unmerged]
+        read_bytes = sum(dir_bytes(d) for d in read)
+        local = m.n_out == 1 and read_bytes <= LOCAL_MAX_MERGE_BYTES
+        return {
+            "placement": "local" if local else "distributed",
+            "n_out": m.n_out,
+            "read_bytes": read_bytes,
+        }
+
+    def _merge_local(self, m: "_Merge") -> tuple[int, bool]:
+        """The data step on the driver: pyarrow reads of the merged
+        segments, the same rules and kernels as `_merge_distributed`
+        (`catalog.hidden_rows` for seq-scoped tombstones, `n_versions`
+        for the ledger, `pack_postings` over the sorted rows, the
+        lineage hash of `LINEAGE_SPECS`), written as Spark lays the
+        tables out (`catalog.write_arrow`); no Spark job. Returns the
+        ledger's n_docs and whether tombstones survive (written to a
+        fresh deleted_docs dir)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from information_retrieval_spark.index import pack as pack_mod
+
+        del_docs, del_upto = arrow_deletes(m.del_dirs)
+
+        def live(table: str):
+            """The merged segments' live rows of ``table``, and the
+            (doc_id, seq) of the rows tombstones hide."""
+            tb = arrow_seq_table(table, m.merged_dirs(table))
+            docs = tb.column("doc_id").to_numpy()
+            seqs = tb.column("seg_seq").to_numpy()
+            gone = hidden_rows(docs, seqs, del_docs, del_upto)
+            return (
+                tb.filter(pa.array(~gone)).drop_columns(["seg_seq"]),
+                docs[gone], seqs[gone],
+            )
+
+        def put(table: str, tb, seq: bool = False, **kw) -> str:
+            out = m.fresh(table)
+            write_arrow(table, tb, out, **kw)
+            if seq:
+                write_segment_seq(out, m.new_seq)
+            return out
+
+        pf, _, _ = live("postings_flat")
+        dl, gone_docs, gone_seqs = live("doclen")
+        n_docs = m.n_before - n_versions(gone_docs, gone_seqs)
+        put("postings_flat", pf, seq=True)
+        put("doclen", dl, seq=True)
+        if m.has_meta:
+            meta, _, _ = live("doc_meta")
+            put("doc_meta", meta.sort_by("doc_id"), seq=True,
+                partition_by="category")
+        vocab = pa.concat_tables(
+            arrow_scan("vocab", d).to_table() for d in m.merged_dirs("vocab")
+        )
+        put("vocab", pa.table({"term": pc.unique(vocab.column("term"))}))
+        df = pf.group_by("term").aggregate([("doc_id", "count_distinct")])
+        put("term_df", pa.table({
+            "term": df.column("term"),
+            "df": df.column("doc_id_count_distinct"),
+        }))
+        packed_dir = m.fresh("packed")
+        pack_mod.pack_postings(
+            pf, dl, packed_dir, parts=pack_mod.pack_parts(self.spark)
+        )
+        write_segment_seq(packed_dir, m.new_seq)
+        packed = arrow_scan("packed", packed_dir).to_table(
+            columns=list(LINEAGE_SPECS["packed"])
+        )
+        put("lineage", lineage_arrow(
+            {"postings_flat": pf, "doclen": dl, "packed": packed}
+        ))
+
+        if not m.del_dirs or not m.unmerged:
+            return n_docs, False
+        # a tombstone survives iff some unmerged segment still holds rows
+        # it hides (seq-aware, as in _merge_distributed)
+        u = arrow_seq_table(
+            "doclen", [m.dirs["doclen"][i] for i in m.unmerged], ["doc_id"]
+        )
+        u_docs = u.column("doc_id").to_numpy()
+        kept = u_docs[hidden_rows(
+            u_docs, u.column("seg_seq").to_numpy(), del_docs, del_upto
+        )]
+        alive = np.isin(del_docs, kept)
+        if not alive.any():
+            return n_docs, False
+        put("deleted_docs", pa.table(
+            {"doc_id": del_docs[alive], "upto": del_upto[alive]}
+        ))
+        return n_docs, True
+
+    def _merge_distributed(self, m: "_Merge") -> tuple[int, bool]:
+        """The data step as Spark jobs (any merge the gate does not keep
+        on the driver, and every hash-split one). Returns the ledger's
+        n_docs and whether tombstones survive, as `_merge_local`."""
+        from information_retrieval_spark.index import pack as pack_mod
+
+        spark = self.spark
+        d = self.deleted()
+        n_out = m.n_out
+
+        def union_dirs(table: str, which: list[int] | None = None):
+            idxs = m.segs if which is None else which
+            return read_seq_table(
+                spark, self.index_dir, table,
+                dirs=[m.dirs[table][i] for i in idxs],
+            )
 
         def split_write(
             df: DataFrame,
@@ -828,10 +1044,10 @@ class IndexMaintenance:
                 w = df.write.mode("overwrite")
                 if partition_cols:
                     w = w.partitionBy(*partition_cols)
-                w.parquet(fresh(table))
+                w.parquet(m.fresh(table))
                 return
             scratch = self.cat.abspath(
-                self.cat.new_data_dir(table, f"{token}scratch")
+                self.cat.new_data_dir(table, f"{m.token}scratch")
             )
             shutil.rmtree(scratch, ignore_errors=True)
             (
@@ -844,7 +1060,7 @@ class IndexMaintenance:
                 .parquet(scratch)
             )
             for j in range(n_out):
-                dst = fresh(table, j)
+                dst = m.fresh(table, j)
                 srcd = os.path.join(scratch, f"__split={j}")
                 if os.path.isdir(srcd):
                     os.replace(srcd, dst)
@@ -854,24 +1070,22 @@ class IndexMaintenance:
                     ).write.mode("overwrite").parquet(dst)
             shutil.rmtree(scratch, ignore_errors=True)
 
-        st = read_stats_pdf(self.index_dir).copy()
-        n_before = int(st["n_docs"].iloc[0])
-        st["n_docs"] = count_live_docs(n_before, union_dirs("doclen"), d)
+        n_docs = count_live_docs(m.n_before, union_dirs("doclen"), d)
 
         for table in ("postings_flat", "doclen"):
             split_write(filter_deleted(union_dirs(table), d), table)
-            for rel in new_rel[table]:
-                write_segment_seq(self.cat.abspath(rel), new_seq)
+            for rel in m.new_rel[table]:
+                write_segment_seq(self.cat.abspath(rel), m.new_seq)
 
-        if has_meta:
+        if m.has_meta:
             split_write(
                 filter_deleted(union_dirs("doc_meta"), d)
                 .sortWithinPartitions("doc_id"),
                 "doc_meta",
                 partition_cols=("category",),
             )
-            for rel in new_rel["doc_meta"]:
-                write_segment_seq(self.cat.abspath(rel), new_seq)
+            for rel in m.new_rel["doc_meta"]:
+                write_segment_seq(self.cat.abspath(rel), m.new_seq)
 
         # merge-on-read aggregates, re-derived per output split so every
         # segmented table keeps exactly one dir per segment: term_df over
@@ -882,94 +1096,48 @@ class IndexMaintenance:
             union_dirs("vocab").select("term").distinct(), "vocab", key="term"
         )
 
-        from information_retrieval_spark.index.pack import pack_postings
-
         for j in range(n_out):
+            split = j if n_out > 1 else None
             pf_j = scan_dirs(
                 spark, "postings_flat",
-                self.cat.abspath(new_rel["postings_flat"][j]),
+                self.cat.abspath(m.new_rel["postings_flat"][j]),
             )
             dl_j = scan_dirs(
-                spark, "doclen", self.cat.abspath(new_rel["doclen"][j])
+                spark, "doclen", self.cat.abspath(m.new_rel["doclen"][j])
             )
             pf_j.groupBy("term").agg(
                 F.countDistinct("doc_id").alias("df")
-            ).write.mode("overwrite").parquet(
-                fresh("term_df", j if n_out > 1 else None)
-            )
-            packed_dir = fresh("packed", j if n_out > 1 else None)
-            pack_postings(pf_j, dl_j, packed_dir)
-            write_segment_seq(packed_dir, new_seq)
+            ).write.mode("overwrite").parquet(m.fresh("term_df", split))
+            packed_dir = m.fresh("packed", split)
+            pack_mod.pack_postings(pf_j, dl_j, packed_dir)
+            write_segment_seq(packed_dir, m.new_seq)
             lineage_frame(
                 {
                     "postings_flat": pf_j,
                     "doclen": dl_j,
                     "packed": scan_dirs(spark, "packed", packed_dir),
                 }
-            ).write.mode("overwrite").parquet(
-                fresh("lineage", j if n_out > 1 else None)
-            )
+            ).write.mode("overwrite").parquet(m.fresh("lineage", split))
 
-        stats_dir = fresh("stats")
-        os.makedirs(stats_dir, exist_ok=True)
-        st.to_parquet(os.path.join(stats_dir, "stats.parquet"))
-        changes["stats"] = ("set", new_rel["stats"])
-
-        # splice: keep unmerged dirs in order, the n_out new dirs at the
-        # merged run's first position (RELATIVE paths — the snapshot
-        # stores relatives)
-        keep = set(segs)
-        for table in list(self._SEGMENTED_TABLES) + (
-            ["doc_meta"] if has_meta else []
-        ):
-            snap_dirs = list(
-                self.cat.load(self.cat.current_version())["tables"][table]
-            )
-            spliced = []
-            for i, rel in enumerate(snap_dirs):
-                if i == segs[0]:
-                    spliced.extend(new_rel[table])
-                if i not in keep:
-                    spliced.append(rel)
-            changes[table] = ("set", spliced)
-
-        if d is not None:
-            # a tombstone survives iff some UNMERGED segment still holds
-            # rows it hides (seq-aware: an unmerged segment NEWER than the
-            # tombstone holding the doc's re-added rows does NOT keep it
-            # alive). The scan is the unmerged doclen's doc_id column with
-            # the mutation-sized vector broadcast — no shuffle.
-            unmerged = [i for i in range(n_seg) if i not in keep]
-            if not unmerged:
-                changes["deleted_docs"] = ("drop", None)
-            else:
-                kept_ids = filter_deleted(
-                    union_dirs("doclen", unmerged), d, hidden=True
-                ).select("doc_id").distinct()
-                remaining = d.join(kept_ids, "doc_id", "semi")
-                if remaining.limit(1).count():
-                    remaining.write.mode("overwrite").parquet(
-                        fresh("deleted_docs")
-                    )
-                    changes["deleted_docs"] = (
-                        "set", new_rel["deleted_docs"]
-                    )
-                else:
-                    changes["deleted_docs"] = ("drop", None)
-
-        return self.cat.commit(
-            changes,
-            "compact",
-            {
-                "stage_token": token,
-                "n_removed": n_before - int(st["n_docs"].iloc[0]),
-                "segments_merged": segs,
-                "n_outputs": n_out,
-                "n_segments_before": n_seg,
-                "n_segments_after": n_seg - len(segs) + n_out,
-            },
+        if d is None or not m.unmerged:
+            return n_docs, False
+        # a tombstone survives iff some UNMERGED segment still holds rows
+        # it hides (seq-aware: an unmerged segment NEWER than the
+        # tombstone holding the doc's re-added rows does NOT keep it
+        # alive). The scan is the unmerged doclen's doc_id column with the
+        # mutation-sized vector broadcast — no shuffle. It is written
+        # once; the footers say whether any row survived (no second job).
+        kept_ids = filter_deleted(
+            union_dirs("doclen", m.unmerged), d, hidden=True
+        ).select("doc_id").distinct()
+        out = m.fresh("deleted_docs")
+        d.join(kept_ids, "doc_id", "semi").write.mode("overwrite").parquet(
+            out
         )
-
+        if footer_rows("deleted_docs", [out]):
+            return n_docs, True
+        shutil.rmtree(out)
+        return n_docs, False
     # ------------------------------------------------------------------- GC
 
     def expire_snapshots(self, keep_last: int = 2) -> list[str]:

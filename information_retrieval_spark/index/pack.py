@@ -231,12 +231,25 @@ def _pack_batch_arrow(tb, change: np.ndarray | None = None):
     return out
 
 
-def pack_postings(postings: DataFrame, doclen: DataFrame, out: str) -> str:
+def pack_parts(spark: SparkSession) -> int:
+    """The range partitions the distributed packer writes, one file each:
+    a local pack writes as many row groups, so footer pruning sees the
+    same term selectivity."""
+    return max(spark.sparkContext.defaultParallelism, 8)
+
+
+def pack_postings(postings, doclen, out: str, parts: int = 8) -> str:
     """Pack ONE coherent posting set (a full index, or one LSM segment's
     delta — index/maintenance.py) into a sorted block-max shard dir.
     Callers pass EXPLICIT inputs — there is deliberately no
     resolve-from-index-dir convenience, because packing through the
     catalog during an in-place rebuild would union stale delta dirs.
+
+    The one pack entry of every placement: Spark frames take the
+    distributed plan below; pyarrow tables (a compaction merged on the
+    driver) take the same join, sort and `_pack_batch_arrow` there, with
+    no Spark job, written as ``parts`` term-sorted row groups
+    (`pack_parts`).
 
     Plan: each posting takes its dl from ``doclen`` by a join on
     ``(doc_id, section)``. Callers pass a parquet scan of the posting
@@ -250,6 +263,8 @@ def pack_postings(postings: DataFrame, doclen: DataFrame, out: str) -> str:
     within-partition sort, so files AND row groups carry tight term
     min/max stats for query pruning.
     """
+    if not isinstance(postings, DataFrame):
+        return _pack_local(postings, doclen, out, parts)
     spark = postings.sparkSession
     # tf/dl cross the Python boundary as int32 — both are bounded by a
     # single document's section length
@@ -260,7 +275,7 @@ def pack_postings(postings: DataFrame, doclen: DataFrame, out: str) -> str:
         F.col("tf").cast("int").alias("tf"),
         F.col("dl").cast("int").alias("dl"),
     )
-    n_part = max(spark.sparkContext.defaultParallelism, 8)
+    n_part = pack_parts(spark)
 
     # Coalesce the incoming Arrow batches INSIDE the UDF (the session
     # default ~10k-row batches are sized for wide tokenizer rows; packer
@@ -305,6 +320,34 @@ def pack_postings(postings: DataFrame, doclen: DataFrame, out: str) -> str:
         .mapInArrow(pack_partition, PACKED_SCHEMA)
     )
     packed.write.mode("overwrite").parquet(out)
+    return out
+
+
+def _pack_local(postings, doclen, out: str, parts: int) -> str:
+    """`pack_postings` over pyarrow tables, on the driver."""
+    import pyarrow as pa
+
+    from information_retrieval_spark.index.catalog import (
+        arrow_schema,
+        write_arrow,
+    )
+
+    keys = ("term", "section", "bucket", "doc_id")
+    rows = postings.select(["term", "section", "bucket", "doc_id", "tf"]).join(
+        doclen.select(["doc_id", "section", "dl"]), ["doc_id", "section"],
+        join_type="inner",
+    ).sort_by([(k, "ascending") for k in keys])
+    rows = pa.table({
+        **{k: rows.column(k) for k in keys},
+        "tf": rows.column("tf").cast(pa.int32()),
+        "dl": rows.column("dl").cast(pa.int32()),
+    })
+    blocks = pa.Table.from_batches(
+        _pack_batch_arrow(rows) if rows.num_rows else [],
+        schema=arrow_schema("packed"),
+    )
+    write_arrow("packed", blocks, out,
+                row_group_size=max(1, -(-blocks.num_rows // parts)))
     return out
 
 

@@ -6,13 +6,16 @@ compressed block-max WAND physical path must produce values identical to
 ``SQL_BM25_TOKK``'s declarative math in DuckDB — same logical query, two
 radically different execution strategies, value-hash-equal results.
 
-The index for a given sf_dir builds once into a /tmp cache (manifest-gated,
-same resume machinery as production builds).
+The index for a given input builds once into a /tmp cache named by the
+input's fingerprint (`input_key`), so a rewritten ``documents.parquet``
+gets a fresh index rather than the old one (manifest-gated, same resume
+machinery as production builds).
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -23,7 +26,8 @@ from information_retrieval_spark.query.engine import QuerySpec
 
 STOP_K = 20
 
-# one engine per index dir: WandEngine persists its bucket side frame +
+# one engine per index dir (named by its input's key, so a rewritten
+# input gets a new engine): WandEngine persists its bucket side frame +
 # last term shard across search() calls, so every battery entry that
 # constructs a fresh engine re-pays the side frame's build AND strands
 # the old copy in executor storage (the accumulation tax measured in
@@ -41,20 +45,56 @@ def get_wand_engine(spark: SparkSession, idx: str):
     return eng
 
 
-def ensure_documents_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once) the persisted index over ``documents`` at sf_dir."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ir_docs_index_{key}"
-    manifest = os.path.join(idx, "manifest.json")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    builder = IndexBuilder(
-        spark, idx, sections={"body": "text"}, tokenizer="simple", stop_k=STOP_K
+def input_key(path: str) -> str:
+    """A cache key for the parquet input at ``path`` (one file, or a dir
+    of part files): md5 over the path and each data file's name, size,
+    mtime and footer row count. Rewriting the input at the same path
+    changes it; computing it reads footers only (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(root, f)
+        for root, _dirs, names in os.walk(path)
+        for f in names
+        if not f.startswith(("_", "."))
     )
+    h = hashlib.md5(path.encode())
+    for f in files:
+        st = os.stat(f)
+        rows = pq.ParquetFile(f).metadata.num_rows
+        h.update(
+            f"{os.path.relpath(f, path)}:{st.st_size}:{st.st_mtime_ns}:"
+            f"{rows}\n".encode()
+        )
+    return h.hexdigest()[:16]
+
+
+def _documents(sf_dir: str) -> str:
+    return f"{sf_dir}/documents.parquet"
+
+
+def _ensure_built(spark: SparkSession, sf_dir: str, prefix: str,
+                  **config) -> str:
+    """Build (once per input version) an index over ``documents`` into
+    /tmp; a complete build is reused without any Spark job."""
+    idx = f"/tmp/{prefix}_{input_key(_documents(sf_dir))}"
+    manifest = os.path.join(idx, "manifest.json")
     if os.path.exists(manifest):
-        builder.build(docs, resume=True)  # no-op if complete
-    else:
-        builder.build(docs)
+        with open(manifest) as f:
+            if "catalog" in json.load(f)["stages"]:
+                return idx
+    IndexBuilder(
+        spark, idx, sections={"body": "text"}, tokenizer="simple", **config
+    ).build(
+        spark.read.parquet(_documents(sf_dir)),
+        resume=os.path.exists(manifest),
+    )
     return idx
+
+
+def ensure_documents_index(spark: SparkSession, sf_dir: str) -> str:
+    """The persisted index over ``documents`` at sf_dir."""
+    return _ensure_built(spark, sf_dir, "ir_docs_index", stop_k=STOP_K)
 
 
 def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,20 +245,11 @@ SELECT qword, word AS corrected FROM (
 # ------------------------------------------------------------------ phrase
 
 def ensure_documents_posindex(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once) the phrase-serving positional index over ``documents``:
+    """The phrase-serving positional index over ``documents``:
     ``stop_terms=[]`` so postings keep EVERY term's offset set — a
     stop-filtered index cannot answer phrases containing stop words
     (query/phrase.py module docstring)."""
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    idx = f"/tmp/ir_docs_posidx_{key}"
-    manifest = os.path.join(idx, "manifest.json")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    builder = IndexBuilder(
-        spark, idx, sections={"body": "text"}, tokenizer="simple",
-        stop_terms=[],
-    )
-    builder.build(docs, resume=os.path.exists(manifest))
-    return idx
+    return _ensure_built(spark, sf_dir, "ir_docs_posidx", stop_terms=[])
 
 
 def q_phrase_index(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -266,7 +266,8 @@ def build_trigram_index(spark: SparkSession, d: DataFrame, out_dir: str) -> None
 
 
 # planner-stats cache: a resident engine reads the tiny per-trigram df
-# table once per index, like any cached catalog statistic
+# table once per index (whose dir names its input's version), like any
+# cached catalog statistic
 _ROUTE_CACHE: dict[str, tuple[list, list, dict]] = {}
 
 #: an extra AND trigram is read only if its posting list costs less than
@@ -364,13 +365,16 @@ def grep_persisted(
 
 
 def ensure_trigram_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per sf_dir, manifest = parquet _SUCCESS) the persisted
-    trigram index into a /tmp cache — same idempotent-build pattern as
+    """Build (once per input version, manifest = parquet _SUCCESS) the
+    persisted trigram index into a /tmp cache named by the input's key
+    (`engine_entry.input_key`), so a rewritten input gets a fresh index
+    and `_ROUTE_CACHE` entry — the pattern of
     ``engine_entry.ensure_documents_index``."""
-    import hashlib
     import os
 
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    from information_retrieval_spark.ops.engine_entry import input_key
+
+    key = input_key(f"{sf_dir}/documents.parquet")
     out = f"/tmp/ir_trigram_index_{key}"
     if not os.path.exists(os.path.join(out, "_SUCCESS")):
         build_trigram_index(spark, _docs(spark, sf_dir), out)

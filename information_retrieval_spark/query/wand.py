@@ -100,7 +100,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from information_retrieval_spark.index.catalog import (
-    arrow_scan, scan_dirs, segment_seq,
+    arrow_scan, hidden_rows, n_versions, scan_dirs, segment_seq,
 )
 from information_retrieval_spark.index.codec import decode_doc_gaps, varint_decode
 from information_retrieval_spark.query.engine import (
@@ -173,6 +173,20 @@ def _round9(x: np.ndarray) -> np.ndarray:
     return out
 
 
+def _row_groups(member: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``np.unique(member, axis=0, return_inverse=True)`` of a bool matrix:
+    its distinct rows in row order and each row's index among them. Up to
+    62 columns a row packs into one int64 key, column 0 the highest bit so
+    key order is row order: a sort of ints rather than of void rows."""
+    q = member.shape[1]
+    if q > 62:
+        groups, inv = np.unique(member, axis=0, return_inverse=True)
+        return groups, inv.reshape(-1)
+    key = member @ (np.int64(1) << np.arange(q - 1, -1, -1, dtype=np.int64))
+    _, first, inv = np.unique(key, return_index=True, return_inverse=True)
+    return member[first], inv.reshape(-1)
+
+
 @dataclass(frozen=True)
 class _Plan:
     """One query's bucket-side spec: its qterms, each with the index terms
@@ -229,9 +243,7 @@ class _Bucket:
         # hides: tf-idf's N is the ledger's n_docs minus their sum over
         # buckets (`catalog.count_live_docs`, the same rule)
         gone = (kind == "dl") & ~live
-        self.n_hidden = np.unique(
-            np.stack([docs[gone], seq[gone]]), axis=1
-        ).shape[1]
+        self.n_hidden = n_versions(docs[gone], seq[gone])
         # live (doc, section, dl) rows, looked up for candidates only
         is_dl = live & (kind == "dl")
         self.sections = sections
@@ -242,13 +254,8 @@ class _Bucket:
 
     def hidden(self, docs: np.ndarray, seqs) -> np.ndarray:
         """Rows of ``docs`` (from segments with sequence ``seqs``) that a
-        seq-scoped tombstone hides: some tombstone has ``upto >= seq``."""
-        if not len(self.del_docs) or not len(docs):
-            return np.zeros(len(docs), dtype=bool)
-        i = np.minimum(
-            np.searchsorted(self.del_docs, docs), len(self.del_docs) - 1
-        )
-        return (self.del_docs[i] == docs) & (self.del_upto[i] >= seqs)
+        seq-scoped tombstone hides (`catalog.hidden_rows`)."""
+        return hidden_rows(docs, seqs, self.del_docs, self.del_upto)
 
     def dl_of(self, docs: np.ndarray) -> np.ndarray:
         """Per-section lengths of the sorted, unique live ``docs`` (one row
@@ -344,8 +351,7 @@ class _Bucket:
         every = np.unique(np.concatenate([f[1] for f in found]))
         every_dl = self.dl_of(every)
         for qid, cands, member, ex in found:
-            groups, inv = np.unique(member, axis=0, return_inverse=True)
-            inv = inv.reshape(-1)
+            groups, inv = _row_groups(member)
             n = np.bincount(inv, minlength=len(groups))
             cand_dl = every_dl[np.searchsorted(every, cands)]
             sums = np.stack(

@@ -15,6 +15,13 @@ packed dir byte-untouched (same catalog path).
 
 Usage: python scripts/bench_tiered.py   # prints one JSON line and
 appends a section to BENCH/BASELINE.md
+
+Merge placement crossover (index/maintenance.py ``LOCAL_MAX_MERGE_BYTES``):
+``python scripts/bench_tiered.py --merge [n ...] [--write]`` builds, per n
+(default 200 2000 20000), a 1,000-doc base plus two n-doc delta segments
+and times ``compact(segments=[1, 2])`` with each merge placement forced,
+on alternating byte-identical copies, next to the gate's input bytes;
+``--write`` appends the table to BENCH/BASELINE.md.
 """
 
 from __future__ import annotations
@@ -185,5 +192,109 @@ update. The physical purge rides the next scheduled compaction.
     shutil.rmtree(work, ignore_errors=True)
 
 
+def merge_crossover(sizes: list[int], reps: int, write: bool) -> None:
+    import math
+
+    from information_retrieval_spark.fixtures import write_corpus_parquet
+    from information_retrieval_spark.index import maintenance
+    from information_retrieval_spark.index.build import IndexBuilder
+    from information_retrieval_spark.index.catalog import table_dirs
+    from information_retrieval_spark.index.maintenance import IndexMaintenance
+    from information_retrieval_spark.session import get_spark
+    from pyspark.sql import functions as F
+
+    n_base = 1000
+    spark = get_spark("bench_tiered_merge", shuffle_partitions=8)
+    work = "/tmp/ir_merge_crossover"
+    rows = []
+    for n in sizes:
+        shutil.rmtree(work, ignore_errors=True)
+        os.makedirs(work)
+        corpus_path = os.path.join(work, "corpus.parquet")
+        write_corpus_parquet(corpus_path, n_base + 2 * n)
+        corpus = spark.read.parquet(corpus_path)
+        src = os.path.join(work, "src")
+        IndexBuilder(
+            spark, src, {"title": "path", "abstract": "content"},
+            tokenizer="code", category_col="lang",
+        ).build(corpus.filter(F.col("doc_id") < n_base))
+        maint = IndexMaintenance(spark, src)
+        for lo in (n_base, n_base + n):
+            maint.add_documents(corpus.filter(
+                (F.col("doc_id") >= lo) & (F.col("doc_id") < lo + n)
+            ))
+        times: dict[str, list[float]] = {"local": [], "distributed": []}
+        out_bytes: dict[str, int] = {}
+        for rep in range(reps):
+            order = ["local", "distributed"]
+            for placement in order if rep % 2 == 0 else order[::-1]:
+                idx = os.path.join(work, f"{placement}{rep}")
+                shutil.copytree(src, idx)
+                maintenance.LOCAL_MAX_MERGE_BYTES = (
+                    math.inf if placement == "local" else 0
+                )
+                m = IndexMaintenance(spark, idx)
+                t0 = time.time()
+                m.compact(segments=[1, 2])
+                times[placement].append(time.time() - t0)
+                gate = m.last_merge_placement
+                assert gate["placement"] == placement
+                assert len(table_dirs(idx, "packed")) == 2
+                out_bytes[placement] = sum(
+                    du_bytes(table_dirs(idx, t)[1])
+                    for t in ("postings_flat", "doclen", "doc_meta",
+                              "packed", "term_df", "vocab")
+                )
+                shutil.rmtree(idx)
+        row = {
+            "delta_docs": n,
+            "read_mb": round(gate["read_bytes"] / 2**20, 2),
+            "local_s": [round(t, 2) for t in times["local"]],
+            "distributed_s": [round(t, 2) for t in times["distributed"]],
+            "out_mb_local": round(out_bytes["local"] / 2**20, 2),
+            "out_mb_distributed": round(out_bytes["distributed"] / 2**20, 2),
+        }
+        print(json.dumps(row), flush=True)
+        rows.append(row)
+    shutil.rmtree(work, ignore_errors=True)
+    if not write:
+        return
+    stamp = time.strftime("%Y-%m-%d", time.gmtime())
+    lines = [
+        f"\n### Merge placement crossover ({stamp},"
+        " `scripts/bench_tiered.py --merge`, 4-vCPU host,"
+        f" local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}])\n",
+        "A 1,000-doc base plus two n-doc delta segments;"
+        " `compact(segments=[1, 2])` with each merge placement forced"
+        " (index/maintenance.py `LOCAL_MAX_MERGE_BYTES` set to ∞ / 0), on"
+        f" {reps} alternating byte-identical copies each. **read MB** is"
+        " the gate's input: the on-disk bytes of the merged segments'"
+        " postings_flat, doclen, doc_meta and vocab dirs. **out MB** is"
+        " the merged segment's six tables on disk.\n",
+        "| delta docs | read MB | local (s) | distributed (s) |"
+        " out MB local | out MB distributed |",
+        "|---|---|---|---|---|---|",
+    ]
+    for r in rows:
+        lines.append(
+            f"| 2 × {r['delta_docs']:,} | {r['read_mb']} |"
+            f" {' / '.join(map(str, r['local_s']))} |"
+            f" {' / '.join(map(str, r['distributed_s']))} |"
+            f" {r['out_mb_local']} | {r['out_mb_distributed']} |"
+        )
+    with open(
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "BENCH", "BASELINE.md"), "a"
+    ) as f:
+        f.write("\n".join(lines) + "\n")
+    print("appended to BENCH/BASELINE.md")
+
+
 if __name__ == "__main__":
-    main()
+    args = sys.argv[1:]
+    if args and args[0] == "--merge":
+        write = "--write" in args
+        sizes = [int(a) for a in args[1:] if a != "--write"]
+        merge_crossover(sizes or [200, 2000, 20000], reps=2, write=write)
+    else:
+        main()

@@ -14,7 +14,7 @@ from information_retrieval_spark.index.build import IndexBuilder
 from information_retrieval_spark.index.maintenance import IndexMaintenance
 from information_retrieval_spark.query.engine import QuerySpec, SearchEngine
 from tests.oracle import Oracle, assert_ranked_equal, ranked_rows
-from tests.placement import each_placement
+from tests.placement import PLACEMENTS, each_placement, merge_forced
 
 SECTIONS = {"title": "path", "abstract": "content"}
 # (query_id, must, should, not): the updates' and resurrections' own words
@@ -200,44 +200,48 @@ def test_compact_crash_leaves_old_snapshot_queryable(
     """A compact that dies mid-way (here: while packing the merged
     segment) must leave the pre-compact snapshot fully intact — every
     query still answers with the logical deletes applied — and a re-run
-    must converge to the fresh-build answer."""
+    must converge to the fresh-build answer. Under each merge placement:
+    both pack through `pack.pack_postings`."""
     import information_retrieval_spark.index.pack as pack_mod
+    from information_retrieval_spark.index.catalog import table_dirs
 
     rows = corpus_rows(120)
     removed = {r.doc_id for r in rows[30:50]}
     kept = [r for r in rows if r.doc_id not in removed]
-    d = str(tmp_path_factory.mktemp("crashcompact"))
-    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
-        _df(spark, rows)
-    )
-    maint = IndexMaintenance(spark, d)
-    maint.remove_documents(sorted(removed))
-
     fresh = str(tmp_path_factory.mktemp("crashfresh"))
-    IndexBuilder(
-        spark, fresh, SECTIONS, tokenizer="code", stop_k=10,
-        stop_terms=_stop_of(spark, d),
-    ).build(_df(spark, kept))
-    want = _results(SearchEngine(spark, fresh))
-
+    want = None
     real = pack_mod.pack_postings
 
     def boom(*a, **k):
         raise RuntimeError("simulated crash during segment merge")
 
-    monkeypatch.setattr(pack_mod, "pack_postings", boom)
-    with pytest.raises(RuntimeError):
-        maint.compact()
-    monkeypatch.setattr(pack_mod, "pack_postings", real)
+    for placement in PLACEMENTS:
+        d = str(tmp_path_factory.mktemp(f"crashcompact_{placement}"))
+        IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+            _df(spark, rows)
+        )
+        maint = IndexMaintenance(spark, d)
+        maint.remove_documents(sorted(removed))
+        if want is None:
+            IndexBuilder(
+                spark, fresh, SECTIONS, tokenizer="code", stop_k=10,
+                stop_terms=_stop_of(spark, d),
+            ).build(_df(spark, kept))
+            want = _results(SearchEngine(spark, fresh))
 
-    # old snapshot untouched: the engine still answers correctly
-    assert _results(SearchEngine(spark, d)) == want
+        with merge_forced(placement):
+            monkeypatch.setattr(pack_mod, "pack_postings", boom)
+            with pytest.raises(RuntimeError):
+                maint.compact()
+            monkeypatch.setattr(pack_mod, "pack_postings", real)
 
-    maint.compact()  # recovery re-run converges
-    from information_retrieval_spark.index.catalog import table_dirs
+            # old snapshot untouched: the engine still answers correctly
+            assert _results(SearchEngine(spark, d)) == want
 
-    assert table_dirs(d, "deleted_docs") == []
-    assert _results(SearchEngine(spark, d)) == want
+            maint.compact()  # recovery re-run converges
+        assert maint.last_merge_placement["placement"] == placement
+        assert table_dirs(d, "deleted_docs") == []
+        assert _results(SearchEngine(spark, d)) == want
 
 
 def test_add_documents_retry_same_delta_applies_once(spark, tmp_path_factory):
@@ -286,7 +290,7 @@ def test_compact_rerun_after_crash_keeps_stats_exact(
 ):
     """n_docs is part of the compact's atomic snapshot: a crash (here:
     pack_postings raising) leaves it untouched, and the re-run decrements
-    it exactly once."""
+    it exactly once. Under each merge placement."""
     import information_retrieval_spark.index.pack as pack_mod
     from information_retrieval_spark.index.catalog import (
         read_stats_pdf,
@@ -295,28 +299,32 @@ def test_compact_rerun_after_crash_keeps_stats_exact(
 
     rows = corpus_rows(120)
     removed = sorted(r.doc_id for r in rows[40:60])
-    d = str(tmp_path_factory.mktemp("cstat"))
-    IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
-        _df(spark, rows)
-    )
-    n0 = int(read_stats_pdf(d)["n_docs"].iloc[0])
-    maint = IndexMaintenance(spark, d)
-    maint.remove_documents(removed)
-
     real_pack = pack_mod.pack_postings
 
     def boom(*a, **k):
         raise RuntimeError("simulated crash during repack")
 
-    monkeypatch.setattr(pack_mod, "pack_postings", boom)
-    with pytest.raises(RuntimeError):
-        maint.compact()
-    assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == n0  # snapshot intact
-    monkeypatch.setattr(pack_mod, "pack_postings", real_pack)
-    maint.compact()  # recovery re-run
+    for placement in PLACEMENTS:
+        d = str(tmp_path_factory.mktemp(f"cstat_{placement}"))
+        IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
+            _df(spark, rows)
+        )
+        n0 = int(read_stats_pdf(d)["n_docs"].iloc[0])
+        maint = IndexMaintenance(spark, d)
+        maint.remove_documents(removed)
 
-    assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == n0 - len(removed)
-    assert table_dirs(d, "deleted_docs") == []
+        with merge_forced(placement):
+            monkeypatch.setattr(pack_mod, "pack_postings", boom)
+            with pytest.raises(RuntimeError):
+                maint.compact()
+            # snapshot intact
+            assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == n0
+            monkeypatch.setattr(pack_mod, "pack_postings", real_pack)
+            maint.compact()  # recovery re-run
+        assert maint.last_merge_placement["placement"] == placement
+
+        assert int(read_stats_pdf(d)["n_docs"].iloc[0]) == n0 - len(removed)
+        assert table_dirs(d, "deleted_docs") == []
 
 
 def test_add_commits_segment_and_compact_merges(spark, tmp_path_factory):
@@ -965,7 +973,14 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
     while the hidden old rows await purge, a re-added removed id is live
     again, tombstones survive partial compacts they don't cover, and the
     ranked engine (packed blocks) and boolean search (postings_flat's live
-    view) agree with the model throughout."""
+    view) agree with the model throughout. The same sequence runs with
+    every merge forced to each placement."""
+    for placement in PLACEMENTS:
+        with merge_forced(placement):
+            _algebra_sequence(spark, tmp_path_factory, placement)
+
+
+def _algebra_sequence(spark, tmp_path_factory, placement):
     import random
     from dataclasses import replace as dc_replace
 
@@ -976,7 +991,7 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
     rows = corpus_rows(200)
     by_id = {r.doc_id: r for r in rows}
 
-    d = str(tmp_path_factory.mktemp("algebra"))
+    d = str(tmp_path_factory.mktemp(f"algebra_{placement}"))
     IndexBuilder(spark, d, SECTIONS, tokenizer="code", stop_k=10).build(
         _df(spark, rows[:100])
     )
@@ -993,7 +1008,7 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
         )
 
     def check(step):
-        fresh = str(tmp_path_factory.mktemp(f"algebra_m{step}"))
+        fresh = str(tmp_path_factory.mktemp(f"algebra_{placement}_m{step}"))
         IndexBuilder(
             spark, fresh, SECTIONS, tokenizer="code", stop_k=10,
             stop_terms=stop,
@@ -1013,6 +1028,7 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
             ["add"] if unadded else []
         ) + (["resurrect"] if removed else [])
         op = rng.choice(ops)
+        merged = None
         if op == "add" and unadded:
             batch = unadded.pop(0)
             maint.add_documents(_df(spark, batch))
@@ -1045,9 +1061,11 @@ def test_maintenance_algebra_random_sequence(spark, tmp_path_factory):
             n = len(table_dirs(d, "packed"))
             if n >= 2:
                 k = rng.randrange(2, n + 1)
-                maint.compact(segments=rng.sample(range(n), k=k))
+                merged = maint.compact(segments=rng.sample(range(n), k=k))
         else:
-            maint.compact()
+            merged = maint.compact()
+        if merged is not None:
+            assert maint.last_merge_placement["placement"] == placement
         check(step)
 
     # data-integrity epilogue: the lineage log's totals must equal the

@@ -338,3 +338,33 @@ def test_round9_matches_python_round():
         np.nextafter(halves, 1), -halves, [0.0, 1e7, 3.3e9, 2.5e-9],
     ])
     assert _round9(x).tolist() == [round(v, 9) for v in x.tolist()]
+
+
+def _row_sort_groups(member):
+    groups, inv = np.unique(member, axis=0, return_inverse=True)
+    return groups, inv.reshape(-1)
+
+
+@pytest.mark.parametrize("n_terms", [10, 62, 70])
+def test_stats_groups_equal_row_sort(monkeypatch, n_terms):
+    """`_Bucket.stats` groups candidates by their int64-packed qterm
+    masks (up to 62 qterms; a row sort past that): its rows equal the
+    row-sort grouping's, in order, on batches with hundreds of masks."""
+    rng = np.random.default_rng(n_terms)
+    terms = [f"t{i:02d}" for i in range(n_terms)]
+    postings = pd.DataFrame(
+        [(t, s, 1, doc, int(rng.integers(1, 4)), 40 + doc % 7)
+         for doc in range(600) for t in terms for s in SECTIONS
+         if rng.random() < 0.25],
+        columns=["term", "section", "seq", "doc_id", "tf", "dl"],
+    )
+    plans = {
+        1: _Plan({t: [t] for t in terms}, None, (), ()),
+        2: _Plan({t: [t] for t in terms[:9]}, None, (), ()),
+        3: _Plan({terms[0]: terms[:3], terms[5]: [terms[5]]}, None, (), ()),
+    }
+    got = _bucket(postings).stats(plans)
+    monkeypatch.setattr(wand, "_row_groups", _row_sort_groups)
+    want = _bucket(postings).stats(plans)
+    pd.testing.assert_frame_equal(got, want)
+    assert (got.query_id == 2).sum() > 200  # many masks
