@@ -7,9 +7,10 @@ over its bytes: an int as 4 little-endian bytes (``hashInt``), a long as
 8 (``hashLong``), a string as its UTF-8 bytes (``hashUnsafeBytes``).
 
 Ints and longs hash vectorized in uint64 (wrapping arithmetic). Strings
-hash in Python once per distinct (seed, value) pair: a column's distinct
-values times its distinct seeds is small next to its rows for every
-table the lineage log covers (terms and sections repeat).
+hash in Python once per distinct (seed, value) pair, grouped by their
+Arrow dictionary codes: a column's distinct values times its distinct
+seeds is small next to its rows for every table the lineage log covers
+(terms and sections repeat).
 """
 
 from __future__ import annotations
@@ -105,16 +106,21 @@ def xxh64_bytes(b: bytes, seed: int) -> int:
 
 def hash_str(values, seed: np.ndarray) -> np.ndarray:
     """XXH64 of each string's UTF-8 bytes under its uint64 seed, computed
-    once per distinct (seed, value) pair."""
-    codes, uniq = pd.factorize(pd.Series(values, dtype=object))
+    once per distinct (seed, value) pair. ``values`` is a pyarrow string
+    column (no nulls): its dictionary codes group the rows, so no Python
+    string is made per row."""
+    enc = values.dictionary_encode().combine_chunks()
+    codes = enc.indices.to_numpy()
+    uniq = [v.encode() for v in enc.dictionary.to_pylist()]
     seed_codes, _ = pd.factorize(seed)
-    key = seed_codes.astype(np.int64) * len(uniq) + codes
-    _, first, inv = np.unique(key, return_index=True, return_inverse=True)
+    pair, keys = pd.factorize(seed_codes * len(uniq) + codes)
+    rep = np.empty(len(keys), np.int64)
+    rep[pair] = np.arange(len(pair))  # any one row of each pair
     pair_hash = np.array(
-        [xxh64_bytes(uniq[codes[i]].encode(), int(seed[i])) for i in first],
+        [xxh64_bytes(uniq[codes[i]], int(seed[i])) for i in rep],
         dtype=np.uint64,
     )
-    return pair_hash[inv.reshape(-1)]
+    return pair_hash[pair]
 
 
 #: Spark simple type → the hash of one column of it
@@ -129,7 +135,8 @@ def xxhash64(table, columns: tuple[str, ...], types: dict[str, str]):
     for c in columns:
         col = table.column(c)
         valid = col.is_valid().to_numpy(zero_copy_only=False)
-        vals = col.drop_null().to_numpy(zero_copy_only=False)
-        if len(vals):
+        col = col.drop_null()
+        if len(col):
+            vals = col if types[c] == "string" else col.to_numpy()
             h[valid] = _HASHERS[types[c]](vals, h[valid])
     return h.view(np.int64)

@@ -26,22 +26,27 @@ from information_retrieval_spark.query.engine import QuerySpec
 
 STOP_K = 20
 
-# one engine per index dir (named by its input's key, so a rewritten
-# input gets a new engine): WandEngine persists its bucket side frame +
-# last term shard across search() calls, so every battery entry that
-# constructs a fresh engine re-pays the side frame's build AND strands
-# the old copy in executor storage (the accumulation tax measured in
-# BENCH/BASELINE.md's corpus-size section). Entries share one.
+# one engine per sf_dir, over its input's current index: WandEngine
+# persists its bucket side frame + last term shard across search() calls,
+# so every battery entry that constructs a fresh engine re-pays the side
+# frame's build AND strands the old copy in executor storage (the
+# accumulation tax measured in BENCH/BASELINE.md's corpus-size section).
+# Entries share one; a rewritten input's new index closes the old engine.
 _ENGINES: dict = {}
 
 
-def get_wand_engine(spark: SparkSession, idx: str):
+def get_wand_engine(spark: SparkSession, sf_dir: str):
+    """The shared engine over ``documents``' index at sf_dir."""
     from information_retrieval_spark.query.wand import WandEngine
 
-    eng = _ENGINES.get(idx)
-    if eng is None or eng.spark is not spark:
-        eng = WandEngine(spark, idx)
-        _ENGINES[idx] = eng
+    idx = ensure_documents_index(spark, sf_dir)
+    eng = _ENGINES.get(sf_dir)
+    if eng is not None and eng.spark is spark:
+        if eng.snapshot.index_dir == idx:
+            return eng
+        eng.close()
+    eng = WandEngine(spark, idx)
+    _ENGINES[sf_dir] = eng
     return eng
 
 
@@ -100,8 +105,7 @@ def ensure_documents_index(spark: SparkSession, sf_dir: str) -> str:
 def q_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 via block-max WAND over the packed index — must equal
     the declarative BM25 plan (oracle: SQL_BM25_TOPK)."""
-    idx = ensure_documents_index(spark, sf_dir)
-    eng = get_wand_engine(spark, idx)
+    eng = get_wand_engine(spark, sf_dir)
     specs = [
         QuerySpec(qid, text, "okapi25", 10, spell=False, match_mode="exact")
         for qid, text in QUERY_SET
@@ -316,8 +320,7 @@ def q_wand_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch shard; each bucket masks the disallowed docs out of the
     postings it decodes."""
     from information_retrieval_spark.ops.ir_direct import BM25_FILTER_SET
-    idx = ensure_documents_index(spark, sf_dir)
-    eng = get_wand_engine(spark, idx)
+    eng = get_wand_engine(spark, sf_dir)
     specs = []
     for qid, text in QUERY_SET:
         m, x = BM25_FILTER_SET.get(qid, ("", ""))

@@ -1,8 +1,9 @@
 """The driver entries' /tmp index caches are keyed on their input
 (`ops.engine_entry.input_key`): rewriting ``documents.parquet`` at the
 same path makes the wand, grep and positional entries build and read a
-fresh index, not serve the old one; an unchanged input reuses its index
-with no Spark job."""
+fresh index, not serve the old one (the wand entries' shared engine over
+the old index is closed); an unchanged input reuses its index with no
+Spark job."""
 
 import os
 import shutil
@@ -57,6 +58,10 @@ def test_rewritten_input_is_not_served_stale(spark, tmp_path, name):
     jobs, again = _jobs(spark, lambda: ensure(spark, sf))
     assert (jobs, again) == (0, idx)
 
+    old_engine = engine_entry._ENGINES.get(sf)
+    assert (old_engine is not None) == (name == "wand")
+    assert old_engine is None or old_engine._local_side is not None
+
     # the same file rewritten in place, every doc_id shifted
     tb = pq.read_table(docs)
     tb = tb.set_column(
@@ -71,3 +76,9 @@ def test_rewritten_input_is_not_served_stale(spark, tmp_path, name):
     assert all(r[doc] >= SHIFT for r in after)
     assert after == [r[:doc] + (r[doc] + SHIFT,) + r[doc + 1:]
                      for r in before]
+    if old_engine is not None:
+        # the superseded engine is closed and replaced, not kept
+        assert old_engine._local_side is None
+        assert engine_entry._ENGINES[sf].snapshot.index_dir == ensure(
+            spark, sf
+        )
